@@ -96,6 +96,26 @@ object Bench {
     val (regressions, warnings) = risers.partition { case (n, _) => priorStrikes(n) }
     (ambient, regressions, warnings)
   }
+
+  /** `%.{digits}f` under `Locale.ROOT`: the printed lines are JSON, and a
+    * comma-decimal JVM locale would make them unparseable. */
+  def fixed(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
+  /** The stdout contract line: metric/value/unit/queries/sf/cpus at
+    * 3-decimal timings, pure so BenchGateSpec can parse it. */
+  def contractLine(total: Double, results: Seq[(String, Double)],
+                   sfDir: String, cpus: String): String = {
+    val qs = results.map { case (k, v) => s"\"" + k + "\":" + fixed(v, 3) }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${fixed(total, 3)},"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":"$cpus"}"""
+  }
+
+  /** Warm-up failures stay non-fatal (the timed sweep reports each query
+    * on its own), but they are logged by name, never swallowed. */
+  private def warmUpFailed(what: String, e: Throwable): Unit =
+    System.err.println(s"[bench] warm-up of $what failed: $e")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -118,8 +138,9 @@ object Bench {
     // Warm-up pass on the smallest SF: JIT + codegen/plan caches, so the
     // timed pass measures the queries, not JVM warm-up.
     val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      try { fn(spark, warmDir).count() } catch { case _: Throwable => () }
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      try { fn(spark, warmDir).count() }
+      catch { case e: Throwable => warmUpFailed(name, e) }
     }
     // Touch each target-SF table once: file listing, footer reads, and
     // first-shuffle setup otherwise land on whichever query runs first
@@ -127,7 +148,7 @@ object Bench {
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings"))
       try { graft.catalog.Tables.table(spark, sfDir, t).count() }
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => warmUpFailed(s"table $t", e) }
     // ---- per-query regression gate: compare against the previous recorded
     // run (same sf), persist this run, surface >1.5x risers. Round-over-
     // round swings were previously invisible noise; now they are printed
@@ -352,7 +373,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = cleaned.map(_._2).sum
     def jmap(m: Seq[(String, Double)]) =
-      m.map { case (k, v) => s"\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
+      m.map { case (k, v) => s"\"" + k + "\":" + fixed(v, 2) }.mkString("{", ",", "}")
     val cs = canaryNow.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     // strikes = provisional risers ∪ final risers ∪ post-sweep >4x
@@ -363,7 +384,7 @@ object Bench {
     val strikes = strikeSet(riserNames,
         (regressions ++ warnings).map(_._1).toSet, postSweepFlagged)
       .toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val stretchesJson = stretchTimes.map(t => f"$t%.3f").mkString("[", ",", "]")
+    val stretchesJson = stretchTimes.map(fixed(_, 3)).mkString("[", ",", "]")
     // FULL line (full-precision timings + gate diagnostics): this is the
     // history/baseline record and the auditable per-round artifact.
     val line =
@@ -388,10 +409,7 @@ object Bench {
     // NAMES alone occupy ~4.2 KB, so this is as short as the contract
     // permits; a consumer keeping only the last ~2 KB of stdout still
     // cannot see the whole map, and must read bench_latest.json.
-    val qs3 = cleaned.map { case (k, v) => s"\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    println(
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs3,"sf":"$sfDir","cpus":"$cpus"}""")
+    println(contractLine(total, cleaned, sfDir, cpus))
     spark.stop()
     if (regressions.nonEmpty && sys.env.get("SPARK_GRAFT_BENCH_STRICT").contains("1"))
       System.exit(2)

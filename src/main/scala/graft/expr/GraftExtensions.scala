@@ -37,6 +37,9 @@ object GraftExtensions {
       "window_digests", ext.makeWindowDigests, "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "search_sorted", ext.makeSearchSorted, "scala_udf")
+    for ((name, _, make) <- ext.urlFunctions)
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, make, "scala_udf")
   }
 }
 
@@ -101,7 +104,27 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     SearchSortedExpr(args.head, cuts): Expression
   }
 
+  /** The URL grammar ([[UrlText]]): (SQL name, expression class, builder). */
+  private[expr] val urlFunctions: Seq[(String, Class[_], Seq[Expression] => Expression)] = {
+    def unary(name: String, cls: Class[_], mk: Expression => Expression) =
+      (name, cls, (args: Seq[Expression]) => {
+        require(args.length == 1, s"$name(url)")
+        mk(args.head)
+      })
+    Seq(
+      unary("canonicalize_url", classOf[CanonicalizeUrlExpr], CanonicalizeUrlExpr(_)),
+      unary("url_host", classOf[UrlHostExpr], UrlHostExpr(_)),
+      unary("url_match_target", classOf[UrlMatchTargetExpr], UrlMatchTargetExpr(_)),
+      ("resolve_url", classOf[ResolveUrlExpr], (args: Seq[Expression]) => {
+        require(args.length == 2, "resolve_url(base, ref)")
+        ResolveUrlExpr(args.head, args(1)): Expression
+      }))
+  }
+
   override def apply(ext: SparkSessionExtensions): Unit = {
+    for ((name, cls, make) <- urlFunctions)
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), make))
     ext.injectFunction((
       new FunctionIdentifier("minhash_signature"),
       new ExpressionInfo(classOf[MinHashSignatureExpr].getName, "minhash_signature"),

@@ -51,19 +51,20 @@ case class SortedIntersectCountExpr(left: Expression, right: Expression)
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val (nx, ny) = (x.numElements(), y.numElements())
-    // r20 (ADVICE): contract guard on the INTERPRETED path only — the
-    // specs drive this twin directly, so a future caller feeding unsorted
-    // arrays fails loud in tests instead of silently undercounting; the
-    // codegen twin (the hot path) stays branch-free
+    // contract guard on the INTERPRETED path only — the specs drive this
+    // twin directly, so a future caller feeding unsorted arrays fails loud
+    // instead of silently undercounting; `require`, not `assert`, so the
+    // guard survives -Xdisable-assertions. The codegen twin (the hot path)
+    // stays branch-free; interpreted fallback pays one scan per array.
     var k = 1
     while (k < nx) {
-      assert(x.getLong(k - 1) <= x.getLong(k),
+      require(x.getLong(k - 1) <= x.getLong(k),
         "sorted_intersect_count: left array violates the sorted-ascending contract")
       k += 1
     }
     k = 1
     while (k < ny) {
-      assert(y.getLong(k - 1) <= y.getLong(k),
+      require(y.getLong(k - 1) <= y.getLong(k),
         "sorted_intersect_count: right array violates the sorted-ascending contract")
       k += 1
     }

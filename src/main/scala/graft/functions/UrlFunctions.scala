@@ -1,12 +1,20 @@
 package graft.functions
 
+import graft.expr.{CanonicalizeUrlExpr, ResolveUrlExpr, UrlHostExpr, UrlMatchTargetExpr}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
-/** URL canonicalization + registered-domain extraction for the crawl
-  * front door — pure column expressions end to end (regexp/split/sort/
-  * concat builtins, all whole-stage-codegen'd; no UDF, no parsing
-  * library), so a 100 TB URL column canonicalizes inside the scan task.
+/** URL canonicalization, resolution and registered-domain extraction for
+  * the crawl front door. `canonicalizeUrl`, `resolveUrl`, `urlHost` and
+  * `urlMatchTarget` are each ONE native Catalyst expression
+  * ([[graft.expr.UrlText]]: plain string routines, no parsing library),
+  * registered for SQL as `canonicalize_url`, `resolve_url`, `url_host`
+  * and `url_match_target`. As `regexp_*`/`when`/`transform` Column
+  * chains they read the input several times, so nesting multiplies the
+  * tree (`canonicalizeUrl(resolveUrl(…))` is 32k nodes); those chains are
+  * the executable reference in UrlFunctionsSpec (`UrlColumnReference`),
+  * property-tested against the native forms.
   *
   * Role anchor: the reference normalizes asset paths through one shared
   * grammar before publishing or comparing them
@@ -96,42 +104,13 @@ object UrlFunctions {
     "city.nagoya.jp", "city.sapporo.jp", "city.sendai.jp",
     "city.yokohama.jp")
 
-  private def splitUrl(url: Column): (Column, Column, Column, Column) = {
-    val noFrag = regexp_extract(trim(url), "^([^#]*)", 1)
-    val scheme = lower(regexp_extract(noFrag, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-    val rest = regexp_replace(noFrag, "^[A-Za-z][A-Za-z0-9+.-]*://", "")
-    // authority = up to the first '/' or '?', userinfo stripped
-    val authority = regexp_replace(
-      regexp_extract(rest, "^([^/?]*)", 1), "^[^@]*@", "")
-    val pathQuery = regexp_replace(rest, "^[^/?]*", "")
-    val path = regexp_extract(pathQuery, "^([^?]*)", 1)
-    val query = when(pathQuery.contains("?"),
-      regexp_replace(pathQuery, "^[^?]*\\?", "")).otherwise(lit(""))
-    (scheme, lower(authority), path, query)
-  }
-
-  /** Host of a lowercased authority: the bracketed literal for IPv6
-    * (`[2001:db8::1]:8080` → `[2001:db8::1]`), everything before the
-    * first ':' otherwise. */
-  private def hostOf(authority: Column): Column =
-    when(authority.startsWith("["),
-      regexp_extract(authority, "^(\\[[^\\]]*\\])", 1))
-      .otherwise(regexp_extract(authority, "^([^:]*)", 1))
-
-  /** Port of a lowercased authority ('' when absent) — digits after the
-    * closing bracket for IPv6, after the first ':' otherwise. */
-  private def portOf(authority: Column): Column =
-    when(authority.startsWith("["),
-      regexp_extract(authority, "^\\[[^\\]]*\\]:([0-9]+)$", 1))
-      .otherwise(when(authority.contains(":"),
-        regexp_extract(authority, ":([0-9]*)$", 1)).otherwise(lit("")))
+  private def native(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    ColumnBridge.column(e)
+  private def expr(c: Column) = ColumnBridge.expression(c)
 
   /** Lowercased host (no port, no userinfo) of a URL column; bracketed
     * IPv6 literals come back whole (`[2001:db8::1]`). */
-  def urlHost(url: Column): Column = {
-    val (_, authority, _, _) = splitUrl(url)
-    hostOf(authority)
-  }
+  def urlHost(url: Column): Column = native(UrlHostExpr(expr(url)))
 
   /** RFC 3986 §5 relative-reference resolution for http(s) crawl graphs —
     * `resolveUrl(base, ref)` turns an in-page href into the absolute URL
@@ -145,103 +124,22 @@ object UrlFunctions {
     * SCHEME lowercased on merge (urljoin semantics; host case kept).
     * One deliberate divergence: FRAGMENTS are stripped from the result —
     * a fetch target has no fragment (the replay strips after urljoin).
-    * Pure column expressions, scan-side. */
-  def resolveUrl(base: Column, ref: Column): Column = {
-    val r = regexp_replace(ref, "#.*$", "")
-    val b = regexp_replace(base, "#.*$", "")
-    val bScheme = lower(regexp_extract(b, "^([a-zA-Z][a-zA-Z0-9+.\\-]*)://", 1))
-    val bAuth = regexp_extract(b, "^[a-zA-Z][a-zA-Z0-9+.\\-]*://([^/?#]*)", 1)
-    val origin = concat(bScheme, lit("://"), bAuth)
-    val bPathQ = regexp_replace(b, "^[a-zA-Z][a-zA-Z0-9+.\\-]*://[^/?#]*", "")
-    val bPath = regexp_extract(bPathQ, "^([^?]*)", 1)
-    val dir = when(bPath.contains("/"),
-      regexp_replace(bPath, "/[^/]*$", "/")).otherwise(lit("/"))
-    val merged =
-      when(r === "", b)
-        .when(r.rlike("^[a-zA-Z][a-zA-Z0-9+.\\-]*:"), r)
-        .when(r.startsWith("//"), concat(bScheme, lit(":"), r))
-        .when(r.startsWith("/"), concat(origin, r))
-        .when(r.startsWith("?"),
-          concat(origin, when(bPath === "", lit("/")).otherwise(bPath), r))
-        .otherwise(concat(origin, dir, r))
-    // remove_dot_segments on the merged PATH only (query untouched);
-    // skip for verbatim absolute refs, matching urljoin
-    val mOrigin = regexp_extract(merged, "^([a-zA-Z][a-zA-Z0-9+.\\-]*://[^/?#]*)", 1)
-    val mPathQ = regexp_replace(merged, "^[a-zA-Z][a-zA-Z0-9+.\\-]*://[^/?#]*", "")
-    val mPath = regexp_extract(mPathQ, "^([^?]*)", 1)
-    val mQuery = when(mPathQ.contains("?"),
-      regexp_replace(mPathQ, "^[^?]*", "")).otherwise(lit(""))
-    val norm = (1 to 8).foldLeft(mPath) { (acc, _) =>
-      val noDot = regexp_replace(acc, "/\\.(/|$)", "/")
-      val noUp = regexp_replace(noDot, "/(?!\\.\\./)[^/]+/\\.\\.(/|$)", "/")
-      regexp_replace(noUp, "^/\\.\\.(/|$)", "/")
-    }
-    when(r.rlike("^[a-zA-Z][a-zA-Z0-9+.\\-]*:"), r)
-      .otherwise(concat(mOrigin, norm, mQuery))
-  }
+    * A null ref gives null; an absolute ref resolves even against a null
+    * base. */
+  def resolveUrl(base: Column, ref: Column): Column =
+    native(ResolveUrlExpr(expr(base), expr(ref)))
 
   /** REP (RFC 9309 §2.2.2) match target of a URL: the URI path ('/' when
     * empty) plus '?query' when a non-empty query is present — the string
     * robots.txt Allow/Disallow patterns are matched against. Path case is
     * preserved (REP rule matching is case-sensitive); a bare trailing '?'
     * with no query is dropped, consistent with [[canonicalizeUrl]]. */
-  def urlMatchTarget(url: Column): Column = {
-    val (_, _, path, query) = splitUrl(url)
-    concat(
-      when(path === "", lit("/")).otherwise(path),
-      when(query =!= "", concat(lit("?"), query)).otherwise(lit("")))
-  }
-
-  /** RFC 3986 §6.2.2.2 percent-escape normalization (pure column ops):
-    * split on '%', treat each following piece's first two chars as the
-    * escape — decode when the byte is unreserved (ALPHA / DIGIT / - . _ ~,
-    * hex-pair pattern `3[0-9]|4[1-9A-F]|5[0-9A]|6[1-9A-F]|7[0-9A]|2[DE]|
-    * 5F|7E`), uppercase the hex otherwise, pass malformed escapes through
-    * verbatim. Reserved bytes never decode, so applying this to a path or
-    * a whole query string cannot create new `/` `?` `&` `=` structure. */
-  private def pctNormalize(s: Column): Column = {
-    val max = Int.MaxValue
-    val parts = split(s, "%", -1)
-    val fixed = transform(parts, (p, i) => {
-      val h = upper(substring(p, 1, 2))
-      val rest = substring(p, 3, max)
-      when(i === 0, p)
-        .when(!h.rlike("^[0-9A-F]{2}$"), concat(lit("%"), p))
-        .when(h.rlike("^(3[0-9]|4[1-9A-F]|5[0-9A]|6[1-9A-F]|7[0-9A]|2[DE]|5F|7E)$"),
-          concat(decode(unhex(h), "UTF-8"), rest))
-        .otherwise(concat(lit("%"), h, rest))
-    })
-    // fast path: almost no real-crawl URL carries an escape, and the
-    // split/transform/join chain is an interpreted higher-order pipeline —
-    // a codegen'd contains() gates it to the rows that need it
-    when(!s.contains("%"), s).otherwise(array_join(fixed, ""))
-  }
+  def urlMatchTarget(url: Column): Column = native(UrlMatchTargetExpr(expr(url)))
 
   /** Canonical URL under the contract above. Non-URL strings (no
     * `scheme://`) come back trimmed-and-defragmented only — a salvage
     * identity, never a null that silently drops crawl rows. */
-  def canonicalizeUrl(url: Column): Column = {
-    val (scheme, authority, path, query) = splitUrl(url)
-    val host = hostOf(authority)
-    val port = portOf(authority)
-    val keepPort = port =!= "" &&
-      !((scheme === "http" && port === "80") ||
-        (scheme === "https" && port === "443"))
-    val canonAuth = concat(host, when(keepPort, concat(lit(":"), port)).otherwise(lit("")))
-    // single-reference forms: Catalyst expressions are trees, so a
-    // `when(x === "", …).otherwise(x)` would INLINE the whole
-    // pct-normalization twice — and the duplication is re-analyzed on
-    // every downstream action of a composed pipeline. `(?!^)/+$` strips
-    // trailing slashes while never emptying the string (root `/` keeps
-    // itself), and the lone-`?` strip plays the same role for the query.
-    val trimmedPath = when(path === "", lit("/"))
-      .otherwise(regexp_replace(pctNormalize(path), "(?!^)/+$", ""))
-    val params = filter(split(pctNormalize(query), "&"), p => p =!= "")
-    val canonQuery = regexp_replace(
-      concat(lit("?"), array_join(array_sort(params), "&")), "^\\?$", "")
-    when(scheme === "", regexp_extract(trim(url), "^([^#]*)", 1))
-      .otherwise(concat(scheme, lit("://"), canonAuth, trimmedPath, canonQuery))
-  }
+  def canonicalizeUrl(url: Column): Column = native(CanonicalizeUrlExpr(expr(url)))
 
   /** Registered (registrable) domain of a URL column under the bundled
     * PSL rule subset and the PSL algorithm: exception rules prevail

@@ -145,4 +145,16 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.strikeSet(Set("qa"), Set("qb"), Set("qc")) ===
       Set("qa", "qb", "qc"))
   }
+
+  test("the contract line parses as JSON under a comma-decimal JVM locale") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    val line = try Bench.contractLine(12.3456, Seq("q01" -> 0.5, "q130" -> 1.25),
+      "/data/sf0.1", "8") finally java.util.Locale.setDefault(saved)
+    assert(line === """{"metric":"total","value":12.346,"unit":"sec",""" +
+      """"queries":{"q01":0.500,"q130":1.250},"sf":"/data/sf0.1","cpus":"8"}""")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(json.path("value").asDouble() === 12.346)
+    assert(json.path("queries").path("q130").asDouble() === 1.25)
+  }
 }

@@ -432,4 +432,35 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"),
       s"pixel rows must never be sorted for the dims lookup:\n$p")
   }
+
+  /** Expression nodes of an analyzed plan, subqueries included. */
+  private def exprNodes(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
+    plan.collectWithSubqueries { case p => p.expressions.map(_.collect { case e => e }.size).sum }
+      .sum
+
+  test("canonicalizeUrl(resolveUrl(a, b)) analyzes to a handful of nodes") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val df = Seq(("http://h.ex/a/b", "../c")).toDF("a", "b")
+      .select(graft.functions.UrlFunctions.canonicalizeUrl(
+        graft.functions.UrlFunctions.resolveUrl(col("a"), col("b"))).as("u"))
+    // the Column-chain form of this expression analyzed to 32,178 nodes;
+    // count the select's own expression, not the relation under it
+    val n = df.queryExecution.analyzed.expressions.map(_.collect { case e => e }.size).sum
+    assert(n < 10, s"canonicalizeUrl(resolveUrl(a, b)) analyzed to $n nodes")
+  }
+
+  test("every query builder's analyzed plan stays under 5,000 expression nodes (sf0.01)") {
+    // Expression trees that re-read their input multiply under nesting;
+    // Catalyst then re-analyzes, re-optimizes and re-plans them at every
+    // action and eager cut. The largest plan measured 4,296 nodes (q171)
+    // when this bound was set. Plans cut by localCheckpoint count from
+    // the cut only.
+    val bound = 5000
+    val over = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (q, build) =>
+      val n = exprNodes(build(spark, "/root/testdata/sf0.01").queryExecution.analyzed)
+      if (n > bound) Some(s"$q: $n nodes") else None
+    }
+    assert(over.isEmpty, s"analyzed plans over $bound expression nodes:\n${over.mkString("\n")}")
+  }
 }

@@ -39,6 +39,19 @@ class SortedIntersectCountSpec extends SparkSpec {
     }
   }
 
+  test("the interpreted path rejects unsorted input with require, not an elidable assert") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    def arr(xs: Long*) =
+      Literal(new GenericArrayData(xs.toArray[Any]), ArrayType(LongType, false))
+    assert(SortedIntersectCountExpr(arr(1L, 2L, 5L), arr(2L, 5L)).eval() === 2)
+    val e = intercept[IllegalArgumentException] {
+      SortedIntersectCountExpr(arr(1L, 2L), arr(5L, 2L)).eval()
+    }
+    assert(e.getMessage.contains("right array violates the sorted-ascending contract"))
+  }
+
   private def withSQLConf[A](pairs: (String, String)*)(f: => A): A = {
     val conf = spark.conf
     val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }

@@ -384,4 +384,256 @@ class UrlFunctionsSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(literal === joined)
   }
+
+  // ---------------------------------- native ≡ Column reference (parity)
+
+  private val R = UrlColumnReference
+
+  /** (id, base, ref, url) rows → rows whose native and reference forms of
+    * the four functions differ, rendered for the failure message. */
+  private def divergences(rows: Seq[(Int, Option[String], Option[String], Option[String])])
+      : Seq[String] = {
+    val df = rows.toDF("id", "base", "ref", "url")
+    val (b, r, u) = (col("base"), col("ref"), col("url"))
+    val pairs = Seq(
+      "canonicalizeUrl" -> (UrlFunctions.canonicalizeUrl(u), R.canonicalizeUrl(u)),
+      "urlHost" -> (UrlFunctions.urlHost(u), R.urlHost(u)),
+      "urlMatchTarget" -> (UrlFunctions.urlMatchTarget(u), R.urlMatchTarget(u)),
+      "resolveUrl" -> (UrlFunctions.resolveUrl(b, r), R.resolveUrl(b, r)))
+    val cols = col("id") +: pairs.flatMap { case (n, (nat, ref)) =>
+      Seq(nat.as(s"${n}_native"), ref.as(s"${n}_ref")) }
+    val byId = rows.map(x => x._1 -> x).toMap
+    df.select(cols: _*).collect().toSeq.flatMap { row =>
+      pairs.indices.collect { case k if row.get(1 + 2 * k) != row.get(2 + 2 * k) =>
+        val in = byId(row.getInt(0))
+        s"${pairs(k)._1}: base=${in._2} ref=${in._3} url=${in._4} native=${row.get(1 + 2 * k)} " +
+          s"reference=${row.get(2 + 2 * k)}"
+      }
+    }
+  }
+
+  /** The generated URL battery: every corner of the grammar the Column
+    * forms encode — escapes (valid, lowercase, malformed, truncated,
+    * followed by non-ASCII or by a case-expanding letter), ports, IPv6,
+    * userinfo, dot segments, `#` before a newline, IDN and case-mapping
+    * hosts, whitespace the SQL `trim` keeps, empty and null parts. */
+  private object UrlGen {
+    import org.scalacheck.Gen
+    private val ws = Gen.oneOf("", "", " ", "  ", "\t", "\n", " \u00a0")
+    private val scheme = Gen.oneOf("http", "HTTP", "https", "HtTpS", "ftp",
+      "svn+ssh", "a.b-c", "1x", "", "mailto:", "http:/")
+    private val userinfo = Gen.oneOf("", "", "u:p@", "@", "a@b@", "ü:%41@")
+    private val host = Gen.oneOf("Example.COM", "a.b.co.uk", "x.y.ck", "www.ck",
+      "192.168.0.1", "[2001:DB8::1]", "[::1]", "[::1", "localhost", "a..b", "",
+      ".", "Bücher.DE", "xn--bcher-kva.de", "ДОМ.РФ", "İSTANBUL.tr", "STRASSE.ß",
+      "ﬀ.com", "日本.jp", "h\u2028x",
+      "\ua7c0.pl") // Unicode 14: ICU case-maps it, JDK 17's String does not
+    private val port = Gen.oneOf("", "", ":80", ":443", ":8080", ":", ":0",
+      ":abc", ":80:90", ":443\n")
+    private val segment = Gen.oneOf("a", "B", ".", "..", "", "%7e", "%7E",
+      "%2f", "%2F", "%zz", "%4", "%", "%c3%a9", "%41%42", "caf%C3%A9", "%ﬀ",
+      "%ß1", "%é", "%😀x", "😀", "%\uff61", "a b", "x;y=1", "%2d%2E%5f")
+    private val path = Gen.choose(0, 5).flatMap(n =>
+      Gen.listOfN(n, segment).map(ss => if (n == 0) "" else ss.mkString("/", "/", "")))
+      .flatMap(p => Gen.oneOf(p, p + "/", p + "//", p + "/\n"))
+    private val param = Gen.oneOf("", "a=1", "b=2", "a=2", "k=%2d%2E", "x=%41",
+      "y=%zz", "=", "a", "z=\uff61", "z=😀", "q=a?b", "%26=%3D", "é=1", "\n")
+    private val query = Gen.oneOf(Gen.const(""), Gen.const("?"),
+      Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, param).map(_.mkString("?", "&", ""))))
+    private val frag = Gen.oneOf("", "", "#", "#f", "#f\nx", "#a#b", "#\n")
+
+    val url: Gen[String] = for {
+      w1 <- ws; s <- scheme; ui <- userinfo; h <- host; pt <- port
+      p <- path; q <- query; f <- frag; w2 <- ws
+    } yield if (s.isEmpty) s"$w1$h$p$q$f$w2" else s"$w1$s://$ui$h$pt$p$q$f$w2"
+
+    private val relRef = for {
+      head <- Gen.oneOf("", "/", "//other.ex", "?", "./", "../", "../../",
+        "a/../", "/./", "HTTP://O.ex/", "mailto:", ".", "..")
+      p <- path; q <- query; f <- frag
+    } yield head + p.stripPrefix("/") + q + f
+    val ref: Gen[Option[String]] = Gen.frequency(
+      8 -> relRef.map(Some(_)), 2 -> url.map(Some(_)), 1 -> Gen.const(None))
+    val base: Gen[Option[String]] =
+      Gen.frequency(8 -> url.map(Some(_)), 1 -> Gen.const(None))
+    val row: Gen[(Option[String], Option[String], Option[String])] = for {
+      b <- base; r <- ref; u <- Gen.frequency(12 -> url.map(Some(_)), 1 -> Gen.const(None))
+    } yield (b, r, u)
+  }
+
+  test("property: native URL expressions ≡ their Column reference forms") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    val batch = Gen.listOfN(150, UrlGen.row)
+    val prop = Prop.forAllNoShrink(batch) { rows =>
+      val bad = divergences(rows.zipWithIndex.map { case ((b, r, u), i) => (i, b, r, u) })
+      Prop(bad.isEmpty) :| bad.take(5).mkString("\n")
+    }
+    val res = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(8).withInitialSeed(Seed(20261019L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
+  test("parity traps: trim, code points, byte order, case expansion, null base") {
+    val traps = Seq(
+      // SQL trim strips spaces only: a tab keeps the string a non-URL
+      (None, None, Some("\thttp://X.com/a\t")) -> "\thttp://X.com/a\t",
+      (None, None, Some("  http://X.com/a  ")) -> "http://x.com/a",
+      // substring counts code points: the escape is the first two of them
+      (None, None, Some("http://x/%😀😀z")) -> "http://x/%😀😀z",
+      (None, None, Some("http://x/%41😀")) -> "http://x/A😀",
+      // array_sort is UTF-8 byte order (U+FF61 < U+1F600), not UTF-16
+      (None, None, Some("http://x/?a=😀&a=\uff61")) -> "http://x/?a=\uff61&a=😀",
+      // upper can lengthen: ﬀ uppercases to the hex pair FF
+      (None, None, Some("http://x/%ﬀ")) -> "http://x/%FF",
+      (None, None, Some("http://x/%ß1")) -> "http://x/%ß1",
+      // `#.*$` does not cross a non-final newline; `$` sits before a final one
+      (None, None, Some("http://x/a#f\nb")) -> "http://x/a")
+    val got = traps.zipWithIndex.map { case (((b, r, u), _), i) => (i, b, r, u) }
+    assert(divergences(got).isEmpty)
+    val canon = traps.map(_._1._3).toDF("url")
+      .select(UrlFunctions.canonicalizeUrl(col("url"))).collect().map(_.getString(0))
+    assert(canon.toSeq === traps.map(_._2))
+    // resolveUrl is not null-intolerant: an absolute ref needs no base
+    val resolved = Seq((Option.empty[String], Some("http://x/")),
+        (Option.empty[String], Some("rel")), (Some("http://h/a"), Option.empty[String]),
+        (Some("http://h/a"), Some("c#f\nx")))
+      .toDF("base", "ref")
+      .select(UrlFunctions.resolveUrl(col("base"), col("ref")),
+        R.resolveUrl(col("base"), col("ref"))).collect()
+    assert(resolved.map(_.getString(0)).toSeq ===
+      Seq("http://x/", null, null, "http://h/c#f\nx"))
+    assert(resolved.forall(r => r.getString(0) == r.getString(1)))
+  }
+
+  test("the native URL expressions are callable from SQL") {
+    val urls = Seq(("http://h.ex/a/b", "../C/?b=1&a=2#x")).toDF("base", "ref")
+    val nested = urls.select(UrlFunctions.canonicalizeUrl(
+      UrlFunctions.resolveUrl(col("base"), col("ref"))).as("u"))
+    graft.expr.GraftExtensions.register(spark)
+    urls.createOrReplaceTempView("graft_url_pairs")
+    val row = spark.sql(
+      """SELECT canonicalize_url(resolve_url(base, ref)) AS c,
+        |       url_host(base) AS h, url_match_target(ref) AS t
+        |FROM graft_url_pairs""".stripMargin).head()
+    assert(row.getString(0) === nested.head().getString(0))
+    assert(row.getString(0) === "http://h.ex/C?a=2&b=1")
+    assert(row.getString(1) === "h.ex")
+    // a relative ref has no scheme, so `..` parses as its authority
+    assert(row.getString(2) === "/C/?b=1&a=2")
+  }
+}
+
+/** The executable reference for the native URL expressions
+  * ([[graft.expr.UrlText]]): the Column compositions (`regexp_*`, `when`,
+  * `transform` chains over Spark builtins) that `UrlFunctions` shipped
+  * before the grammar became one expression node per call. Kept verbatim
+  * so the parity property above pins native ≡ reference. Each function
+  * reads its input several times, so nesting multiplies the tree —
+  * `canonicalizeUrl(resolveUrl(b, r))` analyzes to about 32k nodes. */
+object UrlColumnReference {
+  import org.apache.spark.sql.Column
+
+  private def splitUrl(url: Column): (Column, Column, Column, Column) = {
+    val noFrag = regexp_extract(trim(url), "^([^#]*)", 1)
+    val scheme = lower(regexp_extract(noFrag, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
+    val rest = regexp_replace(noFrag, "^[A-Za-z][A-Za-z0-9+.-]*://", "")
+    // authority = up to the first '/' or '?', userinfo stripped
+    val authority = regexp_replace(
+      regexp_extract(rest, "^([^/?]*)", 1), "^[^@]*@", "")
+    val pathQuery = regexp_replace(rest, "^[^/?]*", "")
+    val path = regexp_extract(pathQuery, "^([^?]*)", 1)
+    val query = when(pathQuery.contains("?"),
+      regexp_replace(pathQuery, "^[^?]*\\?", "")).otherwise(lit(""))
+    (scheme, lower(authority), path, query)
+  }
+
+  private def hostOf(authority: Column): Column =
+    when(authority.startsWith("["),
+      regexp_extract(authority, "^(\\[[^\\]]*\\])", 1))
+      .otherwise(regexp_extract(authority, "^([^:]*)", 1))
+
+  private def portOf(authority: Column): Column =
+    when(authority.startsWith("["),
+      regexp_extract(authority, "^\\[[^\\]]*\\]:([0-9]+)$", 1))
+      .otherwise(when(authority.contains(":"),
+        regexp_extract(authority, ":([0-9]*)$", 1)).otherwise(lit("")))
+
+  def urlHost(url: Column): Column = {
+    val (_, authority, _, _) = splitUrl(url)
+    hostOf(authority)
+  }
+
+  def resolveUrl(base: Column, ref: Column): Column = {
+    val r = regexp_replace(ref, "#.*$", "")
+    val b = regexp_replace(base, "#.*$", "")
+    val bScheme = lower(regexp_extract(b, "^([a-zA-Z][a-zA-Z0-9+.\\-]*)://", 1))
+    val bAuth = regexp_extract(b, "^[a-zA-Z][a-zA-Z0-9+.\\-]*://([^/?#]*)", 1)
+    val origin = concat(bScheme, lit("://"), bAuth)
+    val bPathQ = regexp_replace(b, "^[a-zA-Z][a-zA-Z0-9+.\\-]*://[^/?#]*", "")
+    val bPath = regexp_extract(bPathQ, "^([^?]*)", 1)
+    val dir = when(bPath.contains("/"),
+      regexp_replace(bPath, "/[^/]*$", "/")).otherwise(lit("/"))
+    val merged =
+      when(r === "", b)
+        .when(r.rlike("^[a-zA-Z][a-zA-Z0-9+.\\-]*:"), r)
+        .when(r.startsWith("//"), concat(bScheme, lit(":"), r))
+        .when(r.startsWith("/"), concat(origin, r))
+        .when(r.startsWith("?"),
+          concat(origin, when(bPath === "", lit("/")).otherwise(bPath), r))
+        .otherwise(concat(origin, dir, r))
+    // remove_dot_segments on the merged PATH only (query untouched);
+    // skip for verbatim absolute refs, matching urljoin
+    val mOrigin = regexp_extract(merged, "^([a-zA-Z][a-zA-Z0-9+.\\-]*://[^/?#]*)", 1)
+    val mPathQ = regexp_replace(merged, "^[a-zA-Z][a-zA-Z0-9+.\\-]*://[^/?#]*", "")
+    val mPath = regexp_extract(mPathQ, "^([^?]*)", 1)
+    val mQuery = when(mPathQ.contains("?"),
+      regexp_replace(mPathQ, "^[^?]*", "")).otherwise(lit(""))
+    val norm = (1 to 8).foldLeft(mPath) { (acc, _) =>
+      val noDot = regexp_replace(acc, "/\\.(/|$)", "/")
+      val noUp = regexp_replace(noDot, "/(?!\\.\\./)[^/]+/\\.\\.(/|$)", "/")
+      regexp_replace(noUp, "^/\\.\\.(/|$)", "/")
+    }
+    when(r.rlike("^[a-zA-Z][a-zA-Z0-9+.\\-]*:"), r)
+      .otherwise(concat(mOrigin, norm, mQuery))
+  }
+
+  def urlMatchTarget(url: Column): Column = {
+    val (_, _, path, query) = splitUrl(url)
+    concat(
+      when(path === "", lit("/")).otherwise(path),
+      when(query =!= "", concat(lit("?"), query)).otherwise(lit("")))
+  }
+
+  private def pctNormalize(s: Column): Column = {
+    val max = Int.MaxValue
+    val parts = split(s, "%", -1)
+    val fixed = transform(parts, (p, i) => {
+      val h = upper(substring(p, 1, 2))
+      val rest = substring(p, 3, max)
+      when(i === 0, p)
+        .when(!h.rlike("^[0-9A-F]{2}$"), concat(lit("%"), p))
+        .when(h.rlike("^(3[0-9]|4[1-9A-F]|5[0-9A]|6[1-9A-F]|7[0-9A]|2[DE]|5F|7E)$"),
+          concat(decode(unhex(h), "UTF-8"), rest))
+        .otherwise(concat(lit("%"), h, rest))
+    })
+    when(!s.contains("%"), s).otherwise(array_join(fixed, ""))
+  }
+
+  def canonicalizeUrl(url: Column): Column = {
+    val (scheme, authority, path, query) = splitUrl(url)
+    val host = hostOf(authority)
+    val port = portOf(authority)
+    val keepPort = port =!= "" &&
+      !((scheme === "http" && port === "80") ||
+        (scheme === "https" && port === "443"))
+    val canonAuth = concat(host, when(keepPort, concat(lit(":"), port)).otherwise(lit("")))
+    val trimmedPath = when(path === "", lit("/"))
+      .otherwise(regexp_replace(pctNormalize(path), "(?!^)/+$", ""))
+    val params = filter(split(pctNormalize(query), "&"), p => p =!= "")
+    val canonQuery = regexp_replace(
+      concat(lit("?"), array_join(array_sort(params), "&")), "^\\?$", "")
+    when(scheme === "", regexp_extract(trim(url), "^([^#]*)", 1))
+      .otherwise(concat(scheme, lit("://"), canonAuth, trimmedPath, canonQuery))
+  }
 }
