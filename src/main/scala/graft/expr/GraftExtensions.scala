@@ -17,30 +17,10 @@ object GraftExtensions {
   /** Register the native functions on an already-running session (the
     * builder-time `withExtensions` path needs a fresh session; this path
     * covers notebooks/REPLs attaching to an existing one). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val ext = new GraftExtensions
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_signature", ext.makeMinhash, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", ext.makeDot, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "band_math", ext.makeBandMath, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", ext.makeSimhash, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_md5_16", ext.makeSimhashMd5, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_ngrams", ext.makeWordNgrams, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quantize_int8", ext.makeQuantize, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "window_digests", ext.makeWindowDigests, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "search_sorted", ext.makeSearchSorted, "scala_udf")
-    for ((name, _, make) <- ext.urlFunctions)
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    for ((name, _, make) <- new GraftExtensions().functions)
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         name, make, "scala_udf")
-  }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -104,14 +84,26 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     SearchSortedExpr(args.head, cuts): Expression
   }
 
-  /** The URL grammar ([[UrlText]]): (SQL name, expression class, builder). */
-  private[expr] val urlFunctions: Seq[(String, Class[_], Seq[Expression] => Expression)] = {
+  /** Every SQL function of the engine: (SQL name, expression class,
+    * builder). Both registration paths — [[apply]] at session build and
+    * [[GraftExtensions.register]] on a live session — read this table. */
+  private[expr] lazy val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = {
     def unary(name: String, cls: Class[_], mk: Expression => Expression) =
       (name, cls, (args: Seq[Expression]) => {
         require(args.length == 1, s"$name(url)")
         mk(args.head)
       })
     Seq(
+      ("minhash_signature", classOf[MinHashSignatureExpr], makeMinhash),
+      ("dot_product", classOf[DotProductExpr], makeDot),
+      ("band_math", classOf[BandMathExpr], makeBandMath),
+      ("simhash64", classOf[SimHashExpr], makeSimhash),
+      ("simhash_md5_16", classOf[SimHashMd5Expr], makeSimhashMd5),
+      ("word_ngrams", classOf[WordNgramsExpr], makeWordNgrams),
+      ("quantize_int8", classOf[QuantizeInt8Expr], makeQuantize),
+      ("window_digests", classOf[WindowDigestsExpr], makeWindowDigests),
+      ("search_sorted", classOf[SearchSortedExpr], makeSearchSorted),
+      // the URL grammar ([[UrlText]])
       unary("canonicalize_url", classOf[CanonicalizeUrlExpr], CanonicalizeUrlExpr(_)),
       unary("url_host", classOf[UrlHostExpr], UrlHostExpr(_)),
       unary("url_match_target", classOf[UrlMatchTargetExpr], UrlMatchTargetExpr(_)),
@@ -121,47 +113,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
   }
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    for ((name, cls, make) <- urlFunctions)
+  override def apply(ext: SparkSessionExtensions): Unit =
+    for ((name, cls, make) <- functions)
       ext.injectFunction((new FunctionIdentifier(name),
         new ExpressionInfo(cls.getName, name), make))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSignatureExpr].getName, "minhash_signature"),
-      makeMinhash))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProductExpr].getName, "dot_product"),
-      makeDot))
-    ext.injectFunction((
-      new FunctionIdentifier("band_math"),
-      new ExpressionInfo(classOf[BandMathExpr].getName, "band_math"),
-      makeBandMath))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHashExpr].getName, "simhash64"),
-      makeSimhash))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash_md5_16"),
-      new ExpressionInfo(classOf[SimHashMd5Expr].getName, "simhash_md5_16"),
-      makeSimhashMd5))
-    ext.injectFunction((
-      new FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNgramsExpr].getName, "word_ngrams"),
-      makeWordNgrams))
-    ext.injectFunction((
-      new FunctionIdentifier("quantize_int8"),
-      new ExpressionInfo(classOf[QuantizeInt8Expr].getName, "quantize_int8"),
-      makeQuantize))
-    ext.injectFunction((
-      new FunctionIdentifier("window_digests"),
-      new ExpressionInfo(classOf[WindowDigestsExpr].getName, "window_digests"),
-      makeWindowDigests))
-    ext.injectFunction((
-      new FunctionIdentifier("search_sorted"),
-      new ExpressionInfo(classOf[SearchSortedExpr].getName, "search_sorted"),
-      makeSearchSorted))
-  }
 
   private[expr] val makeBandMath = (args: Seq[Expression]) => {
         // band_math(expr_string, out_nodata, min, max, band_name..., band_array..., band_nodata...)

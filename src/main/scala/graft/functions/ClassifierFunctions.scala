@@ -457,7 +457,8 @@ object ClassifierFunctions {
       val df = base.localCheckpoint(true)
       val cnt = df.agg(
         sum(when(col("y"), 1L).otherwise(0L)).as("np"),
-        sum(when(!col("y"), 1L).otherwise(0L)).as("nn")).head()
+        // not `!y`: a null label is negative here too, as in the target below
+        sum(when(col("y"), 0L).otherwise(1L)).as("nn")).head()
       val np = cnt.getLong(0); val nn = cnt.getLong(1)
       require(np > 0 && nn > 0, s"fitPlatt needs both classes, got +$np/-$nn")
       val tPos = (np + 1.0) / (np + 2.0)

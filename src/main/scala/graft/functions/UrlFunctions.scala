@@ -213,19 +213,6 @@ object UrlFunctions {
       WildcardBases1.map("*." + _) ++ WildcardBases2.map("*." + _) ++
       Exceptions2.map("!" + _) ++ Exceptions3.map("!" + _)
 
-  /** Registered domain under an ARBITRARY public-suffix rule list in PSL
-    * file syntax: `rule` (exact), `*.base` (wildcard — every single label
-    * under the base is a suffix), `!rule` (exception — the rule itself is
-    * registrable, prevailing over any wildcard that covers it); comment
-    * (`// …`) and blank lines are ignored, so the raw
-    * public_suffix_list.dat feeds in directly. The PSL algorithm:
-    * exceptions prevail, else the longest matching rule (wildcards count
-    * base+1 labels), else the default `*` rule (suffix = last label).
-    *
-    * Still a no-join design at ANY list size: each distinct rule depth
-    * compiles to one `isin` (OptimizeIn folds a literal In to an O(1)
-    * InSet), so the full ~10k-rule PSL is a handful of hashed string
-    * sets riding the plan — never a dimension join, never a UDF. */
   /** PSL-file-syntax rule parse shared by the literal and the joined
     * forms: (exceptions, wildcard bases, exacts), each grouped by label
     * count; comment and blank lines dropped. */
@@ -240,6 +227,19 @@ object UrlFunctions {
       byLen(clean.filterNot(r => r.startsWith("!") || r.startsWith("*."))))
   }
 
+  /** Registered domain under an ARBITRARY public-suffix rule list in PSL
+    * file syntax: `rule` (exact), `*.base` (wildcard — every single label
+    * under the base is a suffix), `!rule` (exception — the rule itself is
+    * registrable, prevailing over any wildcard that covers it); comment
+    * (`// …`) and blank lines are ignored, so the raw
+    * public_suffix_list.dat feeds in directly. The PSL algorithm:
+    * exceptions prevail, else the longest matching rule (wildcards count
+    * base+1 labels), else the default `*` rule (suffix = last label).
+    *
+    * Still a no-join design at ANY list size: each distinct rule depth
+    * compiles to one `isin` (OptimizeIn folds a literal In to an O(1)
+    * InSet), so the full ~10k-rule PSL is a handful of hashed string
+    * sets riding the plan — never a dimension join, never a UDF. */
   def registeredDomainFromRules(url: Column, rules: Seq[String]): Column = {
     val (exc, wild, exact) = parsePslRules(rules)
 

@@ -1,8 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Dataflow orchestration: the engine's replacement for the reference's
   * Celery task DAGs (SURVEY.md §2.11).
@@ -16,12 +20,16 @@ import org.apache.spark.sql.functions._
   *    max_retries=72, delay=900 s)
   *  - provider priority failover (collect.py:86–137)
   *
-  * Architecture: activities/edges/executions are plain DataFrames persisted
-  * as parquet; the DAG walk is a driver-side topological loop over stage
-  * LEVELS (depth of the task tree, single digits), while everything inside
-  * a level is data-parallel across executors. State mutation is
-  * merge-by-key (union + window top-1) — the Delta-MERGE pattern without a
-  * Delta dependency.
+  * Architecture: the DAG walk is a driver-side topological loop over stage
+  * LEVELS (depth of the task tree, single digits). A batch's activity
+  * table is a dozen rows, so [[runBatch]] collects it once and walks it on
+  * the driver: each kernel receives its pending rows as a local DataFrame,
+  * its result is collected exactly once per attempt, and the settled rows
+  * are upserted by (sceneid, collection_id, activity_type) in a driver
+  * map. Spark jobs are left to the pixel work inside the kernels. Tables
+  * that stay distributed (items, activity state in the API) are upserted
+  * with [[mergeByKey]] (union + window top-1) — the Delta-MERGE pattern
+  * without a Delta dependency.
   */
 object Pipeline {
 
@@ -70,9 +78,6 @@ object Pipeline {
       .filter(col("__rn") === 1).drop("__rn", "__prec")
   }
 
-  /** One stage-execution attempt outcome. */
-  final case class StageResult(df: DataFrame)
-
   /** A stage kernel: takes the activities selected for this stage, returns
     * them with a `status` column in {SUCCESS, FAILURE, RETRY}. RETRY marks
     * transient failures (the reference's DataOfflineError/
@@ -83,54 +88,65 @@ object Pipeline {
     * celery/__init__.py:63–67): a level's activities run only when their
     * parent activity for the same scene reached SUCCESS; transient RETRY
     * rows are re-attempted up to `maxRetries` inside the level (the batch
-    * analogue of re-enqueue-with-backoff). Returns (final activities,
-    * executions log).
+    * analogue of re-enqueue-with-backoff), and rows still RETRY after that
+    * settle as FAILURE (dead-letter, ST3). Returns (final activities,
+    * executions log), both local DataFrames; the log is
+    * `spark.emptyDataFrame` when no attempt ran.
+    *
+    * The walk runs on the driver over the collected activities. Each
+    * attempt hands the kernel a local DataFrame of its pending rows and
+    * collects the kernel's result once, so a kernel with side effects (a
+    * download, a write) runs once per attempt and the executions log
+    * records what the activities settled on. Duplicate keys in
+    * `activities` collapse to one row, as a merge by key would.
     */
   def runBatch(activities: DataFrame, tree: TaskNode,
                kernels: Map[String, StageKernel], maxRetries: Int = 3)
               (implicit spark: SparkSession): (DataFrame, DataFrame) = {
+    val schema = activities.schema
+    // kernel results are read back in the activities' schema
+    val asActs = schema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name))
+    val Seq(iScene, iColl, iType, iStatus, iRetry) =
+      Seq("sceneid", "collection_id", "activity_type", "status", "retry_count")
+        .map(schema.fieldIndex)
+    def key(r: Row) = (r.get(iScene), r.get(iColl), r.get(iType))
+    def withStatus(r: Row, status: String, retries: Int): Row =
+      Row.fromSeq(r.toSeq.updated(iStatus, status).updated(iRetry, r.getInt(iRetry) + retries))
+    val acts = mutable.LinkedHashMap.empty[(Any, Any, Any), Row]
+    activities.collect().foreach(r => acts(key(r)) = r)
+    val executions = mutable.ArrayBuffer.empty[Row]
     val levels = flattenTree(tree).groupBy(_._3).toSeq.sortBy(_._1)
-    var acts = activities
-    var executions = spark.emptyDataFrame
-    var haveExec = false
     for ((_, nodes) <- levels; (taskType, parentType, _) <- nodes) {
       val kernel = kernels.getOrElse(taskType,
         throw new IllegalArgumentException(s"no kernel for stage $taskType"))
       // runnable = PENDING activities of this type whose parent succeeded
-      val mine = acts.filter(col("activity_type") === taskType && col("status") === "PENDING")
-      val runnable = parentType match {
-        case None => mine
-        case Some(p) =>
-          val okParents = acts.filter(col("activity_type") === p && col("status") === "SUCCESS")
-            .select(col("sceneid"), col("collection_id"))
-          mine.join(okParents, Seq("sceneid", "collection_id"), "left_semi")
-      }
-      var pending = runnable
+      val okParents = parentType.map(p => acts.values.collect {
+        case r if r.get(iType) == p && r.get(iStatus) == "SUCCESS" => (r.get(iScene), r.get(iColl))
+      }.toSet)
+      var pending: Seq[Row] = acts.values.filter { r =>
+        r.get(iType) == taskType && r.get(iStatus) == "PENDING" &&
+          okParents.forall(_.contains((r.get(iScene), r.get(iColl))))
+      }.toSeq
+      val settled = mutable.ArrayBuffer.empty[Row]
       var attempt = 0
-      var done: DataFrame = null
-      while (attempt <= maxRetries && pending.head(1).nonEmpty) {
-        val res = kernel(pending).withColumn("attempt", lit(attempt))
-        val exec = res.select(col("sceneid"), col("collection_id"),
-          col("activity_type"), col("status"), col("attempt"))
-        executions = if (haveExec) executions.unionByName(exec) else exec
-        haveExec = true
-        val finished = res.filter(col("status") =!= "RETRY")
-        done = if (done == null) finished else done.unionByName(finished)
-        pending = res.filter(col("status") === "RETRY")
-          .withColumn("status", lit("PENDING"))
-          .withColumn("retry_count", col("retry_count") + 1)
-          .drop("attempt")
+      while (attempt <= maxRetries && pending.nonEmpty) {
+        val res = kernel(spark.createDataFrame(pending.asJava, schema))
+          .select(asActs: _*).collect()
+        res.foreach(r => executions +=
+          Row(r.get(iScene), r.get(iColl), r.get(iType), r.get(iStatus), attempt))
+        settled ++= res.filter(r => !r.isNullAt(iStatus) && r.get(iStatus) != "RETRY")
+        pending = res.filter(_.get(iStatus) == "RETRY").map(withStatus(_, "PENDING", 1)).toSeq
         attempt += 1
       }
-      // retries exhausted → FAILURE (dead-letter, ST3)
-      val exhausted = pending.withColumn("status", lit("FAILURE"))
-      val settled = if (done == null) exhausted else done.drop("attempt").unionByName(exhausted)
-      acts = mergeByKey(acts, settled.select(acts.columns.map(col): _*),
-        Seq("sceneid", "collection_id", "activity_type"))
-      // cache the merged state: each level re-reads it
-      acts = acts.localCheckpoint(eager = true)
+      settled ++= pending.map(withStatus(_, "FAILURE", 0)) // retries exhausted
+      settled.foreach(r => acts(key(r)) = r)
     }
-    (acts, executions)
+    val execSchema = StructType(
+      Seq("sceneid", "collection_id", "activity_type", "status").map(schema(_)) :+
+        StructField("attempt", IntegerType, nullable = false))
+    (spark.createDataFrame(acts.values.toSeq.asJava, schema),
+      if (executions.isEmpty) spark.emptyDataFrame
+      else spark.createDataFrame(executions.asJava, execSchema))
   }
 
   /** Provider priority failover (collect.py:86–137): given per-(scene,

@@ -31,7 +31,10 @@ object RasterKernels {
 
   /** Regroup a long tiles DataFrame (one row per scene/band/window) into one
     * row per (scene, window) with a band→pixels map — the shape every
-    * multi-band kernel consumes. Single shuffle on (scene_id, window). */
+    * multi-band kernel consumes. The grouping is satisfied by any
+    * partitioning on scene_id: over scene-partitioned tiles
+    * ([[SceneIO.readGeoTiffScenes]]) it plans no exchange, otherwise one
+    * hash exchange on the group key. */
   def pivotBands(tiles: DataFrame): DataFrame =
     tiles.groupBy(col("scene_id"), col("window_row"), col("window_col"),
         col("height"), col("width"))

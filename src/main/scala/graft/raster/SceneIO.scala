@@ -9,14 +9,18 @@ import java.awt.image.BufferedImage
   *  - S5: the reference reads rasterio block windows
   *    (index_generator.py:121, utils.py:351); here a full-scene band row
   *    explodes into block-window tiles — block boundaries become row
-  *    boundaries, so one scene's blocks process on many executors.
+  *    boundaries. The scene is the unit of partitioning: the reader
+  *    hash-partitions the decoded bands on scene_id, so a scene's bands
+  *    and tiles stay in one task through band math and the COG export
+  *    (no further pixel shuffle), while scenes spread across tasks.
   *  - S7/S8: two sinks. Engine-native: parquet partitioned by
   *    (scene_id, band) with the overview pyramid as extra factor-tagged
   *    rows (RasterKernels.overviews). Interchange: real tiled-deflate
   *    GeoTIFF files with overview IFDs via the pure-JVM [[GeoTiff]]
   *    codec — [[writeGeoTiff]] for one band, [[writeGeoTiffScenes]] for
-  *    the distributed all-bands fan-out (one shuffle, files written from
-  *    executors through the Hadoop FileSystem API).
+  *    the distributed all-bands fan-out (grouped by (scene, band): no
+  *    shuffle over scene-partitioned tiles, one otherwise; files written
+  *    from executors through the Hadoop FileSystem API).
   *  - S10: quicklook PNG encode uses JDK ImageIO — driver-side, on an
   *    already-downsampled 768×768 composite (publish.py:59–91), so the
   *    collect is ≤ 768·768·3 bytes per scene regardless of input size.
@@ -120,9 +124,18 @@ object SceneIO {
     * back to the last single `_` for externally-named files like
     * `S2A_T23LLF_0007_B04.tif` (the reference derives the same identity
     * from file names, collections/utils.py:335–342). The decode runs on
-    * EXECUTORS via Spark's binaryFile source — one file per task unit, so
-    * a 100 TB archive decodes with no driver involvement and no shuffle;
-    * tiling afterwards is a narrow explode. */
+    * EXECUTORS via Spark's binaryFile source, one file per task unit.
+    *
+    * Scene-local: the decoded rows are hash-partitioned on `scene_id` into
+    * the session's shuffle-partition count, so every band of a scene sits
+    * in one partition and [[tileScene]] (a narrow explode) keeps it there.
+    * [[RasterKernels.pivotBands]] and [[writeGeoTiffScenes]] then plan no
+    * exchange, also over a union of two persisted reads (same key, same
+    * partition count). The decode runs before that shuffle, over the
+    * file splits: partitioning the listing first keeps the pixels out of
+    * the shuffle but decodes a scene's bands in one task, and with a few
+    * scenes per batch the hash collisions of scene ids left cores idle
+    * (measured slower end to end on 4 scenes at local[4]). */
   def readGeoTiffScenes(spark: org.apache.spark.sql.SparkSession,
                         path: String,
                         window: Option[(Int, Int, Int, Int)] = None,
@@ -152,6 +165,7 @@ object SceneIO {
           img.meta.nodata.map(_.toFloat).getOrElse(0f), m.pixels)
       }
       .toDF("scene_id", "band", "height", "width", "nodata", "pixels")
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("scene_id"))
   }
 
   /** S5 at object-store scale — the RANGED windowed read: where
@@ -362,14 +376,17 @@ object SceneIO {
   }
 
   /** S7/S8 at scale — export EVERY (scene, band) as its own GeoTIFF in one
-    * distributed pass: a single shuffle keyed by (scene_id, band), SORTED
-    * within partitions by (window_row, window_col), brings each file's
-    * tiles to one task in stripe order; the task streams one stripe at a
-    * time through [[GeoTiff.RowEncoder]] and writes through the Hadoop
-    * FileSystem API — local, HDFS or s3a alike, matching the reference's
-    * one-COG-per-band output layout (cog_translate utils.py:113–154). The
-    * driver never sees pixel data, and per-task memory is O(strip): one
-    * input tile stripe + the encoder's per-page row bands (~35 MB at
+    * distributed pass: the tiles are grouped by (scene_id, band) and each
+    * group arrives SORTED by (window_row, window_col), i.e. in stripe
+    * order; the task streams one stripe at a time through
+    * [[GeoTiff.RowEncoder]] and writes through the Hadoop FileSystem API —
+    * local, HDFS or s3a alike, matching the reference's one-COG-per-band
+    * output layout (cog_translate utils.py:113–154). The grouping is
+    * satisfied by any partitioning on a subset of (scene_id, band): over
+    * scene-partitioned tiles ([[readGeoTiffScenes]]) it plans no exchange,
+    * over other input one hash exchange; the sort is within partitions.
+    * The driver never sees pixel data, and per-task memory is O(strip):
+    * one input tile stripe + the encoder's per-page row bands (~35 MB at
     * Sentinel-2's 10980² float32, vs ~480 MB for the pre-r10 stitch-the-
     * band path) plus the encoder's bounded compressed-tile buffer — the
     * same blockwise envelope the reference holds through rasterio windows
@@ -393,70 +410,60 @@ object SceneIO {
     tiles
       .select(col("scene_id"), col("band"), col("window_row"), col("window_col"),
         col("height"), col("width"), col("nodata").cast("double"), col("pixels"))
-      .repartition(col("scene_id"), col("band"))
-      .sortWithinPartitions(
-        col("scene_id"), col("band"), col("window_row"), col("window_col"))
-      .as[(String, String, Int, Int, Int, Int, Double, Array[Float])]
-      .mapPartitions { rows =>
-        val it = rows.buffered
-        new Iterator[(String, String, String, Long)] {
-          def hasNext: Boolean = it.hasNext
-          def next(): (String, String, String, Long) = {
-            val head = it.head
-            val (sceneId, band) = (head._1, head._2)
-            // explicit meta wins; otherwise tiles carry their band's nodata
-            val nodata = meta.nodata.orElse(Some(head._7))
-            // "__" separator so [[readGeoTiffScenes]] re-splits unambiguously
-            // even when the band name carries underscores (HDF subdatasets)
-            val path = new org.apache.hadoop.fs.Path(dir, s"${sceneId}__$band.tif")
-            val fs = path.getFileSystem(conf.value)
-            val os = fs.create(path, true)
-            var enc: GeoTiff.RowEncoder = null
-            var blockH = 0; var blockW = 0; var totalW = 0; var nextRow = 0
-            // one stripe = all tiles sharing a window_row (consecutive in
-            // the sorted stream); stripe 0 spans every column, so the grid
-            // geometry is known before the encoder must be constructed
-            val stripe = scala.collection.mutable.ArrayBuffer
-              .empty[(Int, Int, Int, Int, Array[Float])] // wr, wc, h, w, px
-            def flushStripe(): Unit = if (stripe.nonEmpty) {
-              val wr = stripe.head._1
-              if (enc == null) {
-                blockW = stripe.map(_._4).max
-                blockH = stripe.map(_._3).max
-                totalW = stripe.map(t => t._2 * blockW + t._4).max
-                enc = new GeoTiff.RowEncoder(os, totalW, meta.copy(nodata = nodata),
-                  tileSize, overviewFactors, compressionLevel, codec, dtype, container)
-              }
-              val base = wr * blockH
-              require(base >= nextRow, s"overlapping tile stripes at window_row=$wr")
-              if (base > nextRow) { // absent stripes read as 0f, like assembleTiles
-                val zero = new Array[Float](totalW)
-                while (nextRow < base) { enc.addRow(zero); nextRow += 1 }
-              }
-              val stripeH = stripe.map(_._3).max
-              val buf = new Array[Float](stripeH * totalW)
-              stripe.foreach { case (_, wc, h, w, px) =>
-                var r = 0
-                while (r < h) {
-                  System.arraycopy(px, r * w, buf, r * totalW + wc * blockW, w)
-                  r += 1
-                }
-              }
-              var r = 0
-              while (r < stripeH) { enc.addRow(buf, r * totalW); r += 1 }
-              nextRow += stripeH
-              stripe.clear()
-            }
-            while (it.hasNext && it.head._1 == sceneId && it.head._2 == band) {
-              val t = it.next()
-              if (stripe.nonEmpty && stripe.head._1 != t._3) flushStripe()
-              stripe += ((t._3, t._4, t._5, t._6, t._8))
-            }
-            flushStripe()
-            val nBytes = try enc.finish() finally os.close()
-            (sceneId, band, path.toString, nBytes)
+      .groupBy(col("scene_id"), col("band"))
+      .as[(String, String), (String, String, Int, Int, Int, Int, Double, Array[Float])]
+      .flatMapSortedGroups(col("window_row"), col("window_col")) { case ((sceneId, band), it) =>
+        val rows = it.buffered
+        // explicit meta wins; otherwise tiles carry their band's nodata
+        val nodata = meta.nodata.orElse(Some(rows.head._7))
+        // "__" separator so [[readGeoTiffScenes]] re-splits unambiguously
+        // even when the band name carries underscores (HDF subdatasets)
+        val path = new org.apache.hadoop.fs.Path(dir, s"${sceneId}__$band.tif")
+        val fs = path.getFileSystem(conf.value)
+        val os = fs.create(path, true)
+        var enc: GeoTiff.RowEncoder = null
+        var blockH = 0; var blockW = 0; var totalW = 0; var nextRow = 0
+        // one stripe = all tiles sharing a window_row (consecutive in the
+        // sorted group); stripe 0 spans every column, so the grid geometry
+        // is known before the encoder must be constructed
+        val stripe = scala.collection.mutable.ArrayBuffer
+          .empty[(Int, Int, Int, Int, Array[Float])] // wr, wc, h, w, px
+        def flushStripe(): Unit = if (stripe.nonEmpty) {
+          val wr = stripe.head._1
+          if (enc == null) {
+            blockW = stripe.map(_._4).max
+            blockH = stripe.map(_._3).max
+            totalW = stripe.map(t => t._2 * blockW + t._4).max
+            enc = new GeoTiff.RowEncoder(os, totalW, meta.copy(nodata = nodata),
+              tileSize, overviewFactors, compressionLevel, codec, dtype, container)
           }
+          val base = wr * blockH
+          require(base >= nextRow, s"overlapping tile stripes at window_row=$wr")
+          if (base > nextRow) { // absent stripes read as 0f, like assembleTiles
+            val zero = new Array[Float](totalW)
+            while (nextRow < base) { enc.addRow(zero); nextRow += 1 }
+          }
+          val stripeH = stripe.map(_._3).max
+          val buf = new Array[Float](stripeH * totalW)
+          stripe.foreach { case (_, wc, h, w, px) =>
+            var r = 0
+            while (r < h) {
+              System.arraycopy(px, r * w, buf, r * totalW + wc * blockW, w)
+              r += 1
+            }
+          }
+          var r = 0
+          while (r < stripeH) { enc.addRow(buf, r * totalW); r += 1 }
+          nextRow += stripeH
+          stripe.clear()
         }
+        rows.foreach { t =>
+          if (stripe.nonEmpty && stripe.head._1 != t._3) flushStripe()
+          stripe += ((t._3, t._4, t._5, t._6, t._8))
+        }
+        flushStripe()
+        val nBytes = try enc.finish() finally os.close()
+        Iterator.single((sceneId, band, path.toString, nBytes))
       }
       .toDF("scene_id", "band", "path", "bytes")
   }

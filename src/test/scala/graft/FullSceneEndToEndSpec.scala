@@ -11,11 +11,13 @@ import java.nio.file.Files
   * through the DISTRIBUTED variants end to end — the seam test tying
   * together pieces that are each proven in their own suites:
   *
-  *   readGeoTiffScenes (binaryFile scan → executor-side decode,
-  *   utils.py:335–342) → tileScene → bandMathAll driven by a collection
+  *   readGeoTiffScenes (binaryFile scan → executor-side decode, then the
+  *   one shuffle of the plane: bands onto scene_id, utils.py:335–342) →
+  *   tileScene → bandMathAll driven by a collection
   *   JSON's expression band (index_generator.py:58–149) → cloud cover from
-  *   the quality band → writeGeoTiffScenes (one shuffle, per-(scene,band)
-  *   COG files, cog_translate utils.py:113–154) → quicklookScenes
+  *   the quality band → writeGeoTiffScenes (no shuffle over the
+  *   scene-partitioned tiles, per-(scene,band) COG files, cog_translate
+  *   utils.py:113–154) → quicklookScenes
   *   (publish.py:59–91) → assembleItems/stacItemJson (publish.py:575–605),
   *   asserting assets/footprint/bbox/cloud-cover against golden values.
   *
@@ -53,7 +55,8 @@ class FullSceneEndToEndSpec extends SparkSpec {
         GeoTiff.encode(H, W, px, geo, 256, Nil))
     }
 
-    // 1. distributed ingest: one executor task per file, no shuffle
+    // 1. distributed ingest: the decode runs per file on executors, then
+    //    the bands are hash-partitioned on scene_id (the plane's one shuffle)
     val scenes = SceneIO.readGeoTiffScenes(spark, ingest.toString)
     assert(scenes.count() == 3)
     assert(scenes.select("height", "width").distinct().head() ==
@@ -86,7 +89,8 @@ class FullSceneEndToEndSpec extends SparkSpec {
     val cloudCover = cc.getLong(0) * 100.0 / cc.getLong(1)
     assert(cloudCover == 20.0, s"golden cloud cover 20.0, got $cloudCover")
 
-    // 4. distributed COG export of source + derived bands (one shuffle)
+    // 4. distributed COG export of source + derived bands: both sides are
+    //    partitioned on scene_id already, so the export adds no shuffle
     val outDir = root.resolve("out").toString
     val manifest = SceneIO.writeGeoTiffScenes(
       tiles.unionByName(ndvi.withColumn("nodata", col("nodata").cast("float"))),

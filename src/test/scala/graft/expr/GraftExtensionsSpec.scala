@@ -63,4 +63,23 @@ class GraftExtensionsSpec extends SparkSpec {
       .head().getInt(0)
     assert(b == 2, "2.5 sits after boundaries 1.0 and 2.0")
   }
+
+  test("register and the session extension install the same 13 functions") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val injected = scala.collection.mutable.ArrayBuffer.empty[String]
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    }
+    new GraftExtensions().apply(ext)
+    val expected = Set("minhash_signature", "dot_product", "band_math", "simhash64",
+      "simhash_md5_16", "word_ngrams", "quantize_int8", "window_digests",
+      "search_sorted", "canonicalize_url", "url_host", "url_match_target", "resolve_url")
+    assert(injected.toSet == expected && injected.size == expected.size)
+    GraftExtensions.register(spark)
+    val registry = spark.sessionState.functionRegistry
+    assert(expected.forall(n => registry.functionExists(FunctionIdentifier(n))))
+  }
 }

@@ -288,6 +288,23 @@ class ClassifierSpec extends SparkSpec {
     assert(pLo < 0.2 && pHi > 0.8, s"saturation wrong: $pLo / $pHi")
   }
 
+  test("Platt fit: a null label is a negative on the driver and distributed paths alike") {
+    val rows: Seq[(Option[Double], Option[Boolean])] = (0 until 80).map { i =>
+      val s = (i % 20) / 2.0 - 5.0
+      val u = ((i * 2654435761L) & 0xffffL).toDouble / 65536.0
+      (Some(s), if (i % 7 == 0) None else Some(1.0 / (1.0 + math.exp(-s)) > u))
+    } :+ ((None, Some(true)))
+    val df = rows.toDF("s", "y")
+    val (a, b) = fitPlatt(df, "s", "y")
+    val (a0, b0) = fitPlatt(df, "s", "y", maxDriverRows = 0)
+    assert(math.abs(a0 - a) < 1e-9 && math.abs(b0 - b) < 1e-9,
+      s"null labels split the twins: driver ($a,$b) vs distributed ($a0,$b0)")
+    // and the fit is the one with every null label written as false
+    val relabelled = rows.map { case (sc, y) => (sc, y.orElse(Some(false))) }.toDF("s", "y")
+    val (a1, b1) = fitPlatt(relabelled, "s", "y", maxDriverRows = 0)
+    assert(math.abs(a1 - a) < 1e-9 && math.abs(b1 - b) < 1e-9)
+  }
+
   test("confusion matrix is deterministic across shuffle parallelisms (float-argmax stability)") {
     def conf(): Map[(String, String), Long] = {
       val docs = spark.read.parquet(s"$sf0001/documents.parquet")

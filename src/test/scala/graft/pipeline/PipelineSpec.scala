@@ -1,12 +1,46 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType}
+
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+/** Scenes a flaky download has seen: the first fetch of a scene is
+  * offline (RETRY), every later one succeeds. JVM-wide, so the flip holds
+  * wherever the kernel's UDF runs. */
+object FlakyDownload {
+  val seen: java.util.Set[String] = ConcurrentHashMap.newKeySet[String]()
+}
 
 class PipelineSpec extends SparkSpec {
   import Pipeline._
   implicit lazy val s: org.apache.spark.sql.SparkSession = spark
+
+  /** Spark jobs started while `f` runs. A marker job run after `f` flushes
+    * the listener queue, which delivers events in order. */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "jobsOf marker"))
+          flushed.countDown()
+        else started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setJobDescription("jobsOf marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener queue did not flush")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
 
   private val tree = TaskNode("download", Seq(
     TaskNode("correction", Seq(TaskNode("publish", Seq(TaskNode("post")))))))
@@ -74,5 +108,50 @@ class PipelineSpec extends SparkSpec {
     // sc1: provider 1 failed, provider 3 inactive → provider 2 wins
     // sc2: only provider 3, inactive → no row
     assert(got == Set(("sc1", 2)))
+  }
+
+  test("runBatch evaluates each kernel once per attempt; pure kernels launch no job") {
+    import spark.implicits._
+    val chain = TaskNode("download", Seq(TaskNode("publish")))
+    val (acts, _) = planActivities(Seq("f1", "f2", "f3").toDF("scene_id"), "scene_id", 1, chain)
+    // a lazy kernel with a side effect: every evaluation of its result
+    // fetches again, and a second fetch of a scene flips RETRY → SUCCESS
+    val calls = spark.sparkContext.longAccumulator("download fetches")
+    val fetch = udf { (scene: String) =>
+      calls.add(1)
+      if (FlakyDownload.seen.add(scene)) "RETRY" else "SUCCESS"
+    }
+    val download: StageKernel = df => df.withColumn("status", fetch(col("sceneid")))
+    val publish: StageKernel = df => df.withColumn("status", lit("SUCCESS"))
+    val (finalActs, execs) = runBatch(acts, chain,
+      Map("download" -> download, "publish" -> publish), maxRetries = 2)
+    val log = execs.collect()
+    // one fetch per attempted row: 3 RETRY, then 3 SUCCESS
+    assert(calls.value == 6L && log.count(_.getAs[String]("activity_type") == "download") == 6)
+    // the log's last attempt per activity is the settled status
+    val last = log.groupBy(r => (r.getAs[String]("sceneid"), r.getAs[String]("activity_type")))
+      .map { case (k, rs) => k -> rs.maxBy(_.getAs[Int]("attempt")).getAs[String]("status") }
+    val settled = finalActs.collect().map(r =>
+      (r.getAs[String]("sceneid"), r.getAs[String]("activity_type")) -> r.getAs[String]("status")).toMap
+    assert(last == settled && settled.values.forall(_ == "SUCCESS") && settled.size == 6)
+    // the outputs keep the shapes of the DataFrame-merge implementation
+    assert(finalActs.schema == acts.schema)
+    assert(execs.schema.map(f => f.name -> f.dataType) == Seq("sceneid" -> StringType,
+      "collection_id" -> IntegerType, "activity_type" -> StringType,
+      "status" -> StringType, "attempt" -> IntegerType))
+
+    // pure kernels: the activities collect is the only job, also when the
+    // outputs are read back
+    val offline: StageKernel = df => df.withColumn("status",
+      when(col("sceneid") === "f1" && col("retry_count") === 0, "RETRY").otherwise("SUCCESS"))
+    val baseline = jobsOf(acts.collect())
+    val jobs = jobsOf {
+      val (a, e) = runBatch(acts, chain, Map("download" -> offline, "publish" -> publish))
+      assert(a.collect().length == 6 && e.collect().length == 7)
+    }
+    assert(jobs == baseline, s"runBatch launched $jobs jobs, the activities collect $baseline")
+    // no attempt ran: the log is the empty frame
+    val idle = runBatch(finalActs, chain, Map("download" -> offline, "publish" -> publish))._2
+    assert(idle.columns.isEmpty && idle.isEmpty)
   }
 }

@@ -159,10 +159,10 @@ class GeoTiffStreamSpec extends SparkSpec {
   }
 
   test("the stripe export plans exactly ONE hash exchange (sort is within partitions)") {
-    // the r10 rewrite replaced groupByKey.mapGroups with
-    // repartition(scene,band) + sortWithinPartitions — the sort must ride
-    // the SAME exchange, not add a range shuffle; otherwise the export
-    // doubled its shuffle volume to save memory
+    // over tiles with no partitioning the (scene, band) grouping adds one
+    // hash exchange, and the stripe-order sort must ride that SAME
+    // exchange, not add a range shuffle; otherwise the export doubled its
+    // shuffle volume to save memory
     val spark0 = spark
     import spark0.implicits._
     val scenes = Seq(("s1", "B1", 64, 64, -1.0f, synth(64, 64)))
@@ -176,5 +176,66 @@ class GeoTiffStreamSpec extends SparkSpec {
       s"stripe export must shuffle exactly once:\n$p")
     assert(!p.contains("Exchange rangepartitioning"),
       s"sortWithinPartitions leaked a range shuffle:\n$p")
+  }
+
+  /** Run `df`, then list the shuffles of its final adaptive plan. A
+    * persisted input is a leaf here: its own plan ran in an earlier job. */
+  private def shufflesAfterRun(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike] = {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    df.collect()
+    object stages extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    stages.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeLike => e }
+  }
+
+  test("scene-local plane: pivot and COG export plan no exchange over scene-partitioned reads") {
+    val spark0 = spark
+    import spark0.implicits._
+    val root = java.nio.file.Files.createTempDirectory("scene_local")
+    val dirs = Seq("sA", "sB").map { sid =>
+      val d = java.nio.file.Files.createDirectories(root.resolve(sid))
+      for ((band, k) <- Seq("B04" -> 1, "B08" -> 2))
+        java.nio.file.Files.write(d.resolve(s"${sid}__$band.tif"),
+          GeoTiff.encode(40, 48, synth(40, 48).map(_ * k), GeoTiff.GeoMeta(nodata = Some(-1.0)),
+            16, Nil))
+      d.toString
+    }
+    def read(dir: String) = SceneIO.tileScene(SceneIO.readGeoTiffScenes(spark, dir), 16, 16)
+    def onSceneOnly(e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike) =
+      e.outputPartitioning match {
+        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+          h.expressions.flatMap(_.references.map(_.name)) == Seq("scene_id")
+        case _ => false
+      }
+    // one read: the only shuffle is the reader's own, on scene_id
+    val one = read(s"$root/*")
+    for (df <- Seq(RasterKernels.pivotBands(one),
+                   SceneIO.writeGeoTiffScenes(one, root.resolve("out1").toString,
+                     tileSize = 16, overviewFactors = Nil))) {
+      val sh = shufflesAfterRun(df)
+      assert(sh.size == 1 && sh.forall(onSceneOnly),
+        s"only the reader's scene partitioning may shuffle:\n${df.queryExecution.executedPlan}")
+    }
+    // two persisted reads (the download attempts of one batch): their union
+    // keeps the partitioning through a filter, the pivot and a union of
+    // band-math branches, down to the export
+    val cached = dirs.map { d => val t = read(d).persist(); t.count(); t }
+    try {
+      val tiles = cached.reduce(_ unionByName _).filter(col("scene_id").isin("sA", "sB"))
+      val piv = RasterKernels.pivotBands(tiles)
+      val derived = RasterKernels.bandMath(piv, "B08 - B04", "D", -1, -1e6, 1e6)
+        .unionByName(RasterKernels.propagateNodata(piv, Seq("B04"), "B08", -1))
+      val out = root.resolve("out2").toString
+      val manifest = SceneIO.writeGeoTiffScenes(derived, out, tileSize = 16, overviewFactors = Nil)
+      for (df <- Seq(piv, manifest)) {
+        val sh = shufflesAfterRun(df)
+        assert(sh.isEmpty, s"scene-partitioned input must not shuffle:\n${df.queryExecution.executedPlan}")
+      }
+      assert(piv.count() == 2 * 3 * 3) // 2 scenes × a 3×3 window grid
+      val d = GeoTiff.decode(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(out, "sB__D.tif"))).main
+      assert(d.height == 40 && d.width == 48)
+      assert(d.pixels.toSeq == synth(40, 48).toSeq, "B08 - B04 = synth on every pixel")
+    } finally cached.foreach(_.unpersist(blocking = true))
   }
 }
