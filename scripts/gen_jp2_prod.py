@@ -1,4 +1,5 @@
-"""Generate a production-shaped JPEG 2000 codestream for Jp2Bench's prod mode.
+"""Generate a production-shaped JPEG 2000 codestream for the JP2 ROI-probe
+measurement (SCALE.md, JP2 decode row).
 
 Shape mirrors a Sentinel-2-style band scene (SURVEY S5; the reference's
 windowed read in index_generator.py): single tile, 12-bit, 5 DWT levels,

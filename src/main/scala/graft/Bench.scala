@@ -119,22 +119,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // bounded-buffer native aggregates (TopKPairsAgg: <= 2k (score,id)
-      // pairs per group) do not need the conservative 128-entry sort-based
-      // fallback built for unbounded collect_list state: past 128 groups per
-      // partition the fallback SORTS the whole pair stream, which at sf1 was
-      // the q154 capped-mode constant (SCALE.md r15). 64k entries bounds
-      // the hash map at tens of MB for every aggregate in this suite
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     // Warm-up pass on the smallest SF: JIT + codegen/plan caches, so the
     // timed pass measures the queries, not JVM warm-up.
     val warmDir = "/root/testdata/sf0.001"

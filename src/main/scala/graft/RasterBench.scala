@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.raster.RasterKernels
 
@@ -16,11 +15,7 @@ object RasterBench {
     val nScenes = if (args.length > 0) args(0).toInt else 64
     val blocks = if (args.length > 1) args(1).toInt else 16 // per scene per band
     val side = 256
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(8)
     import spark.implicits._
 
     val px = side * side

@@ -1,19 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Print named queries' results (`show(50)`) or, with `--plan`, their
+  * formatted physical plans, on the same session settings `Bench` times.
+  *
+  * Usage: sbt "runMain graft.ShowQ <sfDir> <q1,q2,…> [--plan]"
+  */
 object ShowQ {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions","4")
-      .config("spark.sql.adaptive.enabled","true")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong","true")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel(sys.env.getOrElse("SHOWQ_LOG","ERROR"))
-    val d = sys.env.getOrElse("SHOWQ_SF","/root/testdata/sf0.001")
-    for (q <- sys.env.getOrElse("SHOWQ_QS","q202_charset_decode").split(",").toSeq) {
+    val (flags, positional) = args.partition(_.startsWith("--"))
+    require(positional.length == 2 && flags.forall(_ == "--plan"),
+      "usage: graft.ShowQ <sfDir> <q1,q2,...> [--plan]")
+    val Array(sfDir, names) = positional
+    val plan = flags.nonEmpty
+    val spark = GraftSession.local(4)
+    try for (q <- names.split(",").toSeq) {
       println(s"===== $q =====")
-      SparkEntry.queries(q)(spark, d).show(50, false)
-    }
-    spark.stop()
+      val df = SparkEntry.queries(q)(spark, sfDir)
+      if (plan) println(df.queryExecution.explainString(FormattedMode))
+      else df.show(50, false)
+    } finally spark.stop()
   }
 }

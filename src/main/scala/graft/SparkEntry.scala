@@ -2806,7 +2806,7 @@ object SparkEntry {
     // k12.ca.us / kawasaki.jp city exceptions, suffix-itself, IP,
     // single-label, unlisted-TLD default) resolved by the per-depth
     // BROADCAST-JOIN geometry over 9,360 rules — the form the literal
-    // arrays can't carry (tools/PslScale measures the plan-width cliff).
+    // arrays can't carry (SCALE.md r17, full-PSL geometry: the plan-width cliff).
     // The oracle regenerates the same rule set with generate_series and
     // replays the PSL precedence relationally -----------------------------
     "q200_psl_full" -> ((s, d) => {

@@ -1,28 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Exits 1 after
+  * naming every query that failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // bounded-buffer native aggregates (TopKPairsAgg: <= 2k (score,id)
-      // pairs per group) do not need the conservative 128-entry sort-based
-      // fallback built for unbounded collect_list state: past 128 groups per
-      // partition the fallback SORTS the whole pair stream, which at sf1 was
-      // the q154 capped-mode constant (SCALE.md r15). 64k entries bounds
-      // the hash map at tens of MB for every aggregate in this suite
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // Queries run concurrently (4 at a time): SparkSession is thread-safe
     // and each query is small at sf0.01, so overlapping jobs hide the
@@ -32,16 +17,17 @@ object Verify {
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     val futures = SparkEntry.queries.toSeq.map { case (name, fn) =>
       scala.concurrent.Future {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        try { fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"); None }
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
         }
       }
     }
-    scala.concurrent.Await.result(
+    val failed = scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(futures),
-      scala.concurrent.duration.Duration.Inf)
+      scala.concurrent.duration.Duration.Inf).flatten.sorted
     pool.shutdown()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -59,5 +45,11 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // every parquet and the oracle file are written first, so one broken
+    // query still leaves the rest comparable; the exit code carries it
+    if (failed.nonEmpty) {
+      System.err.println(failed.mkString("[verify] failed: [", ", ", "]"))
+      sys.exit(1)
+    }
   }
 }

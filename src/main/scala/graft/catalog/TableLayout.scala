@@ -45,18 +45,6 @@ object TableLayout {
       .write.mode("overwrite").partitionBy("month")
       .option("compression", "zstd").parquet(path)
 
-  /** Write the catalog snapshot partitioned by (catalog, dataset, month). */
-  def writeSnapshot(snapshot: DataFrame, path: String): Unit =
-    snapshot
-      .withColumn("month", date_format(col("sensing_date"), "yyyy-MM"))
-      .write.mode("overwrite").partitionBy("catalog", "dataset", "month")
-      .option("compression", "zstd").parquet(path)
-
-  /** Write activities partitioned by stage queue. */
-  def writeActivities(acts: DataFrame, path: String): Unit =
-    acts.write.mode("overwrite").partitionBy("activity_type")
-      .option("compression", "zstd").parquet(path)
-
   /** Month-scoped items read — prunes to the requested partitions. */
   def readItemsForMonths(spark: SparkSession, path: String, months: Seq[String]): DataFrame =
     spark.read.parquet(path).filter(col("month").isin(months: _*))

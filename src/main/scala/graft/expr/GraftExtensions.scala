@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * so SQL users get them too:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
+  * // session config: spark.sql.extensions=graft.expr.GraftExtensions
   * spark.sql("SELECT doc_id, minhash_signature(text, 3, 4) FROM docs")
   * spark.sql("SELECT dot_product(a.embedding, b.embedding) FROM ...")
   * }}}

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * executable SPECIFICATION, bit-parity-tested in HtmlFunctionsSpec).
   *
   * The regex formulation pays 8 full `java.util.regex` passes per page
-  * (~2.5 MB/s/core measured by tools/WarcScale); these scanners replicate
+  * (~2.5 MB/s/core measured in SCALE.md r14, WARC front door); these scanners replicate
   * each pass EXACTLY — same non-overlapping left-to-right match order,
   * same `\b` ASCII word-boundary, same unclosed-element and unmatched-`<`
   * edge semantics, same sequential entity-replace order (amp LAST), same

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * The composable form, `size(array_intersect(a, b))`, builds a hash set
   * over one side and materializes the intersection ARRAY per pair only to
   * take its length — measured ~5 µs per candidate pair on q115's int-rank
-  * currency at sf1 (tools/Q115Prof: 3.2M candidates, 9.6 s in the verify
+  * currency at sf1 (SCALE.md q115 attribution: 3.2M candidates, 9.6 s in the verify
   * stage). The joins only ever need the COUNT, and the rank arrays are
   * sorted by construction (sort_array in setsInt), so a primitive
   * two-pointer walk — no allocation, no hashing — does the same work in

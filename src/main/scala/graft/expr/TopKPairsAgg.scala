@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * TypedImperativeAggregate reading two primitive columns straight off the
   * InternalRow — no ExpressionEncoder round-trip, no tuple boxing. The
   * udaf wrapper was measured at ~8 µs/row on the sf1 capped-join sweep
-  * (CappedScale tool: +28 s over the uncapped join on 3.8M pairs); this
+  * (SCALE.md r15 q154 capped mode: +28 s over the uncapped join on 3.8M pairs); this
   * path is ~50 ns/row, making the cap's cost the exchange it saves.
   *
   * Scale shape is unchanged and is the point of the aggregate: the buffer
@@ -56,7 +56,7 @@ case class TopKPairsAgg(scoreExpr: Expression, idExpr: Expression, k: Int,
     val i = idExpr.eval(input)
     // NaN scores are undefined, not extreme: skipping them HERE (instead
     // of a pre-filter on the pair stream) keeps the semantics and saves a
-    // measured ~25% plan overhead on the capped-join path (CappedDiag)
+    // measured ~25% plan overhead on the capped-join path (SCALE.md r15)
     if (s != null && i != null && !java.lang.Double.isNaN(s.asInstanceOf[Double]))
       buf.add(s.asInstanceOf[Double], i.asInstanceOf[Long])
     buf

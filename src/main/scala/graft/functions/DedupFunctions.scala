@@ -225,11 +225,6 @@ object DedupFunctions {
   def bandKeyFromSignature(sig: Column, band: Int, rowsPerBand: Int): Column =
     concat_ws("|", slice(sig, band * rowsPerBand + 1, rowsPerBand))
 
-  /** LSH band key: concat of the band's minhashes — docs sharing any band
-    * key are near-dup candidates. */
-  def lshBandKey(text: Column, n: Int, band: Int, rowsPerBand: Int): Column =
-    bandKeyFromSignature(minhashSignature(text, n, (band + 1) * rowsPerBand), band, rowsPerBand)
-
   /** MinHash-LSH candidate pairs: explode docs into (band, bandKey) and
     * self-join within buckets. Returns (id_a, id_b, band) with id_a < id_b.
     * Shuffle is on band keys only; bucket sizes are bounded by real
@@ -593,21 +588,8 @@ object DedupFunctions {
     val vSel = pairs.select("id_a", "id_b")
     val probe = vSel.limit(maxDriverEdges + 1).collect()
     if (probe.length <= maxDriverEdges) {
-      val edges = probe.map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val dropped = edges.flatMap(p => Seq(p._1, p._2)).distinct
-        .filter(id => find(id) != id)
+      val dropped = GraphFunctions.unionFindRoots(
+        probe.map(r => (r.getLong(0), r.getLong(1)))).map(_._1)
       if (dropped.isEmpty) df
       else {
         // Drop via a broadcast anti-join, NOT `isin`: a literal Catalyst
@@ -682,7 +664,7 @@ object DedupFunctions {
     * width knob: expected bucket size on b-bit keys is n/2^b, so a
     * threshold-4 corpus join wants bands=5 (13-bit keys), not bands=8
     * (8-bit keys — 32× wider buckets for recall headroom nobody asked
-    * for; PhashScale measures the cliff). */
+    * for; SCALE.md r16 hamming join geometry measures the cliff). */
   private def hammingKeyed(df: DataFrame, sigCol: String, idCol: String,
                            partitionCols: Seq[String], bands: Int): DataFrame = {
     require(bands >= 1 && bands <= 64, s"bands=$bands out of range")
@@ -769,7 +751,7 @@ object DedupFunctions {
     * flips) hits the build key — recall stays TOTAL, output ≡ the O(n²)
     * join. At maxDistance=11 this is bands=6/probeBits=1: 11-bit keys,
     * ~70 probe rows per item, candidate mass ≈ bands·(keyBits+1)·n²/2^k
-    * — ~19× below the 12-band exact form (measured in SketchScale).
+    * — ~19× below the 12-band exact form (SCALE.md r16, embedding sign-sketch plane).
     *
     * Scale shape: one (band, band_key) hash equi-join — build side
     * carries bands rows × 16 B per item, probe side bands+64 rows; the
@@ -1227,7 +1209,7 @@ object DedupFunctions {
       .join(setsInt.select(col("id").as("id_a"), col("tkr").as("tkr_a")), "id_a")
       // r19: two-pointer merge COUNT over the sorted rank arrays instead
       // of size(array_intersect(...)) — the hash-set + materialized
-      // intersection array cost ~5 µs per candidate pair (Q115Prof, 9.6 s
+      // intersection array cost ~5 µs per candidate pair (SCALE.md q115 attribution; 9.6 s
       // of q115's sf1 wall); the count is all the measure needs and the
       // arrays are sorted by construction. Same integer count ⇒ same IEEE
       // division ⇒ bit-identical jaccard.
@@ -1370,17 +1352,6 @@ object DedupFunctions {
     SimilarityFunctions.topKPerDoc(
       containmentJoinExact(docs, textCol, idCol, tau, ngram),
       "id_a", "id_b", "containment", k)
-
-  /** [[containmentJoinExact]] summarized per CONTAINED doc:
-    * (id, n_partners, best_containment). Directional — a doc reports how
-    * many partners contain it, the quote/boilerplate flag a pipeline
-    * filters on. */
-  def containmentJoinSummary(docs: DataFrame, textCol: String, idCol: String,
-                             tau: Double, ngram: Int = 3): DataFrame =
-    SimilarityFunctions.pairSummaryPerDoc(
-        containmentJoinExact(docs, textCol, idCol, tau, ngram),
-        "id_a", "id_b", "containment", symmetric = false)
-      .withColumnRenamed("best_score", "best_containment")
 
   /** Repeated-substring spans: for every document, the maximal token
     * intervals covered by SLIDING `L`-token windows whose window occurs

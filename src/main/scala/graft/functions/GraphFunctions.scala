@@ -28,21 +28,7 @@ object GraphFunctions {
     // one job either yields the full edge set or proves it too big
     val eRows = eSel.limit(maxDriverEdges + 1).collect()
     if (eRows.length <= maxDriverEdges) {
-      val pairs = eRows.map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      pairs.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val touched = pairs.flatMap(p => Seq(p._1, p._2)).distinct
-        .map(id => (id, find(id))).filter { case (id, l) => id != l }
+      val touched = unionFindRoots(eRows.map(r => (r.getLong(0), r.getLong(1))))
       val spark = vertices.sparkSession
       import spark.implicits._
       val labelMap = broadcast(
@@ -56,6 +42,28 @@ object GraphFunctions {
         idCol = "id", srcCol = "src", dstCol = "dst",
         maxIterations = maxIterations)
     }
+  }
+
+  /** Driver-side union-find over a collected edge list, shared by
+    * [[componentLabels]] and [[DedupFunctions.dropByPairGraph]]: returns
+    * id → root for every edge endpoint that is not its component's root,
+    * root = the smallest id reachable (min-id union, path-compressing
+    * find). Roots and ids in no edge are absent. */
+  private[functions] def unionFindRoots(edges: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.flatMap(p => Seq(p._1, p._2)).distinct
+      .map(id => (id, find(id))).filter { case (id, root) => id != root }
   }
 
   /** Dense 0-based ids in `idCol` sort order — the graph-construction
@@ -229,7 +237,7 @@ object GraphFunctions {
   /** [[pageRank]] plus the number of rounds actually executed — the
     * observable that makes the warm-start payoff measurable (a warm
     * vector converges in fewer rounds than uniform; FunctionsSpec pins
-    * it, tools/PageRankConverge measures it).
+    * it, SCALE.md r19 measures it).
     *
     * CONVERGENCE EARLY-EXIT (`tolerance`): when set, each round pays one
     * extra aggregate — the L1 delta ‖r_t − r_{t−1}‖₁ — and the loop
@@ -351,7 +359,7 @@ object GraphFunctions {
           // (1−d)·ε₀·d^(t−1), so an un-renormalized warm start needs
           // ~log(tol)/log(d) rounds to silence it even when the SHAPE
           // converged in a handful (measured: 89 warm vs 24 cold rounds
-          // at 2M vertices, tol 1e-8 — tools/PageRankConverge, SCALE.md
+          // at 2M vertices, tol 1e-8 — SCALE.md
           // r19). One extra aggregate at init fixes it. The fixed-round
           // path keeps the raw vector: q205's oracle contract is exact
           // chaining (init = round-k vector ⇒ ≡ k+m uniform rounds

@@ -86,7 +86,7 @@ object HtmlFunctions {
 
   /** The regex-chain full-page extraction — the executable SPECIFICATION
     * the native [[graft.expr.HtmlToTextExpr]] is bit-parity-tested
-    * against (8 regex passes; ~2.5 MB/s/core — tools/WarcScale). */
+    * against (8 regex passes; ~2.5 MB/s/core — SCALE.md r14, WARC front door). */
   def htmlToTextSpec(c: Column): Column = stripTagsSpec(dropInvisible(c))
 
   /** Full-page text: `stripTags(dropInvisible(html))` — the plain

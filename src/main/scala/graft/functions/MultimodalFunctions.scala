@@ -680,13 +680,6 @@ object MultimodalFunctions {
     }
   }
 
-  /** Binary-file ingestion (`spark.read.format("binaryFile")`) normalized to
-    * the media schema — the entry point for real media directories. */
-  def readMediaDir(spark: SparkSession, dir: String, mediaType: String): DataFrame =
-    spark.read.format("binaryFile").load(dir)
-      .select(xxhash64(col("path")).as("media_id"), lit(mediaType).as("media_type"),
-        col("content"), col("length").as("n_bytes"), col("modificationTime"))
-
   /** Balance partitions by payload size so codec batches have similar cost
     * (media size is heavy-tailed; hash partitioning would let one partition
     * hold several 4K videos while another holds thumbnails). */

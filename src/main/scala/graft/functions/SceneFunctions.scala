@@ -27,19 +27,13 @@ object SceneFunctions {
   def s2Tile(sceneId: Column): Column =
     regexp_extract(sceneId, "_T([0-9]{2}[A-Z]{3})_", 1)
 
-  /** Sentinel-2 sensing datetime string (`yyyyMMdd'T'HHmmss`). */
-  def s2SensingDate(sceneId: Column): Column =
-    to_timestamp(regexp_extract(sceneId, "_(\\d{8}T\\d{6})_", 1), "yyyyMMdd'T'HHmmss")
-
   /** Sentinel-2 level: MSIL1C/MSIL2A (publish.py:411 re.subn target). */
   def s2Level(sceneId: Column): Column =
     regexp_extract(sceneId, "_(MSIL[12][AC])_", 1)
 
-  /** Landsat path/row (`223064`) and acquisition date. */
+  /** Landsat path/row (`223064`). */
   def landsatPathRow(sceneId: Column): Column =
     regexp_extract(sceneId, "^L[COTEM]0[0-9]_[A-Z0-9]+_(\\d{6})_", 1)
-  def landsatDate(sceneId: Column): Column =
-    to_date(regexp_extract(sceneId, "_(\\d{8})_\\d{8}_", 1), "yyyyMMdd")
 
   /** MODIS `hHHvVV` tile → the reference's 6-digit `HHH0VV` form
     * (`h13v10` → `013010`, publish.py:306). */
@@ -56,9 +50,11 @@ object SceneFunctions {
   def modisTile(sceneId: Column): Column =
     regexp_extract(sceneId, "\\.(h\\d{2}v\\d{2})\\.", 1)
 
-  /** MODIS acquisition date from `AYYYYDDD` (hdf.py band naming context). */
+  /** MODIS acquisition date from `AYYYYDDD` (hdf.py band naming context);
+    * null for other grammars and impossible days, where ANSI `to_date`
+    * would fail the whole query over a mixed scene column. */
   def modisDate(sceneId: Column): Column =
-    to_date(regexp_extract(sceneId, "\\.A(\\d{7})\\.", 1), "yyyyDDD")
+    try_to_date(regexp_extract(sceneId, "\\.A(\\d{7})\\.", 1), "yyyyDDD")
 
   /** Mime type by file extension (publish.py:49–56). */
   def mimeByExtension(path: Column): Column =

@@ -49,7 +49,7 @@ object SimilarityFunctions {
     * store (O(1)); entries past `len` are garbage. `len` is a var and the
     * hot path mutates IN PLACE — ObjectHashAggregate holds the buffer as
     * an object, and a per-row case-class copy was measured at ~35% of a
-    * 3.8M-pair capped join's wall (sf1, CappedScale tool). The encoder
+    * 3.8M-pair capped join's wall (sf1, SCALE.md r15 q154 capped mode). The encoder
     * only runs at spill/shuffle boundaries, where the current `len` is
     * captured like any other field. */
   final case class TopKBuf(scores: Array[Double], ids: Array[Long], var len: Int)
@@ -190,7 +190,7 @@ object SimilarityFunctions {
     // in and back out loses nothing and reuses the desc-ordered aggregator.
     // NaN pairs are skipped INSIDE the aggregate (TopKPairsAgg.update) —
     // a pre-filter on the pair stream measured ~25% of the whole capped
-    // join's wall by disturbing the verify plan (CappedDiag)
+    // join's wall by disturbing the verify plan (SCALE.md r15 q154 capped mode)
     val sign = if (ascending) lit(-1.0) else lit(1.0)
     pairs
       .groupBy(col(idACol))

@@ -62,7 +62,7 @@ import org.apache.spark.sql.graft.ColumnBridge
   * arrays ([[registeredDomainFromRules]] — a few hundred bytes, no join);
   * the FULL ~10k-rule PSL moves to per-depth broadcast lookup joins
   * ([[registeredDomainJoined]]), because literal arrays at that width put
-  * hundreds of KB into every referencing plan (measured: tools/PslScale).
+  * hundreds of KB into every referencing plan (measured: SCALE.md r17, full-PSL geometry).
   */
 object UrlFunctions {
 
@@ -281,7 +281,7 @@ object UrlFunctions {
     * scale-correct geometry once the rule list stops being a curated
     * subset. The literal form compiles every rule string into every plan
     * (and every codegen unit) that references the expression: measured at
-    * ~9.3k rules (tools/PslScale) that is hundreds of KB of plan per
+    * ~9.3k rules (SCALE.md r17) that is hundreds of KB of plan per
     * query and a re-analysis cost on each composition. This form ships
     * the rules ONCE per depth as a broadcast hash relation — the plan
     * carries only the join, rule updates don't re-derive the expression

@@ -91,7 +91,7 @@ object TemporalJoins {
     *
     * Pick `bucketSeconds` ≈ the typical interval length: shorter buckets
     * multiply interval replication, longer buckets widen the residual scan.
-    * Measured (graft.tools.ProfileQ68, sf0.1, 30k×30k sides, 2-day
+    * Measured (SCALE.md range-join row; sf0.1, 30k×30k sides, 2-day
     * intervals): bucket=interval is the flat optimum — candidate:match
     * ratio 1.33 at 2d vs 2.0 at 4d / 6.0 at 16d, while 1d halves the
     * ratio to 1.0 but doubles interval replication and costs ~2× wall;

@@ -274,7 +274,7 @@ object GeoTiff {
     * the header blocks, the IFD chain, and the tile segments intersecting
     * the window are ever fetched. Returns (image, bytes actually fetched).
     * The reference gets this from GDAL's /vsicurl range reads under
-    * rasterio (utils.py:335–342); measured in GeoTiffBench `window` mode. */
+    * rasterio (utils.py:335–342); measured in SCALE.md (COG windowed reads, r10). */
   def decodeWindowRanged(read: (Long, Int) => Array[Byte], fileLen: Long,
                          x0: Int, y0: Int, winW: Int, winH: Int,
                          level: Int = 0): (Image, RangedIo) =

@@ -82,14 +82,6 @@ object SceneIO {
       .select("window_row", "window_col", "height", "width", "pixels").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getSeq[Float](4).toArray))
     require(rows.nonEmpty, s"no tiles for $sceneId/$band")
-    assembleTiles(rows)
-  }
-
-  /** Stitch (window_row, window_col, h, w, pixels) tiles back into one
-    * row-major image. Pure local math — shared by the driver-side
-    * [[assembleScene]] and the executor-side [[writeGeoTiffScenes]]. */
-  private[raster] def assembleTiles(
-      rows: Array[(Int, Int, Int, Int, Array[Float])]): (Int, Int, Array[Float]) = {
     val blockH = rows.map(_._3).max
     val blockW = rows.map(_._4).max
     val totalH = rows.map(r => r._1 * blockH + r._3).max
@@ -179,7 +171,7 @@ object SceneIO {
     * the driver (names + lengths only); every byte of pixel IO happens on
     * executors. Emits the same row shape as readGeoTiffScenes plus a
     * `bytes_read` column — the measured per-file IO, asserted ≪ file size
-    * in RangedReadSpec and benchmarked in GeoTiffBench `window` mode. */
+    * in RangedReadSpec and benchmarked in SCALE.md (COG windowed reads, r10). */
   def readGeoTiffScenesRanged(spark: org.apache.spark.sql.SparkSession,
                               path: String,
                               window: Option[(Int, Int, Int, Int)] = None,
@@ -439,7 +431,7 @@ object SceneIO {
           }
           val base = wr * blockH
           require(base >= nextRow, s"overlapping tile stripes at window_row=$wr")
-          if (base > nextRow) { // absent stripes read as 0f, like assembleTiles
+          if (base > nextRow) { // absent stripes read as 0f, like assembleScene
             val zero = new Array[Float](totalW)
             while (nextRow < base) { enc.addRow(zero); nextRow += 1 }
           }

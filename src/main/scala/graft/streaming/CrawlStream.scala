@@ -315,23 +315,4 @@ object CrawlStream {
     }
     planFrontier(spark, stateDir, defaultDelay)
   }
-
-  /** Start the closed-loop stream: per micro-batch, ingest + re-plan,
-    * handing each emitted frontier to `onPlan` (write it to the fetch
-    * queue, hand it to the fetcher fleet — the loop does not prescribe
-    * the sink). */
-  def runPlanned(spark: SparkSession, stateDir: String, warcStream: DataFrame,
-                 checkpointDir: String, userAgent: String,
-                 defaultDelay: Double = 1.0,
-                 p: CrawlParams = CrawlParams(),
-                 compactEvery: Int = 0)
-                (onPlan: (DataFrame, Long) => Unit): StreamingQuery =
-    warcStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onPlan(ingestAndPlan(spark, stateDir, batch, batchId, userAgent,
-          defaultDelay, p, compactEvery), batchId)
-        ()
-      }
-      .start()
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{DedupFunctions => D, SimilarityFunctions => Sim, TextFunctions => T}
 import graft.raster.SceneIO
@@ -14,14 +14,7 @@ import graft.raster.SceneIO
 object ScalingBench {
   def main(args: Array[String]): Unit = {
     val k = args.headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(32)
     val d = "/root/testdata/sf0.1"
 
     // K perturbed replicas: ids offset per replica, one replica-tag token

@@ -45,4 +45,34 @@ class ApiSpec extends SparkSpec {
     assert(json.contains("\"sceneid\":\"s1\"") && json.contains("\"sceneid\":\"s2\""))
     assert(!json.contains("\"sceneid\":\"s3\""))
   }
+
+  test("activity count and radcor preview routes (controller.py:389–391, 448–495)") {
+    val executions = Seq(
+      ("s1", "2020-01-01 10:00:00", 1, "FAILURE"),
+      ("s1", "2020-01-02 09:00:00", 2, "SUCCESS"),
+      ("s2", "2020-01-01 11:00:00", 1, "SUCCESS"),
+      ("s2", "2020-01-02 12:00:00", 2, "FAILURE"),
+      ("s3", "2020-01-02 12:00:00", 1, "FAILURE"),
+      ("s3", "2020-01-02 12:00:00", 2, "SUCCESS"))
+      .toDF("sceneid", "ts", "attempt", "status")
+      .withColumn("ts", to_timestamp(col("ts")))
+    assert(Api.countActivitiesByDay(executions) ==
+      """[{"day":"2020-01-01","status":"FAILURE","n":1},""" +
+      """{"day":"2020-01-01","status":"SUCCESS","n":1},""" +
+      """{"day":"2020-01-02","status":"FAILURE","n":2},""" +
+      """{"day":"2020-01-02","status":"SUCCESS","n":2}]""")
+    // latest run per scene: s1 succeeded, s2 failed, s3's tie at one ts
+    // resolves to the higher attempt (SUCCESS)
+    assert(Api.countUnsuccessfullyActivities(executions) == """{"failed":1}""")
+    val snapshot = Seq(
+      ("S2_b", "23LLF", "2020-01-10", 5.0, "http://x/b"),
+      ("S2_a", "23LLF", "2020-01-05", 40.0, "http://x/a"),
+      ("S2_c", "23LLF", "2020-01-06", 90.0, "http://x/c"),
+      ("S2_d", "24XXX", "2020-01-07", 1.0, "http://x/d"),
+      ("S2_e", "23LLF", "2020-03-01", 1.0, "http://x/e"))
+      .toDF("scene_id", "tile", "sensing_date", "cloud_cover", "link")
+    assert(Api.radcorPreview(snapshot, Seq("23LLF"), "2020-01-01", "2020-01-31", 50.0) ==
+      """[{"scene_id":"S2_a","cloud_cover":40.0,"link":"http://x/a"},""" +
+      """{"scene_id":"S2_b","cloud_cover":5.0,"link":"http://x/b"}]""")
+  }
 }

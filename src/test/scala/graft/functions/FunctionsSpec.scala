@@ -21,6 +21,22 @@ class FunctionsSpec extends SparkSpec {
     assert(got(2).getString(0) == "MODIS" && got(2).getString(3) == "h13v10")
   }
 
+  test("Sentinel-2 level and MODIS acquisition date (publish.py:411, hdf.py)") {
+    val df = Seq(
+      "S2A_MSIL1C_20200110T132231_N0208_R038_T23LLF_20200110T145523",
+      "S2B_MSIL2A_20201231T132231_N0208_R038_T23LLF_20201231T145523",
+      "MOD13Q1.A2020009.h13v10.006.2020026",
+      "MYD13Q1.A2020366.h13v10.006.2021005",
+      "MOD13Q1.A2021366.h13v10.006.2022005",
+      "LC08_L1TP_223064_20200110_20200120_02_T1").toDF("sid")
+    val got = df.select(SceneFunctions.s2Level(col("sid")),
+        SceneFunctions.modisDate(col("sid")).cast("string")).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    // other grammars and day 366 of a common year are null, not a failure
+    assert(got == Seq(("MSIL1C", null), ("MSIL2A", null), ("", "2020-01-09"),
+      ("", "2020-12-31"), ("", null), ("", null)))
+  }
+
   test("MODIS tile rewrite h13v10 ↔ 013010 (publish.py:306, controller.py:552)") {
     val df = Seq("h13v10").toDF("t")
     val six = df.select(SceneFunctions.modisTileTo6Digit(col("t"))).head().getString(0)
@@ -564,6 +580,37 @@ class FunctionsSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(driver === expected)
     assert(distributed === expected)
+  }
+
+  test("union-find: componentLabels ≡ dropByPairGraph on both paths, edges at and over maxDriverEdges") {
+    import spark.implicits._
+    val vertices = (1L to 10L).toDF("id")
+    val docs = (1L to 10L).map(i => (i, s"doc$i")).toDF("doc_id", "text")
+    // duplicate, reversed, self-loop and chained edges; 4 and 10 touch none
+    val edgeList = Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 3L), (2L, 5L),
+      (6L, 7L), (7L, 6L), (9L, 8L))
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L, 5L -> 1L,
+      6L -> 6L, 7L -> 6L, 8L -> 8L, 9L -> 8L, 10L -> 10L)
+    val e = edgeList.length
+    for ((edges, want) <- Seq(edgeList -> expected,
+        Seq.empty[(Long, Long)] -> (1L to 10L).map(i => i -> i).toMap);
+         maxDriverEdges <- Seq(100_000, e, e - 1, 0)) {
+      val clue = s"${edges.length} edges, maxDriverEdges=$maxDriverEdges"
+      val labels = GraphFunctions.componentLabels(vertices, edges.toDF("src", "dst"),
+        maxDriverEdges = maxDriverEdges)
+      assert(labels.as[(Long, Long)].collect().toMap === want, clue)
+      val kept = DedupFunctions.dropByPairGraph(docs, "doc_id",
+        edges.toDF("id_a", "id_b"), maxDriverEdges = maxDriverEdges)
+      assert(kept.as[(Long, String)].collect().toSet ===
+        want.collect { case (id, root) if id == root => (id, s"doc$id") }.toSet, clue)
+      if (edges.nonEmpty && edges.length <= maxDriverEdges) {
+        // the driver path broadcasts its id map back into one join
+        val lp = labels.queryExecution.executedPlan.toString
+        assert(lp.contains("BroadcastHashJoin") && lp.contains("LeftOuter"), lp)
+        val kp = kept.queryExecution.executedPlan.toString
+        assert(kp.contains("BroadcastHashJoin") && kp.contains("LeftAnti"), kp)
+      }
+    }
   }
 
   test("pageRank: closed forms, dangling redistribution, conservation, reference equivalence") {

@@ -109,4 +109,13 @@ class MetaQueriesSpec extends SparkSpec {
   test("entry smoke: flagship query returns rows on sf0.001") {
     assert(graft.SparkEntry.entry(spark).count() > 0)
   }
+
+  test("missingScenes: external minus internal by key (controller.py:595–618)") {
+    val external = Seq(("a", 1), ("b", 2), ("c", 3), ("c", 4)).toDF("scene_id", "v")
+    val internal = Seq("b", "x").toDF("scene_id")
+    val got = MetaQueries.missingScenes(external, internal, "scene_id")
+      .as[(String, Int)].collect().toSet
+    assert(got == Set(("a", 1), ("c", 3), ("c", 4)))
+    assert(MetaQueries.missingScenes(external, external.select("scene_id"), "scene_id").isEmpty)
+  }
 }

@@ -62,6 +62,24 @@ class RasterKernelsSpec extends SparkSpec {
     assert(ndvi.agg(sum(size(col("pixels")))).head().getLong(0) == h * w)
   }
 
+  test("writeTiles: zstd parquet partitioned by (scene, band) reads back pixel-exact (S9)") {
+    val h = 10; val w = 14
+    def img(seed: Int) = Array.tabulate(h * w)(i => (i * 31 + seed).toFloat)
+    val long = Seq(("sceneM", "B08", -9999.0, img(1)), ("sceneM", "B04", -8888.0, img(2)))
+      .toDF("scene_id", "band", "nodata", "pixels")
+      .withColumn("height", lit(h)).withColumn("width", lit(w))
+    val dir = java.nio.file.Files.createTempDirectory("graft-tiles").toString
+    SceneIO.writeTiles(SceneIO.tileScene(long, 4, 4), dir)
+    for (band <- Seq("B04", "B08")) {
+      val files = new java.io.File(s"$dir/scene_id=sceneM/band=$band").list()
+      assert(files.exists(f => f.endsWith(".zstd.parquet")), files.mkString(", "))
+    }
+    val back = spark.read.parquet(dir)
+    assert(back.count() == 2 * 3 * 4) // ceil(10/4) × ceil(14/4) windows per band
+    val (bh, bw, px) = SceneIO.assembleScene(back, "sceneM", "B04")
+    assert((bh, bw) == ((h, w)) && px.sameElements(img(2)))
+  }
+
   test("bandMath masks 0-division pixels to nodata (FIXTURES.md §6)") {
     val t = Seq(
       RasterTile("s", "B08", 0, 0, 1, 2, -9999.0, Array(0f, 100f)),

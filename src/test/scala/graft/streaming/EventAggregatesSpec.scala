@@ -217,4 +217,18 @@ class EventAggregatesSpec extends SparkSpec {
       assert(got == expected)
     } finally q.stop()
   }
+
+  test("monthlyCounts: calendar-month buckets, not sliding windows (ST9)") {
+    import spark.implicits._
+    val events = Seq("2020-01-31 23:59:59", "2020-01-01 00:00:00",
+        "2020-02-01 00:00:00", "2020-03-15 12:00:00", "2020-03-31 08:00:00")
+      .toDF("ts").select(to_timestamp(col("ts")).as("ts"))
+    val got = EventAggregates.monthlyCounts(events).orderBy("month")
+      .as[(java.sql.Date, Long)].collect().map { case (m, n) => (m.toString, n) }.toSeq
+    assert(got == Seq(("2020-01-01", 2L), ("2020-02-01", 1L), ("2020-03-01", 2L)))
+    // a TIMESTAMP_NTZ column buckets the same way
+    val ntz = events.select(col("ts").cast("timestamp_ntz").as("ts"))
+    assert(EventAggregates.monthlyCounts(ntz).orderBy("month").collect().map(_.getLong(1)).toSeq ==
+      Seq(2L, 1L, 2L))
+  }
 }
