@@ -58,26 +58,7 @@ object RasterBench {
     val tt0 = System.nanoTime()
     val nOut = graft.raster.SceneIO.tileScene(scenes, side, side).count()
     val tileSec = (System.nanoTime() - tt0) / 1e9
-    // pivot-free path: multi-band scenes -> pivoted windows -> band math,
-    // zero exchanges (compare pivot_sec + math_sec on the shuffle path)
-    val mbScenes = spark.range(math.max(1, nScenes / 8))
-      .select(concat(lit("mb"), col("id")).as("scene_id"),
-        lit(sceneSide).as("height"), lit(sceneSide).as("width"),
-        map_from_arrays(array(lit("B04"), lit("B08")), array(
-          transform(sequence(lit(0), lit(sceneSide * sceneSide - 1)), i => (i % 10000).cast("float")),
-          transform(sequence(lit(0), lit(sceneSide * sceneSide - 1)), i => ((i * 3) % 10000).cast("float"))))
-          .as("bands"),
-        map_from_arrays(array(lit("B04"), lit("B08")),
-          array(lit(-9999.0), lit(-9999.0))).as("nodatas"))
-      .localCheckpoint(true)
-    val mbBytes = mbScenes.count() * 2L * sceneSide * sceneSide * 4
-    val tm0 = System.nanoTime()
-    val mbOut = RasterKernels.bandMath(
-      graft.raster.SceneIO.tileSceneMultiBand(mbScenes, Seq("B04", "B08"), side, side),
-      "10000. * ((B08 - B04) / (B08 + B04))", "NDVI", -9999.0, -10000.0, 10000.0)
-      .agg(sum(element_at(col("pixels"), 1))).head().getDouble(0)
-    val mbSec = (System.nanoTime() - tm0) / 1e9
-    println(f"""{"tiles":$nTiles,"pixels_per_tile":$px,"input_mb":${bytes / 1e6}%.0f,"pivot_sec":$pivotSec%.2f,"math_sec":$sec%.2f,"math_mb_per_sec":$mbps%.0f,"tile_scene_mb_per_sec":${sceneBytes / 1e6 / tileSec}%.0f,"tiles_out":$nOut,"pivot_free_mb_per_sec":${mbBytes / 1e6 / mbSec}%.0f,"pivot_free_checksum":$mbOut%.0f,"checksum":$checksum%.0f}""")
+    println(s"""{"tiles":$nTiles,"pixels_per_tile":$px,"input_mb":${Bench.fixed(bytes / 1e6, 0)},"pivot_sec":${Bench.fixed(pivotSec, 2)},"math_sec":${Bench.fixed(sec, 2)},"math_mb_per_sec":${Bench.fixed(mbps, 0)},"tile_scene_mb_per_sec":${Bench.fixed(sceneBytes / 1e6 / tileSec, 0)},"tiles_out":$nOut,"checksum":${Bench.fixed(checksum, 0)}}""")
     spark.stop()
   }
 }

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.catalog.Generations
 
 /** The multimodal crawl front door as a library operator (q175 is one
   * invocation), plus its INCREMENTAL form (q183): a persisted crawl
@@ -419,22 +420,9 @@ object CrawlFunctions {
   private def textIndexDir(stateDir: String) = s"${stateDir.stripSuffix("/")}/text_index"
   private def mediaIndexDir(stateDir: String) = s"${stateDir.stripSuffix("/")}/media_index"
 
-  /** Highest complete members generation (complete iff the committer's
-    * `_SUCCESS` marker exists — written last, so crashed appends are
-    * invisible). -1 = uninitialized. */
-  private def currentGen(spark: SparkSession, stateDir: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(membersRoot(stateDir))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) -1L
-    else {
-      val gens = fs.listStatus(root).collect {
-        case st if st.isDirectory && st.getPath.getName.startsWith("gen=") &&
-            fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) =>
-          st.getPath.getName.stripPrefix("gen=").toLong
-      }
-      if (gens.isEmpty) -1L else gens.max
-    }
-  }
+  /** Highest complete members generation; -1 = uninitialized. */
+  private def currentGen(spark: SparkSession, stateDir: String): Long =
+    Generations.current(spark, membersRoot(stateDir), "gen=")
 
   /** An index built from a batch with zero rows of its modality is a
     * marker-only directory (no parquet files — nothing to infer a schema
@@ -459,7 +447,7 @@ object CrawlFunctions {
   private def readMembers(spark: SparkSession, stateDir: String): DataFrame = {
     val gen = currentGen(spark, stateDir)
     require(gen >= 0, s"crawl state at $stateDir is not initialized")
-    spark.read.parquet(s"${membersRoot(stateDir)}/gen=$gen")
+    spark.read.parquet(Generations.path(membersRoot(stateDir), "gen=", gen))
   }
 
   /** Publish members generation N+1 atomically, then GC everything except
@@ -469,13 +457,8 @@ object CrawlFunctions {
                              members: DataFrame): Unit = {
     val next = currentGen(spark, stateDir) + 1
     members.write.mode("overwrite")
-      .parquet(s"${membersRoot(stateDir)}/gen=$next")
-    val root = new org.apache.hadoop.fs.Path(membersRoot(stateDir))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val keep = Set(s"gen=${next - 1}", s"gen=$next")
-    fs.listStatus(root).foreach { st =>
-      if (!keep.contains(st.getPath.getName)) fs.delete(st.getPath, true)
-    }
+      .parquet(Generations.path(membersRoot(stateDir), "gen=", next))
+    Generations.gc(spark, membersRoot(stateDir), "gen=", next - 1, next, sweepRoot = true)
   }
 
   /** Initialize a crawl state dir from the first batch: members gen=0

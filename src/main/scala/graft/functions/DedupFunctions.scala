@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.catalog.Generations
 
 /** Deduplication operators for training-data pipelines: exact, MinHash/LSH,
   * SimHash, n-gram Jaccard.
@@ -1568,17 +1569,8 @@ object DedupFunctions {
     * uses: never delete-then-rename the live path. */
   private def resolveWindowIndexDir(spark: org.apache.spark.sql.SparkSession,
                                     dir: String): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    val gens =
-      if (!fs.exists(p)) Array.empty[Long]
-      else fs.listStatus(p).collect {
-        case st if st.isDirectory && st.getPath.getName.startsWith("gen=") &&
-            fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) =>
-          st.getPath.getName.stripPrefix("gen=").toLong
-      }
-    if (gens.isEmpty) dir else s"${dir.stripSuffix("/")}/gen=${gens.max}"
+    val gen = Generations.current(spark, dir, "gen=")
+    if (gen < 0) dir else Generations.path(dir, "gen=", gen)
   }
 
   /** Read the live segment files of a window index. Flat-layout reads list
@@ -1649,24 +1641,16 @@ object DedupFunctions {
     * still finds its files for the duration of its scan. */
   def compactWindowIndex(spark: org.apache.spark.sql.SparkSession,
                          dir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    val live = resolveWindowIndexDir(spark, dir)
-    val curGen =
-      if (live == dir) 0L
-      else live.substring(live.lastIndexOf("gen=") + 4).toLong
-    val next = s"${dir.stripSuffix("/")}/gen=${curGen + 1}"
-    readWindowIndex(spark, dir).write.mode("overwrite").parquet(next)
+    // the flat layout counts as gen 0
+    val curGen = math.max(Generations.current(spark, dir, "gen="), 0L)
+    readWindowIndex(spark, dir).write.mode("overwrite")
+      .parquet(Generations.path(dir, "gen=", curGen + 1))
     // GC: keep the just-published generation AND the one it replaced (a
     // reader that resolved gen=N moments before the publish must be able
     // to finish its scan — gen=N is deleted by the NEXT compaction, one
     // full cycle later); everything older, any half-written (marker-less)
     // future gens from crashes, and flat root files go now
-    val keep = Set(s"gen=$curGen", s"gen=${curGen + 1}")
-    fs.listStatus(root).foreach { st =>
-      if (!keep.contains(st.getPath.getName)) fs.delete(st.getPath, true)
-    }
+    Generations.gc(spark, dir, "gen=", curGen, curGen + 1, sweepRoot = true)
   }
 
   /** Cut a NEW batch against a corpus index from [[writeWindowIndex]]:

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.catalog.Generations
 
 /** Robots Exclusion Protocol (RFC 9309) — the crawl-politeness gate a
   * training-data pipeline must apply before a fetched URL may enter the
@@ -242,39 +243,13 @@ object RobotsFunctions {
     s"${dir.stripSuffix("/")}/$part"
 
   private def epochPath(dir: String, epoch: Long, part: String) =
-    s"${dir.stripSuffix("/")}/c=$epoch/$part"
-
-  private def fsOf(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Highest committed compaction epoch (c=K with its `_SUCCESS`
-    * marker); -1 before [[writeRobotsCache]]. */
-  private def currentEpoch(spark: SparkSession, dir: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(dir.stripSuffix("/"))
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(root)) -1L
-    else {
-      val epochs = fs.listStatus(root).collect {
-        case st if st.isDirectory && st.getPath.getName.startsWith("c=") &&
-            fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) =>
-          st.getPath.getName.stripPrefix("c=").toLong
-      }
-      if (epochs.isEmpty) -1L else epochs.max
-    }
-  }
-
-  private def markEpoch(spark: SparkSession, dir: String, epoch: Long): Unit = {
-    val fs = fsOf(spark, dir)
-    fs.create(new org.apache.hadoop.fs.Path(
-      epochPath(dir, epoch, "_SUCCESS")), true).close()
-  }
+    s"${Generations.path(dir, "c=", epoch)}/$part"
 
   /** Whether `dir` holds an initialized robots cache — streaming callers
     * route the first batch to [[writeRobotsCache]] and the rest to
     * [[appendRobotsCache]] off this. */
   def cacheInitialized(spark: SparkSession, dir: String): Boolean =
-    currentEpoch(spark, dir) >= 0
+    Generations.current(spark, dir, "c=") >= 0
 
   private def uaPath(dir: String) =
     new org.apache.hadoop.fs.Path(cachePath(dir, "_user_agent"))
@@ -328,7 +303,7 @@ object RobotsFunctions {
     spark.read.parquet(epochPath(dir, epoch, part))
 
   private def requireEpoch(spark: SparkSession, dir: String): Long = {
-    val e = currentEpoch(spark, dir)
+    val e = Generations.current(spark, dir, "c=")
     require(e >= 0, s"robots cache at $dir is not initialized")
     e
   }
@@ -354,7 +329,7 @@ object RobotsFunctions {
     writeGen(spark, dir, epoch = 0L,
       stampDigests(robots, hostCol, bodyCol).localCheckpoint(true),
       userAgent, gen = 0L, overwrite = true)
-    markEpoch(spark, dir, 0L)
+    Generations.commit(spark, dir, "c=", 0L)
   }
 
   /** Append one batch of fetched robots bodies: ONLY hosts whose body
@@ -446,15 +421,8 @@ object RobotsFunctions {
     hosts.join(latest, Seq("host", "gen"), "left_semi")
       .select(col("host"), col("digest"), lit(0L).as("gen"))
       .write.mode("overwrite").parquet(epochPath(dir, next, "hosts"))
-    markEpoch(spark, dir, next)
-    val root = new org.apache.hadoop.fs.Path(dir.stripSuffix("/"))
-    val fs = fsOf(spark, dir)
-    val keep = Set(s"c=$epoch", s"c=$next")
-    fs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith("c=") && !keep.contains(name))
-        fs.delete(st.getPath, true)
-    }
+    Generations.commit(spark, dir, "c=", next)
+    Generations.gc(spark, dir, "c=", epoch, next)
   }
 
   /** Politeness-scheduled crawl frontier: assign every URL a fetch offset

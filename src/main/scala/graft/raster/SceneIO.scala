@@ -17,13 +17,14 @@ import java.awt.image.BufferedImage
   *    (scene_id, band) with the overview pyramid as extra factor-tagged
   *    rows (RasterKernels.overviews). Interchange: real tiled-deflate
   *    GeoTIFF files with overview IFDs via the pure-JVM [[GeoTiff]]
-  *    codec — [[writeGeoTiff]] for one band, [[writeGeoTiffScenes]] for
-  *    the distributed all-bands fan-out (grouped by (scene, band): no
+  *    codec — [[writeGeoTiffScenes]], one file per (scene, band) (no
   *    shuffle over scene-partitioned tiles, one otherwise; files written
   *    from executors through the Hadoop FileSystem API).
-  *  - S10: quicklook PNG encode uses JDK ImageIO — driver-side, on an
-  *    already-downsampled 768×768 composite (publish.py:59–91), so the
-  *    collect is ≤ 768·768·3 bytes per scene regardless of input size.
+  *  - S10: [[quicklookScenes]] samples each tile onto the qlH×qlW grid
+  *    (publish.py:59–91), so only ≤ 3·qlH·qlW values per scene cross the
+  *    shuffle, and the executors encode and write the PNGs (JDK ImageIO).
+  *    [[quicklook]] and [[assembleScene]] are the driver-side reference it
+  *    is pinned against.
   */
 object SceneIO {
 
@@ -42,37 +43,6 @@ object SceneIO {
         col("t.window_row").as("window_row"), col("t.window_col").as("window_col"),
         col("t.h").as("height"), col("t.w").as("width"), col("nodata"),
         col("t.pixels").as("pixels"))
-  }
-
-  /** S5 pivot-free multi-band tiling: tile ALL bands of a scene in one
-    * explode, emitting rows already in the pivoted (scene, window) →
-    * band-map shape that [[RasterKernels.bandMath]] consumes — the
-    * (scene, window) regroup shuffle of `tileScene → pivotBands`
-    * disappears entirely, because every band's native tiling yields its
-    * windows in the same deterministic row-major order and `arrays_zip`
-    * aligns them scan-side.
-    *
-    * Input rows: (scene_id, height, width, bands: map<band,pixels>,
-    * nodatas: map<band,nodata>) — the shape a multi-band scene reader
-    * produces. At 100 TB this turns derived-band computation into a pure
-    * narrow pipeline: scan → tile → band math → write, no exchange.
-    */
-  def tileSceneMultiBand(scene: DataFrame, bandNames: Seq[String],
-                         blockH: Int, blockW: Int): DataFrame = {
-    require(bandNames.nonEmpty, "bandNames must be non-empty")
-    import org.apache.spark.sql.graft.ColumnBridge
-    val tiles = ColumnBridge.column(graft.expr.TileSceneMultiExpr(
-      ColumnBridge.expression(col("bands")),
-      ColumnBridge.expression(col("height")),
-      ColumnBridge.expression(col("width")), bandNames, blockH, blockW))
-    scene.select(col("scene_id"), col("nodatas"), explode(tiles).as("t"))
-      .select(col("scene_id"),
-        col("t.window_row").as("window_row"),
-        col("t.window_col").as("window_col"),
-        col("t.h").as("height"),
-        col("t.w").as("width"),
-        col("t.bands").as("bands"),
-        col("nodatas"))
   }
 
   /** Inverse of [[tileScene]] for small scenes (test/quicklook path):
@@ -343,30 +313,6 @@ object SceneIO {
       .toDF("scene_id", "band", "height", "width", "nodata", "pixels")
   }
 
-  /** S7/S8 physical layer — assemble one (scene, band) from its tiles and
-    * write a real tiled-deflate GeoTIFF with a factor-2..64 overview
-    * pyramid (reference cog_translate utils.py:113–154 + build_overviews
-    * :381–401). The assemble is the same bounded collect as [[quicklook]];
-    * the fan-out across (scene, band) pairs is the caller's loop or a
-    * foreachPartition over the distinct key set. */
-  def writeGeoTiff(tiles: DataFrame, sceneId: String, band: String,
-                   file: java.nio.file.Path,
-                   meta: GeoTiff.GeoMeta = GeoTiff.GeoMeta(),
-                   tileSize: Int = 256,
-                   overviewFactors: Seq[Int] = Seq(2, 4, 8, 16, 32, 64),
-                   container: String = "auto"): Unit = {
-    val (h, w, px) = assembleScene(tiles, sceneId, band)
-    val nodata = meta.nodata.orElse {
-      tiles.filter(col("scene_id") === sceneId && col("band") === band)
-        .select(col("nodata")).head(1).headOption.map(_.getFloat(0).toDouble)
-    }
-    val os = java.nio.file.Files.newOutputStream(file)
-    try GeoTiff.encodeTo(os, h, w, px, meta.copy(nodata = nodata),
-      tileSize, overviewFactors, container = container)
-    finally os.close()
-    ()
-  }
-
   /** S7/S8 at scale — export EVERY (scene, band) as its own GeoTIFF in one
     * distributed pass: the tiles are grouped by (scene_id, band) and each
     * group arrives SORTED by (window_row, window_col), i.e. in stripe
@@ -587,8 +533,9 @@ object SceneIO {
     * shuffle is ≤ 3·qlH·qlW sampled values per scene (~7 MB at 768²) —
     * independent of input resolution. Each task then fills the three
     * band buffers, encodes the PNG (0 → transparent) and writes it via
-    * the Hadoop FS API. Per-band geometry joins back via AQE (broadcasts
-    * when the scene count is small). Bit-identical to [[quicklook]]:
+    * the Hadoop FS API. The per-(scene, band) geometry is one aggregate
+    * over the geometry columns, broadcast back onto the tiles, so pixel
+    * rows are never shuffled or sorted. Bit-identical to [[quicklook]]:
     * same integer nearest-neighbour mapping, same encoder. Returns the
     * manifest (scene_id, path, bytes).
     *
@@ -600,20 +547,25 @@ object SceneIO {
   def quicklookScenes(tiles: DataFrame, rgb: (String, String, String), dir: String,
                       qlH: Int = 768, qlW: Int = 768,
                       prescaled: Boolean = false): DataFrame = {
+    require(qlH > 0 && qlW > 0, s"quicklook size must be positive, got ${qlH}x$qlW")
     val spark = tiles.sparkSession
     import spark.implicits._
     val conf = org.apache.spark.sql.graft.HadoopConfBridge.serializable(
       spark.sparkContext.hadoopConfiguration)
     val bands = Seq(rgb._1, rgb._2, rgb._3)
     val t = tiles.filter(col("band").isin(bands: _*))
-    // per-(scene, band) geometry: block size, then full dims from it —
-    // these aggregations prune to geometry columns, no pixel scan
-    val blocks = t.groupBy(col("scene_id"), col("band"))
-      .agg(max(col("height")).as("blockH"), max(col("width")).as("blockW"))
-    val dims = t.join(blocks, Seq("scene_id", "band"))
-      .groupBy(col("scene_id"), col("band"), col("blockH"), col("blockW"))
-      .agg(max(col("window_row") * col("blockH") + col("height")).as("totalH"),
-        max(col("window_col") * col("blockW") + col("width")).as("totalW"))
+    // per-(scene, band) geometry in one aggregate over the geometry
+    // columns (no pixel scan): the block is the largest tile, and the last
+    // row (column) of tiles gives the full dims, since every tile has
+    // h ≤ blockH: max(wr·blockH + h) = wrMax·blockH + h(wrMax), as in
+    // assembleScene
+    val dims = t.groupBy(col("scene_id"), col("band"))
+      .agg(max(col("height")).as("blockH"), max(col("width")).as("blockW"),
+        max(struct(col("window_row"), col("height"))).as("lastRow"),
+        max(struct(col("window_col"), col("width"))).as("lastCol"))
+      .select(col("scene_id"), col("band"), col("blockH"), col("blockW"),
+        (col("lastRow.window_row") * col("blockH") + col("lastRow.height")).as("totalH"),
+        (col("lastCol.window_col") * col("blockW") + col("lastCol.width")).as("totalW"))
     // broadcast is load-bearing: without the hint the un-analyzed dims
     // aggregate defeats the size estimate and the planner sort-merge-joins
     // the megabyte-sized pixel rows (measured 50× this path's wall time);

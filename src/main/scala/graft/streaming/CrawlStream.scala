@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.catalog.Generations
 import graft.functions.CrawlFunctions
 import graft.functions.CrawlFunctions.CrawlParams
 
@@ -184,43 +185,21 @@ object CrawlStream {
   // epoch K bit-for-bit, and a crashed plain append re-runs under the
   // high-water/distinct contract exactly as before.
 
-  private def fsOf(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def committedEpoch(spark: SparkSession, dir: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(dir.stripSuffix("/"))
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(root)) -1L
-    else {
-      val epochs = fs.listStatus(root).collect {
-        case st if st.isDirectory && st.getPath.getName.startsWith("c=") &&
-            fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) =>
-          st.getPath.getName.stripPrefix("c=").toLong
-      }
-      if (epochs.isEmpty) -1L else epochs.max
-    }
-  }
-
   private def epochUrls(dir: String, epoch: Long): String =
-    s"${dir.stripSuffix("/")}/c=$epoch/urls"
-
-  private def markEpoch(spark: SparkSession, dir: String, epoch: Long): Unit =
-    fsOf(spark, dir).create(new org.apache.hadoop.fs.Path(
-      s"${dir.stripSuffix("/")}/c=$epoch/_SUCCESS"), true).close()
+    s"${Generations.path(dir, "c=", epoch)}/urls"
 
   private def appendUrls(spark: SparkSession, urls: DataFrame,
                          dir: String): Unit = {
-    val k = committedEpoch(spark, dir)
+    val k = Generations.current(spark, dir, "c=")
     if (k < 0) {
       urls.write.mode("overwrite").parquet(epochUrls(dir, 0L))
-      markEpoch(spark, dir, 0L)
+      Generations.commit(spark, dir, "c=", 0L)
     } else
       urls.write.mode("append").parquet(epochUrls(dir, k))
   }
 
   private def readUrls(spark: SparkSession, dir: String): DataFrame = {
-    val k = committedEpoch(spark, dir)
+    val k = Generations.current(spark, dir, "c=")
     if (k >= 0)
       spark.read.parquet(epochUrls(dir, k)).select("url").distinct()
     else
@@ -235,20 +214,13 @@ object CrawlStream {
     * uninitialized log. Single writer per state dir, like every write
     * here. */
   def compactUrlLog(spark: SparkSession, dir: String): Unit = {
-    val k = committedEpoch(spark, dir)
+    val k = Generations.current(spark, dir, "c=")
     if (k < 0) return
     val next = k + 1
     spark.read.parquet(epochUrls(dir, k)).select("url").distinct()
       .write.mode("overwrite").parquet(epochUrls(dir, next))
-    markEpoch(spark, dir, next)
-    val root = new org.apache.hadoop.fs.Path(dir.stripSuffix("/"))
-    val fs = fsOf(spark, dir)
-    val keep = Set(s"c=$k", s"c=$next")
-    fs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith("c=") && !keep.contains(name))
-        fs.delete(st.getPath, true)
-    }
+    Generations.commit(spark, dir, "c=", next)
+    Generations.gc(spark, dir, "c=", k, next)
   }
 
   /** Batch N+1's frontier from the current state: cache-served rules

@@ -107,9 +107,10 @@ class PhysicalIngestEndToEndSpec extends SparkSpec {
 
       // 6. real COG-shaped GeoTIFF out, then read our own output back
       val outDir = Files.createTempDirectory("ingest-e2e")
-      val cog = outDir.resolve(s"${sceneId}_NDVI.tif")
-      SceneIO.writeGeoTiff(ndvi, sceneId, "NDVI", cog, geo,
-        tileSize = 16, overviewFactors = Seq(2, 4))
+      SceneIO.writeGeoTiffScenes(
+        ndvi.filter(col("scene_id") === sceneId && col("band") === "NDVI"), outDir.toString,
+        geo, tileSize = 16, overviewFactors = Seq(2, 4)).collect()
+      val cog = outDir.resolve(s"${sceneId}__NDVI.tif")
       val back = GeoTiff.decode(Files.readAllBytes(cog))
       assert(back.main.height == h && back.main.width == w)
       val expect0 = 10000f * (b08(0) - b04(0)) / (b08(0) + b04(0))

@@ -1,13 +1,11 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType}
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentHashMap
 
 /** Scenes a flaky download has seen: the first fetch of a scene is
   * offline (RETRY), every later one succeeds. JVM-wide, so the flip holds
@@ -19,28 +17,6 @@ object FlakyDownload {
 class PipelineSpec extends SparkSpec {
   import Pipeline._
   implicit lazy val s: org.apache.spark.sql.SparkSession = spark
-
-  /** Spark jobs started while `f` runs. A marker job run after `f` flushes
-    * the listener queue, which delivers events in order. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val started = new AtomicInteger
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "jobsOf marker"))
-          flushed.countDown()
-        else started.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      f
-      sc.setJobDescription("jobsOf marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(flushed.await(60, TimeUnit.SECONDS), "listener queue did not flush")
-      started.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   private val tree = TaskNode("download", Seq(
     TaskNode("correction", Seq(TaskNode("publish", Seq(TaskNode("post")))))))

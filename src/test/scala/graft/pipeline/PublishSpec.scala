@@ -225,6 +225,63 @@ class PublishSpec extends SparkSpec {
     }
   }
 
+  test("quicklookScenes rejects a non-positive quicklook size on the driver") {
+    val tiles = SceneIO.tileScene(Seq(("QZ", "B04", 4, 4, -9999.0, Array.fill(16)(1f)))
+      .toDF("scene_id", "band", "height", "width", "nodata", "pixels"), 2, 2)
+    val dir = java.nio.file.Files.createTempDirectory("qlsize").toString
+    for ((qh, qw) <- Seq((0, 32), (32, 0), (-1, 32), (32, -5))) {
+      val e = intercept[IllegalArgumentException](
+        SceneIO.quicklookScenes(tiles, ("B04", "B04", "B04"), dir, qlH = qh, qlW = qw))
+      assert(e.getMessage.contains("quicklook size"), e.getMessage)
+    }
+  }
+
+  test("quicklookScenes over two persisted scene reads: ≤ 4 jobs, pixels never shuffle") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    // the ingest batch's shape: 4 scenes × 3 bands read in two attempts,
+    // each read tiled and persisted, the quicklook over their union
+    val root = java.nio.file.Files.createTempDirectory("qljobs")
+    val rgb = ("B11", "B08", "B04")
+    val groups = Seq(Seq("S1", "S2", "S3"), Seq("S4"))
+    val dirs = groups.zipWithIndex.map { case (ids, i) =>
+      val d = java.nio.file.Files.createDirectories(root.resolve(s"read$i"))
+      for (sid <- ids; (band, k) <- Seq("B04" -> 1, "B08" -> 2, "B11" -> 3)) {
+        val px = Array.tabulate(40 * 44)(j => if (j % 13 == 0) -1f else ((j * k + sid.hashCode) % 9000).abs.toFloat)
+        java.nio.file.Files.write(d.resolve(s"${sid}__$band.tif"),
+          graft.raster.GeoTiff.encode(40, 44, px,
+            graft.raster.GeoTiff.GeoMeta(nodata = Some(-1.0)), 16, Nil))
+      }
+      d.toString
+    }
+    val cached = dirs.map { d =>
+      val t = SceneIO.tileScene(SceneIO.readGeoTiffScenes(spark, d), 16, 16).persist()
+      t.count(); t
+    }
+    try {
+      val tiles = cached.reduce(_ unionByName _).filter(col("scene_id").isin(groups.flatten: _*))
+      val out = root.resolve("ql").toString
+      var manifest: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsOf {
+        manifest = SceneIO.quicklookScenes(tiles, rgb, out, qlH = 24, qlW = 24)
+        assert(manifest.collect().length == 4)
+      }
+      assert(jobs <= 4, s"quicklookScenes ran $jobs jobs")
+      object stages extends AdaptiveSparkPlanHelper
+      val plan = manifest.queryExecution.executedPlan
+      val withPixels = stages.collect(plan) {
+        case e: Exchange if e.child.output.exists(_.name == "pixels") => e
+        case s: SortExec if s.child.output.exists(_.name == "pixels") => s
+      }
+      assert(withPixels.isEmpty, s"pixel rows must never shuffle or sort:\n$plan")
+      assert(stages.collect(plan) { case j: SortMergeJoinExec => j }.isEmpty, plan.toString)
+      val png = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out, "S4.png"))
+      assert(png.toSeq == SceneIO.quicklook(tiles, "S4", rgb, qlH = 24, qlW = 24).toSeq)
+    } finally cached.foreach(_.unpersist(blocking = true))
+  }
+
   test("external processor: success, failure→RETRY, timeout (X1/X2)") {
     import ExternalProcessor._
     val jobs = spark.createDataset(Seq(

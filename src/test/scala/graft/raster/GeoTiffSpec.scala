@@ -306,17 +306,19 @@ class GeoTiffSpec extends SparkSpec {
     assert(rescanned == manifest.map(r => (r.getString(0), r.getString(1))).toSet)
   }
 
-  test("writeGeoTiff exports tiles to a COG-shaped file that re-reads identically") {
+  test("writeGeoTiffScenes exports one band to a COG that re-reads identically") {
     val dir = Files.createTempDirectory("gtiffw")
     val (h, w) = (64, 64)
     val px = Array.tabulate(h * w)(_.toFloat)
-    val scene = Seq(("sceneW", "B02", h, w, -1f, px))
+    val scene = Seq(("sceneW", "B02", h, w, -1f, px), ("sceneW", "B03", h, w, -2f, px))
       .toDF("scene_id", "band", "height", "width", "nodata", "pixels")
     val tiles = SceneIO.tileScene(scene, 16, 16)
-    val file = dir.resolve("sceneW_B02.tif")
-    SceneIO.writeGeoTiff(tiles, "sceneW", "B02", file,
+    val manifest = SceneIO.writeGeoTiffScenes(
+      tiles.filter(col("scene_id") === "sceneW" && col("band") === "B02"), dir.toString,
       GeoTiff.GeoMeta(epsg = Some(32633)), tileSize = 16, overviewFactors = Seq(2, 4))
-    val img = GeoTiff.decode(Files.readAllBytes(file))
+      .select("band").as[String].collect()
+    assert(manifest.toSeq == Seq("B02"))
+    val img = GeoTiff.decode(Files.readAllBytes(dir.resolve("sceneW__B02.tif")))
     assert(img.main.pixels.toSeq == px.toSeq)
     assert(img.meta.epsg.contains(32633))
     assert(img.meta.nodata.contains(-1.0), "nodata inferred from the tile rows")

@@ -31,37 +31,6 @@ class RasterKernelsSpec extends SparkSpec {
     assert(math.abs(w1(1) - 10000.0 * (2.0 - 1.0) / 3.0) < 0.5)
   }
 
-  test("tileSceneMultiBand ≡ tileScene→pivotBands, with zero exchanges") {
-    val h = 10; val w = 14 // ragged against 4×4 blocks
-    def img(seed: Int) = Array.tabulate(h * w)(i => (i * 31 + seed).toFloat)
-    val multi = Seq(("sceneM", h, w,
-        Map("B08" -> img(1), "B04" -> img(2)),
-        Map("B08" -> -9999.0, "B04" -> -8888.0)))
-      .toDF("scene_id", "height", "width", "bands", "nodatas")
-    val pivotFree = SceneIO.tileSceneMultiBand(multi, Seq("B04", "B08"), 4, 4)
-    // reference path: long tiles then shuffle-pivot
-    val long = Seq(("sceneM", "B08", -9999.0, img(1)), ("sceneM", "B04", -8888.0, img(2)))
-      .toDF("scene_id", "band", "nodata", "pixels")
-      .withColumn("height", lit(h)).withColumn("width", lit(w))
-    val pivoted = RasterKernels.pivotBands(SceneIO.tileScene(long, 4, 4))
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("scene_id"), col("window_row"), col("window_col"),
-        col("height"), col("width"),
-        element_at(col("bands"), "B04").as("b04"),
-        element_at(col("bands"), "B08").as("b08"),
-        element_at(col("nodatas"), "B04").as("n04"),
-        element_at(col("nodatas"), "B08").as("n08"))
-      .orderBy("window_row", "window_col").collect().map(_.toString).toSeq
-    assert(canon(pivotFree) == canon(pivoted))
-    // the whole point: no shuffle in the pivot-free plan
-    val plan = pivotFree.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), "multi-band tiling must be shuffle-free")
-    // and bandMath consumes it directly
-    val ndvi = RasterKernels.bandMath(pivotFree,
-      "10000. * ((B08 - B04) / (B08 + B04))", "NDVI", -9999.0, -10000.0, 10000.0)
-    assert(ndvi.agg(sum(size(col("pixels")))).head().getLong(0) == h * w)
-  }
-
   test("writeTiles: zstd parquet partitioned by (scene, band) reads back pixel-exact (S9)") {
     val h = 10; val w = 14
     def img(seed: Int) = Array.tabulate(h * w)(i => (i * 31 + seed).toFloat)
