@@ -1,13 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.catalog.Tables
-import graft.expr.BandExpressionCompiler
-import graft.functions.{DedupFunctions => D, SimilarityFunctions => Sim, TextFunctions => T}
-import graft.meta.MetaQueries
-import graft.raster.{RasterKernels, SceneIO}
-import graft.functions.{MultimodalFunctions => Multimodal}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries._
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2, each with a DuckDB-equivalent `oracleSql`. The TPC-H-ish
@@ -15,6559 +9,29 @@ import graft.functions.{MultimodalFunctions => Multimodal}
   * tables: `orders`/`lineitem` play activities/executions, `events` plays
   * the activity-history stream, `documents`/`embeddings` drive the
   * training-data-pipeline operators.
+  *
+  * A query is registered once, as a [[graft.queries.QuerySpec]] in the
+  * plane file of `graft.queries` it belongs to; `queries` and `oracleSql`
+  * are views over those registrations.
   */
 object SparkEntry {
+
+  /** Every query, plane by plane (QueryRegistrySpec pins the names unique). */
+  val specs: Seq[QuerySpec] =
+    CatalogQueries.specs ++ RasterQueries.specs ++ TextQueries.specs ++
+      DedupQueries.specs ++ SimilarityQueries.specs ++ MediaQueries.specs ++
+      CrawlQueries.specs ++ FrontierQueries.specs
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q03_top_revenue")(spark, "/root/testdata/sf0.001")
 
-  private def r2(c: Column): Column = round(c, 2)
-  private def r4(c: Column): Column = round(c, 4)
-  private def r6(c: Column): Column = round(c, 6)
-
-  /** Per-(kind, table dir) memo of persisted layouts (IVF index, z-order
-    * rewrite). At deployment scale these are build JOBS whose cost is
-    * amortized over every query that reads the layout — folding the build
-    * into each query's wall both misstates probe latency and (at 100 TB)
-    * describes a plan nobody would run. The first invocation per JVM
-    * builds and logs the build seconds to stderr; every later invocation
-    * (bench re-runs, repeated probes) times only the read path. */
-  private val layoutCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def memoLayout(kind: String, d: String)(build: String => Unit): String =
-    layoutCache.computeIfAbsent(s"$kind:$d", _ => {
-      val dir = java.nio.file.Files.createTempDirectory(kind).toString
-      val t0 = System.nanoTime()
-      build(dir)
-      System.err.println(
-        f"[layout] $kind build for $d: ${(System.nanoTime() - t0) / 1e9}%.2f s (one-time; queries time the probe/read)")
-      dir
-    })
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- §2.4 A1/A2-class aggregation (TPC-H Q1 shape) -------------------
-    "q01_pricing_summary" -> ((s, d) => {
-      Tables.lineitem(s, d)
-        .filter(col("l_shipdate") <= lit("1998-09-02"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          r2(sum(col("l_quantity"))).as("sum_qty"),
-          r2(sum(col("l_extendedprice"))).as("sum_base"),
-          r2(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("sum_disc"),
-          r2(avg(col("l_quantity"))).as("avg_qty"),
-          count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-    // ---- §2.2 P1 conjunctive dynamic filter (controller.py:86–110) -------
-    "q02_conj_filter" -> ((s, d) => {
-      MetaQueries.conjunctiveFilter(Tables.lineitem(s, d), Seq(
-        col("l_returnflag").isin("R"),
-        col("l_quantity") >= 30,
-        col("l_shipdate").between(lit("1996-01-01"), lit("1996-12-31"))))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"), col("l_returnflag"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    // ---- §2.3 J1 3-way join + top-k (controller.py:438–443 shape) --------
-    // Filter-first: restrict orders by the selective customer-segment
-    // semi-join, probe lineitem against that key set (AQE broadcasts it),
-    // and only then aggregate — the aggregation input shrinks by the
-    // segment selectivity (~5×). Measured 1.8× over aggregate-everything-
-    // then-join at sf0.1; at cluster scale the semi-joined key set stops
-    // broadcasting but the join+agg still shuffles a segment-filtered
-    // subset instead of the whole fact table.
-    "q03_top_revenue" -> ((s, d) => {
-      val c = Tables.customer(s, d).filter(col("c_mktsegment") === "BUILDING")
-      val o = Tables.orders(s, d)
-      val bo = o.join(c, o("o_custkey") === c("c_custkey"), "left_semi")
-        .select(col("o_orderkey"), col("o_orderdate"))
-      val l = Tables.lineitem(s, d)
-      l.join(bo, l("l_orderkey") === bo("o_orderkey"))
-        .groupBy(col("o_orderkey"), col("o_orderdate"))
-        .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-        .select(col("o_orderkey"), col("o_orderdate").cast("date").as("o_date"),
-          r2(col("rev")).as("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderkey"))
-        .limit(10)
-    }),
-    // ---- §2.3 J6 semi-join EXISTS (controller.py:298–316) ----------------
-    "q04_exists_semi" -> ((s, d) => {
-      val o = Tables.orders(s, d)
-      val big = Tables.lineitem(s, d).filter(col("l_quantity") > 45)
-      o.join(big, o("o_orderkey") === big("l_orderkey"), "left_semi")
-        .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
-        .orderBy(col("o_orderpriority"))
-    }),
-    // ---- §2.4 A1 count-by-status (controller.py:438–445) -----------------
-    "q05_count_by_status" -> ((s, d) =>
-      MetaQueries.countBy(Tables.orders(s, d), Seq(col("o_orderstatus")))
-        .orderBy(col("o_orderstatus"))),
-    // ---- §2.4 A2 count-by-(day,type) (controller.py:460–468) -------------
-    "q06_count_by_day_type" -> ((s, d) =>
-      MetaQueries.countBy(Tables.events(s, d),
-          Seq(col("ts").cast("date").as("day"), col("event_type")))
-        .orderBy(col("day"), col("event_type"))),
-    // ---- §2.2 P3 anti-join not-yet-published (controller.py:298–337) -----
-    "q07_anti_join" -> ((s, d) => {
-      val c = Tables.customer(s, d)
-      val o = Tables.orders(s, d)
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))
-    }),
-    // ---- §2.3 J5 / §2.6 O3 latest-per-group window (controller.py:479–495)
-    "q08_latest_per_user" -> ((s, d) =>
-      MetaQueries.latestPerGroup(Tables.events(s, d),
-          Seq(col("user_id")), col("ts"), Seq(col("event_id")))
-        .select(col("user_id"), col("event_id"), col("event_type"))
-        .orderBy(col("user_id"))),
-    // ---- §2.3 J5 latest-run-failed count (controller.py:479–495) ---------
-    "q09_latest_failed_count" -> ((s, d) =>
-      MetaQueries.latestPerGroup(Tables.events(s, d),
-          Seq(col("user_id")), col("ts"), Seq(col("event_id")))
-        .filter(col("event_type") === "error")
-        .agg(count(lit(1)).as("n_failed"))),
-    // ---- §2.3 J3 / §2.4 A4 join + distinct (controller.py:683–690) -------
-    "q10_distinct_join" -> ((s, d) => {
-      val sup = Tables.supplier(s, d)
-      val n = Tables.nation(s, d)
-      sup.join(n, sup("s_nationkey") === n("n_nationkey"))
-        .select(col("n_name")).distinct()
-        .orderBy(col("n_name"))
-    }),
-    // ---- §2.3 J4 / §2.6 O1 priority-ordered join (collect.py:108–120) ----
-    "q11_priority_order" -> ((s, d) => {
-      val n = Tables.nation(s, d)
-      val r = Tables.region(s, d)
-      n.join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .filter(col("r_name").startsWith("A"))
-        .select(col("n_nationkey"), col("n_name"), col("r_name"))
-        .orderBy(col("n_nationkey"))
-    }),
-    // ---- §2.1 S14 / §2.6 O4 pagination (views.py:37–49) ------------------
-    "q12_pagination" -> ((s, d) =>
-      MetaQueries.paginate(Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_orderstatus"), r2(col("o_totalprice")).as("total")),
-        Seq(col("o_orderkey")), page = 3, perPage = 10)),
-    // ---- §2.2 P5 interval-overlap (controller.py:571–575) ----------------
-    "q13_interval_overlap" -> ((s, d) => {
-      val o = Tables.orders(s, d)
-        .withColumn("o_end", col("o_orderdate") + expr("interval 30 days"))
-      o.filter(MetaQueries.intervalOverlap(col("o_orderdate"), col("o_end"),
-          lit("1997-06-01").cast("timestamp"), lit("1997-07-15").cast("timestamp")))
-        .select(col("o_orderkey"), col("o_orderdate").cast("date").as("o_date"))
-        .orderBy(col("o_orderkey"))
-    }),
-    // ---- §2.2 P4 bbox-overlap prefilter (controller.py:563–570) ----------
-    "q14_bbox_filter" -> ((s, d) => {
-      val p = Tables.part(s, d)
-      p.filter(MetaQueries.bboxOverlap(
-          xmin = col("p_size"), ymin = col("p_retailprice"),
-          xmax = col("p_size") + 3, ymax = col("p_retailprice") + 100,
-          qxmin = 10, qymin = 1000, qxmax = 20, qymax = 1500))
-        .select(col("p_partkey"), col("p_size"), r2(col("p_retailprice")).as("price"))
-        .orderBy(col("p_partkey"))
-    }),
-    // ---- §2.7 SET2 union+distinct (controller.py:595–602) ----------------
-    "q15_union_distinct" -> ((s, d) =>
-      Tables.customer(s, d).select(col("c_nationkey").as("nationkey"))
-        .union(Tables.supplier(s, d).select(col("s_nationkey").as("nationkey")))
-        .distinct().orderBy(col("nationkey"))),
-    // ---- §2.7 SET3 except (controller.py:607–616) ------------------------
-    "q16_except" -> ((s, d) =>
-      Tables.customer(s, d).select(col("c_nationkey").as("nationkey"))
-        .except(Tables.supplier(s, d).select(col("s_nationkey").as("nationkey")))
-        .orderBy(col("nationkey"))),
-    // ---- §2.4 A7 count-distinct per group (controller.py:604–618) --------
-    "q17_count_distinct" -> ((s, d) =>
-      Tables.lineitem(s, d).groupBy(col("l_returnflag"))
-        .agg(countDistinct(col("l_partkey")).as("n_parts"), count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag"))),
-    // ---- §2.4 A5 max-per-group (controller.py:481–486) -------------------
-    "q18_max_per_group" -> ((s, d) =>
-      Tables.lineitem(s, d).groupBy(col("l_orderkey"))
-        .agg(max(col("l_shipdate")).cast("date").as("last_ship"), count(lit(1)).as("n_lines"))
-        .orderBy(col("l_orderkey"))),
-    // ---- §2.4 A6 scalar count (controller.py:494) ------------------------
-    "q19_scalar_count" -> ((s, d) =>
-      Tables.lineitem(s, d).filter(col("l_discount") > 0.05)
-        .agg(count(lit(1)).as("n"))),
-    // ---- top-k aggregation over join (pre-agg before join, see q03) ------
-    "q20_top_customers" -> ((s, d) => {
-      val c = Tables.customer(s, d)
-      val perCust = Tables.orders(s, d)
-        .groupBy(col("o_custkey"))
-        .agg(sum(col("o_totalprice")).as("tot"))
-      c.join(perCust, c("c_custkey") === perCust("o_custkey"))
-        .select(col("c_custkey"), col("c_name"), r2(col("tot")).as("total"))
-        .orderBy(col("total").desc, col("c_custkey"))
-        .limit(10)
-    }),
-    // ---- §2.8 R1 band-math expression compiler (index_generator.py:58–149)
-    "q21_band_expr" -> ((s, d) => {
-      val ndvi = BandExpressionCompiler.compile(
-        "10000. * ((B08 - B04) / (B08 + B04))",
-        Map("B08" -> col("l_extendedprice"), "B04" -> col("l_quantity") * 100))
-      Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_linenumber"), r2(ndvi).as("ndvi"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-    // ---- similarity: embedding L2 norm (aggregate over array<float>) -----
-    "q22_emb_norm" -> ((s, d) =>
-      Tables.embeddings(s, d)
-        .select(col("vec_id"), r4(Sim.norm(col("embedding"))).as("l2"))
-        .orderBy(col("vec_id"))),
-    // ---- text analysis: token/punct counts -------------------------------
-    "q23_token_stats" -> ((s, d) =>
-      Tables.documents(s, d).filter(col("n_chars") > 0)
-        .select(col("doc_id"), T.tokenCount(col("text")).as("n_tokens"),
-          T.punctCount(col("text")).as("n_punct"))
-        .orderBy(col("doc_id"))),
-    // ---- dedup: exact duplicate groups (md5) -----------------------------
-    "q24_exact_dup_groups" -> ((s, d) =>
-      D.exactDupGroups(Tables.documents(s, d), "text", "doc_id", includeSingletons = true)
-        .orderBy(col("digest"))),
-    // ---- dedup: corpus summary -------------------------------------------
-    "q25_dedup_summary" -> ((s, d) =>
-      Tables.documents(s, d).agg(
-        count(lit(1)).as("n_docs"),
-        countDistinct(D.exactKey(col("text"))).as("n_distinct"))),
-    // ---- dedup: MinHash signature (3-shingles, 2 salted hashes) ----------
-    "q26_minhash" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), D.minhashSignature(col("text"), 3, 2).as("sig"))
-        .select(col("doc_id"), element_at(col("sig"), 1).as("mh0"),
-          element_at(col("sig"), 2).as("mh1"))
-        .orderBy(col("doc_id"))),
-    // ---- dedup: LSH band-bucket histogram --------------------------------
-    "q27_lsh_buckets" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(D.minhashSignature(col("text"), 3, 2).as("sig"))
-        .select(D.bandKeyFromSignature(col("sig"), 0, 2).as("band_key"))
-        .groupBy(col("band_key")).agg(count(lit(1)).as("n"))
-        .filter(col("n") > 1)
-        .orderBy(col("band_key"))),
-    // ---- similarity search: brute-force cosine top-k ---------------------
-    "q28_ann_topk" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val query = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
-      Sim.topKCosine(emb, "embedding", "vec_id", query, 10)
-        .select(col("vec_id"), r4(col("score")).as("score"))
-    }),
-    // ---- text analysis: language-ID heuristic ----------------------------
-    "q29_lang_guess" -> ((s, d) => {
-      val toks = transform(T.tokens(col("text")), t => lower(t))
-      def score(ws: Seq[String]) = size(filter(toks, t => t.isin(ws: _*)))
-      val sEn = score(Seq("the", "a", "of"))
-      val sEs = score(Seq("key", "value", "row"))
-      val sDe = score(Seq("join", "merge", "group"))
-      Tables.documents(s, d).select(col("doc_id"),
-          when(sEn >= sEs && sEn >= sDe, "en")
-            .when(sEs >= sDe, "es").otherwise("de").as("guess"))
-        .orderBy(col("doc_id"))
-    }),
-    // ---- §2.9 JSON extraction (tasks.py:86–89 args JSON) -----------------
-    "q30_json_extract" -> ((s, d) =>
-      Tables.events(s, d)
-        .select(col("event_id"),
-          get_json_object(col("props"), "$.k").cast("int").as("k"))
-        .orderBy(col("event_id"))),
-    // ---- §2.11 ST9 calendar-month periods (controller.py:45–68) ----------
-    "q31_monthly_counts" -> ((s, d) =>
-      Tables.orders(s, d)
-        .groupBy(date_trunc("month", col("o_orderdate")).cast("date").as("month"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("month"))),
-    // ---- §2.9 string parsing (tasks.py:283–289, publish.py:411) ----------
-    "q32_string_parse" -> ((s, d) =>
-      Tables.part(s, d).select(col("p_partkey"),
-          element_at(split(col("p_type"), " "), 1).as("type_head"),
-          regexp_replace(col("p_brand"), "#", "_").as("brand"))
-        .orderBy(col("p_partkey"))),
-    // ---- window running sum (O3 family) ----------------------------------
-    "q33_running_sum" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.events(s, d)
-        .select(col("user_id"), col("event_id"), r2(sum(col("value")).over(w)).as("run"))
-        .orderBy(col("user_id"), col("event_id"))
-    }),
-    // ---- text analysis: composite quality score --------------------------
-    "q34_quality_score" -> ((s, d) =>
-      Tables.documents(s, d).filter(col("n_chars") > 0)
-        .select(col("doc_id"), r4(T.qualityScore(col("text"))).as("quality"))
-        .orderBy(col("doc_id"))),
-    // ---- dedup: SimHash (no oracle: xxhash64 is Spark-specific) ----------
-    "q35_simhash" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), D.simhash64(col("text")).as("simhash"))
-        .orderBy(col("doc_id"))),
-    // ---- text: rolling-hash fingerprint (no oracle: crc32 fold) ----------
-    "q36_fingerprint" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), T.fingerprint(col("text")).as("fp"))
-        .orderBy(col("doc_id"))),
-    // ---- §2.8 R1 bandMath over tiles (embeddings arrays as pixels) -------
-    "q37_bandmath_tiles" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val tiles = emb.select(col("vec_id").cast("string").as("scene_id"),
-          lit("B08").as("band"), lit(0).as("window_row"), lit(0).as("window_col"),
-          lit(8).as("height"), lit(8).as("width"), lit(-9999.0).as("nodata"),
-          col("embedding").as("pixels"))
-        .unionByName(emb.select(col("vec_id").cast("string").as("scene_id"),
-          lit("B04").as("band"), lit(0).as("window_row"), lit(0).as("window_col"),
-          lit(8).as("height"), lit(8).as("width"), lit(-9999.0).as("nodata"),
-          reverse(col("embedding")).as("pixels")))
-      graft.raster.RasterKernels.bandMath(
-          graft.raster.RasterKernels.pivotBands(tiles),
-          "B08 * 2. + B04", "OUT", -9999.0, -10000.0, 10000.0)
-        .select(col("scene_id").cast("long").as("vec_id"),
-          r4(aggregate(col("pixels"), lit(0.0), (a, p) => a + p.cast("double"))).as("checksum"))
-        .orderBy(col("vec_id"))
-    }),
-    // ---- §2.8 R3 nearest resample over tiles -----------------------------
-    "q38_resample_tiles" -> ((s, d) =>
-      Tables.embeddings(s, d)
-        .select(col("vec_id"),
-          r4(aggregate(
-            graft.raster.RasterKernels.resampleNearest(col("embedding"), lit(8), lit(8), 4, 4),
-            lit(0.0), (a, p) => a + p.cast("double"))).as("checksum"))
-        .orderBy(col("vec_id"))),
-    // ---- §2.8 R3 bilinear resample over tiles (8x8 → 4x4) ----------------
-    // At an exact 2× downsample the half-pixel four-tap lerp reduces to
-    // 2x2 block means, which the oracle reproduces in closed form.
-    "q85_bilinear_tiles" -> ((s, d) =>
-      Tables.embeddings(s, d)
-        .select(col("vec_id"),
-          r4(aggregate(
-            graft.raster.RasterKernels.resampleBilinear(
-              col("embedding"), lit(8), lit(8), 4, 4),
-            lit(0.0), (a, p) => a + p.cast("double"))).as("checksum"))
-        .orderBy(col("vec_id"))),
-    // ---- §2.8 R4 quicklook scaling ---------------------------------------
-    "q39_quicklook_scale" -> ((s, d) =>
-      Tables.embeddings(s, d)
-        .select(col("vec_id"),
-          r4(aggregate(
-            graft.raster.RasterKernels.quicklookScale(col("embedding"), lit(-9999.0)),
-            lit(0.0), (a, p) => a + p.cast("double"))).as("checksum"))
-        .orderBy(col("vec_id"))),
-    // ---- §3.3 check-scenes composite: periods × interval overlap ---------
-    // Calendar-bucketed form of the range join (SURVEY §4's time-bucketing
-    // trick): an interval overlaps month m iff trunc(start) ≤ m ≤
-    // trunc(end), so each order explodes into the months it touches
-    // (~2/order) and the non-equi nested-loop join disappears — 1.8× at
-    // sf0.1, and O(rows·months-touched) instead of O(rows·periods) at any
-    // scale. The broadcast interval-overlap JOIN form stays in
-    // CheckScenes.report, where periods aren't calendar-aligned buckets.
-    "q41_reconcile_periods" -> ((s, d) => {
-      val o = Tables.orders(s, d)
-        .withColumn("o_end", col("o_orderdate") + expr("interval 30 days"))
-      o.select(explode(sequence(
-          date_trunc("month", col("o_orderdate")),
-          date_trunc("month", col("o_end")),
-          expr("interval 1 month"))).as("month_ts"))
-        .filter(col("month_ts").between(
-          lit("1997-01-01").cast("timestamp"), lit("1997-12-01").cast("timestamp")))
-        .groupBy(col("month_ts").cast("date").as("month"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("month"))
-    }),
-    // ---- multimodal: binary payload + stub meta columns ------------------
-    "q42_media_meta" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"))
-        .select(col("doc_id"),
-          graft.functions.MultimodalFunctions.mediaMetaColumns(col("content")).as("m"))
-        .select(col("doc_id"), col("m.format").as("format"), col("m.width").as("width"),
-          col("m.height").as("height"), col("m.duration_ms").as("duration_ms"))
-        .orderBy(col("doc_id"))),
-    // ---- dedup: LSH candidates verified by exact n-gram Jaccard ----------
-    "q43_neardup_pairs" -> ((s, d) =>
-      D.neardupPairsLocal(Tables.documents(s, d), "text", "doc_id",
-          n = 3, bands = 1, rowsPerBand = 2, jaccardThreshold = 0.0)
-        .select(col("id_a"), col("id_b"), r4(col("jaccard")).as("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))),
-    // ---- similarity: IVF coarse-quantization cell histogram --------------
-    "q44_ivf_cells" -> ((s, d) => {
-      val centroids = Array(Array.fill(64)(0.5), Array.fill(64)(-0.5))
-      Tables.embeddings(s, d)
-        .select(Sim.ivfAssign(col("embedding"), centroids).as("cell"))
-        .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-        .orderBy(col("cell"))
-    }),
-    // ---- text: stopword ratio + mean token length ------------------------
-    "q45_text_ratios" -> ((s, d) =>
-      Tables.documents(s, d).filter(col("n_chars") > 0)
-        .select(col("doc_id"),
-          r4(T.stopwordRatio(col("text"), Seq("the", "a", "of", "and"))).as("stop_ratio"),
-          r4(T.meanTokenLen(col("text"))).as("mean_tok_len"))
-        .orderBy(col("doc_id"))),
-    // ---- §2.9 JSON bucket aggregation ------------------------------------
-    "q46_json_buckets" -> ((s, d) =>
-      Tables.events(s, d)
-        .select((floor(get_json_object(col("props"), "$.k").cast("int") / 10)).cast("int").as("k_bucket"),
-          col("value"))
-        .groupBy(col("k_bucket"))
-        .agg(count(lit(1)).as("n"), r2(sum(col("value"))).as("sum_value"))
-        .orderBy(col("k_bucket"))),
-    // ---- dedup end-to-end: near-dup removal, dropped doc ids -------------
-    "q47_dedup_near_dropped" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val kept = D.dedupNear(docs, "text", "doc_id",
-        n = 3, bands = 1, rowsPerBand = 2, jaccardThreshold = 0.8)
-      docs.join(kept.select("doc_id"), Seq("doc_id"), "left_anti")
-        .select(col("doc_id")).orderBy(col("doc_id"))
-    }),
-    // ---- sessionization via lag/cumsum (gap = 10 minutes) ----------------
-    // NTZ parity note: the oracle's epoch_us(ts) reads the naive value as-is;
-    // Tables normalizes NTZ→LTZ under session-UTC, so unix_micros here is
-    // bit-identical — asserted by TsFlavorSpec and hash-matched vs DuckDB
-    // at sf0.01 (round 9), not assumed.
-    "q48_sessionization" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val newSession = when(
-        unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(byUser) > 600000000L, 1)
-        .otherwise(0)
-      Tables.events(s, d)
-        .withColumn("new_s", newSession)
-        .withColumn("session_id", sum(col("new_s")).over(byUser).cast("int"))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(count(lit(1)).as("n_events"), r2(sum(col("value"))).as("sum_value"))
-        .orderBy(col("user_id"), col("session_id"))
-    }),
-    // ---- correlated-aggregate shape (TPC-H Q17): below-avg-quantity ------
-    "q49_small_qty_revenue" -> ((s, d) => {
-      val l = Tables.lineitem(s, d)
-      val avgQty = l.groupBy(col("l_partkey").as("p_key"))
-        .agg((avg(col("l_quantity")) * 0.5).as("half_avg"))
-      l.join(avgQty, l("l_partkey") === avgQty("p_key"))
-        .filter(col("l_quantity") < col("half_avg"))
-        .agg(r2(sum(col("l_extendedprice")) / 7.0).as("avg_yearly"))
-    }),
-    // ---- max-over-aggregate shape (TPC-H Q15): top supplier by revenue ---
-    "q50_top_supplier" -> ((s, d) => {
-      val rev = Tables.lineitem(s, d)
-        .filter(col("l_shipdate").between(lit("1996-01-01"), lit("1996-03-31")))
-        .groupBy(col("l_suppkey"))
-        .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("total_rev"))
-      val maxRev = rev.agg(max(col("total_rev")).as("mx"))
-      rev.join(broadcast(maxRev), rev("total_rev") === maxRev("mx"))
-        .join(Tables.supplier(s, d), col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"), r2(col("total_rev")).as("total_rev"))
-        .orderBy(col("s_suppkey"))
-    }),
-    // ---- dedup: md5-SimHash (cross-engine parity witness for simhash) ----
-    "q51_simhash_md5" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), D.simhashMd5(col("text")).as("simhash"))
-        .orderBy(col("doc_id"))),
-    // ---- text: md5 rolling-hash fingerprint (oracle-verified variant) ----
-    "q52_fingerprint_md5" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), T.fingerprintMd5(col("text")).as("fp"))
-        .orderBy(col("doc_id"))),
-    // ---- similarity: exact all-pairs cosine above threshold, BLOCKED -----
-    // Vectors group into id-range blocks; a native B×B kernel scores each
-    // block pair (O((n/B)²) join rows instead of O(n²)) — bit-identical to
-    // the row-wise BNLJ formulation, ~3× faster at 2k vectors, and the
-    // join-row count stops growing quadratically at scale. LSH-bucketed
-    // nearDupPairs remains the recall<1 pruned path.
-    "q53_emb_neighbors" -> ((s, d) =>
-      Sim.allPairsCosineBlocked(Tables.embeddings(s, d), "embedding", "vec_id",
-          threshold = 0.45, blockSize = 64)
-        .select(col("id_a"), col("id_b"), r4(col("cos")).as("cos"))
-        .orderBy(col("id_a"), col("id_b"))),
-    // ---- similarity: IVF search end-to-end (nProbe = all cells ≡ exact) --
-    "q54_ivf_topk" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val query = e.filter(col("vec_id") === 1)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
-      val centroids = Array(Array.fill(64)(0.5), Array.fill(64)(-0.5))
-      Sim.ivfSearch(e, "embedding", "vec_id", centroids, query, 10, nProbe = 2)
-        .select(col("vec_id"), r4(col("score")).as("score"))
-    }),
-    // ---- §2.7 set op: intersect (nations with both customers+suppliers) --
-    "q57_intersect" -> ((s, d) =>
-      Tables.customer(s, d).select(col("c_nationkey").as("nationkey"))
-        .intersect(Tables.supplier(s, d).select(col("s_nationkey").as("nationkey")))
-        .orderBy(col("nationkey"))),
-    // ---- text: BPE-ish subword token counting ----------------------------
-    "q58_subword_count" -> ((s, d) =>
-      Tables.documents(s, d).filter(col("n_chars") > 0)
-        .select(col("doc_id"), T.subwordCount(col("text")).as("n_subwords"))
-        .orderBy(col("doc_id"))),
-    // ---- dedup: normalized exact-dup summary (canonicalize → hash) -------
-    "q59_norm_dedup" -> ((s, d) =>
-      Tables.documents(s, d).agg(
-        count(lit(1)).as("n_docs"),
-        countDistinct(D.exactKey(col("text"))).as("n_exact"),
-        countDistinct(D.exactKey(T.normalizeForDedup(col("text")))).as("n_norm"))),
-    // ---- text: corpus top n-grams by document frequency ------------------
-    // Explode the native distinct-shingle arrays -> ONE hash aggregation
-    // with map-side partials; at 100 TB the shuffle carries (ngram, count)
-    // partials, not documents, and top-k is TakeOrderedAndProject.
-    "q60_top_ngrams" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(explode(graft.expr.NativeFunctions.word_ngrams(col("text"), 3)).as("ngram"))
-        .groupBy(col("ngram")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("ngram"))
-        .limit(20)),
-    // ---- text: TF-IDF (smooth idf, sklearn convention) -------------------
-    "q61_tfidf" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      T.tfIdf(docs, "text", "doc_id", nDocs = docs.count())
-        .select(col("doc_id"), col("term"), col("tf"), r4(col("tfidf")).as("tfidf"))
-        .orderBy(col("doc_id"), col("term"))
-    }),
-    // ---- pipeline: deterministic content-hash train/test split -----------
-    "q62_hash_split" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(when(T.hashBucket(col("text"), 100) < 10, "holdout")
-          .otherwise("train").as("split"))
-        .groupBy(col("split")).agg(count(lit(1)).as("n"))
-        .orderBy(col("split"))),
-    // ---- text: exact length percentiles (length-filter thresholds) -------
-    // exact `percentile` (linear interpolation, same as DuckDB
-    // quantile_cont) — percentile_approx is the sketch alternative when a
-    // single-pass approximate answer suffices at corpus scale
-    "q63_len_quantiles" -> ((s, d) => {
-      Tables.documents(s, d)
-        .agg(expr("percentile(n_chars, 0.5)").as("p50_raw"),
-          expr("percentile(n_chars, 0.9)").as("p90_raw"),
-          expr("percentile(n_chars, 0.99)").as("p99_raw"))
-        .select(r2(col("p50_raw")).as("p50"), r2(col("p90_raw")).as("p90"),
-          r2(col("p99_raw")).as("p99"))
-    }),
-    // ---- window: top-N per group via dense_rank (O3 generalized) ---------
-    "q64_top2_per_nation" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val sup = Tables.supplier(s, d)
-      val rev = Tables.lineitem(s, d).groupBy(col("l_suppkey"))
-        .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-      val w = Window.partitionBy(col("s_nationkey")).orderBy(col("rev").desc, col("s_suppkey"))
-      sup.join(rev, sup("s_suppkey") === rev("l_suppkey"))
-        .withColumn("rnk", dense_rank().over(w))
-        .filter(col("rnk") <= 2)
-        .select(col("s_nationkey"), col("rnk"), col("s_suppkey"), r2(col("rev")).as("rev"))
-        .orderBy(col("s_nationkey"), col("rnk"), col("s_suppkey"))
-    }),
-    // ---- conditional aggregation (CASE pivot over status) ----------------
-    "q65_status_pivot" -> ((s, d) =>
-      Tables.orders(s, d)
-        .groupBy(col("o_orderpriority"))
-        .agg(
-          count(when(col("o_orderstatus") === "F", 1)).as("n_f"),
-          count(when(col("o_orderstatus") === "O", 1)).as("n_o"),
-          count(when(col("o_orderstatus") === "P", 1)).as("n_p"),
-          r2(sum(when(col("o_orderstatus") === "F", col("o_totalprice"))
-            .otherwise(0.0))).as("f_total"))
-        .orderBy(col("o_orderpriority"))),
-    // ---- text: n-gram repetition ratio (repetitive-text filter) ----------
-    "q66_repetition" -> ((s, d) =>
-      Tables.documents(s, d).filter(col("n_chars") > 0)
-        .select(col("doc_id"), r4(T.repetitionRatio(col("text"), 3)).as("rep_ratio"))
-        .orderBy(col("doc_id"))),
-    // ---- §2.6 O4 keyset pagination (deep-page scale path) ----------------
-    "q56_keyset_page" -> ((s, d) =>
-      MetaQueries.paginateKeyset(
-        Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
-          r2(col("o_totalprice")).as("total")),
-        col("o_orderkey"), lastSeen = 30L, perPage = 10)),
-    // ---- multimodal: frame-sample explode (video frame plumbing) ---------
-    "q55_frame_sample" -> ((s, d) =>
-      Tables.documents(s, d).filter(col("n_chars") > 0)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"))
-        .select(col("doc_id"),
-          explode(graft.functions.MultimodalFunctions.frameOffsets(
-            octet_length(col("content")), everyNth = 256, maxFrames = 32)).as("frame_offset"))
-        .orderBy(col("doc_id"), col("frame_offset"))),
-    // ---- as-of join (union–window, no join node; see TemporalJoins) ------
-    // For each purchase event: the user's most recent error event at or
-    // before it. One shuffle on user_id; DuckDB ASOF JOIN is the oracle.
-    "q67_asof_join" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val left = ev.filter(col("event_type") === "purchase")
-      val right = ev.filter(col("event_type") === "error")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("err_event_id"))
-      graft.meta.TemporalJoins.asofJoin(left, right,
-          Seq("user_id"), Seq("user_id"), "ts", "ts", Seq("err_event_id"))
-        .select(col("event_id"), col("user_id"),
-          // no-match → -1, not null: a nullable int column round-trips as
-          // float NaN through the driver's pandas compare
-          coalesce(col("err_event_id"), lit(-1L)).as("err_event_id"))
-        .orderBy(col("event_id"))
-    }),
-    // ---- as-of join, forward direction (next error after purchase) -------
-    "q84_asof_forward" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val left = ev.filter(col("event_type") === "purchase")
-      val right = ev.filter(col("event_type") === "error")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("next_err"))
-      graft.meta.TemporalJoins.asofJoin(left, right,
-          Seq("user_id"), Seq("user_id"), "ts", "ts", Seq("next_err"),
-          direction = "forward")
-        .select(col("event_id"), col("user_id"),
-          coalesce(col("next_err"), lit(-1L)).as("next_err"))
-        .orderBy(col("event_id"))
-    }),
-    // ---- range join via time bucketing (no BNLJ; see TemporalJoins) ------
-    // Low-priority orders placed within 2 days after an urgent order,
-    // counted per month — the interval join the naive `between` condition
-    // would plan as a broadcast nested loop.
-    "q68_range_join" -> ((s, d) => {
-      val o = Tables.orders(s, d)
-      val urgent = o.filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey").as("u_key"), col("o_orderdate").as("u_start"),
-          (col("o_orderdate") + expr("interval 2 days")).as("u_end"))
-      val low = o.filter(col("o_orderpriority") === "5-LOW")
-        .select(col("o_orderkey").as("l_key"), col("o_orderdate").as("l_ts"))
-      graft.meta.TemporalJoins.rangeJoinBuckets(low, urgent,
-          "l_ts", "u_start", "u_end", bucketSeconds = 2L * 86400)
-        .groupBy(date_trunc("month", col("l_ts")).cast("date").as("month"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .orderBy(col("month"))
-    }),
-    // ---- rollup (subtotal hierarchy over status × priority) --------------
-    "q69_rollup" -> ((s, d) =>
-      Tables.orders(s, d)
-        .rollup(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), r2(sum(col("o_totalprice"))).as("total"))
-        .orderBy(col("o_orderstatus").asc_nulls_first,
-          col("o_orderpriority").asc_nulls_first)),
-    // ---- skew-safe salted aggregation (ScaleOps) — oracle = plain GROUP BY
-    "q70_salted_agg" -> ((s, d) =>
-      graft.meta.ScaleOps.saltedSumCount(Tables.lineitem(s, d),
-          col("l_returnflag"), col("l_quantity"))
-        .select(col("k"), r2(col("sum_v")).as("sum_v"), col("n"))
-        .orderBy(col("k"))),
-    // ---- window: ntile quartiles per nation ------------------------------
-    "q71_ntile" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("c_nationkey"))
-        .orderBy(col("c_acctbal"), col("c_custkey"))
-      Tables.customer(s, d)
-        .select(col("c_custkey"), ntile(4).over(w).as("quartile"))
-        .orderBy(col("c_custkey"))
-    }),
-    // ---- window: lead (time-to-next-event per user) ----------------------
-    "q72_lead_gap" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      Tables.events(s, d)
-        .select(col("event_id"),
-          coalesce(unix_micros(lead(col("ts"), 1).over(w)) - unix_micros(col("ts")),
-            lit(-1L)).as("gap_us"))
-        .orderBy(col("event_id"))
-    }),
-    // ---- LLM-pipeline: overlapping token-window chunking -----------------
-    "q73_chunks" -> ((s, d) =>
-      Tables.documents(s, d).filter(col("n_chars") > 0)
-        .select(col("doc_id"), explode(T.chunkTokens(col("text"), 32, 8)).as("c"))
-        .select(col("doc_id"), col("c.chunk_idx").as("chunk_idx"),
-          col("c.chunk_text").as("chunk_text"))
-        .orderBy(col("doc_id"), col("chunk_idx"))),
-    // ---- LLM-pipeline: sequence packing into ~2000-token bins ------------
-    "q74_pack_bins" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(col("source"), col("doc_id"), T.tokenCount(col("text")).as("n_tok"))
-        .withColumn("bin", T.packBins(col("n_tok"), 2000,
-          Seq(col("source")), Seq(col("doc_id"))))
-        .groupBy(col("source"), col("bin"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
-        .orderBy(col("source"), col("bin"))),
-    // ---- LLM-pipeline: deterministic stratified sampling by content hash -
-    "q75_stratified_sample" -> ((s, d) =>
-      graft.functions.SamplingFunctions.stratifiedHashSample(
-          Tables.documents(s, d), col("lang"), col("text"),
-          Map("en" -> 0.5, "de" -> 1.0), defaultFraction = 0.2, buckets = 100)
-        .groupBy(col("lang")).agg(count(lit(1)).as("n_kept"))
-        .orderBy(col("lang"))),
-    // ---- LLM-pipeline: k-means refinement step (IVF centroid update) -----
-    "q76_kmeans_step" -> ((s, d) => {
-      val centroids = Array(Array.fill(64)(0.5), Array.fill(64)(-0.5))
-      // `when(x === 0, 0.0)` folds IEEE −0.0 into +0.0: DuckDB's round keeps
-      // the sign of a zero result, Spark's BigDecimal path cannot — both
-      // sides are normalized (oracle adds `+ 0`) so the hash agrees.
-      val m = r4(col("mean_v"))
-      Sim.kmeansStep(Tables.embeddings(s, d), "embedding", centroids)
-        .select(col("cell"), col("pos"),
-          when(m === 0, lit(0.0)).otherwise(m).as("mean_v"))
-        .orderBy(col("cell"), col("pos"))
-    }),
-    // ---- LLM-pipeline: PII redaction (synthetic PII appended per doc) ----
-    "q78_pii_redact" -> ((s, d) => {
-      val pii = concat(col("text"), lit(" contact user"), col("doc_id"),
-        lit("@example.com from 10.0."), (col("doc_id") % 256), lit(".7"))
-      Tables.documents(s, d)
-        .select(col("doc_id"), length(pii).as("len_raw"),
-          length(T.redactPii(pii)).as("len_redacted"))
-        .orderBy(col("doc_id"))
-    }),
-    // ---- LLM-pipeline: character-entropy quality signal ------------------
-    "q79_char_entropy" -> ((s, d) =>
-      Tables.documents(s, d).filter(col("n_chars") > 0)
-        .select(col("doc_id"), r4(T.charEntropy(col("text"))).as("entropy"))
-        .orderBy(col("doc_id"))),
-    // ---- LLM-pipeline: metadata × features join (norm per language) ------
-    "q81_norm_by_lang" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      Tables.documents(s, d)
-        .join(e, col("doc_id") === col("vec_id"))
-        .groupBy(col("lang"))
-        .agg(r4(avg(Sim.norm(col("embedding")))).as("avg_l2"),
-          count(lit(1)).as("n"))
-        .orderBy(col("lang"))
-    }),
-    // ---- LLM-pipeline: IQR-fence length-outlier filter -------------------
-    // The quartile row is a 1-row broadcast (scalar-subquery shape): the
-    // corpus scan is filtered against it with no shuffle beyond the final
-    // small aggregation. Fence multiplier 0.25 suits the synthetic
-    // length distribution (1.5 is the textbook default).
-    "q80_len_outliers" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val q = docs.agg(
-        expr("percentile(n_chars, 0.25)").as("q1"),
-        expr("percentile(n_chars, 0.75)").as("q3"))
-      val iqr = col("q3") - col("q1")
-      docs.crossJoin(broadcast(q))
-        .filter(col("n_chars") < col("q1") - iqr * 0.25 ||
-          col("n_chars") > col("q3") + iqr * 0.25)
-        .groupBy(col("source")).agg(count(lit(1)).as("n_outliers"))
-        .orderBy(col("source"))
-    }),
-    // ---- grouping sets with grouping() indicators ------------------------
-    "q82_grouping_sets" -> ((s, d) => {
-      val o = Tables.orders(s, d)
-      o.groupingSets(
-          Seq(Seq(col("o_orderstatus")), Seq(col("o_orderpriority"))),
-          col("o_orderstatus"), col("o_orderpriority"))
-        .agg(grouping(col("o_orderstatus")).as("g_status"),
-          grouping(col("o_orderpriority")).as("g_prio"),
-          count(lit(1)).as("n"))
-        .orderBy(col("o_orderstatus").asc_nulls_first,
-          col("o_orderpriority").asc_nulls_first)
-    }),
-    // ---- ordered array aggregation (top-3 totals per priority) -----------
-    // The array is serialized to a comma-joined string of DECIMAL(18,2)
-    // renderings: the driver's pandas hash-compare cannot hash an
-    // array-typed column, and decimal-cast strings render identically in
-    // Spark and DuckDB (no thousands separators, fixed 2 decimals).
-    "q83_top3_array" -> ((s, d) =>
-      Tables.orders(s, d)
-        .groupBy(col("o_orderpriority"))
-        .agg(concat_ws(",",
-          transform(
-            slice(sort_array(collect_list(r2(col("o_totalprice"))), asc = false),
-              1, 3),
-            x => x.cast("decimal(18,2)").cast("string"))).as("top3"))
-        .orderBy(col("o_orderpriority"))),
-    // ---- statistical aggregates (corr / covar / stddev / linear fit) -----
-    "q77_stats" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .groupBy(col("l_returnflag"))
-        .agg(
-          r4(corr(col("l_quantity"), col("l_extendedprice"))).as("corr_qp"),
-          r4(covar_samp(col("l_quantity"), col("l_discount"))).as("cov_qd"),
-          r4(stddev_samp(col("l_quantity"))).as("sd_q"),
-          r4(regr_slope(col("l_extendedprice"), col("l_quantity"))).as("slope"),
-          r4(regr_intercept(col("l_extendedprice"), col("l_quantity"))).as("icept"))
-        .orderBy(col("l_returnflag"))),
-    // ---- §2.11 ST2/ST4 activity planning (fan-out × task tree) -----------
-    "q40_plan_activities" -> ((s, d) => {
-      import graft.pipeline.Pipeline
-      implicit val sp: SparkSession = s
-      val scenes = Tables.supplier(s, d).select(col("s_name"))
-      val tree = Pipeline.TaskNode("download",
-        Seq(Pipeline.TaskNode("correction"), Pipeline.TaskNode("publish")))
-      val (acts, _) = Pipeline.planActivities(scenes, "s_name", 1, tree)
-      acts.groupBy(col("activity_type")).agg(count(lit(1)).as("n"))
-        .orderBy(col("activity_type"))
-    }),
-    // ---- test-set decontamination (n-gram leakage guard) -----------------
-    // Benchmark = every 97th doc; survivors share no 5-gram with it.
-    "q86_decontaminate" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      graft.functions.DedupFunctions.decontaminate(
-          docs.filter(col("doc_id") % 97 =!= 0),
-          docs.filter(col("doc_id") % 97 === 0),
-          "text", "doc_id", n = 5)
-        .groupBy(col("source")).agg(count(lit(1)).as("n_clean"))
-        .orderBy(col("source"))
-    }),
-    // ---- deterministic per-source cap (domain balancing) -----------------
-    "q87_cap_per_source" -> ((s, d) =>
-      graft.functions.SamplingFunctions.capPerGroup(
-          Tables.documents(s, d), col("source"), col("doc_id"), 20)
-        .select(col("source"), col("doc_id"))
-        .orderBy(col("source"), col("doc_id"))),
-    // ---- boilerplate n-gram flagging (top-20 corpus 3-grams per doc) -----
-    "q88_boilerplate" -> ((s, d) =>
-      graft.functions.TextFunctions.boilerplateHits(
-          Tables.documents(s, d), "text", "doc_id", n = 3, topK = 20)
-        .orderBy(col("doc_id"))),
-    // ---- batched k-NN join (bounded-buffer per-query top-k) --------------
-    "q89_knn_join" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      graft.functions.SimilarityFunctions.knnJoin(
-          emb.filter(col("vec_id") < 5), emb.filter(col("vec_id") >= 5),
-          "vec_id", "embedding", "vec_id", "embedding", k = 5)
-        .select(col("q_id"), col("c_id"), r4(col("score")).as("score"))
-        .orderBy(col("q_id"), col("c_id"))
-    }),
-    // ---- C4-style corpus span dedup + document reassembly ----------------
-    "q90_span_dedup" -> ((s, d) =>
-      graft.functions.DedupFunctions.dedupSpans(
-          Tables.documents(s, d), "text", "doc_id", spanTokens = 20)
-        .orderBy(col("doc_id"))),
-    // ---- cross-corpus near-dup join (train × eval leak check) ------------
-    "q91_cross_neardup" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      D.crossNeardupPairs(
-          docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1),
-          "text", "doc_id", "doc_id",
-          n = 3, bands = 1, rowsPerBand = 2, jaccardThreshold = 0.0)
-        .select(col("id_a"), col("id_b"), r4(col("jaccard")).as("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    // ---- MinHash Jaccard estimate vs exact, on cross-corpus candidates ---
-    // The planet-scale verification path: score candidate pairs from the 8
-    // signature components already shuffled for LSH; exact Jaccard shown
-    // alongside to expose the estimator error.
-    "q93_minhash_est" -> ((s, d) => {
-      val keyed = Tables.documents(s, d).select(
-          col("doc_id"),
-          D.minhashSignature(col("text"), 3, 8).as("sig"),
-          graft.expr.NativeFunctions.word_ngrams(col("text"), 3).as("sh"))
-        .withColumn("band_key", D.bandKeyFromSignature(col("sig"), 0, 2))
-      val a = keyed.filter(col("doc_id") % 2 === 0)
-        .select(col("doc_id").as("id_a"), col("sig").as("sig_a"),
-          col("sh").as("sh_a"), col("band_key"))
-      val b = keyed.filter(col("doc_id") % 2 === 1)
-        .select(col("doc_id").as("id_b"), col("sig").as("sig_b"),
-          col("sh").as("sh_b"), col("band_key"))
-      a.join(b, "band_key")
-        .select(col("id_a"), col("id_b"),
-          r4(D.jaccardEstimateFromSignatures(col("sig_a"), col("sig_b"))).as("est"),
-          r4(D.jaccardFromDistinct(col("sh_a"), col("sh_b"))).as("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    // ---- embedding-space outliers (distance to nearest centroid) ---------
-    "q92_emb_outliers" -> ((s, d) => {
-      val centroids = Array(Array.fill(64)(0.5), Array.fill(64)(-0.5))
-      Tables.embeddings(s, d)
-        .select(col("vec_id"),
-          Sim.outlierScore(col("embedding"), centroids).as("dist"))
-        .orderBy(col("dist").desc, col("vec_id"))
-        .limit(20)
-        .select(col("vec_id"), r4(col("dist")).as("dist"))
-    }),
-    // ---- signature-only near-dup (no shingle payload — the 10^10 path) ---
-    "q95_sig_neardup" -> ((s, d) =>
-      D.neardupPairsBySignature(Tables.documents(s, d), "text", "doc_id",
-          n = 3, bands = 4, rowsPerBand = 2, estThreshold = 0.5)
-        .select(col("id_a"), col("id_b"), r4(col("est")).as("est"))
-        .orderBy(col("id_a"), col("id_b"))),
-    // ---- cube (all 4 grouping combinations of status × priority) ---------
-    "q94_cube" -> ((s, d) =>
-      Tables.orders(s, d)
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), r2(sum(col("o_totalprice"))).as("total"))
-        .orderBy(col("o_orderstatus").asc_nulls_first,
-          col("o_orderpriority").asc_nulls_first)),
-    // ---- S5/S7 physical layer: the oracle sums the raw parquet arrays,
-    // the Spark side sums pixels AFTER a write→read round trip through
-    // real tiled-deflate GeoTIFF files (distributed writer + binaryFile
-    // reader) — hashes match because the float32 container is bit-exact --
-    "q96_geotiff_roundtrip" -> ((s, d) => {
-      val scenes = Tables.embeddings(s, d)
-        .filter(col("vec_id") < 64)
-        .select(col("vec_id").cast("string").as("scene_id"),
-          lit("B1").as("band"), lit(8).as("height"), lit(8).as("width"),
-          lit(-9999.0f).as("nodata"), col("embedding").as("pixels"))
-      val dir = java.nio.file.Files.createTempDirectory("q96_gtiff").toString
-      graft.raster.SceneIO.writeGeoTiffScenes(
-        graft.raster.SceneIO.tileScene(scenes, 4, 4), dir,
-        tileSize = 16, overviewFactors = Seq(2)).count() // force the writes
-      graft.raster.SceneIO.readGeoTiffScenes(s, dir)
-        .select(col("scene_id").cast("long").as("vec_id"),
-          r4(aggregate(col("pixels"), lit(0.0), (a, p) => a + p.cast("double")))
-            .as("checksum"))
-        .orderBy(col("vec_id"))
-    }),
-    // ---- S7 integer container twin of q96: the same write→read round
-    // trip through the i16 sample format (the dtype the reference
-    // publishes, index_generator.py:109–136). Pixels are embeddings
-    // scaled by 1024 — a power of two, so float32 and the oracle's
-    // double arithmetic agree bit-exactly and the clamp+truncate the
-    // container applies is the only transformation under test ----------
-    "q96_i16_roundtrip" -> ((s, d) => {
-      val scenes = Tables.embeddings(s, d)
-        .filter(col("vec_id") < 64)
-        .select(col("vec_id").cast("string").as("scene_id"),
-          lit("B1").as("band"), lit(8).as("height"), lit(8).as("width"),
-          lit(-9999.0f).as("nodata"),
-          transform(col("embedding"), x => x * lit(1024.0f)).as("pixels"))
-      val dir = java.nio.file.Files.createTempDirectory("q96_i16").toString
-      graft.raster.SceneIO.writeGeoTiffScenes(
-        graft.raster.SceneIO.tileScene(scenes, 4, 4), dir,
-        tileSize = 16, overviewFactors = Seq(2), dtype = "i16").count()
-      graft.raster.SceneIO.readGeoTiffScenes(s, dir)
-        .select(col("scene_id").cast("long").as("vec_id"),
-          aggregate(col("pixels"), lit(0L), (a, p) => a + p.cast("long"))
-            .as("checksum"))
-        .orderBy(col("vec_id"))
-    }),
-    // ---- windowed COG read (S5's ds.read(1, window=w) on the COG side):
-    // the scenes are written once as a tiled pyramid (memoized layout),
-    // then read through GeoTiff.decodeWindow. The 8x8 bench scenes fit
-    // one TIFF tile (tile dims are 16-multiples), so this query verifies
-    // the windowed VALUES end to end distributed; tile pruning itself is
-    // proven in GeoTiffSpec by corrupting every disjoint segment. The
-    // oracle recomputes the same window sum from the raw embedding
-    // arrays with an indexed list filter ------------------------------
-    "q105_cog_window" -> ((s, d) => {
-      val dir = memoLayout("q105_cog", d) { tmp =>
-        val scenes = Tables.embeddings(s, d)
-          .filter(col("vec_id") < 64)
-          .select(col("vec_id").cast("string").as("scene_id"),
-            lit("B1").as("band"), lit(8).as("height"), lit(8).as("width"),
-            lit(-9999.0f).as("nodata"), col("embedding").as("pixels"))
-        graft.raster.SceneIO.writeGeoTiffScenes(
-          graft.raster.SceneIO.tileScene(scenes, 4, 4), tmp,
-          tileSize = 16, overviewFactors = Seq(2)).count()
-      }
-      graft.raster.SceneIO.readGeoTiffScenes(s, dir, window = Some((3, 2, 4, 5)))
-        .select(col("scene_id").cast("long").as("vec_id"),
-          r4(aggregate(col("pixels"), lit(0.0), (a, p) => a + p.cast("double")))
-            .as("win_sum"))
-        .orderBy(col("vec_id"))
-    }),
-    // ---- ranged COG window read (r10): the same window as q105 but
-    // through SceneIO.readGeoTiffScenesRanged — Hadoop positional reads
-    // fetch only header+IFD+touched tiles instead of materializing the
-    // file (the object-store GET-Range path; RangedReadSpec asserts the
-    // <5% bytes-read bound at production size). Oracle identical to q105:
-    // the IO strategy must never change the answer --------------------
-    "q106_cog_ranged" -> ((s, d) => {
-      val dir = memoLayout("q105_cog", d) { tmp =>
-        val scenes = Tables.embeddings(s, d)
-          .filter(col("vec_id") < 64)
-          .select(col("vec_id").cast("string").as("scene_id"),
-            lit("B1").as("band"), lit(8).as("height"), lit(8).as("width"),
-            lit(-9999.0f).as("nodata"), col("embedding").as("pixels"))
-        graft.raster.SceneIO.writeGeoTiffScenes(
-          graft.raster.SceneIO.tileScene(scenes, 4, 4), tmp,
-          tileSize = 16, overviewFactors = Seq(2)).count()
-      }
-      graft.raster.SceneIO.readGeoTiffScenesRanged(s, dir, window = Some((3, 2, 4, 5)))
-        .select(col("scene_id").cast("long").as("vec_id"),
-          r4(aggregate(col("pixels"), lit(0.0), (a, p) => a + p.cast("double")))
-            .as("win_sum"))
-        .orderBy(col("vec_id"))
-    }),
-    // ---- semantic dedup: exact cosine pairs → components → dropped ids
-    // (the LSH-bucketed dedupSemantic is the scale path; the exact pair
-    // source makes this one verifiable against a recursive-CTE oracle) --
-    "q97_semantic_dedup" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val kept = Sim.dedupSemanticExact(emb, "embedding", "vec_id", threshold = 0.45)
-      emb.join(kept.select("vec_id"), Seq("vec_id"), "left_anti")
-        .select(col("vec_id")).orderBy(col("vec_id"))
-    }),
-    // ---- z-order clustering: the 2-D range query runs against a
-    // Morton-clustered rewrite of the events table (quantile buckets →
-    // interleaved bits → range partition), so both pushed predicates skip
-    // row groups; results are layout-invariant, which is exactly what the
-    // raw-table oracle checks. The ≥75% row-group pruning itself is
-    // asserted in ScaleOpsSpec ------------------------------------------
-    "q98_zorder_skip" -> ((s, d) => {
-      // the clustered rewrite is a one-time layout job (memoized per table
-      // dir); the timed query is the pruned READ, which is what every
-      // later query against the layout pays
-      val dir = memoLayout("q98_zorder", d) { tmp =>
-        graft.meta.ScaleOps.zorderWrite(
-          Tables.events(s, d), Seq("user_id", "ts"), tmp, numFiles = 16)
-      }
-      s.read.parquet(dir)
-        .filter(col("user_id").between(40, 49) &&
-          col("ts").between(
-            lit("2024-01-10 00:00:00").cast("timestamp"),
-            lit("2024-01-13 00:00:00").cast("timestamp")))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"), r2(sum(col("value"))).as("sum_value"))
-        .orderBy(col("user_id"))
-    }),
-    // ---- persisted IVF index: build (k-means train + partitionBy(cell)
-    // layout + centroid sidecar) then search with a FULL probe, which is
-    // exhaustive — the DuckDB brute-force oracle checks it exactly; the
-    // partition-pruned nProbe<cells plan is asserted in FunctionsSpec ----
-    "q100_ivf_index" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      // index construction is a one-time build job (memoized per table
-      // dir, cost logged separately); the timed query is the probe
-      val dir = memoLayout("q100_ivf", d) { tmp =>
-        Sim.writeIvfIndex(emb, "embedding", "vec_id", tmp, nCells = 8, iterations = 2)
-      }
-      val query = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
-      Sim.searchIvfIndex(s, dir, "embedding", "vec_id", query, k = 10, nProbe = 8)
-        .select(col("vec_id"), r4(col("score")).as("score"))
-    }),
-    // ---- Sentinel-2 JP2 ingest: decode the checked-in JPEG 2000 fixture
-    // (reversible 5/3 path — publish.py:263–270 reads *B02.jp2 through
-    // rasterio) on EXECUTORS, tile it ragged 16×16, run identity band
-    // math, and reduce per-window pixel sums. The oracle recomputes the
-    // sums from the fixture's closed-form pixel formula v(r,c) =
-    // (r*31+c*7) % 3000 in pure SQL — fully independent of both the
-    // encoder that produced the file and the decoder under test ---------
-    "q101_jp2_decode" -> ((s, _) => {
-      import s.implicits._
-      val bytes = {
-        val in = getClass.getResourceAsStream("/graft/tiny_band_B02.jp2")
-        try in.readAllBytes() finally in.close()
-      }
-      val tiles = SceneIO.tileScene(
-        s.sparkContext.parallelize(Seq(("S2FIX", "B02", bytes)), 1).toDF("scene_id", "band", "content")
-          .as[(String, String, Array[Byte])]
-          .map { case (sid, band, b) =>
-            val img = graft.sources.Jp2Decode.decode(b)
-            (sid, band, img.height, img.width, -1f, img.pixels)
-          }
-          .toDF("scene_id", "band", "height", "width", "nodata", "pixels"),
-        16, 16)
-      RasterKernels.bandMath(RasterKernels.pivotBands(tiles),
-          "B02", "OUT", -1.0, 0.0, 4095.0)
-        .select(col("window_row").cast("long").as("window_row"),
-          col("window_col").cast("long").as("window_col"),
-          aggregate(col("pixels"), lit(0L), (acc, x) => acc + x.cast("long")).as("sum_v"),
-          size(col("pixels")).cast("long").as("n"))
-        .orderBy(col("window_row"), col("window_col"))
-    }),
-    // ---- the production Sentinel-2 codestream shape end to end: the
-    // checked-in fixture carries EVERY structural feature a Kakadu-encoded
-    // L1C band file uses — 2x3 tile grid, per-resolution custom precincts,
-    // 3 quality layers in RPCL order, SOP/EPH framing — decoded on
-    // executors and reduced to per-window pixel sums. The oracle
-    // recomputes the fixture's closed-form hash pixels in pure SQL -------
-    "q102_jp2_kakadu" -> ((s, _) => {
-      import s.implicits._
-      val bytes = {
-        val in = getClass.getResourceAsStream("/graft/works_64x96_d12_l3.j2k")
-        try in.readAllBytes() finally in.close()
-      }
-      val tiles = SceneIO.tileScene(
-        s.sparkContext.parallelize(Seq(("S2KDU", "B03", bytes)), 1).toDF("scene_id", "band", "content")
-          .as[(String, String, Array[Byte])]
-          .map { case (sid, band, b) =>
-            val img = graft.sources.Jp2Decode.decode(b)
-            (sid, band, img.height, img.width, -1f, img.pixels)
-          }
-          .toDF("scene_id", "band", "height", "width", "nodata", "pixels"),
-        16, 16)
-      tiles
-        .select(col("window_row").cast("long").as("window_row"),
-          col("window_col").cast("long").as("window_col"),
-          aggregate(col("pixels"), lit(0L), (acc, x) => acc + x.cast("long")).as("sum_v"),
-          size(col("pixels")).cast("long").as("n"))
-        .orderBy(col("window_row"), col("window_col"))
-    }),
-    // ---- the Sentinel-2 PVI RGB quicklook asset (publish.py:178–179,
-    // 263 reads the 3-component `*PVI*.jp2` preview): decode the
-    // checked-in PVI-miniature fixture — RGB + reversible color
-    // transform + tiled + custom precincts + SOP/EPH + 2 quality layers
-    // in a JP2 container — on EXECUTORS, one row per component, tile
-    // 16×16 and reduce per-(component, window) pixel sums. The oracle
-    // recomputes each plane's closed-form hash formula in pure SQL,
-    // independent of both JP2 implementations (and of the RCT round
-    // trip under test) -------------------------------------------------
-    "q103_jp2_rgb" -> ((s, _) => {
-      import s.implicits._
-      val bytes = {
-        val in = getClass.getResourceAsStream("/graft/pvi_64x96_d8_l2.jp2")
-        try in.readAllBytes() finally in.close()
-      }
-      val rgb = s.sparkContext.parallelize(Seq(("S2PVI", bytes)), 1)
-        .toDF("scene_id", "content")
-        .as[(String, Array[Byte])]
-        .flatMap { case (sid, b) =>
-          val img = graft.sources.Jp2Decode.decodeMulti(b)
-          (0 until img.comps).map { ci =>
-            (sid, ci.toString, img.height, img.width, -1f, img.planes(ci))
-          }
-        }
-        .toDF("scene_id", "band", "height", "width", "nodata", "pixels")
-      SceneIO.tileScene(rgb, 16, 16)
-        .select(col("band").cast("long").as("comp"),
-          col("window_row").cast("long").as("window_row"),
-          col("window_col").cast("long").as("window_col"),
-          aggregate(col("pixels"), lit(0L), (acc, x) => acc + x.cast("long")).as("sum_v"),
-          size(col("pixels")).cast("long").as("n"))
-        .orderBy(col("comp"), col("window_row"), col("window_col"))
-    }),
-    // ---- the IRREVERSIBLE JPEG 2000 path (lossy 9/7 + scalar
-    // quantization + ICT — the regime lossy-coded preview/quicklook
-    // products carry): decode the pvi97 fixture — RGB 9/7 + ICT + tiled
-    // + precincts + SOP/EPH + 2 layers RPCL in a JP2 container — on
-    // EXECUTORS and reduce per-(component, window) pixel sums. Lossy
-    // decode can't oracle against the source formula, so the oracle pins
-    // the INDEPENDENT Python reference decoder's output (the same
-    // two-implementation conformance bridge as the battery spec): its
-    // per-window sums are baked into the oracle SQL as literals at
-    // fixture-generation time — any drift in dequantization, 9/7
-    // lifting, ICT constants or rounding breaks the hash match ----------
-    "q104_jp2_irreversible" -> ((s, _) => {
-      import s.implicits._
-      val bytes = {
-        val in = getClass.getResourceAsStream("/graft/pvi97_64x96_d8_l2.jp2")
-        try in.readAllBytes() finally in.close()
-      }
-      val rgb = s.sparkContext.parallelize(Seq(("S2PVI97", bytes)), 1)
-        .toDF("scene_id", "content")
-        .as[(String, Array[Byte])]
-        .flatMap { case (sid, b) =>
-          val img = graft.sources.Jp2Decode.decodeMulti(b)
-          (0 until img.comps).map { ci =>
-            (sid, ci.toString, img.height, img.width, -1f, img.planes(ci))
-          }
-        }
-        .toDF("scene_id", "band", "height", "width", "nodata", "pixels")
-      SceneIO.tileScene(rgb, 16, 16)
-        .select(col("band").cast("long").as("comp"),
-          col("window_row").cast("long").as("window_row"),
-          col("window_col").cast("long").as("window_col"),
-          aggregate(col("pixels"), lit(0L), (acc, x) => acc + x.cast("long")).as("sum_v"),
-          size(col("pixels")).cast("long").as("n"))
-        .orderBy(col("comp"), col("window_row"), col("window_col"))
-    }),
-    // ---- ranged JP2 window read (r10): the JP2 counterpart of
-    // q106_cog_ranged — positional reads fetch only the main header, the
-    // tile-part header with its PLT table, and the window's precinct
-    // packet ranges (Jp2Ranged), never the whole band file. The fixture
-    // is the battery's PLT+precincts stream (hash pixels v(i) =
-    // ((i*2654435761)>>13)&4095 over a 96x64 grid); the oracle recomputes
-    // the window sum from that closed form in pure SQL — the IO strategy
-    // must never change the answer -------------------------------------
-    "q108_jp2_ranged" -> ((s, d) => {
-      val dir = memoLayout("q108_jp2", d) { tmp =>
-        val in = getClass.getResourceAsStream("/graft/jp2/plt_96x64_d12_p5.j2k")
-        val bytes = try in.readAllBytes() finally in.close()
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(tmp, "S2PLT__B02.j2k"), bytes)
-      }
-      SceneIO.readJp2ScenesRanged(s, dir, window = Some((8, 16, 20, 12)))
-        .select(col("scene_id"),
-          col("height").cast("long").as("height"),
-          col("width").cast("long").as("width"),
-          aggregate(col("pixels"), lit(0L), (a, p) => a + p.cast("long"))
-            .as("sum_px"),
-          size(col("pixels")).cast("long").as("n"))
-    }),
-    // ---- coded-frame VIDEO decode (MJPEG family): the checked-in MP4's
-    // 'jpeg' track carries one complete baseline JPEG per frame — demuxed
-    // by the sample tables and entropy-decoded on EXECUTORS
-    // (MultimodalFunctions.decodeVideoFrames), frames emerging as raster
-    // planes. The fixture (scripts/gen_mjpeg_fixture.py, an independent
-    // pure-Python T.81 encoder + ISO-BMFF muxer) is built for EXACT
-    // decode — DC-only blocks, unit quant table — so the oracle recomputes
-    // every frame's pixel sum from the closed-form block formula in pure
-    // SQL, independent of both JPEG implementations --------------------
-    "q107_mjpeg_frames" -> ((s, _) => {
-      import s.implicits._
-      val bytes = {
-        val in = getClass.getResourceAsStream("/graft/tiny_mjpeg.mp4")
-        try in.readAllBytes() finally in.close()
-      }
-      val media = s.createDataset(Seq(
-        Multimodal.MediaRow(1L, "video", bytes,
-          Multimodal.videoMeta(bytes).get)))
-      Multimodal.decodeVideoFrames(media, everyNth = 1, maxFrames = 16)(s)
-        .toDF()
-        .select(col("frame_index").cast("long").as("frame_index"),
-          col("time_ms"), col("sync"),
-          col("height").cast("long").as("height"),
-          col("width").cast("long").as("width"),
-          aggregate(col("pixels"), lit(0L), (a, p) => a + p.cast("long"))
-            .as("sum_px"))
-        .orderBy(col("frame_index"))
-    }),
-    // ---- LLM-pipeline: deterministic seeded global shuffle → fixed-token
-    // shard assignment (training export). Global cumsum via hash-prefix
-    // buckets + driver prefix-summed offsets — no single-partition window;
-    // ShardSpec pins invariance to bucket count and input partitioning ----
-    "q109_shards" -> ((s, d) =>
-      graft.functions.SamplingFunctions.shardByTokenBudget(
-          Tables.documents(s, d)
-            .select(col("doc_id"), T.tokenCount(col("text")).as("n_tok")),
-          col("doc_id"), col("n_tok"), seed = "s42", shardTokens = 8192,
-          buckets = 64)
-        .groupBy(col("shard"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
-        .orderBy(col("shard"))),
-    // ---- LLM-pipeline: INCREMENTAL near-dup via a persisted LSH index —
-    // corpus (even ids) signed once into a (band, band_key, shingles)
-    // parquet index; the new batch (odd ids) probes by broadcast equi-join
-    // with in-row exact-Jaccard verify, never re-signing the corpus -------
-    "q111_lsh_incremental" -> ((s, d) => {
-      val dir = memoLayout("q111_lsh", d) { tmp =>
-        D.writeLshIndex(Tables.documents(s, d).filter(col("doc_id") % 2 === 0),
-          "text", "doc_id", tmp, n = 3, bands = 1, rowsPerBand = 2)
-      }
-      D.probeLshIndex(s, dir,
-          Tables.documents(s, d).filter(col("doc_id") % 2 === 1),
-          "text", "doc_id", n = 3, bands = 1, rowsPerBand = 2,
-          jaccardThreshold = 0.0)
-        .select(col("id_new"), col("id_index"), r4(col("jaccard")).as("jaccard"))
-        .orderBy(col("id_new"), col("id_index"))
-    }),
-    // ---- entity resolution: edit-distance fuzzy join with COMPLETE
-    // length-band blocking (|Δlen| ≤ d is implied by levenshtein ≤ d) —
-    // candidates from a plain equi-join, never a cartesian. TPC-H part
-    // names are 5 words from a ~90-word vocabulary, so the TRUE pair
-    // count is near-quadratic (156 k pairs from 4 k names at sf0.1) and
-    // gram blocking measurably cannot beat the output bound — bands win
-    // on constants here; q148 runs the q-gram path on the distribution
-    // it is FOR (a mostly-unique registry) ------------------------------
-    "q125_fuzzy_join" -> ((s, d) =>
-      graft.functions.EntityResolution.fuzzyPairs(
-          Tables.part(s, d).filter(col("p_partkey") % 5 === 0),
-          "p_name", "p_partkey", maxDist = 1, blocking = "band")
-        .orderBy(col("id_a"), col("id_b"))),
-    // ---- unpivot (wide → long): measures melt into (measure, value) rows
-    // scan-side, then one aggregation — the relational melt the reference
-    // does row-by-row in Python dashboards -------------------------------
-    "q126_unpivot" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"),
-          col("l_discount"))
-        .unpivot(Array(col("l_orderkey")),
-          Array(col("l_quantity"), col("l_extendedprice"), col("l_discount")),
-          "measure", "value")
-        .groupBy(col("measure"))
-        .agg(count(lit(1)).as("n"), r2(sum(col("value"))).as("total"),
-          r4(avg(col("value"))).as("mean"))
-        .orderBy(col("measure"))),
-    // ---- hybrid retrieval: reciprocal-rank fusion of the dense (cosine
-    // top-50) and lexical (BM25 top-50) rankings — integer ranks make the
-    // fused score a sum of exact rationals, engine-identical -------------
-    "q123_rrf_hybrid" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val qv = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
-      val dense = Sim.topKCosine(emb, "embedding", "vec_id", qv, 50)
-        .select(col("vec_id").as("id"), col("score"))
-      val lex = graft.functions.SearchFunctions.bm25TopK(
-          Tables.documents(s, d), "text", "doc_id", Seq("spark", "vector"), 50)
-        .select(col("doc_id").as("id"), col("score"))
-      graft.functions.SearchFunctions.rrfFuse(Seq(dense, lex), "id", "score",
-          kRrf = 60, topK = 10)
-        .select(col("id"), r4(col("rrf")).as("rrf"))
-    }),
-    // ---- data-quality audit: one scan-shaped aggregate per check,
-    // referential integrity as a key-only anti-join ----------------------
-    "q124_dq_report" -> ((s, d) => {
-      val Q = graft.meta.DataQuality
-      val orders = Tables.orders(s, d)
-      val li = Tables.lineitem(s, d)
-      Q.report(Seq(
-        "orders_pk_unique" -> Q.uniqueViolations(orders, Seq("o_orderkey")),
-        "orders_custkey_notnull" -> Q.notNullViolations(orders, "o_custkey"),
-        "lineitem_fk_orders" -> Q.refIntegrityViolations(li, "l_orderkey", orders, "o_orderkey"),
-        "orders_fk_customer" -> Q.refIntegrityViolations(orders, "o_custkey",
-          Tables.customer(s, d), "c_custkey"),
-        "discount_in_range" -> Q.rangeViolations(li, "l_discount", 0.0, 0.06),
-        "status_accepted" -> Q.acceptedValuesViolations(orders, "o_orderstatus",
-          Seq("F", "O"))))
-        .orderBy(col("check"))
-    }),
-    // ---- event-flow analytics: first-order Markov transition matrix —
-    // one lead() window per user (the inherent per-user ordering), then a
-    // types²-sized aggregation with row-stochastic probabilities --------
-    "q120_transitions" -> ((s, d) =>
-      graft.functions.EventAnalytics.transitionMatrix(Tables.events(s, d))
-        .orderBy(col("event_type"), col("next"))),
-    // ---- SCD2: change log → validity intervals (consecutive identical
-    // states collapse); one exchange per key, both windows ride one sort -
-    "q121_scd2" -> ((s, d) =>
-      graft.meta.TemporalDim.scd2FromLog(
-          Tables.events(s, d), "user_id", "ts", "event_type", "event_id")
-        .groupBy(col("state"))
-        .agg(count(lit(1)).as("n_versions"),
-          count(when(col("valid_to").isNull, 1)).as("n_current"))
-        .orderBy(col("state"))),
-    // ---- SCD2 point-in-time read: snapshot of every user's state as of a
-    // timestamp — scan-side interval predicate, no join ------------------
-    "q122_time_travel" -> ((s, d) => {
-      val dim = graft.meta.TemporalDim.scd2FromLog(
-        Tables.events(s, d), "user_id", "ts", "event_type", "event_id")
-      graft.meta.TemporalDim.snapshotAt(dim, lit("2024-01-15 00:00:00").cast("timestamp"))
-        .groupBy(col("state")).agg(count(lit(1)).as("n_users"))
-        .orderBy(col("state"))
-    }),
-    // ---- lexical retrieval: BM25 ranked search — corpus stats broadcast,
-    // docs without query terms filtered scan-side BEFORE the explode ----
-    "q118_bm25" -> ((s, d) =>
-      graft.functions.SearchFunctions.bm25TopK(
-          Tables.documents(s, d), "text", "doc_id", Seq("spark", "vector"), k = 20)
-        .select(col("doc_id"), r4(col("score")).as("score"))),
-    // ---- lexical retrieval: inverted-index conjunctive search — the
-    // posting-list layout; oracle scans raw text, proving index ≡ scan ---
-    "q119_inverted_index" -> ((s, d) => {
-      val S = graft.functions.SearchFunctions
-      val idx = S.buildInvertedIndex(Tables.documents(s, d), "text", "doc_id")
-      S.searchConjunctive(idx, Seq("spark", "hash", "merge")).orderBy(col("doc_id"))
-    }),
-    // ---- event-flow analytics: ordered funnel (earliest-chain greedy is
-    // exact for existence) — events reduce to per-user aggregates first,
-    // so the expensive exchange carries users, not events ----------------
-    "q116_funnel" -> ((s, d) =>
-      graft.functions.EventAnalytics.funnelStages(
-        Tables.events(s, d), Seq("view", "click", "purchase"))),
-    // ---- event-flow analytics: cohort retention (first-activity cohorts,
-    // distinct active days per user — same user-sized exchange shape) ----
-    "q117_retention" -> ((s, d) =>
-      graft.functions.EventAnalytics.cohortRetention(
-          Tables.events(s, d), Seq(0, 1, 7, 14))
-        .orderBy(col("cohort_day"), col("day_offset"))),
-    // ---- dedup: EXACT set-similarity join via prefix filtering (AllPairs/
-    // PPJoin) — no probabilistic recall loss; oracle is the brute-force
-    // cross join, so the hash match proves the prefix filter is complete --
-    "q115_jaccard_join" -> ((s, d) =>
-      D.jaccardJoinExact(Tables.documents(s, d).filter(col("doc_id") % 7 === 0),
-          "text", "doc_id", tau = 0.9)
-        .select(col("id_a"), col("id_b"), r4(col("jaccard")).as("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))),
-    // ---- Incremental aggregate maintenance (ScaleOps.aggState/merge) —
-    // the O(delta) rollup: state built from the pre-cut slice, delta from
-    // the post-cut slice, merged algebraically. Oracle aggregates the RAW
-    // union, so the hash match proves merge(state, delta) ≡ full recompute
-    "q114_incr_agg" -> ((s, d) => {
-      val S = graft.meta.ScaleOps
-      val ev = Tables.events(s, d)
-        .withColumn("day", col("ts").cast("date"))
-      val cut = lit("2024-01-20").cast("date")
-      val keys = Seq(col("event_type"), col("day"))
-      val state = S.aggState(ev.filter(col("day") < cut), keys, col("value"))
-      val delta = S.aggState(ev.filter(col("day") >= cut), keys, col("value"))
-      S.mergeAggState(Seq(state, delta), Seq("event_type", "day"))
-        .select(col("event_type"), col("day"), col("n"),
-          r2(col("sum_v")).as("sum_v"), col("min_v"), col("max_v"),
-          r4(col("sum_v") / col("n")).as("avg_v"))
-        .orderBy(col("event_type"), col("day"))
-    }),
-    // ---- LLM-pipeline: trained NB language classifier (fastText-langid
-    // shape) — exact-count train on the 90% md5-bucket split, score the
-    // held-out 10%, emit the confusion matrix. The fitted model is
-    // vocabulary-sized and broadcasts; the only scoring exchange carries
-    // one row per (doc, class) ------------------------------------------
-    "q112_nb_classify" -> ((s, d) => {
-      val C = graft.functions.ClassifierFunctions
-      val docs = Tables.documents(s, d).filter(col("n_chars") > 0)
-        .withColumn("hb", T.hashBucket(col("text"), 100))
-      val model = C.trainNaiveBayes(docs.filter(col("hb") >= 10), "text", "lang")
-      val test = docs.filter(col("hb") < 10)
-      C.nbPredict(test, model, "text", "doc_id")
-        .join(test.select(col("doc_id"), col("lang")), "doc_id")
-        .groupBy(col("lang"), col("pred_label"))
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy(col("lang"), col("pred_label"))
-    }),
-    // ---- LLM-pipeline: unigram-LM perplexity filter (CCNet shape) —
-    // bits/token of each held-out doc under the LM trained on the 90%
-    // split; OOV terms cost log2(1)=0 so scoring is a broadcast join ----
-    "q113_perplexity" -> ((s, d) => {
-      val C = graft.functions.ClassifierFunctions
-      val docs = Tables.documents(s, d).filter(col("n_chars") > 0)
-        .withColumn("hb", T.hashBucket(col("text"), 100))
-      val lm = C.trainUnigramLm(docs.filter(col("hb") >= 10), "text")
-      C.unigramBitsPerToken(docs.filter(col("hb") < 10), lm, "text", "doc_id")
-        .select(col("doc_id"), col("n_tok"), r4(col("bits")).as("bits"))
-        .orderBy(col("doc_id"))
-    }),
-    // ---- LLM-pipeline: weighted corpus mixing WITH upsampling — epoch
-    // repetition by stratum factor (en ×0.5 downsample, de ×2.3 upsample),
-    // fractional epochs decided by the same 24-bit md5 bucket as q75 so
-    // the oracle replays every inclusion; zero shuffle before the agg ----
-    "q110_mixture" -> ((s, d) =>
-      graft.functions.SamplingFunctions.repeatWeighted(
-          Tables.documents(s, d)
-            .select(col("doc_id"), col("lang"), T.tokenCount(col("text")).as("n_tok")),
-          col("lang"), col("doc_id").cast("string"),
-          Map("en" -> 0.5, "de" -> 2.3), defaultFactor = 1.0, buckets = 100)
-        .groupBy(col("lang"), col("epoch"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
-        .orderBy(col("lang"), col("epoch"))),
-    // ---- windowed frequent items: the Misra-Gries summary in its exact
-    // regime (k ≥ distinct event types), exploded back to rows — the
-    // oracle checks it against plain per-window counts, proving the
-    // bounded-state path loses nothing when state suffices; the sublinear
-    // small-k guarantee is property-tested in SketchesSpec ---------------
-    "q99_heavy_hitters" -> ((s, d) => {
-      graft.streaming.EventAggregates.windowedHeavyHitters(
-          Tables.events(s, d), col("event_type"), k = 64, windowLen = "60 minutes")
-        .select(col("window_start"), explode(col("top")).as("e"))
-        .select(col("window_start"), col("e.k").as("event_type"), col("e.n").as("n"))
-        .orderBy(col("window_start"), col("event_type"))
-    }),
-    // ---- exact-size weighted sample without replacement (Efraimidis-
-    // Spirakis priorities from the 24-bit content hash): longer docs
-    // proportionally likelier, sample size pinned to exactly 100; the
-    // corpus never shuffles (TakeOrderedAndProject) ----------------------
-    "q127_weighted_sample" -> ((s, d) =>
-      graft.functions.SamplingFunctions.weightedSample(
-          Tables.documents(s, d).filter(col("n_chars") > 0),
-          col("doc_id"), col("n_chars"), k = 100)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .orderBy(col("doc_id"))),
-    // ---- mergeable quantile sketch (KLL compactor hierarchy) in its
-    // exact regime (k ≥ group size — same contract as q99's Misra-Gries):
-    // per-source length percentiles from ≤ k·H doubles of state per
-    // partial, never a per-group sort.
-    // ORACLE-PARITY CEILING: hash-parity vs DuckDB's exact quantile_disc
-    // holds only while every group fits the k=65536 buffer (largest
-    // source ≈ n_docs/3: sf ≤ ~3; documents sf0.01 = 500, sf1 = 50k —
-    // both exact). Past that the sketch correctly approximates and the
-    // gate would fail for SCALE reasons, not correctness — raise k or
-    // switch the oracle to an error-band check before benching there.
-    // q140 sketches the whole corpus as one group, so its ceiling is
-    // n_docs ≤ 65536, i.e. sf ≤ ~1.3. --------------------------------
-    "q128_quantile_sketch" -> ((s, d) => {
-      val kll = udaf(new graft.functions.Sketches.KllAggregator(
-        65536, Array(0.25, 0.5, 0.75)))
-      Tables.documents(s, d)
-        .groupBy(col("source"))
-        .agg(kll(col("n_chars").cast("double")).as("qs"))
-        .select(col("source"),
-          element_at(col("qs"), 1).as("p25"),
-          element_at(col("qs"), 2).as("p50"),
-          element_at(col("qs"), 3).as("p75"))
-        .orderBy(col("source"))
-    }),
-    // ---- corpus drift: PSI of the length distribution, reference corpus
-    // vs what survives a min-length quality gate — two bucket-histogram
-    // aggregates and a tiny join; the corpus itself never shuffles ------
-    "q129_drift_psi" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val bucket = least(floor(col("n_chars") / 100), lit(8L))
-      graft.meta.DataQuality.driftReport(
-          docs, docs.filter(col("n_chars") >= 250), bucket)
-        .select(col("bucket").cast("long").as("bucket"),
-          r6(col("p")).as("p"), r6(col("q")).as("q"),
-          r6(col("psi_term")).as("psi_term"))
-        .orderBy(col("bucket"))
-    }),
-    // ---- exact shingle-containment join: ordered near-superset pairs
-    // (quote/boilerplate detection) — prefix filter on the probing side
-    // only, full postings on the indexed side, nothing broadcasts or
-    // converges on one partition (shingle dictionary is corpus-sized) ----
-    "q130_containment" -> ((s, d) =>
-      graft.functions.DedupFunctions.containmentJoinExact(
-          Tables.documents(s, d), "text", "doc_id", tau = 0.8, ngram = 3)
-        .select(col("id_a"), col("id_b"), r4(col("containment")).as("containment"))
-        .orderBy(col("id_a"), col("id_b"))),
-    // ---- MMR diversity re-rank over the dense top-50: the sequential
-    // greedy runs driver-side over the bounded candidate list; the oracle
-    // replays the full recursion in SQL -------------------------------
-    "q131_mmr_rerank" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val qv = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
-      val cands = Sim.topKCosine(emb, "embedding", "vec_id", qv, 50)
-        .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
-      graft.functions.SearchFunctions.mmrRerank(
-          cands, "vec_id", "score", "embedding", lambda = 0.7, k = 10)
-        .select(col("vec_id"), col("rank").cast("long").as("rank"))
-        .orderBy(col("rank"))
-    }),
-    // ---- exact repeated-substring spans (Lee et al. detection shape):
-    // sliding 8-token windows, corpus-wide digest counts in one exchange,
-    // per-doc island merge in a second — arbitrary-alignment repeats that
-    // disjoint-chunk span dedup (q90) cannot see ------------------------
-    "q132_repeated_spans" -> ((s, d) =>
-      graft.functions.DedupFunctions.repeatedSpans(
-          Tables.documents(s, d), "text", "doc_id", L = 8)
-        .select(col("doc_id"), col("span_start").cast("long").as("span_start"),
-          col("span_end").cast("long").as("span_end"), col("n_windows"))
-        .orderBy(col("doc_id"), col("span_start"))),
-    // ---- corpus audit: χ² independence of language × source — one
-    // exchange keyed on the pair, grid completion over the cell table ----
-    "q133_chi2" -> ((s, d) =>
-      graft.meta.DataQuality.chiSquareIndependence(
-          Tables.documents(s, d), col("lang"), col("source"))
-        .select(col("n"), col("n_rows"), col("n_cols"), col("dof"),
-          r6(col("chi2")).as("chi2"))),
-    // ---- event-volume anomalies: hourly buckets z-scored against each
-    // type's own distribution — bucket counts cross the exchange, events
-    // never do -----------------------------------------------------------
-    "q134_event_anomaly" -> ((s, d) =>
-      graft.functions.EventAnalytics.volumeAnomalies(
-          Tables.events(s, d), "event_type", "ts",
-          bucket = "1 hour", threshold = 2.0)
-        .select(col("event_type"), col("bucket_start"), col("n"),
-          r4(col("z")).as("z"))
-        .orderBy(col("event_type"), col("bucket_start"))),
-    // ---- collocation mining: adjacent bigrams ranked by PMI — two
-    // vocabulary-sized aggregates, unigram dictionary broadcast back;
-    // the corpus never shuffles ----------------------------------------
-    "q135_collocations" -> ((s, d) =>
-      graft.functions.TextFunctions.collocationsPmi(
-          Tables.documents(s, d), "text", minCount = 5, topK = 20)
-        .select(col("wa"), col("wb"), col("cab"), r4(col("pmi")).as("pmi"))),
-    // ---- grouped feature correlation: Pearson r + covariance per group,
-    // pure map-side-partial aggregates (codegen'd built-ins) -------------
-    "q136_corr" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .groupBy(col("l_returnflag"))
-        .agg(r6(corr(col("l_quantity"), col("l_extendedprice"))).as("r"),
-          r2(covar_samp(col("l_quantity"), col("l_extendedprice"))).as("cov"),
-          count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag"))),
-    // ---- volume trend per event type: least-squares slope/fit of hourly
-    // counts over time — one bucket aggregate, then regr_* over the
-    // bounded bucket table ----------------------------------------------
-    "q137_trend" -> ((s, d) => {
-      val hourly = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          (unix_timestamp(date_trunc("hour", col("ts"))) / 3600).as("h"))
-        .agg(count(lit(1)).as("n"))
-      hourly.groupBy(col("event_type"))
-        .agg(r6(regr_slope(col("n"), col("h"))).as("slope"),
-          r6(regr_r2(col("n"), col("h"))).as("r2"),
-          count(lit(1)).as("n_buckets"))
-        .orderBy(col("event_type"))
-    }),
-    // ---- the removal half of exact substring dedup: cut every repeated
-    // region except its corpus-first occurrence; clean_md5 pins the exact
-    // rebuilt text against the oracle ------------------------------------
-    "q138_cut_spans" -> ((s, d) =>
-      graft.functions.DedupFunctions.cutRepeatedSpans(
-          Tables.documents(s, d), "text", "doc_id", L = 8)
-        .orderBy(col("doc_id"))),
-    // ---- fixed per-stratum quota: exactly 10 docs per source, weighted
-    // by length — one group-keyed exchange, per-group rank only ---------
-    "q139_weighted_quota" -> ((s, d) =>
-      graft.functions.SamplingFunctions.weightedSamplePerGroup(
-          Tables.documents(s, d).filter(col("n_chars") > 0),
-          col("source"), col("doc_id"), col("n_chars"), k = 10)
-        .select(col("source"), col("doc_id"), col("n_chars"))
-        .orderBy(col("source"), col("doc_id"))),
-    // ---- quantile transform: decile boundaries from ONE KLL sketch pass
-    // (exact regime), broadcast back as literals, assignment scan-side —
-    // the calibration pattern for percentile-normalized scores at scale
-    // (a global percent_rank would be a single-partition sort) ----------
-    "q140_quantile_transform" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val qs = (1 to 9).map(_ / 10.0).toArray
-      val kll = udaf(new graft.functions.Sketches.KllAggregator(65536, qs))
-      // driver-side collect bounded: ONE row of 9 boundary doubles
-      val bounds = docs.agg(kll(col("n_chars").cast("double")).as("b"))
-        .head().getSeq[Double](0)
-      val decile = size(filter(
-        lit(bounds.toArray), b => b <= col("n_chars"))).cast("long")
-      docs.select(col("doc_id"), col("n_chars"), decile.as("decile"))
-        .groupBy(col("decile"))
-        .agg(count(lit(1)).as("n"), min(col("n_chars")).as("mn"),
-          max(col("n_chars")).as("mx"))
-        .orderBy(col("decile"))
-    }),
-    // ---- incremental substring dedup (q111's persisted-index pattern
-    // applied to the Lee et al. cut): the corpus is window-digested ONCE
-    // into a (digest, count) index; each batch cuts against the index —
-    // corpus-precedence for indexed digests, keep-first within the batch
-    // for new ones — without re-scanning or re-shuffling corpus text.
-    // The oracle replays the INDEX semantics directly (corpus always
-    // canonical); it pins the documented corpus-precedence contract. The
-    // equivalence with cutting the raw union under id-ordered precedence
-    // needs corpus ids strictly below batch ids — here they interleave
-    // (doc_id % 5) — and is proven by TrainingPipelineSpec's fixtures ----
-    "q141_incremental_cut" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val idxDir = memoLayout("q141idx", d) { dir =>
-        graft.functions.DedupFunctions.writeWindowIndex(
-          docs.filter(col("doc_id") % 5 =!= 0), "text", "doc_id", L = 8, dir)
-      }
-      graft.functions.DedupFunctions.cutAgainstIndex(s,
-          docs.filter(col("doc_id") % 5 === 0), "text", "doc_id", L = 8, idxDir)
-        .orderBy(col("doc_id"))
-    }),
-    // ---- embedding-space corpus diagnostics: per-shard centroid vs the
-    // global centroid — dims×shards partials cross the exchange, vectors
-    // never do; the drift counterpart of q129 in embedding space ---------
-    "q142_shard_centroids" -> ((s, d) => {
-      val dims = Tables.embeddings(s, d)
-        .select((col("vec_id") % 4).as("shard"),
-          posexplode(col("embedding")).as(Seq("dim", "v")))
-        .withColumn("v", col("v").cast("double"))
-      val cent = dims.groupBy(col("shard"), col("dim")).agg(avg(col("v")).as("c"))
-      val glob = dims.groupBy(col("dim")).agg(avg(col("v")).as("gc"))
-      cent.join(glob, "dim")
-        .groupBy(col("shard"))
-        .agg(
-          r4(sum(col("c") * col("gc")) /
-            (sqrt(sum(col("c") * col("c"))) * sqrt(sum(col("gc") * col("gc")))))
-            .as("cos_to_global"),
-          r4(sqrt(sum(col("c") * col("c")))).as("norm"),
-          count(lit(1)).as("n_dims"))
-        .orderBy(col("shard"))
-    }),
-    // ---- funnel latency: exact per-user first-view→first-purchase gap,
-    // aggregated by first-view cohort day — events reduce to one row per
-    // user before anything heavy (the q116/q117 exchange shape) ----------
-    "q143_funnel_latency" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(col("user_id"))
-        .agg(min(when(col("event_type") === "view", col("ts"))).as("fv"),
-          min(when(col("event_type") === "purchase", col("ts"))).as("fp"))
-        .filter(col("fv").isNotNull && col("fp").isNotNull && col("fp") >= col("fv"))
-        .select(col("fv").cast("date").as("cohort_day"),
-          ((unix_micros(col("fp")) - unix_micros(col("fv"))) / lit(1000000L)).as("lat_s"))
-        .groupBy(col("cohort_day"))
-        .agg(count(lit(1)).as("n_users"),
-          r2(avg(col("lat_s"))).as("avg_s"),
-          max(col("lat_s")).as("max_s"))
-        .orderBy(col("cohort_day"))),
-    // ---- tokenizer/vocabulary coverage: per-source OOV rate against the
-    // corpus top-K vocabulary — the coverage audit run before committing
-    // to a tokenizer. Vocabulary = one partial-agged TakeOrdered pass;
-    // membership attaches by broadcast; corpus rows never shuffle -------
-    "q144_oov_rate" -> ((s, d) => {
-      val toks = Tables.documents(s, d)
-        .select(col("source"),
-          explode(graft.functions.TextFunctions.tokens(lower(col("text")))).as("w"))
-      // deterministic boundary: ties at rank K order by (count desc, term)
-      val vocab = toks.groupBy(col("w")).agg(count(lit(1)).as("c"))
-        .orderBy(col("c").desc, col("w").asc).limit(30)
-        .select(col("w"), lit(1L).as("iv"))
-      toks.join(broadcast(vocab), Seq("w"), "left")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_tokens"),
-          r6(lit(1.0) - sum(coalesce(col("iv"), lit(0L))).cast("double") /
-            count(lit(1))).as("oov_rate"))
-        .orderBy(col("source"))
-    }),
-    // ---- EWMA spike detection over hourly event volume: the sequential
-    // exponential smoother q134's batch z-score cannot express (state
-    // depends on arrival order). Buckets collapse per type first (bounded:
-    // hours × types), then ONE sequential fold per type via the aggregate
-    // HOF — bit-identical to the oracle's recursive CTE because both run
-    // the same IEEE ops in the same order (0.3·x + 0.7·e), no pow() -----
-    "q145_ewma_anomaly" -> ((s, d) => {
-      val hourly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-        .agg(count(lit(1)).cast("double").as("x"))
-      val series = hourly.groupBy(col("event_type"))
-        .agg(transform(array_sort(collect_list(struct(col("bucket"), col("x")))),
-          e => e.getField("x")).as("xs"))
-      val xs = col("xs")
-      val folded = aggregate(
-        slice(xs, lit(2), greatest(size(xs) - 1, lit(0))),
-        struct(element_at(xs, 1).as("e"), lit(0L).as("k")),
-        (acc, x) => struct(
-          (lit(0.3) * x + lit(0.7) * acc.getField("e")).as("e"),
-          (acc.getField("k") +
-            when(x > lit(2.0) * acc.getField("e"), 1L).otherwise(0L)).as("k")))
-      series.select(col("event_type"), size(xs).cast("long").as("n_buckets"),
-          r4(folded.getField("e")).as("ewma"),
-          folded.getField("k").as("n_spikes"))
-        .orderBy(col("event_type"))
-    }),
-    // ---- S11 sync planning (DataSynchronizer check/copy/remove,
-    // sync.py:44–164): both listings join once on the path; the plan is
-    // relational, the byte moves are driven from it -----------------------
-    "q146_sync_plan" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val src = docs.select(
-        concat(lit("docs/"), col("doc_id"), lit(".txt")).as("path"),
-        col("n_chars").cast("long").as("size"))
-      // dest drift: a third of the files missing, every 7th size-drifted,
-      // plus stale files the source no longer has
-      val dst = docs.filter(col("doc_id") % 3 =!= 0)
-        .select(concat(lit("docs/"), col("doc_id"), lit(".txt")).as("path"),
-          when(col("doc_id") % 7 === 0, col("n_chars") + 1)
-            .otherwise(col("n_chars")).cast("long").as("size"))
-        .unionByName(docs.filter(col("doc_id") % 11 === 0)
-          .select(concat(lit("stale/"), col("doc_id")).as("path"),
-            col("n_chars").cast("long").as("size")))
-      graft.meta.DataSync.planSummary(
-        graft.meta.DataSync.plan(src, dst, "path", "size"))
-    }),
-    // ---- cross-source duplication attribution: per source, the share of
-    // docs that are NON-canonical exact dups (canonical = min doc_id per
-    // digest) — which sources are net copies of others ------------------
-    "q147_dup_attribution" -> ((s, d) => {
-      val g = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), md5(col("text")).as("h"))
-      val canon = g.groupBy(col("h"))
-        .agg(min(col("doc_id")).as("first_id"), count(lit(1)).as("cnt"))
-      g.join(canon, "h")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("cnt") >= 2 && col("doc_id") =!= col("first_id"), 1L)
-            .otherwise(0L)).as("n_dup"))
-        .withColumn("dup_rate", r6(col("n_dup").cast("double") / col("n_docs")))
-        .orderBy(col("source"))
-    }),
-    // ---- fuzzy join on a MOSTLY-UNIQUE registry (supplier names made
-    // unique by an id suffix — the open-vocabulary distribution): the
-    // q-gram prefix blocking this corpus shape requires; the oracle is
-    // brute force, so the hash match proves the composed filter complete
-    "q148_fuzzy_registry" -> ((s, d) =>
-      graft.functions.EntityResolution.fuzzyPairs(
-          Tables.part(s, d).filter(col("p_partkey") % 5 === 0)
-            .select(col("p_partkey"),
-              concat(col("p_name"), lit(" "), col("p_partkey")).as("reg_name")),
-          "reg_name", "p_partkey", maxDist = 1, q = 3, blocking = "qgram")
-        .orderBy(col("id_a"), col("id_b"))),
-    // ---- GPT-style sequence packing: each doc's global token offset in
-    // the id-ordered corpus concatenation and the 512-token sequences it
-    // spans — the distributed prefix sum runs over ≤256 quantile buckets
-    // (boundaries are fixed literals, so the bucketing cannot drift
-    // between jobs), never a single-partition window -------------------
-    "q149_seq_pack" -> ((s, d) =>
-      graft.functions.SamplingFunctions.packSequences(
-          Tables.documents(s, d)
-            .select(col("doc_id"),
-              graft.functions.TextFunctions.tokenCount(col("text")).as("n_tok"))
-            .filter(col("n_tok") > 0),
-          col("doc_id"), col("n_tok"), seqLen = 512)
-        .select(col("id").as("doc_id"), col("wt").as("n_tok"), col("offset"),
-          col("first_seq"), col("last_seq"), col("n_seqs"))
-        .orderBy(col("doc_id"))),
-    // ---- exact dedup keeping the BEST copy (C4 keeps the longest):
-    // winner = max(score, id) per digest via groupBy + semi-join back —
-    // no digest-keyed window, so viral exact dups never own a sort ------
-    "q150_keep_best" -> ((s, d) =>
-      graft.functions.DedupFunctions.dedupExactKeepBest(
-          Tables.documents(s, d), "text", "doc_id", col("n_chars"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_kept"), sum(col("n_chars")).as("kept_chars"))
-        .orderBy(col("source"))),
-    // ---- robust (median/MAD) volume anomalies — the hardening the
-    // z-score monitor's self-poisoning note promises; medians from two
-    // exact-regime KLL passes, quantile_disc parity -----------------
-    "q151_robust_anomaly" -> ((s, d) =>
-      graft.functions.EventAnalytics.robustVolumeAnomalies(
-          Tables.events(s, d), "event_type", "ts", "1 hour", threshold = 3.5)
-        .select(col("event_type"), col("bucket_start"), col("n"),
-          col("med"), col("mad"), r4(col("rz")).as("rz"))
-        .orderBy(col("event_type"), col("bucket_start"))),
-    // ---- the end-to-end curation walk, composed from the operator
-    // surface: quality gate → exact dedup keeping the best copy →
-    // benchmark decontamination → deterministic per-source cap → final
-    // mix stats. The single composed oracle proves the stages agree not
-    // just individually but THROUGH each other's outputs ----------------
-    "q152_curation_pipeline" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val bench = docs.filter(col("doc_id") % 97 === 0)
-      val pool = docs.filter(col("doc_id") % 97 =!= 0 && col("n_chars") >= 150)
-      val deduped = graft.functions.DedupFunctions.dedupExactKeepBest(
-        pool, "text", "doc_id", col("n_chars"))
-      val clean = graft.functions.DedupFunctions.decontaminate(
-        deduped, bench, "text", "doc_id", n = 5)
-      graft.functions.SamplingFunctions.capPerGroup(
-          clean, col("source"), col("doc_id"), 15)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
-        .orderBy(col("source"))
-    }),
-    // ---- the event-side composed walk: sessionization (q48's exact
-    // semantics) feeding an IN-SESSION funnel — conversion = a purchase
-    // at-or-after the session's first view, rates by session size; one
-    // exchange keyed by user carries both stages -------------------------
-    "q153_session_funnel" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val newSession = when(
-        unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(byUser)
-          > 600000000L, 1).otherwise(0)
-      Tables.events(s, d)
-        .withColumn("new_s", newSession)
-        .withColumn("session_id", sum(col("new_s")).over(byUser).cast("int"))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(count(lit(1)).as("n_events"),
-          min(when(col("event_type") === "view", col("ts"))).as("fv"),
-          max(when(col("event_type") === "purchase", col("ts"))).as("lp"))
-        .withColumn("conv",
-          (col("fv").isNotNull && col("lp").isNotNull && col("lp") >= col("fv"))
-            .cast("long"))
-        .withColumn("size_bucket", least(col("n_events"), lit(5L)))
-        .groupBy(col("size_bucket"))
-        .agg(count(lit(1)).as("n_sessions"), sum(col("conv")).as("n_converted"),
-          r6(sum(col("conv")).cast("double") / count(lit(1))).as("conv_rate"))
-        .orderBy(col("size_bucket"))
-    }),
-    // ---- coded-frame VIDEO decode, H.264: the checked-in MP4's 'avc1'
-    // track carries baseline IDR frames (CAVLC + 4:2:0 intra prediction),
-    // demuxed by the sample tables (avcC config + length-prefixed NALs)
-    // and entropy-decoded on EXECUTORS by the native graft.sources
-    // .H264Decode. The oracle pins each frame's luma-plane sum to the
-    // INDEPENDENT pure-python encoder's reconstruction (scripts/
-    // h264codec.py wrote the stream AND the expected pixels; a decode
-    // drift of a single sample anywhere breaks the sum) ----------------
-    "q158_h264_frames" -> ((s, _) => {
-      import s.implicits._
-      val bytes = {
-        val in = getClass.getResourceAsStream("/graft/tiny_h264.mp4")
-        try in.readAllBytes() finally in.close()
-      }
-      val media = s.createDataset(Seq(
-        Multimodal.MediaRow(1L, "video", bytes,
-          Multimodal.videoMeta(bytes).get)))
-      Multimodal.decodeVideoFrames(media, everyNth = 1, maxFrames = 16)(s)
-        .toDF()
-        .select(col("frame_index").cast("long").as("frame_index"),
-          col("sync"),
-          col("height").cast("long").as("height"),
-          col("width").cast("long").as("width"),
-          aggregate(col("pixels"), lit(0L), (a, p) => a + p.cast("long"))
-            .as("sum_y"))
-        .orderBy(col("frame_index"))
-    }),
-    // ---- eval-set scoring: clipped n-gram overlap (the integer core of
-    // BLEU-n precision / ROUGE-n recall) between each doc and its
-    // successor — a narrow scan-side projection (no shuffle beyond the
-    // pairing join), the shape eval scoring keeps at 100 TB. Ratios are
-    // single IEEE divisions of exact integers (engine-identical); the
-    // exp/ln composition of full BLEU is deliberately NOT driver-gated --
-    "q159_ngram_overlap" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-        .filter(graft.functions.TextFunctions.tokenCount(col("text")) >= 2)
-      val a = docs.filter(col("doc_id") % 13 === 0)
-        .select(col("doc_id"), col("text").as("cand"))
-      val b = docs.select((col("doc_id") - 1).as("doc_id"),
-        col("text").as("ref"))
-      a.join(b, "doc_id")
-        .select(col("doc_id"),
-          T.ngramOverlap(col("cand"), col("ref"), 1).as("o1"),
-          T.ngramOverlap(col("cand"), col("ref"), 2).as("o2"))
-        .select(col("doc_id"),
-          col("o1.matches").cast("long").as("m1"),
-          col("o1.cand_n").cast("long").as("c1"),
-          col("o1.ref_n").cast("long").as("r1"),
-          col("o2.matches").cast("long").as("m2"),
-          col("o2.cand_n").cast("long").as("c2"),
-          r6(col("o1.matches").cast("double") / col("o1.cand_n")).as("bleu1_p"),
-          r6(col("o2.matches").cast("double") / col("o2.ref_n")).as("rouge2_r"))
-        .orderBy(col("doc_id"))
-    }),
-    // ---- ROUGE-L integer core: token-level LCS via the native two-row DP
-    // ([[graft.expr.LcsTokensExpr]]) -- precision/recall are single
-    // divisions of the exact integers, so DuckDB's recursive-CTE DP replay
-    // hash-matches. Texts truncated to 40 tokens (sentence/paragraph eval
-    // refs; keeps the O(n*m) per-row cost bounded at any corpus scale) ----
-    "q160_rouge_l" -> ((s, d) => {
-      // whitespace is normalized (collapse + trim) BEFORE truncation on
-      // both this side and the oracle: the rejoin-then-retokenize pattern
-      // would otherwise drop a leading-empty token (text starting with a
-      // tab/newline) that DuckDB's list_slice keeps
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"),
-          trim(regexp_replace(col("text"), "\\s+", " ")).as("nt"))
-        .filter(col("nt") =!= "")
-      def trunc(c: Column) = concat_ws(" ", slice(T.tokens(c), 1, 40))
-      val a = docs.filter(col("doc_id") % 7 === 0)
-        .select(col("doc_id"), trunc(col("nt")).as("cand"))
-      val b = docs.select((col("doc_id") - 1).as("doc_id"),
-        trunc(col("nt")).as("ref"))
-      a.join(b, "doc_id")
-        .select(col("doc_id"), T.rougeL(col("cand"), col("ref")).as("o"))
-        .select(col("doc_id"),
-          col("o.lcs").cast("long").as("lcs"),
-          col("o.cand_n").cast("long").as("cand_n"),
-          col("o.ref_n").cast("long").as("ref_n"),
-          r6(col("o.lcs").cast("double") / col("o.cand_n")).as("rouge_l_p"),
-          r6(col("o.lcs").cast("double") / col("o.ref_n")).as("rouge_l_r"))
-        .orderBy(col("doc_id"))
-    }),
-    // ---- chrF integer core: clipped CHARACTER n-gram overlap over
-    // whitespace-stripped text (orders 2 and 6, the ends of chrF's 1..6
-    // band). Text truncated to 160 chars for the oracle's list-ops replay;
-    // the same narrow-projection shape as q159 ----------------------------
-    "q161_chrf" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), substring(col("text"), 1, 160).as("t"))
-        .filter(length(regexp_replace(col("t"), "\\s+", "")) >= 6)
-      val a = docs.filter(col("doc_id") % 11 === 0)
-        .select(col("doc_id"), col("t").as("cand"))
-      val b = docs.select((col("doc_id") - 1).as("doc_id"), col("t").as("ref"))
-      a.join(b, "doc_id")
-        .select(col("doc_id"),
-          T.charNgramOverlap(col("cand"), col("ref"), 2).as("o2"),
-          T.charNgramOverlap(col("cand"), col("ref"), 6).as("o6"))
-        .select(col("doc_id"),
-          col("o2.matches").cast("long").as("m2"),
-          col("o2.cand_n").cast("long").as("c2"),
-          col("o2.ref_n").cast("long").as("r2"),
-          col("o6.matches").cast("long").as("m6"),
-          col("o6.cand_n").cast("long").as("c6"),
-          r6(col("o2.matches").cast("double") / col("o2.cand_n")).as("chrp2"),
-          r6(col("o6.matches").cast("double") / col("o6.ref_n")).as("chrr6"))
-        .orderBy(col("doc_id"))
-    }),
-    // ---- chat-corpus assembly: event log -> role-tagged session
-    // transcripts truncated to a context budget (one user-keyed exchange
-    // end-to-end; per-session aggregate state bounded by the budget) ------
-    "q162_chat_assembly" -> ((s, d) =>
-      graft.functions.ChatFunctions.assembleConversations(Tables.events(s, d))
-        .orderBy(col("user_id"), col("session_id"))),
-    // ---- audio spectral features through the REAL WAV decode path:
-    // PCM synthesized from a documented integer formula, exported through
-    // pcm16Wav, decoded back by the JDK's independent parser on executors,
-    // then framed into exact Walsh-Hadamard band magnitudes + zcr/energy
-    // (all integer arithmetic). The DuckDB oracle recomputes every
-    // coefficient from the same formula via bit_count parity WITHOUT the
-    // container round-trip - a single decoded sample off anywhere breaks
-    // a band sum ----------------------------------------------------------
-    "q163_audio_spectral" -> ((s, _) => {
-      import s.implicits._
-      val rows = (0 until 8).map { id =>
-        val samples = Array.tabulate(1024) { n =>
-          (((id + 3).toLong * ((n.toLong * n) % 977) + 17L * n) % 4096 - 2048).toShort
-        }
-        val bytes = Multimodal.AudioCodec.pcm16Wav(samples, 8000)
-        Multimodal.MediaRow(id.toLong, "audio", bytes,
-          Multimodal.AudioCodec.decodeMeta(bytes).get)
-      }
-      Multimodal.audioSpectral(s.createDataset(rows), frameSize = 64, nBands = 4)(s)
-        .toDF()
-        .select(col("media_id"), col("frame").cast("long").as("frame"),
-          col("zcr").cast("long").as("zcr"), col("energy").as("energy"),
-          col("bands")(0).as("b0"), col("bands")(1).as("b1"),
-          col("bands")(2).as("b2"), col("bands")(3).as("b3"))
-        .orderBy(col("media_id"), col("frame"))
-    }),
-    // ---- capped exact pairwise joins: per-doc top-k decisions instead of
-    // the all-pairs row set (docs × k output bound — at 100 TB the pair
-    // list of a duplicate-heavy corpus dwarfs the corpus; the reference
-    // itself only ever reports per-collection counts, never pair lists —
-    // collections/controller.py:604–618). Oracles are literal QUALIFY
-    // row_number replays over the brute-force pair set, so the hash match
-    // proves the bounded aggregator's total order is the window's --------
-    "q154_jaccard_topk" -> ((s, d) =>
-      D.jaccardJoinTopK(Tables.documents(s, d).filter(col("doc_id") % 7 === 0),
-          "text", "doc_id", tau = 0.8, k = 2)
-        .select(col("id_a"), col("id_b"), r4(col("jaccard")).as("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))),
-    "q155_containment_topk" -> ((s, d) =>
-      D.containmentJoinTopK(
-          Tables.documents(s, d), "text", "doc_id", tau = 0.8, k = 1, ngram = 3)
-        .select(col("id_a"), col("id_b"), r4(col("containment")).as("containment"))
-        .orderBy(col("id_a"), col("id_b"))),
-    // ascending rank direction (edit DISTANCE: smaller is better) — the
-    // sign-flip path through the bounded aggregator -----------------------
-    "q157_fuzzy_topk" -> ((s, d) =>
-      graft.functions.EntityResolution.fuzzyPairsTopK(
-          Tables.part(s, d).filter(col("p_partkey") % 5 === 0),
-          "p_name", "p_partkey", maxDist = 1, k = 3, blocking = "band")
-        .orderBy(col("id_a"), col("id_b"))),
-    // ---- per-doc summary of an exact pairwise join: (id, n_partners,
-    // best) — count/min partial-aggregate map-side, output doc-bounded ----
-    "q156_fuzzy_summary" -> ((s, d) =>
-      graft.functions.EntityResolution.fuzzyPairsSummary(
-          Tables.part(s, d).filter(col("p_partkey") % 5 === 0),
-          "p_name", "p_partkey", maxDist = 1, blocking = "band")
-        .orderBy(col("id"))),
-    // ---- WARC container scan → per-record text extraction: the LLM-data
-    // front door (Common Crawl → text). Both the plain and per-record-gzip
-    // layouts read through the SAME parser; file = task (gzip is
-    // unsplittable — exactly Common Crawl's parallel unit), records explode
-    // executor-side, zero shuffle. Oracle rows are literals from the
-    // INDEPENDENT python extraction replay (scripts/gen_warc_fixture.py) --
-    "q164_warc_extract" -> ((s, _) => {
-      val H = graft.functions.HtmlFunctions
-      graft.sources.Warc.readWarc(s, warcFixtureDir())
-        .select(
-          when(col("file").endsWith(".warc.gz"), "gz")
-            .otherwise("plain").as("kind"),
-          col("record_index").cast("long").as("record_index"),
-          col("warc_type"), col("target_uri"),
-          col("http_status").cast("long").as("http_status"),
-          length(col("payload")).cast("long").as("payload_len"),
-          // binary-integrity witness for every record: md5 of the DECODED
-          // entity bytes (after dechunk/gunzip) — proves the body-coding
-          // path bit-exact for binary payloads the text column can't hash
-          md5(col("payload")).as("payload_md5"),
-          when(col("http_content_type").startsWith("text/html"),
-            H.htmlToText(col("payload").cast("string")))
-            // binary responses (image/*, audio/*, …) are NEVER
-            // UTF-8-decoded — a crawler treats them as opaque bytes
-            .when(col("warc_type") === "response" &&
-              !col("http_content_type").startsWith("text/"), lit(""))
-            .otherwise(col("payload").cast("string")).as("text"))
-        .select(col("kind"), col("record_index"), col("warc_type"),
-          col("target_uri"), col("http_status"), col("payload_len"),
-          col("payload_md5"),
-          md5(col("text").cast("binary")).as("text_md5"),
-          length(col("text")).cast("long").as("text_chars"))
-        .orderBy(col("kind"), col("record_index"))
-    }),
-    // ---- H.264 P-frame decode through the full MP4 avc1 path: IDR + 3 P
-    // pictures (quarter-pel MC, P_Skip, intra-in-P) decode SEQUENTIALLY
-    // through one stateful decoder; the oracle pins each frame's luma sum
-    // as literals from the independent python encoder's reconstruction
-    // (scripts/gen_h264_fixture.py). sync is TRUE only for the IDR -------
-    "q166_h264_pframes" -> ((s, _) => {
-      import s.implicits._
-      val bytes = {
-        val in = getClass.getResourceAsStream("/graft/tiny_h264p.mp4")
-        try in.readAllBytes() finally in.close()
-      }
-      val media = s.createDataset(Seq(
-        Multimodal.MediaRow(1L, "video", bytes,
-          Multimodal.videoMeta(bytes).get)))
-      Multimodal.decodeVideoFrames(media, everyNth = 1, maxFrames = 16)(s)
-        .toDF()
-        .select(col("frame_index").cast("long").as("frame_index"),
-          col("sync"),
-          col("height").cast("long").as("height"),
-          col("width").cast("long").as("width"),
-          aggregate(col("pixels"), lit(0L), (a, p) => a + p.cast("long"))
-            .as("sum_y"))
-        .orderBy(col("frame_index"))
-    }),
-    // ---- DISTRIBUTED media-corpus decode: a directory of avc1 clips and
-    // WAV tones scanned via binaryFile (file = task, the 100 TB media
-    // shape), demuxed + entropy-decoded executor-side. Video oracle =
-    // per-frame luma sums of the independent python encoder's
-    // reconstruction; audio oracle = DuckDB recomputing frame energies
-    // from the documented PCM formula WITHOUT the container round-trip --
-    "q167_media_corpus" -> ((s, _) => {
-      import s.implicits._
-      val dir = mediaCorpusDir()
-      val vids = s.read.format("binaryFile").option("pathGlobFilter", "*.mp4")
-        .load(dir)
-        .select(col("path"), col("content")).as[(String, Array[Byte])]
-        .map { case (path, bytes) =>
-          val id = "clip_(\\d+)".r.findFirstMatchIn(path).get.group(1).toLong
-          Multimodal.MediaRow(id, "video", bytes,
-            Multimodal.videoMeta(bytes).get)
-        }
-      val vrows = Multimodal.decodeVideoFrames(vids, everyNth = 1,
-          maxFrames = 8)(s)
-        .toDF()
-        .select(lit("video").as("kind"), col("media_id"),
-          col("frame_index").cast("long").as("seq"),
-          aggregate(col("pixels"), lit(0L), (a, p) => a + p.cast("long"))
-            .as("metric"))
-      val auds = s.read.format("binaryFile").option("pathGlobFilter", "*.wav")
-        .load(dir)
-        .select(col("path"), col("content")).as[(String, Array[Byte])]
-        .map { case (path, bytes) =>
-          val id = "tone_(\\d+)".r.findFirstMatchIn(path).get.group(1).toLong
-          Multimodal.MediaRow(id, "audio", bytes,
-            Multimodal.AudioCodec.decodeMeta(bytes).get)
-        }
-      val arows = Multimodal.audioSpectral(auds, frameSize = 64, nBands = 4)(s)
-        .toDF()
-        .select(lit("audio").as("kind"), col("media_id"),
-          col("frame").cast("long").as("seq"),
-          col("energy").cast("long").as("metric"))
-      vrows.unionAll(arows)
-        .orderBy(col("kind"), col("media_id"), col("seq"))
-    }),
-    // ---- the composed crawl → clean-corpus walk (the switch-over user
-    // story for a web-scale ingest): WARC scan → HTTP 200 HTML → density-
-    // rule main text → quality gate → EXACT DEDUP by main text — the
-    // coded-body twins (chunked/gzip) collapse onto their plain fetches,
-    // exactly the duplicate shape a real crawl carries. Oracle = the
-    // independent python replay of the full composition -----------------
-    "q168_crawl_pipeline" -> ((s, _) => {
-      val H = graft.functions.HtmlFunctions
-      graft.sources.Warc.readWarc(s, warcFixtureDir())
-        .filter(col("file").endsWith(".warc.gz") &&
-          col("http_status") === 200 &&
-          col("http_content_type").startsWith("text/html"))
-        .select(col("target_uri"),
-          H.mainText(H.decodeBody(col("payload"),
-            col("http_content_type"))).as("mt"))
-        .filter(length(col("mt")) >= 40) // quality gate: enough main content
-        .select(col("target_uri"), col("mt"),
-          graft.functions.TextFunctions.tokenCount(col("mt"))
-            .cast("long").as("tok"))
-        .groupBy(md5(col("mt").cast("binary")))
-        .agg(min(col("target_uri")).as("keeper_uri"),
-          count(lit(1)).as("n_copies"),
-          max(col("tok")).as("main_tokens"),
-          max(length(col("mt"))).cast("long").as("main_chars"))
-        .select(col("keeper_uri"), col("n_copies"), col("main_tokens"),
-          col("main_chars"))
-        .orderBy(col("keeper_uri"))
-    }),
-    // ---- main-content extraction (jusText/Arc90-style density rule) over
-    // the archived HTML 200-responses: per page the kept-block count and
-    // main-text digest vs the full-page text length — pure column
-    // expressions, boilerplate (nav/footer/link farms) drops by the
-    // chars≥25 ∧ 3·link_chars≤chars rule --------------------------------
-    "q165_html_main_text" -> ((s, _) => {
-      val H = graft.functions.HtmlFunctions
-      graft.sources.Warc.readWarc(s, warcFixtureDir())
-        .filter(col("file").endsWith(".warc.gz") &&
-          col("http_status") === 200 &&
-          col("http_content_type").startsWith("text/html"))
-        .select(col("target_uri"),
-          H.decodeBody(col("payload"), col("http_content_type")).as("html"))
-        .select(col("target_uri"),
-          size(H.keptBlocks(col("html"))).cast("long").as("n_blocks"),
-          H.mainText(col("html")).as("mt"),
-          H.htmlToText(col("html")).as("ft"))
-        .select(col("target_uri"), col("n_blocks"),
-          md5(col("mt").cast("binary")).as("main_md5"),
-          length(col("mt")).cast("long").as("main_chars"),
-          length(col("ft")).cast("long").as("full_chars"))
-        .orderBy(col("target_uri"))
-    }),
-    // ---- image perceptual hash: real PNG decode → 32×32 luma grid →
-    // native DCT sign hash (PHash64Expr). The battery PNGs are encoded
-    // from an integer pixel formula, so the DuckDB oracle replays the
-    // ENTIRE pipeline — pixels, 8×8 DCT block, AC median, sign bits —
-    // from literals, proving decode + DCT + hash end-to-end -------------
-    "q169_phash" -> ((s, _) => {
-      import s.implicits._
-      val imgs = (0 until 12).map(i => (i.toLong, phashBatteryPng(i)))
-      graft.functions.MultimodalFunctions
-        .imagePhash(imgs.toDF("img_id", "content"), "img_id", "content")
-        .orderBy(col("img_id"))
-    }),
-    // ---- the FULL front-door-to-training-shards story in one query:
-    // WARC scan → HTTP-200 HTML → density-rule main text → quality gate →
-    // URL canonicalization + registered domain → EXACT dedup by content
-    // (coded twins collapse) → minhash-LSH NEAR-dedup (the mirror's
-    // lightly-edited copy collapses onto the original) → per-domain cap →
-    // token-budget shard assignment. Oracle = the independent python
-    // generator replaying every stage ------------------------------------
-    "q170_crawl_shards" -> ((s, _) => {
-      val H = graft.functions.HtmlFunctions
-      val U = graft.functions.UrlFunctions
-      val D = graft.functions.DedupFunctions
-      val Smp = graft.functions.SamplingFunctions
-      val docs = graft.sources.Warc.readWarc(s, warcFixtureDir())
-        .filter(col("file").endsWith(".warc.gz") &&
-          col("http_status") === 200 &&
-          col("http_content_type").startsWith("text/html"))
-        .select(col("record_index").cast("long").as("rid"),
-          U.canonicalizeUrl(col("target_uri")).as("keeper_uri"),
-          U.registeredDomain(col("target_uri")).as("regdom"),
-          H.mainText(H.decodeBody(col("payload"),
-            col("http_content_type"))).as("mt"))
-        .filter(length(col("mt")) >= 40)
-        // stage the extracted corpus ONCE: the composition downstream is
-        // multi-action (LSH checkpoint, probe, final join), and without a
-        // cut each action re-executes and re-plans the WARC scan +
-        // extraction + canonicalization — the same staging a production
-        // crawl pipeline does between extract and dedup
-        .localCheckpoint(true)
-      // keeper = the min-rid (first-crawled) ROW: min_by picks
-      // keeper_uri/regdom from that one row, so they stay mutually
-      // consistent even when a content-duplicate group spans registered
-      // domains (three independent min()s could report a regdom the
-      // keeper doesn't live at). min(rid) + min_by(…, rid) — NOT
-      // min(struct(rid, …)) — because rid is unique per group (same row
-      // either way) and the separate aggregates let Catalyst PRUNE the
-      // URL expressions out of every downstream sub-plan that only needs
-      // (mt, rid): with a struct-min, the canonicalization would ride the
-      // LSH checkpoint/probe plans and be re-compiled per action
-      val exact = docs.groupBy(col("mt"))
-        .agg(min(col("rid")).as("rid"),
-          min_by(struct(col("keeper_uri"), col("regdom")), col("rid")).as("k"),
-          count(lit(1)).as("n_copies"))
-        .select(col("mt"), col("k.keeper_uri").as("keeper_uri"),
-          col("k.regdom").as("regdom"), col("rid"), col("n_copies"))
-      val near = D.dedupNear(exact, "mt", "rid",
-        n = 3, bands = 4, rowsPerBand = 2, jaccardThreshold = 0.6)
-      val capped = Smp.capPerGroup(near, col("regdom"), col("keeper_uri"), 2)
-        .withColumn("tokens",
-          graft.functions.TextFunctions.tokenCount(col("mt")).cast("long"))
-      Smp.shardByTokenBudget(capped, col("rid"), col("tokens"), "crawl", 30L)
-        .select(col("keeper_uri"), col("regdom"), col("n_copies"),
-          col("tokens"), col("shard"))
-        .orderBy(col("keeper_uri"))
-    }),
-    // ---- URL canonicalization + registered domain (crawl front door):
-    // pure column expressions — scheme/host case, userinfo, default
-    // ports, fragments, trailing slash, query-param order, suffix-list
-    // domain; the oracle replays the whole grammar with DuckDB's OWN
-    // string/list ops over the same literals ----------------------------
-    "q171_url_canon" -> ((s, _) => {
-      import s.implicits._
-      val U = graft.functions.UrlFunctions
-      urlBattery.toDF("url").select(col("url"),
-          U.canonicalizeUrl(col("url")).as("canon"),
-          U.urlHost(col("url")).as("host"),
-          U.registeredDomain(col("url")).as("regdom"))
-        .orderBy(col("url"))
-    }),
-    // ---- audio perceptual fingerprint: WAV decode → integer
-    // Walsh–Hadamard sequency-band energies → Haitsma–Kalker
-    // difference-sign hash (Afp64Expr). The oracle replays PCM formula →
-    // WHT → energies → sign bits entirely in DuckDB — integer-exact end
-    // to end, so the WAV container round-trip is independently proven
-    // too (one decoded sample off anywhere flips energy bits) ------------
-    "q172_audio_phash" -> ((s, _) => {
-      import s.implicits._
-      val tones = (0 until 16).map { id =>
-        val samples = Array.tabulate(1024) { n =>
-          (((id + 3).toLong * ((n.toLong * n) % 977) + 17L * n) % 4096 - 2048).toShort
-        }
-        (id.toLong, graft.functions.MultimodalFunctions.AudioCodec.pcm16Wav(samples, 8000))
-      }
-      graft.functions.MultimodalFunctions
-        .audioPhash(tones.toDF("media_id", "content"), "media_id", "content")
-        .orderBy(col("media_id"))
-    }),
-    // ---- video perceptual fingerprint over the committed media corpus:
-    // binaryFile scan → demux → FIRST-keyframe H.264 decode → 32×32 luma
-    // grid → the SAME native PHash64Expr as still images. Oracle = the
-    // independent python encoder's frame-0 reconstruction pushed through
-    // a python replay of pooling + DCT + median + sign bits ---------------
-    "q173_video_phash" -> ((s, _) => {
-      import s.implicits._
-      val dir = mediaCorpusDir()
-      val vids = s.read.format("binaryFile").option("pathGlobFilter", "*.mp4")
-        .load(dir)
-        .select(col("path"), col("content")).as[(String, Array[Byte])]
-        .map { case (path, bytes) =>
-          ("clip_(\\d+)".r.findFirstMatchIn(path).get.group(1).toLong, bytes)
-        }
-        .toDF("media_id", "content")
-      graft.functions.MultimodalFunctions
-        .videoPhash(vids, "media_id", "content")
-        .orderBy(col("media_id"))
-    }),
-    // ---- the signature plane end-to-end: image + audio + video twins
-    // planted (perturbed PNG, x2-gain and noisy tones, byte-dup clip),
-    // per-modality perceptual hashes unioned into ONE (modality, id, sig)
-    // table, near-dup pairs by hamming ≤ 4. Brute pairs at battery size;
-    // at corpus scale the join becomes the simhash band-prefix bucketing
-    // (same 64-bit signatures). Oracle replays all three hash families
-    // AND the pair join in DuckDB ----------------------------------------
-    "q174_crossmodal_neardup" -> ((s, _) => {
-      val D = graft.functions.DedupFunctions
-      val sigs = crossmodalSigs(s)
-      sigs.as("a").join(sigs.as("b"),
-          col("a.modality") === col("b.modality") && col("a.id") < col("b.id"))
-        .select(col("a.modality").as("modality"), col("a.id").as("id_a"),
-          col("b.id").as("id_b"),
-          D.hamming64(col("a.sig"), col("b.sig")).cast("long").as("dist"))
-        .filter(col("dist") <= 4)
-        .orderBy(col("modality"), col("id_a"), col("id_b"))
-    }),
-    // ---- the SAME cross-modal pairs through the band-prefix LSH
-    // bucketed join (8 bands of 8 bits; pigeonhole gives total recall at
-    // hamming ≤ 4 < 8, so the output is IDENTICAL to q174's brute join —
-    // and the plan is equi-join-shaped: one hash exchange on
-    // (modality, band, band_key), no cartesian anywhere; HammingLshSpec
-    // asserts the plan). This is the shape the signature plane runs at
-    // corpus scale: 10⁹ media items explode into 8 × 16-byte band rows,
-    // the pixels/PCM never leave the scan ---------------------------------
-    "q176_crossmodal_lsh" -> ((s, _) => {
-      graft.functions.DedupFunctions.neardupPairsByHamming64(
-          crossmodalSigs(s), "sig", "id", partitionCols = Seq("modality"),
-          bands = 8, maxDistance = 4)
-        .select(col("modality"), col("id_a"), col("id_b"), col("dist"))
-        .orderBy(col("modality"), col("id_a"), col("id_b"))
-    }),
-    // ---- persisted, appendable hamming signature index — incremental
-    // media dedup, the 64-bit twin of q111's text LSH index: sign the
-    // corpus ONCE into (band, band_key, modality, id, sig) parquet, then
-    // probe each day's new media against it by broadcast equi-join —
-    // no corpus re-decode, no corpus shuffle. Probe batch = the planted
-    // twins (perturbed PNG, ×2-gain + noisy tones, byte-dup clip);
-    // output = which ALREADY-INDEXED item each new item duplicates -------
-    "q177_hamming_index" -> ((s, _) => {
-      val D = graft.functions.DedupFunctions
-      val sigs = crossmodalSigs(s)
-      val corpus = sigs.filter(
-        (col("modality") === "image" && col("id") <= 11) ||
-        (col("modality") === "audio" && col("id") <= 15) ||
-        (col("modality") === "video" && col("id") <= 7))
-      val twins = sigs.filter(
-        (col("modality") === "image" && col("id") === 12) ||
-        (col("modality") === "audio" && col("id") >= 16) ||
-        (col("modality") === "video" && col("id") === 8))
-      val dir = memoLayout("q177_hidx", "battery") { tmp =>
-        D.writeHammingIndex(corpus, "sig", "id", tmp,
-          partitionCols = Seq("modality"), bands = 8)
-      }
-      D.probeHammingIndex(s, dir, twins, "sig", "id",
-          partitionCols = Seq("modality"), bands = 8, maxDistance = 4)
-        .select(col("modality"), col("id_new"), col("id_index"), col("dist"))
-        .orderBy(col("modality"), col("id_new"), col("id_index"))
-    }),
-    // ---- the MULTIMODAL crawl front door in one query: WARC → route by
-    // content type → text: density-rule main text + quality gate + exact
-    // dedup + minhash-LSH near-dedup (the q170 front half); image: PNG
-    // decode → DCT pHash; audio: WAV decode → WHT fingerprint; video:
-    // MP4 demux → keyframe H.264 decode → pHash → hamming band-prefix
-    // LSH pairs per modality → connected components → kept
-    // representatives with member counts. The fixture plants a
-    // cross-domain perceptual image copy, a ×2-gain audio twin, and a
-    // re-hosted byte-identical clip next to the coded/mirrored text
-    // duplicates; the oracle is the python generator replaying EVERY
-    // stage — extraction, canonicalization, minhash banding, PNG/WAV
-    // encode→hash, video distances from the independent encoder's
-    // replayed literals, hamming pairing, union-find ---------------------
-    "q175_multimodal_crawl" -> ((s, _) => {
-      graft.functions.CrawlFunctions.multimodalKeepers(
-          graft.sources.Warc.readWarc(s, warcFixtureDir())
-            .filter(col("file").endsWith(".warc.gz")),
-          minMainChars = 40, shingleN = 3, minhashBands = 4,
-          rowsPerBand = 2, jaccardThreshold = 0.6,
-          hammingBands = 8, maxDistance = 4)
-        .orderBy(col("modality"), col("keeper_uri"))
-    }),
-    // ---- multi-keyframe video signatures + the planted RE-CUT twin:
-    // gop_01 is gop_00 minus its first GOP, so a first-keyframe-only
-    // hash misses it (their first keyframes sit 20 bits apart — the
-    // python generator asserts the escape), but the k-keyframe signature
-    // SETS share gop_00's second keyframe byte-identically. Pairing runs
-    // the exploded per-keyframe signatures through the SAME band-prefix
-    // LSH as everything else (min over shared-bucket keyframe pairs ≡
-    // min-hamming ≤ τ by the total-recall guarantee) — never a clip×clip
-    // cross join --------------------------------------------------------
-    "q178_video_recut" -> ((s, _) => {
-      import s.implicits._
-      val vids = s.read.format("binaryFile").option("pathGlobFilter", "*.mp4")
-        .load(mediaCorpusDir(), mediaGopDir())
-        .select(col("path"), col("content")).as[(String, Array[Byte])]
-        .map { case (p, b) =>
-          val id = "(clip|gop)_(\\d+)".r.findFirstMatchIn(p).map(m =>
-            (if (m.group(1) == "gop") 8L else 0L) + m.group(2).toLong).get
-          (id, b)
-        }.toDF("media_id", "content")
-      val sigs = graft.functions.MultimodalFunctions
-        .videoPhashK(vids, "media_id", "content", maxKeyframes = 4)
-      val perKey = sigs.select(col("media_id"), explode(col("phashes")).as("sig"))
-      graft.functions.DedupFunctions
-        .neardupPairsByHamming64(perKey, "sig", "media_id",
-          bands = 8, maxDistance = 4)
-        .groupBy(col("id_a"), col("id_b"))
-        .agg(min(col("dist")).as("dist"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    // ---- every keyframe signature pinned individually — the
-    // multi-keyframe EXTRACTION oracle behind q178's pairing: demux →
-    // per-IDR standalone decode → pHash, one row per (clip, keyframe
-    // ordinal), hashes from the independent python encoder's replay ------
-    "q179_video_keyframe_sigs" -> ((s, _) => {
-      import s.implicits._
-      val vids = s.read.format("binaryFile").option("pathGlobFilter", "*.mp4")
-        .load(mediaCorpusDir(), mediaGopDir())
-        .select(col("path"), col("content")).as[(String, Array[Byte])]
-        .map { case (p, b) =>
-          val id = "(clip|gop)_(\\d+)".r.findFirstMatchIn(p).map(m =>
-            (if (m.group(1) == "gop") 8L else 0L) + m.group(2).toLong).get
-          (id, b)
-        }.toDF("media_id", "content")
-      graft.functions.MultimodalFunctions
-        .videoPhashK(vids, "media_id", "content", maxKeyframes = 4)
-        .select(col("media_id"),
-          posexplode(col("phashes")).as(Seq("k", "phash")))
-        .select(col("media_id"), col("k").cast("long").as("k"), col("phash"))
-        .orderBy(col("media_id"), col("k"))
-    }),
-    // ---- embeddings join the shared 64-bit signature plane: q180 pins
-    // the random-hyperplane sign sketch itself (the DuckDB oracle
-    // RE-DERIVES the 64×64 plane matrix from the integer mixing formula
-    // and replays every projection sign — nothing pinned); q181 runs the
-    // sketches through the SAME banded hamming join as text simhash and
-    // the media perceptual hashes (planted in-query twins: a ×2-gain copy
-    // of vec 0 → dist 0 by gain invariance, a +0.01-shifted copy of vec 1
-    // → dist 1, a negated copy of vec 2 → dist 64, never a pair); q182
-    // closes the loop with semantic dedup over the sketch pair graph.
-    // Geometry: bands=12 > maxDistance=11 → total recall over sketches
-    // (pigeonhole); dist ≤ 11 ≈ cosine ≥ cos(11π/64) ≈ 0.87 -----------
-    "q180_emb_sketch" -> ((s, d) => {
-      Tables.embeddings(s, d)
-        .select(col("vec_id").cast("long").as("vec_id"),
-          Sim.rhpSketch64(col("embedding"), 64).as("sig"))
-        .orderBy(col("vec_id"))
-    }),
-    "q181_emb_sketch_neardup" -> ((s, d) => {
-      val sigs = embSketchAugmented(s, d)
-        .select(col("vec_id"), Sim.rhpSketch64(col("e"), 64).as("sig"))
-      // r20 (guide §3.1 — pick the join strategy deliberately): the
-      // dist ≤ 11 budget forced the BANDED form into 12 bands of 5-bit
-      // keys — the measured bucket-width cliff (SCALE.md r16: 18.6 s at
-      // sf1 vs 1.92 s for the multi-probe join on the SAME signatures,
-      // identical output — q184 is that twin and its oracle pins the
-      // equivalence; both are total-recall at this geometry, so the pair
-      // set is provably the same). The banded form keeps its proper
-      // geometry (maxDistance < bands on wide keys) in q174/q175/q177
-      // and HammingLshSpec.
-      D.neardupPairsByHammingMultiProbe(sigs, "sig", "vec_id",
-          bands = 6, maxDistance = 11)
-        .select(col("id_a"), col("id_b"), col("dist"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "q182_emb_sketch_dedup" -> ((s, d) => {
-      val aug = embSketchAugmented(s, d)
-      // multi-probe pair source: the dist ≤ 11 budget from 11-bit keys
-      // (bands=6, probeBits=1) — identical answer to the 12-band exact
-      // form at ~6× less candidate mass (sf1: 20.2 s → the multiprobe
-      // cost; SCALE.md r16)
-      val kept = Sim.dedupSemanticSketch(aug, "e", "vec_id", dim = 64,
-        maxDistance = 11, bands = 6, probeBits = 1)
-      aug.join(kept.select("vec_id"), Seq("vec_id"), "left_anti")
-        .select(col("vec_id")).orderBy(col("vec_id"))
-    }),
-    // ---- winnowing (Schleimer–Wilkerson–Aiken MOSS fingerprints):
-    // q185 pins the fingerprint sets (salted-md5 k-gram hashes → sliding
-    // window minima → distinct — the DuckDB oracle replays every hash
-    // and window), q186 the shared-fingerprint pair detector. Winnowing
-    // witnesses SHARED RUNS (≥ k+w−1 tokens), the local-similarity axis
-    // MinHash's whole-doc Jaccard can't see -----------------------------
-    "q185_winnow_fps" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          explode(D.winnowFingerprints(col("text"), 4, 5)).as("fp"))
-        .orderBy(col("doc_id"), col("fp"))),
-    "q186_winnow_pairs" -> ((s, d) =>
-      D.winnowPairs(Tables.documents(s, d), "text", "doc_id",
-          k = 4, w = 5, minShared = 2)
-        .orderBy(col("id_a"), col("id_b"))),
-    // ---- multi-probe form of q181: the SAME dist ≤ 11 recall bound
-    // from 11-bit band keys (bands=6, each key probed at its exact value
-    // + every 1-bit flip) instead of q181's 6-bit keys (bands=12) —
-    // pigeonhole: distance ≤ 2·bands−1 forces ≤1 flipped bit in some
-    // band. Identical answer, ~19× less candidate mass at corpus scale
-    // (SCALE.md r16); the oracle is the same brute replay --------------
-    "q184_emb_sketch_multiprobe" -> ((s, d) => {
-      val sigs = embSketchAugmented(s, d)
-        .select(col("vec_id"), Sim.rhpSketch64(col("e"), 64).as("sig"))
-      D.neardupPairsByHammingMultiProbe(sigs, "sig", "vec_id",
-          bands = 6, maxDistance = 11)
-        .select(col("id_a"), col("id_b"), col("dist"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    // ---- the incremental crawl: the q175 record stream split into
-    // yesterday's crawl (records ≤ 12: the text pages + the first image)
-    // and today's (≥ 13: the rest of the media, incl. the cross-batch
-    // image byte-dup 12 ↔ 13). Today's batch pays extraction +
-    // batch-internal pairing + two index probes; the corpus is reached
-    // only through the persisted LSH/hamming buckets and the members
-    // rows of touched components. The oracle is q175's: the incremental
-    // state MUST reproduce the union-batch answer exactly — any probe
-    // recall loss, relabel scope error, or bookkeeping drift
-    // hash-mismatches ---------------------------------------------------
-    "q183_incremental_crawl" -> ((s, _) => {
-      val C = graft.functions.CrawlFunctions
-      val dir = memoLayout("q183_crawl_state", "battery") { tmp =>
-        val warc = graft.sources.Warc.readWarc(s, warcFixtureDir())
-          .filter(col("file").endsWith(".warc.gz"))
-          .localCheckpoint(true)
-        val p = C.CrawlParams() // identical knobs to q175
-        C.initCrawlState(s, tmp, warc.filter(col("record_index") <= 12), p)
-        C.appendCrawlBatch(s, tmp, warc.filter(col("record_index") >= 13), p)
-      }
-      C.crawlKeepers(s, dir)
-        .orderBy(col("modality"), col("keeper_uri"))
-    }),
-    // ---- DSIR importance resampling (Xie et al. 2023): target LM = the
-    // German slice, source LM = the whole pool; every doc scores
-    // logw = Σ_t [log2 p_tgt(t) − log2 p_src(t)] (one token explode, two
-    // broadcast vocabulary joins) and Gumbel-top-k keeps exactly 50 with
-    // probability ∝ 2^logw. The md5-uniform makes the draw itself
-    // engine-reproducible, so the oracle replays the SELECTION, not just
-    // the weights — a priority-order flip anywhere hash-mismatches ------
-    "q187_dsir" -> ((s, d) => {
-      val C = graft.functions.ClassifierFunctions
-      val docs = Tables.documents(s, d).filter(col("n_chars") > 0)
-      val target = C.trainUnigramLm(docs.filter(col("lang") === "de"), "text")
-      val source = C.trainUnigramLm(docs, "text")
-      val w = C.dsirLogWeights(docs, target, source, "text", "doc_id")
-      C.dsirResample(w, "doc_id", "logw", k = 50)
-        .select(col("doc_id"), col("n_tok"), r4(col("logw")).as("logw"))
-        .orderBy(col("doc_id"))
-    }),
-    // ---- bigram stupid-backoff LM (Brants et al. 2007): bits/token of
-    // each held-out doc — observed transitions pay −log2(c₂/c₁), unseen
-    // ones −log2 α plus the Laplace unigram; the oracle rebuilds both
-    // dictionaries and every transition from the raw text -----------------
-    "q188_backoff_lm" -> ((s, d) => {
-      val C = graft.functions.ClassifierFunctions
-      val docs = Tables.documents(s, d).filter(col("n_chars") > 0)
-        .withColumn("hb", T.hashBucket(col("text"), 100))
-      val lm = C.trainBigramLm(docs.filter(col("hb") >= 10), "text")
-      C.backoffBitsPerToken(docs.filter(col("hb") < 10), lm, "text", "doc_id")
-        .select(col("doc_id"), col("n_tok"), r4(col("bits")).as("bits"))
-        .orderBy(col("doc_id"))
-    }),
-    // ---- robots.txt politeness (RFC 9309): parse two fixture robots
-    // bodies for the 'graftbot' token (specific-group shadowing, merged
-    // UA runs, comments, unknown directives, empty values) and decide a
-    // deterministic URL stream derived from doc_id — longest-match with
-    // '*'/'$' patterns, allow-wins-ties, absent robots ⇒ allowed. The
-    // oracle replays the parse line-by-line and every regex match --------
-    "q189_robots" -> ((s, d) => {
-      val R = graft.functions.RobotsFunctions
-      val rules = R.robotsRules(robotsFixture(s), "host", "body", "graftbot")
-      R.robotsAllowed(robotsUrls(s, d), rules, "url")
-        .orderBy(col("doc_id"))
-    }),
-    // ---- the politeness-complete frontier: q189's allowed URLs,
-    // scheduled per host at the parsed Crawl-delay (h0 publishes 10 s for
-    // graftbot; 1 s default elsewhere); rank order = md5 of the URL. The
-    // oracle replays the delay parse, the filter and the schedule --------
-    "q190_frontier" -> ((s, d) => {
-      val R = graft.functions.RobotsFunctions
-      val robots = robotsFixture(s)
-      val rules = R.robotsRules(robots, "host", "body", "graftbot")
-      val delays = R.robotsCrawlDelay(robots, "host", "body", "graftbot")
-      // a frontier is a SET of URLs — dedup before scheduling (ranking
-      // duplicate keys would tie-break arbitrarily on any engine)
-      val frontier = R.filterByRobots(robotsUrls(s, d), rules, "url")
-        .select(col("url")).distinct()
-      R.scheduleFrontier(frontier, delays, "url", defaultDelay = 1.0)
-        .select(col("url"),
-          r2(col("crawl_delay")).as("crawl_delay"),
-          r2(col("fetch_at")).as("fetch_at"))
-        .orderBy(col("url"))
-    }),
-    // ---- the complete pre-fetch crawl plan in ONE query: discovery
-    // (the crawl stream ∪ the locs of sitemaps ANNOUNCED by robots
-    // `Sitemap:` directives — the orphan body stays out, dedup) → redirect-chain
-    // resolution to terminal addresses (loops dropped) → robots gate on
-    // the ACTUAL fetch target → per-host cap (25, md5 rank) →
-    // Crawl-delay frontier schedule. Every stage is a first-class
-    // operator proven alone in q189–q195; the oracle replays the whole
-    // composition ---------------------------------------------------------
-    "q197_crawl_plan" -> ((s, d) => {
-      val R = graft.functions.RobotsFunctions
-      val robots = robotsFixture(s)
-      val rules = R.robotsRules(robots, "host", "body", "graftbot")
-      val delays = R.robotsCrawlDelay(robots, "host", "body", "graftbot")
-      val discovered = robotsUrls(s, d).select(col("url"))
-        .unionByName(graft.functions.SitemapFunctions
-          .sitemapUrls(fetchedSitemaps(s), "body")
-          .select(col("loc").as("url")))
-        .distinct()
-      val docs = Tables.documents(s, d).select(col("doc_id"))
-      val n = docs.count()
-      val redirects = docs.filter(pmod(col("doc_id"), lit(10)) === 2)
-        .select(robotsUrlOf(col("doc_id")).as("src"),
-          robotsUrlOf(pmod(col("doc_id") * 7 + 5, lit(n))).as("dst"))
-        .groupBy(col("src")).agg(min(col("dst")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val resolved = graft.functions.CrawlFunctions
-        .resolveRedirects(discovered, redirects, "url")
-        .filter(col("terminal"))
-        .select(col("final_url").as("url")).distinct()
-      val fetchable = R.filterByRobots(resolved, rules, "url")
-        .withColumn("host", graft.functions.UrlFunctions.urlHost(col("url")))
-      // host carried from cap into the schedule: same attribute ⇒ the
-      // schedule window reuses cap's exchange AND sort (r19)
-      val capped = graft.functions.SamplingFunctions
-        .capPerGroup(fetchable, col("host"), col("url"), maxPerGroup = 25)
-      R.scheduleFrontier(capped, delays, "url", defaultDelay = 1.0,
-          hostCol = Some("host"))
-        .select(col("url"), r2(col("crawl_delay")).as("crawl_delay"),
-          r2(col("fetch_at")).as("fetch_at"))
-        .orderBy(col("url"))
-    }),
-    // ---- Platt calibration: the NB en-vs-de log-odds margin of every
-    // held-out doc, calibrated into P(en | s) by 6 unrolled Newton steps
-    // with Platt's smoothed targets. The oracle replays the NB scores,
-    // both target constants, every Newton iteration (5 sums + the 2×2
-    // solve) and the final sigmoid — any drift in the fit moves every
-    // probability --------------------------------------------------------
-    "q196_calibration" -> ((s, d) => {
-      val C = graft.functions.ClassifierFunctions
-      val docs = Tables.documents(s, d).filter(col("n_chars") > 0)
-        .withColumn("hb", T.hashBucket(col("text"), 100))
-      val model = C.trainNaiveBayes(docs.filter(col("hb") >= 10), "text", "lang")
-      val te = docs.filter(col("hb") < 10)
-      val sc = C.nbScore(te, model, "text", "doc_id")
-      val scored = sc.filter(col("label") === "en")
-        .select(col("doc_id"), col("score").as("s_en"))
-        .join(sc.filter(col("label") === "de")
-          .select(col("doc_id"), col("score").as("s_de")), "doc_id")
-        .join(te.select(col("doc_id"), (col("lang") === "en").as("y")), "doc_id")
-        .select(col("doc_id"), (col("s_en") - col("s_de")).as("s"), col("y"))
-        .localCheckpoint(true)
-      val (a, b) = C.fitPlatt(scored, "s", "y", iterations = 6)
-      scored.select(col("doc_id"), r4(col("s")).as("s"),
-          r4(C.plattProb(col("s"), a, b)).as("p"))
-        .orderBy(col("doc_id"))
-    }),
-    // ---- redirect-chain resolution: follow the deterministic (src→dst)
-    // fetch-log table from every URL to its terminal address, 8-hop
-    // budget — chains of 0–4 hops plus three genuine loops that exhaust
-    // the budget (terminal = false). The oracle walks the same chains
-    // with a recursive CTE -----------------------------------------------
-    "q195_redirects" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select(col("doc_id"))
-      val n = docs.count()
-      def urlOf(id: Column): Column =
-        concat(lit("http://r"), pmod(id, lit(50)), lit(".example/p/"), id)
-      val urls = docs.select(col("doc_id"), urlOf(col("doc_id")).as("url"))
-      val redirects = docs.filter(pmod(col("doc_id"), lit(3)) === 1)
-        .select(urlOf(col("doc_id")).as("src"),
-          urlOf(pmod(col("doc_id") * 9 + 4, lit(n))).as("dst"))
-      graft.functions.CrawlFunctions.resolveRedirects(urls, redirects, "url")
-        .select(col("doc_id"), col("url"), col("final_url"),
-          col("n_hops"), col("terminal"))
-        .orderBy(col("doc_id"))
-    }),
-    // ---- crawl link graph: the fixture's HTML responses → out-link
-    // extraction (quote styles, anchor text under the stripTags spec,
-    // commented-out/script-embedded anchors excluded) → RFC 3986
-    // resolution against each page's own URI. The oracle's VALUES are
-    // the independent python replay (gen_warc_fixture.q194_rows — own
-    // regexes + the stdlib's urljoin, fragments stripped) -----------------
-    "q194_link_graph" -> ((s, _) => {
-      val H = graft.functions.HtmlFunctions
-      val pages = graft.sources.Warc.readWarc(s, warcFixtureDir())
-        .filter(col("file").endsWith(".warc.gz"))
-        .filter(col("warc_type") === "response" && col("http_status") === 200
-          && col("http_content_type").contains("text/html"))
-        .select(col("target_uri"),
-          H.decodeBody(col("payload"), col("http_content_type")).as("html"))
-      pages
-        .select(col("target_uri"),
-          explode(graft.functions.HtmlFunctions.extractLinks(col("html"))).as("l"))
-        .select(col("target_uri"), col("l.href").as("href"),
-          graft.functions.UrlFunctions
-            .resolveUrl(col("target_uri"), col("l.href")).as("resolved"),
-          col("l.anchor").as("anchor"))
-        .orderBy(col("target_uri"), col("href"))
-    }),
-    // ---- sitemap discovery → politeness → schedule: the whole crawl
-    // front door before any fetch happens, now STARTING where a real
-    // crawler starts — the robots fixture's `Sitemap:` directives
-    // (RFC 9309 §2.2.4 "other records", group-independent) select which
-    // fetched sitemap bodies enter discovery at all; the orphan body no
-    // directive references is proven OUT. The selected sitemaps (entity
-    // escapes, pretty-printed loc, junk priority, loc-less entry) parse
-    // relationally; q189's robots rules gate the discovered URLs; q190's
-    // Crawl-delay ladders schedule what survives. Oracle replays the
-    // directive extraction, the gate join, parse, gate and schedule -----
-    "q193_discovery" -> ((s, _) => {
-      val R = graft.functions.RobotsFunctions
-      val robots = robotsFixture(s)
-      val rules = R.robotsRules(robots, "host", "body", "graftbot")
-      val delays = R.robotsCrawlDelay(robots, "host", "body", "graftbot")
-      val urls = graft.functions.SitemapFunctions
-        .sitemapUrls(fetchedSitemaps(s), "body")
-        .withColumnRenamed("loc", "url")
-        .drop("sm_url", "host")
-      val frontier = R.filterByRobots(urls, rules, "url")
-      R.scheduleFrontier(frontier, delays, "url", defaultDelay = 1.0)
-        .select(col("url"), col("lastmod"), r2(col("priority")).as("priority"),
-          r2(col("crawl_delay")).as("crawl_delay"),
-          r2(col("fetch_at")).as("fetch_at"))
-        .orderBy(col("url"))
-    }),
-    // ---- WEIGHTED (term-frequency) near-dup pairs: the unary expansion
-    // (gram → gram#occ elements) makes set machinery compute multiset
-    // Jaccard exactly, and the weighted MinHash rides the SAME band-key
-    // bucket join. Bigram elements (n = 2): repetition stays visible but
-    // LSH buckets stay sparse (random-pair J ≈ 0.025 vs 0.33 at n = 1 on
-    // this shared-vocabulary corpus — the n = 1 form is quadratic here).
-    // Planted twins: 200001 = verbatim copy of doc 1 (J = 1, must pair),
-    // 200002 = doc 2 + two junk tokens (J ≈ 0.98), 200000 = doc 0
-    // TRIPLED — J ≈ 1/3 under the weighted measure (the repetition
-    // asymmetry distinct-shingle Jaccard can't see), below threshold,
-    // must NOT appear. The oracle replays elements, all three salted
-    // minima, the band join and every verification -----------------------
-    "q191_weighted_neardup" -> ((s, d) => {
-      val base = Tables.documents(s, d).filter(col("n_chars") > 0)
-        .select(col("doc_id"), col("text"))
-      val twins = base.filter(col("doc_id") <= 2).select(
-        (col("doc_id") + lit(200000L)).as("doc_id"),
-        when(col("doc_id") === 0,
-            concat_ws(" ", col("text"), col("text"), col("text")))
-          .when(col("doc_id") === 1, col("text"))
-          .otherwise(concat(col("text"), lit(" zq zq"))).as("text"))
-      D.weightedNeardupPairs(base.unionByName(twins), "text", "doc_id",
-          n = 2, bands = 1, rowsPerBand = 3, jaccardThreshold = 0.6)
-        .select(col("id_a"), col("id_b"), r4(col("jaccard")).as("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    // ---- PageRank (crawl prioritization): 8 power iterations with
-    // dangling-mass redistribution over a deterministic doc_id link graph
-    // (every 7th vertex dangling, 1–3 arithmetic out-links, self-loops
-    // dropped, parallel edges vote twice). The oracle replays all 8
-    // rounds unrolled; mrank = rank × 1000 so round(…, 6) keeps ~6
-    // significant digits at any SF ---------------------------------------
-    // ---- the crawl LIFECYCLE closed in one query: q197 plans a fetch,
-    // q170/q175 process fetches — this composes them. Discovery (archive
-    // addresses ∪ out-links of fetched pages, canonicalized) → robots
-    // gate (graftbot policy over both fixture hosts; /privacy and
-    // $-anchored /terms rules provably bite) → per-host cap → Crawl-delay
-    // schedule = the PLAN; joined against the .warc.gz archive as the
-    // FETCH RESULTS; the fetched HTML subset runs gate → exact dedup →
-    // near dedup → token shards = the CORPUS. One row per planned URL:
-    // outcome ∈ miss/error/skip/thin/dup/near/kept (+ shard for kept).
-    // Oracle = the python generator's independent replay of the whole
-    // composition (gen_warc_fixture.q198_rows: own robots matcher, own
-    // urljoin resolution, own minhash/union-find/shard arithmetic).
-    // Reference anchor: the dispatch→download→publish chain,
-    // tasks.py:135–240 + controller.py:318–365 -----------------------------
-    "q198_crawl_lifecycle" -> ((s, _) => {
-      val R = graft.functions.RobotsFunctions
-      val U = graft.functions.UrlFunctions
-      val H = graft.functions.HtmlFunctions
-      val Smp = graft.functions.SamplingFunctions
-      // staged once: BOTH the response plane and the out-link plane read
-      // this cut — unmaterialized, each branch re-ran the gunzip+parse of
-      // the whole archive (r19; the checkpoint carries only the columns
-      // the two branches need)
-      val warc = graft.sources.Warc.readWarc(s, warcFixtureDir())
-        .filter(col("file").endsWith(".warc.gz") && col("warc_type") === "response")
-        .select(col("record_index"), col("target_uri"), col("http_status"),
-          col("http_content_type"), col("payload"))
-        .localCheckpoint(true)
-      val responses = warc
-        .select(col("record_index").cast("long").as("rid"),
-          U.canonicalizeUrl(col("target_uri")).as("url"),
-          col("http_status"), col("http_content_type"),
-          col("payload"))
-        // ONE record per canonical URL before the plan join: the python
-        // replay's by_canon dict keeps the LAST archive record per
-        // canonical address, and two records canonicalizing to the same
-        // URL would otherwise fan plan rows out. Keep-max-rid = last in
-        // record order; a left_semi on the per-URL max, same shape as the
-        // exact-dedup keeper step below.
-        .withColumn("__maxrid",
-          max(col("rid")).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("url"))))
-        .filter(col("rid") === col("__maxrid")).drop("__maxrid")
-        .localCheckpoint(true) // the archive is staged once; plan, join and
-                               // corpus all read this cut, never the raw scan
-      val links = warc
-        .filter(col("http_status") === 200 &&
-          col("http_content_type").startsWith("text/html"))
-        .select(col("target_uri"),
-          H.decodeBody(col("payload"), col("http_content_type")).as("html"))
-        .select(col("target_uri"), explode(H.extractLinks(col("html"))).as("l"))
-        .select(U.canonicalizeUrl(
-          U.resolveUrl(col("target_uri"), col("l.href"))).as("url"))
-      val discovered = responses.select(col("url")).unionByName(links).distinct()
-      val robots = lifecycleRobotsFixture(s)
-      val rules = R.robotsRules(robots, "host", "body", "graftbot")
-      val delays = R.robotsCrawlDelay(robots, "host", "body", "graftbot")
-      val fetchable = R.filterByRobots(discovered, rules, "url")
-        .withColumn("h", U.urlHost(col("url")))
-      // h carried through the cap: the schedule window reuses the cap
-      // window's exchange and sort (r19)
-      val plan = R.scheduleFrontier(
-        Smp.capPerGroup(fetchable, col("h"), col("url"), 25),
-        delays, "url", defaultDelay = 1.0, hostCol = Some("h"))
-        .drop("h")
-      // cut after the plan × fetch join: both downstream reads (HTML gate,
-      // final classify) would otherwise re-run the robots decision fold
-      // and the two schedule windows — measured 1.4x wall without the cut
-      val joined = plan.join(responses, Seq("url"), "left")
-        .localCheckpoint(true)
-      val html = joined
-        .filter(col("rid").isNotNull && col("http_status") === 200 &&
-          col("http_content_type").startsWith("text/html"))
-        // charset-aware decode (identity on this all-ASCII fixture; the
-        // q202 battery pins the legacy-charset behavior)
-        .withColumn("mt", H.mainText(
-          H.decodeBody(col("payload"), col("http_content_type"))))
-        .filter(length(col("mt")) >= 40)
-        .select(col("url"), col("rid"), col("mt"))
-        .localCheckpoint(true)
-      val keepers = html.join(
-        html.groupBy(col("mt")).agg(min(col("rid")).as("rid")),
-        Seq("mt", "rid"), "left_semi")
-      val kept = graft.functions.DedupFunctions.dedupNear(keepers, "mt", "rid",
-          n = 3, bands = 4, rowsPerBand = 2, jaccardThreshold = 0.6)
-        .withColumn("tokens",
-          graft.functions.TextFunctions.tokenCount(col("mt")).cast("long"))
-      val sharded = Smp.shardByTokenBudget(kept, col("rid"), col("tokens"),
-        "lifecycle", 30L)
-      joined
-        .join(html.select(col("url"), lit(true).as("gated")), Seq("url"), "left")
-        .join(keepers.select(col("url"), lit(true).as("keeper")), Seq("url"), "left")
-        .join(sharded.select(col("url"), col("shard")), Seq("url"), "left")
-        .select(col("url"), r2(col("fetch_at")).as("fetch_at"),
-          when(col("rid").isNull, "miss")
-            .when(col("http_status") =!= 200, "error")
-            .when(!col("http_content_type").startsWith("text/html"), "skip")
-            .when(col("gated").isNull, "thin")
-            .when(col("keeper").isNull, "dup")
-            .when(col("shard").isNull, "near")
-            .otherwise("kept").as("outcome"),
-          col("shard"))
-        .orderBy(col("url"))
-    }),
-    // ---- registered domain at FULL public-suffix-list width: a 12-way
-    // deterministic host battery (synthetic exact2/exact3 hits, wildcard
-    // suffixes, exception-vs-wildcard discrimination, curated co.uk /
-    // k12.ca.us / kawasaki.jp city exceptions, suffix-itself, IP,
-    // single-label, unlisted-TLD default) resolved by the per-depth
-    // BROADCAST-JOIN geometry over 9,360 rules — the form the literal
-    // arrays can't carry (SCALE.md r17, full-PSL geometry: the plan-width cliff).
-    // The oracle regenerates the same rule set with generate_series and
-    // replays the PSL precedence relationally -----------------------------
-    "q200_psl_full" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select(col("doc_id"))
-      val m = pmod(col("doc_id"), lit(8000))
-      val j = pmod(col("doc_id"), lit(400))
-      val j3 = pmod(col("doc_id"), lit(800))
-      val c = pmod(col("doc_id"), lit(12))
-      val host = when(c === 0, concat(lit("a.b.s"), m, lit(".t"), pmod(m, lit(97))))
-        .when(c === 1, concat(lit("a.b.w"), j))
-        .when(c === 2, concat(lit("a.ok.w"), j))
-        .when(c === 3, concat(lit("ex"), col("doc_id"), lit(".com")))
-        .when(c === 4, concat(lit("deep.sub.ex"), col("doc_id"), lit(".co.uk")))
-        .when(c === 5, concat(lit("s"), m, lit(".t"), pmod(m, lit(97))))
-        .when(c === 6, lit("192.168.0.1"))
-        .when(c === 7, lit("localhost"))
-        .when(c === 8, lit("b.city.kawasaki.jp"))
-        .when(c === 9, lit("x.y.kawasaki.jp"))
-        .when(c === 10, concat(lit("a"), col("doc_id"), lit(".k12.ca.us")))
-        .otherwise(concat(lit("u"), j3, lit(".s"), pmod(j3, lit(40)),
-          lit(".t"), pmod(j3, lit(97))))
-      val urls = docs.select(col("doc_id"),
-        concat(lit("http://"), host, lit("/p")).as("url"))
-      graft.functions.UrlFunctions
-        .registeredDomainJoined(urls, "url", fullPslRules, "regdom")
-        .orderBy(col("doc_id"))
-    }),
-    "q192_pagerank" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select(col("doc_id"))
-      graft.functions.GraphFunctions
-        .pageRank(docs, pagerankEdges(docs, docs.count()),
-          "doc_id", "src", "dst", iterations = 8)
-        .select(col("id").as("doc_id"), r6(col("rank") * 1000).as("mrank"))
-        .orderBy(col("doc_id"))
-    }),
-    // ---- the discovery RECURSION: robots `Sitemap:` directive →
-    // sitemapINDEX fetch → child references (pretty-printed loc trims,
-    // loc-less entry drops) → child sitemap fetches (the orphan child the
-    // index never lists stays out) → urlset parse (entity-escaped query
-    // URL) → robots gate (/private/ bites inside a child) → Crawl-delay
-    // ladder. Depth-2 discovery exactly as a crawler walks it; every
-    // fetch edge is a semi-join on announced addresses. Oracle replays
-    // directive extraction, both parse levels, both gates and the
-    // schedule from the same body literals ---------------------------------
-    "q201_sitemap_recursion" -> ((s, _) => {
-      val R = graft.functions.RobotsFunctions
-      val robots = indexRobotsFixture(s)
-      val rules = R.robotsRules(robots, "host", "body", "graftbot")
-      val delays = R.robotsCrawlDelay(robots, "host", "body", "graftbot")
-      val bodies = sitemapIndexFixture(s)
-      // the first-class fixed-point operator (the r17 form hand-unrolled
-      // these two depths; CrawlSpec pins operator ≡ unrolled at depth 3)
-      val urls = graft.functions.CrawlFunctions
-        .discoverSitemaps(robots, bodies, maxDepth = 2)
-        .withColumnRenamed("loc", "url")
-        .drop("sm_url", "depth", "lastmod")
-      val frontier = R.filterByRobots(urls, rules, "url")
-      R.scheduleFrontier(frontier, delays, "url", defaultDelay = 1.0)
-        .select(col("url"), r2(col("priority")).as("priority"),
-          r2(col("crawl_delay")).as("crawl_delay"),
-          r2(col("fetch_at")).as("fetch_at"))
-        .orderBy(col("url"))
-    }),
-    // ---- charset-aware body decode: the dedicated WARC battery whose
-    // bodies are NOT all UTF-8 (ISO-8859-1 accents, Windows-1252 curly
-    // quotes in the 0x80–0x9F gap, GBK, an http-equiv meta sniff, a
-    // bogus charset falling back, plain UTF-8, and an UNDECLARED
-    // Windows-1252 page only the valid-UTF-8→cp1252 heuristic can
-    // decode — the WET-extractor convention). The oracle rows are
-    // literal VALUES from the INDEPENDENT python decode replay
-    // (scripts/gen_charset_fixture.py), which ASSERTS that a naive
-    // cast("string") decode yields a DIFFERENT main-text md5 on every
-    // legacy-charset record — these hashes are only reachable through
-    // correct charset resolution --------------------------------------
-    "q202_charset_decode" -> ((s, _) => {
-      val H = graft.functions.HtmlFunctions
-      graft.sources.Warc.readWarc(s, charsetWarcDir())
-        .filter(col("warc_type") === "response" &&
-          col("http_status") === 200 &&
-          col("http_content_type").startsWith("text/html"))
-        .withColumn("mt", H.mainText(
-          H.decodeBody(col("payload"), col("http_content_type"))))
-        .select(col("target_uri").as("url"),
-          H.bodyCharset(col("payload"), col("http_content_type")).as("cs"),
-          md5(col("mt").cast("binary")).as("mt_md5"),
-          length(col("mt")).cast("long").as("n_chars"))
-        .orderBy(col("url"))
-    }),
-    // ---- distributed dense-id assignment as its own oracled surface:
-    // a non-contiguous, scrambled id space (7·doc_id + a bucket offset)
-    // densifies to 0..N−1 in sort order WITHOUT a single-partition
-    // window (range partition + per-partition zipWithIndex offsets; the
-    // operator q192/q199's vid map runs on). The oracle is the
-    // definition itself: row_number() over (order by id) − 1 ------------
-    // ---- the INCREMENTAL crawl plan — the capstone of the cache/
-    // anti-join loop: rules and delays come ENTIRELY from the persisted
-    // robots cache (q203's machinery; batch 2's unchanged bodies cost
-    // one anti-join), the already-fetched set (the first 3 scheduled per
-    // host — capPerGroup's default md5 order IS scheduleFrontier's
-    // ladder order, so "first K scheduled" is expressible as a cap)
-    // leaves by anti-join, and only the REMAINING URLs ladder. This is
-    // what batch N+1 of a real crawl plans: no robots re-derivation, no
-    // re-planning of what's already fetched. Oracle replays gate, the
-    // first-3 window, the set difference and the re-ladder from scratch -
-    "q206_incremental_plan" -> ((s, d) => {
-      val R = graft.functions.RobotsFunctions
-      val U = graft.functions.UrlFunctions
-      val dir = memoLayout("q203_robots_cache", "battery") { tmp =>
-        val robots = robotsFixture(s).localCheckpoint(true)
-        R.writeRobotsCache(s, tmp,
-          robots.filter(col("host") === "h0.example"),
-          "host", "body", "graftbot")
-        R.appendRobotsCache(s, tmp, robots, "host", "body", "graftbot")
-      }
-      val rules = R.cachedRules(s, dir)
-      val delays = R.cachedDelays(s, dir)
-      val fetchable = R.filterByRobots(robotsUrls(s, d), rules, "url")
-        .select(col("url")).distinct()
-        .withColumn("h", U.urlHost(col("url")))
-      val fetched = graft.functions.SamplingFunctions
-        .capPerGroup(fetchable, col("h"), col("url"), 3)
-      // h kept through the anti-join (broadcast at this scale, so cap's
-      // host partitioning survives into the schedule window — r19)
-      val remaining = fetchable
-        .join(fetched.select(col("url")), Seq("url"), "left_anti")
-      R.scheduleFrontier(remaining, delays, "url", defaultDelay = 1.0,
-          hostCol = Some("h"))
-        .select(col("url"),
-          r2(col("crawl_delay")).as("crawl_delay"),
-          r2(col("fetch_at")).as("fetch_at"))
-        .orderBy(col("url"))
-    }),
-    // ---- warm-start pageRank: the incremental re-rank an ongoing crawl
-    // runs every batch — start the power iteration from the PREVIOUS
-    // rank vector instead of uniform. The contract is exact chaining on
-    // an unchanged graph: init = rank_6, 2 more rounds ≡ 8 rounds from
-    // uniform, so the oracle is q192's 8-round replay VERBATIM — any
-    // drift in the warm-start path (init join, default for unseen
-    // vertices, mass handling) hash-mismatches ---------------------------
-    "q205_warm_pagerank" -> ((s, d) => {
-      val G = graft.functions.GraphFunctions
-      val docs = Tables.documents(s, d).select(col("doc_id"))
-      val edges = pagerankEdges(docs, docs.count()).localCheckpoint(true)
-      val r6ranks = G.pageRank(docs, edges, "doc_id", "src", "dst",
-        iterations = 6)
-      G.pageRank(docs, edges, "doc_id", "src", "dst", iterations = 2,
-          initialRanks = Some(r6ranks))
-        .select(col("id").as("doc_id"), r6(col("rank") * 1000).as("mrank"))
-        .orderBy(col("doc_id"))
-    }),
-    "q204_densify_ids" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-        .select((col("doc_id") * 7 + pmod(col("doc_id"), lit(13)) * 1000000).as("ext_id"),
-          col("doc_id"))
-      graft.functions.GraphFunctions.densifyIds(docs, "ext_id", "vid")
-        .select(col("ext_id"), col("doc_id"), col("vid"))
-        .orderBy(col("ext_id"))
-    }),
-    // ---- the PERSISTED robots cache serving a frontier: init from h0's
-    // body alone, append the full fixture (h0's unchanged body is caught
-    // by the digest anti-join and re-derives NOTHING — RobotsSpec
-    // asserts the zero; h1 is new and parses) — then the schedule is
-    // built ENTIRELY from cache-served rules/delays. The oracle is
-    // q190's from-scratch replay VERBATIM: cache-served ≡ re-derived is
-    // the cache's correctness contract ---------------------------------
-    "q203_robots_cache" -> ((s, d) => {
-      val R = graft.functions.RobotsFunctions
-      val dir = memoLayout("q203_robots_cache", "battery") { tmp =>
-        val robots = robotsFixture(s).localCheckpoint(true)
-        R.writeRobotsCache(s, tmp,
-          robots.filter(col("host") === "h0.example"),
-          "host", "body", "graftbot")
-        R.appendRobotsCache(s, tmp, robots, "host", "body", "graftbot")
-      }
-      val rules = R.cachedRules(s, dir)
-      val delays = R.cachedDelays(s, dir)
-      val frontier = R.filterByRobots(robotsUrls(s, d), rules, "url")
-        .select(col("url")).distinct()
-      R.scheduleFrontier(frontier, delays, "url", defaultDelay = 1.0)
-        .select(col("url"),
-          r2(col("crawl_delay")).as("crawl_delay"),
-          r2(col("fetch_at")).as("fetch_at"))
-        .orderBy(col("url"))
-    }),
-    // ---- robots-cache COMPACTION serving a frontier: the cache takes
-    // h0, then the full fixture, then a CHANGED h1 body, then h1's
-    // REVERT to the fixture body — four generations, two of them stale
-    // — and compactRobotsCache rewrites the latest views as one gen-0
-    // epoch (atomic `c=N/_SUCCESS` flip, the compactWindowIndex
-    // discipline). The schedule then builds ENTIRELY from the compacted
-    // cache; the oracle is q190's from-scratch replay VERBATIM —
-    // compacted ≡ cache-served ≡ re-derived is the compaction's
-    // correctness contract ------------------------------------------------
-    "q207_compacted_cache" -> ((s, d) => {
-      val R = graft.functions.RobotsFunctions
-      val dir = memoLayout("q207_compacted_cache", "battery") { tmp =>
-        val robots = robotsFixture(s).localCheckpoint(true)
-        R.writeRobotsCache(s, tmp,
-          robots.filter(col("host") === "h0.example"),
-          "host", "body", "graftbot")
-        R.appendRobotsCache(s, tmp, robots, "host", "body", "graftbot")
-        // a stale change + its revert: compaction must drop both stale
-        // generations and serve exactly the fixture's latest rules
-        R.appendRobotsCache(s, tmp,
-          robots.filter(col("host") === "h1.example")
-            .withColumn("body",
-              lit("User-agent: graftbot\nDisallow: /interim/\nCrawl-delay: 9")),
-          "host", "body", "graftbot")
-        R.appendRobotsCache(s, tmp,
-          robots.filter(col("host") === "h1.example"),
-          "host", "body", "graftbot")
-        R.compactRobotsCache(s, tmp)
-      }
-      val rules = R.cachedRules(s, dir)
-      val delays = R.cachedDelays(s, dir)
-      val frontier = R.filterByRobots(robotsUrls(s, d), rules, "url")
-        .select(col("url")).distinct()
-      R.scheduleFrontier(frontier, delays, "url", defaultDelay = 1.0)
-        .select(col("url"),
-          r2(col("crawl_delay")).as("crawl_delay"),
-          r2(col("fetch_at")).as("fetch_at"))
-        .orderBy(col("url"))
-    }),
-    // ---- registered-domain extraction against the REAL public suffix
-    // list (UrlFunctions.vendoredPslRules — the verbatim publicsuffix.org
-    // snapshot from the Debian `publicsuffix` package, 9,506 rules,
-    // ICANN + PRIVATE sections), through the broadcast-join geometry
-    // built for full width (registeredDomainJoined, SCALE.md r17). The
-    // battery exercises every precedence branch on REAL rules: exact
-    // 2–5-label suffixes, *.ck / *.kawasaki.jp / *.compute.amazonaws.com
-    // wildcards, !www.ck / !city.kawasaki.jp exceptions, PRIVATE-section
-    // rules (blogspot.com, s3.amazonaws.com), a U-label IDN rule
-    // (公司.cn), the default '*' rule, IP / single-label / suffix-itself
-    // pass-throughs. Oracle rows are literal VALUES from the INDEPENDENT
-    // python PSL replay (scripts/gen_psl_oracle.py), which asserts that
-    // on 16 of the 28 rows the naive last-2-labels fallback yields a
-    // DIFFERENT answer — a hash match proves real rule resolution ------
-    "q208_psl_vendored" -> ((s, _) => {
-      import s.implicits._
-      val hosts = Seq(
-        "example.com", "www.example.com", "deep.a.b.example.com",
-        "example.co.uk", "www.example.co.uk",
-        "b.test.ck", "a.b.test.ck", "www.ck", "www.www.ck", "test.ck",
-        "www.city.kawasaki.jp", "a.b.kawasaki.jp", "kawasaki.jp",
-        "myblog.blogspot.com", "www.myblog.blogspot.com",
-        "bucket.s3.amazonaws.com", "s3.amazonaws.com",
-        "x.y.eu-west-1.compute.amazonaws.com",
-        "host.pvt.k12.ma.us", "sub.host.pvt.k12.ma.us",
-        "b.s3.cn-north-1.amazonaws.com.cn", "c.b.s3.cn-north-1.amazonaws.com.cn",
-        "example.公司.cn", "example.unknowntld", "a.example.unknowntld",
-        "192.168.0.1", "localhost", "a.schools.nsw.edu.au")
-      val urls = hosts.map(h => s"http://$h/x").toDF("url")
-      graft.functions.UrlFunctions
-        .registeredDomainJoined(urls, "url",
-          graft.functions.UrlFunctions.vendoredPslRules, "regdom")
-        .orderBy(col("url"))
-    }),
-    // ---- the PRIORITY-AWARE frontier — the last piece of the
-    // Common-Crawl frontier story: q192's PageRank over the doc link
-    // graph becomes the fetch budget AND the fetch order. Per URL the
-    // best rank of the docs claiming it (q190's URL scheme maps many
-    // docs to one address) → robots gate → per-host cap keeps the TOP-10
-    // BY RANK (capPerGroup's orderBy override, not the uniform md5
-    // sample) → scheduleFrontier ladders each host BY RANK (highest
-    // first, url tiebreak). Ordering crosses engines through
-    // round(rank·1000, 6) — the same 6-decimal contract q192's hash
-    // parity stands on. The oracle replays all 8 power rounds, the gate,
-    // both rank-ordered windows and the ladder arithmetic ----------------
-    "q199_rank_frontier" -> ((s, d) => {
-      val R = graft.functions.RobotsFunctions
-      val robots = robotsFixture(s)
-      val rules = R.robotsRules(robots, "host", "body", "graftbot")
-      val delays = R.robotsCrawlDelay(robots, "host", "body", "graftbot")
-      val docs = Tables.documents(s, d).select(col("doc_id"))
-      val ranks = graft.functions.GraphFunctions
-        .pageRank(docs, pagerankEdges(docs, docs.count()),
-          "doc_id", "src", "dst", iterations = 8)
-        .select(col("id").as("doc_id"), r6(col("rank") * 1000).as("mrank"))
-      val ranked = R.filterByRobots(robotsUrls(s, d), rules, "url")
-        .join(ranks, "doc_id")
-        .groupBy(col("url")).agg(max(col("mrank")).as("mrank"))
-        .withColumn("h", graft.functions.UrlFunctions.urlHost(col("url")))
-      // h carried from cap to schedule: same attribute, same order ⇒ the
-      // schedule window reuses the cap window's exchange and sort (r19)
-      val capped = graft.functions.SamplingFunctions
-        .capPerGroup(ranked, col("h"), col("url"), 10,
-          orderBy = Seq(col("mrank").desc, col("url")))
-      R.scheduleFrontier(capped, delays, "url", defaultDelay = 1.0,
-          orderBy = Seq(col("mrank").desc, col("url")), hostCol = Some("h"))
-        .select(col("url"), col("mrank"),
-          r2(col("crawl_delay")).as("crawl_delay"),
-          r2(col("fetch_at")).as("fetch_at"))
-        .orderBy(col("url"))
-    })
-  )
-
-  /** q192/q199's deterministic link graph, valid over ANY doc_id space:
-    * vertices take dense ranks (vid = row_number over doc_id order),
-    * out-links are arithmetic in vid space (every 7th vertex dangling,
-    * 1–3 out-links, self-loops dropped, parallel edges vote twice), and
-    * edges map back to real doc_ids through the vid↔doc_id bijection. On
-    * contiguous 0..N−1 corpora (the verify SFs) vid = doc_id and the
-    * graph is bit-identical to the pre-r17 arithmetic form; on replicated
-    * corpora (MakeSf1's offset id space) the graph stays CLOSED over real
-    * vertices — which is precisely what pageRank's strict ghost-vertex
-    * contract caught at sf1: the old form aimed most edges at ids that
-    * existed only in modular arithmetic, silently leaking rank mass.
-    * Dense vids come from [[graft.functions.GraphFunctions.densifyIds]]
-    * (range-partition + per-partition offsets), NOT a global row_number
-    * window — the r17 form's Exchange SinglePartition serialized graph
-    * construction on one task and was the q192 weak; identical vids, no
-    * single-partition stage (PlanSpec asserts). */
-  private def pagerankEdges(docs: DataFrame, n: Long): DataFrame = {
-    val vmap = graft.functions.GraphFunctions
-      .densifyIds(docs.select(col("doc_id")), "doc_id", "vid")
-      .localCheckpoint(true)
-    val cand = array(
-      pmod(col("vid") * 31 + 7, lit(n)),
-      pmod(col("vid") * 17 + 3, lit(n)),
-      pmod(col("vid") * 13 + 11, lit(n)))
-    val k = when(pmod(col("vid"), lit(7)) === 0, lit(0))
-      .otherwise((pmod(col("vid"), lit(3)) + 1).cast("int"))
-    vmap.select(col("vid"), explode(slice(cand, lit(1), k)).as("dvid"))
-      .filter(col("vid") =!= col("dvid"))
-      .join(vmap.select(col("vid"), col("doc_id").as("src")), "vid")
-      .join(vmap.select(col("vid").as("dvid"), col("doc_id").as("dst")), "dvid")
-      .select(col("src"), col("dst"))
-  }
-
-  /** The q189/q190 robots.txt fixture — two hosts, same body literals the
-    * oracle's VALUES carry. h0 exercises specific-group shadowing, the
-    * '*'/'$' patterns, the allow-wins tie and a Crawl-delay; h1 exercises
-    * merged UA runs, empty values and a non-applying third group; h2 has
-    * no robots.txt at all (the default-allow path). */
-  private def robotsFixture(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq(
-      ("h0.example", Seq(
-        "# politeness for the fixture crawler",
-        "Sitemap: http://h0.example/sitemap.xml", // outside any group (§2.2.4)
-        "User-agent: graftbot",
-        "Disallow: /private/",
-        "Allow: /private/public/",
-        "Disallow: /*.pdf$",
-        "Disallow: /admin",
-        "Allow: /admi*",
-        "Crawl-delay: 10",
-        "User-agent: *",
-        "Disallow: /").mkString("\n")),
-      ("h1.example", Seq(
-        "User-agent: otherbot",
-        "User-agent: *",
-        "Disallow: /tmp/",
-        "Disallow: /search?*q=",
-        "Allow:",
-        "Disallow:",
-        "User-agent: thirdbot",
-        "Disallow: /",
-        "sitemap: http://h1.example/sitemap.xml") // lowercase, inside a group
-        .mkString("\n"))).toDF("host", "body")
-  }
-
-  /** The q198 lifecycle robots policy for the WARC fixture's two hosts —
-    * same literals the python replay's rule table carries. fixture.example
-    * names the graftbot token (plain prefix rule + a Crawl-delay);
-    * mirror.example's star group exercises the `$` end anchor. */
-  private def lifecycleRobotsFixture(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq(
-      ("fixture.example", Seq(
-        "User-agent: graftbot",
-        "Disallow: /privacy",
-        "Crawl-delay: 2").mkString("\n")),
-      ("mirror.example", Seq(
-        "User-agent: *",
-        "Disallow: /terms$").mkString("\n"))).toDF("host", "body")
-  }
-
-  /** The q193 sitemap fixture — FETCHED sitemap bodies keyed by their
-    * address (same literals as the oracle's VALUES): two urlsets that the
-    * robots fixture's `Sitemap:` directives reference (entity-escaped
-    * query URL, pretty-printed loc, junk priority, lastmod-only entry
-    * with no loc) plus one ORPHAN body no directive points at — its URLs
-    * must never reach discovery, which is exactly what the
-    * [[graft.functions.RobotsFunctions.robotsSitemaps]] semi-join gate
-    * proves. */
-  private def sitemapFixture(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq(
-      ("http://h0.example/sitemap.xml", "h0.example", Seq(
-        "<?xml version=\"1.0\" encoding=\"UTF-8\"?>",
-        "<urlset xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">",
-        "<url><loc>http://h0.example/</loc><lastmod>2026-01-05</lastmod><priority>0.9</priority></url>",
-        "<url><loc>http://h0.example/public/page1</loc><priority>0.8</priority></url>",
-        "<url><loc>http://h0.example/private/data</loc></url>",
-        "<url><loc>http://h0.example/private/public/ok</loc><lastmod>2026-02-11</lastmod></url>",
-        "<url><loc>http://h0.example/files/report.pdf</loc><priority>junk</priority></url>",
-        "<url><loc>http://h0.example/search?a=1&amp;b=2</loc><priority>0.4</priority></url>",
-        "<url><lastmod>2026-03-01</lastmod></url>",
-        "</urlset>").mkString("\n")),
-      ("http://h1.example/sitemap.xml", "h1.example", Seq(
-        "<urlset>",
-        "<url><loc>http://h1.example/tmp/cache</loc></url>",
-        "<url><loc>http://h1.example/search?q=x1</loc></url>",
-        "<url><loc>http://h1.example/ok/page</loc><priority>1.0</priority></url>",
-        "<url>",
-        "  <loc>",
-        "    http://h1.example/spaced",
-        "  </loc>",
-        "</url>",
-        "</urlset>").mkString("\n")),
-      ("http://h2.example/orphan.xml", "h2.example", Seq(
-        "<urlset>",
-        "<url><loc>http://h2.example/only-via-orphan</loc></url>",
-        "</urlset>").mkString("\n"))).toDF("sm_url", "host", "body")
-  }
-
-  /** The sitemap bodies a crawler would actually FETCH: the fixture
-    * gated to the addresses the robots fixture's `Sitemap:` directives
-    * announce (one semi-join — the discovery loop's front edge). The
-    * orphan body drops here. */
-  private def fetchedSitemaps(s: SparkSession): DataFrame = {
-    val discovered = graft.functions.RobotsFunctions
-      .robotsSitemaps(robotsFixture(s), "host", "body")
-      .select(col("sitemap_url"))
-    sitemapFixture(s).join(discovered,
-      col("sm_url") === col("sitemap_url"), "left_semi")
-  }
-
-  /** The q201 recursion fixture — one host whose robots announces a
-    * sitemapINDEX; the fetched-bodies table carries the index, its two
-    * children (one with a pretty-printed loc; the index also has a
-    * loc-less child entry that must drop) and an ORPHAN child the index
-    * never lists. Same literals as the oracle's VALUES. */
-  private def indexRobotsFixture(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq(("hx.example", Seq(
-      "User-agent: graftbot",
-      "Disallow: /private/",
-      "Crawl-delay: 3",
-      "Sitemap: http://hx.example/sitemap_index.xml").mkString("\n")))
-      .toDF("host", "body")
-  }
-
-  private def sitemapIndexFixture(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq(
-      ("http://hx.example/sitemap_index.xml", Seq(
-        "<?xml version=\"1.0\"?>",
-        "<sitemapindex xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">",
-        "<sitemap><loc>http://hx.example/sm/a.xml</loc><lastmod>2026-04-01</lastmod></sitemap>",
-        "<sitemap>",
-        "  <loc>",
-        "    http://hx.example/sm/b.xml",
-        "  </loc>",
-        "</sitemap>",
-        "<sitemap><lastmod>2026-04-02</lastmod></sitemap>",
-        "</sitemapindex>").mkString("\n")),
-      ("http://hx.example/sm/a.xml", Seq(
-        "<urlset>",
-        "<url><loc>http://hx.example/page1</loc><priority>0.7</priority></url>",
-        "<url><loc>http://hx.example/private/secret</loc></url>",
-        "<url><loc>http://hx.example/page2?b=2&amp;a=1</loc></url>",
-        "</urlset>").mkString("\n")),
-      ("http://hx.example/sm/b.xml", Seq(
-        "<urlset>",
-        "<url><loc>http://hx.example/page3</loc></url>",
-        "</urlset>").mkString("\n")),
-      ("http://hx.example/sm/c.xml", Seq(
-        "<urlset>",
-        "<url><loc>http://hx.example/only-via-orphan-child</loc></url>",
-        "</urlset>").mkString("\n"))).toDF("sm_url", "body")
-  }
-
-  /** Full-PSL-width synthetic rule set (9,280 rules + the ~80 curated
-    * real entries ≈ the active width of the real public_suffix_list.dat)
-    * from pure arithmetic formulas, so the DuckDB oracle regenerates the
-    * IDENTICAL list with generate_series — no 9k-line literal rides the
-    * SQL. Covers every rule class at width: exact 2-label (8,000), exact
-    * 3-label (800), wildcard bases (400), exceptions under those
-    * wildcards (80). */
-  private[graft] val syntheticPslRules: Seq[String] =
-    (0 until 8000).map(i => s"s$i.t${i % 97}") ++
-      (0 until 800).map(i => s"u$i.s${i % 40}.t${i % 97}") ++
-      (0 until 400).map(i => s"*.w$i") ++
-      (0 until 400 by 5).map(i => s"!ok.w$i")
-
-  private[graft] def fullPslRules: Seq[String] = {
-    val rules = graft.functions.UrlFunctions.BundledPslRules ++ syntheticPslRules
-    // the q200 oracle's candidate generator is generate_series(1, 3) —
-    // suffix depth is hardcoded to the rule set's current maximum. A
-    // 4-label rule (the real PSL has pvt.k12.ma.us) would silently
-    // under-match on the DuckDB side, so fail LOUDLY here the moment one
-    // lands; bumping the series bound in the oracle is the paired fix.
-    val maxDepth = rules.iterator
-      .map(r => r.stripPrefix("!").stripPrefix("*.").count(_ == '.') + 1).max
-    require(maxDepth <= 3,
-      s"q200 oracle generates suffix candidates to depth 3 but the rule set " +
-        s"now reaches depth $maxDepth — raise generate_series(1, 3) in the " +
-        "q200 oracle alongside this bound")
-    rules
-  }
-
-  /** Deterministic URL of an arbitrary id under the robots-plane URL
-    * scheme — host and path are pure arithmetic, so the oracle rebuilds
-    * the identical strings for any id expression. */
-  private def robotsUrlOf(id: Column): Column =
-    concat(lit("http://h"), pmod(id, lit(3)), lit(".example"),
-      when(pmod(id, lit(8)) === 0, lit("/"))
-        .when(pmod(id, lit(8)) === 1, concat(lit("/public/page"), id))
-        .when(pmod(id, lit(8)) === 2, lit("/private/data"))
-        .when(pmod(id, lit(8)) === 3, lit("/private/public/ok"))
-        .when(pmod(id, lit(8)) === 4, lit("/files/report.pdf"))
-        .when(pmod(id, lit(8)) === 5, concat(lit("/search?q=x"), id))
-        .when(pmod(id, lit(8)) === 6, lit("/tmp/cache"))
-        .otherwise(lit("/admin")))
-
-  /** Deterministic URL stream for the robots queries (one row per doc). */
-  private def robotsUrls(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"),
-      robotsUrlOf(col("doc_id")).as("url"))
-
-  /** The embeddings table (doubles) plus three in-query derived twins for
-    * the sketch-plane queries — same derivations the DuckDB oracle
-    * replays with list_transform: 100000 = vec 0 × 2 (gain invariance ⇒
-    * hamming 0), 100001 = vec 1 + 0.01 (flips only near-zero projections
-    * ⇒ hamming ≈ 1), 100002 = −vec 2 (every sign flips ⇒ hamming 64, the
-    * negative control that must never pair). */
-  private def embSketchAugmented(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.embeddings(s, d)
-      .select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding").cast("array<double>").as("e"))
-    val twins = base.filter(col("vec_id") <= 2).select(
-      (col("vec_id") + lit(100000L)).as("vec_id"),
-      when(col("vec_id") === 0, transform(col("e"), x => x * lit(2.0)))
-        .when(col("vec_id") === 1, transform(col("e"), x => x + lit(0.01)))
-        .otherwise(transform(col("e"), x => -x)).as("e"))
-    base.unionByName(twins)
-  }
-
-  /** Materialize the two-GOP fixture clips (gop_00 = IDR+P, IDR+P with
-    * both IDRs in stss; gop_01 = the re-cut second GOP alone) from the
-    * committed resources. Idempotent, concurrency-safe. */
-  private def mediaGopDir(): String = {
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft-media-gop")
-    java.nio.file.Files.createDirectories(dir)
-    for (g <- 0 until 2) {
-      val in = getClass.getResourceAsStream(f"/graft/h264/corpus/gop_$g%02d.mp4")
-      val bytes = try in.readAllBytes() finally in.close()
-      writeFixtureAtomic(dir, f"gop_$g%02d.mp4", bytes)
-    }
-    dir.toString
-  }
-
-  /** The cross-modal signature plane battery shared by q174/q176/q177:
-    * image DCT pHashes over the formula PNGs + the perturbed twin (id 12),
-    * audio WHT fingerprints over the formula tones + the ×2-gain (16) and
-    * +1-noise (17) twins, video keyframe pHashes over the committed clip
-    * corpus + a byte-dup of clip 0 re-keyed as id 8 — one (modality, id,
-    * sig) table whose planted twins pair at hamming ≤ 4 in every
-    * modality. */
-  private def crossmodalSigs(s: SparkSession): DataFrame = {
-    import s.implicits._
-    val M = graft.functions.MultimodalFunctions
-    val imgs = ((0 until 12).map(i => (i.toLong, phashBatteryPng(i))) :+
-      (12L, perturbedBatteryPng())).toDF("id", "content")
-    val isig = M.imagePhash(imgs, "id", "content")
-      .select(lit("image").as("modality"), col("id"), col("phash").as("sig"))
-    def base(tid: Long)(n: Int): Long =
-      ((tid + 3) * ((n.toLong * n) % 977) + 17L * n) % 4096 - 2048
-    def tone(id: Long, f: Int => Short): (Long, Array[Byte]) =
-      (id, M.AudioCodec.pcm16Wav(Array.tabulate(1024)(f), 8000))
-    val tones = ((0 until 16).map(i => tone(i.toLong, n => base(i.toLong)(n).toShort)) :+
-      tone(16L, n => (2 * base(0L)(n)).toShort) :+
-      tone(17L, n => (base(0L)(n) + (if (n % 7 == 0) 1 else 0)).toShort))
-      .toDF("id", "content")
-    val asig = M.audioPhash(tones, "id", "content")
-      .select(lit("audio").as("modality"), col("id"), col("afp").as("sig"))
-    val dir = mediaCorpusDir()
-    val clips = s.read.format("binaryFile").option("pathGlobFilter", "*.mp4")
-      .load(dir)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap { case (p, b) =>
-        val id = "clip_(\\d+)".r.findFirstMatchIn(p).get.group(1).toLong
-        if (id == 0L) Seq((0L, b), (8L, b)) else Seq((id, b))
-      }.toDF("id", "content")
-    val vsig = M.videoPhash(clips, "id", "content")
-      .select(lit("video").as("modality"), col("id"), col("phash").as("sig"))
-    isig.unionByName(asig).unionByName(vsig)
-  }
-
-  /** Image 12 of the q174 battery: img 0's pixel formula +1 wherever
-    * `(x + y) % 5 == 0` — a true near-duplicate (identical pHash on this
-    * battery); no perturbed position holds a 255 pixel, so the PNG stays
-    * 8-bit-exact against the oracle's formula replay. */
-  private def perturbedBatteryPng(): Array[Byte] = {
-    val bi = new java.awt.image.BufferedImage(32, 32,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 32; x <- 0 until 32) {
-      val v = ((x * 7 + y * 13) * (x + y + 1) + x * y) % 256 +
-        (if ((x + y) % 5 == 0) 1 else 0)
-      bi.setRGB(x, y, (v << 16) | (v << 8) | v)
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(bi, "png", bos)
-    bos.toByteArray
-  }
-
-  /** URL battery for q171 — one case per canonicalization rule (case,
-    * userinfo, default/custom ports, fragment, trailing slash incl. the
-    * all-trailing-slashes rule, query sort + empty params + duplicate keys,
-    * missing path, IPv4, bracketed IPv6 with/without/default port,
-    * percent-escape normalization (unreserved decode / hex upcase /
-    * malformed verbatim / reserved never decoded), single-label host,
-    * PSL exception + wildcard + 2- and 3-label exact rules, non-URL
-    * salvage). The oracle carries the same literals. */
-  private val urlBattery: Seq[String] = Seq(
-    "HTTP://WWW.Example.COM:80/a/b/?b=2&a=1#frag",
-    "https://Example.com:443/",
-    "https://example.com:8443/x/",
-    "http://user:pw@Example.CO.UK/cart?item=3&&q=",
-    "http://a.b.example.co.uk",
-    "http://192.168.10.1:8080/admin#x",
-    "http://example.com/a?z=9&a=2&a=1",
-    "  http://example.com/a/  ",
-    "not a url #frag",
-    "http://localhost:80/x",
-    "HTTPS://news.example.org/path/?UTM=3#a",
-    "http://example.com?x=1",
-    "ftp://Files.Example.com:21/data/",
-    "http://sub.example.com.au/x",
-    "https://example.com/a//b//",
-    // bracketed IPv6 authorities
-    "http://[2001:DB8::1]/x",
-    "https://[2001:db8::1]:443/a/",
-    "http://[2001:db8::1]:8080/a",
-    // percent-escape normalization
-    "http://example.com/%7euser/",
-    "http://example.com/caf%c3%a9?x=%41&y=%zz",
-    "http://example.com/100%",
-    "http://example.com/a%2Fb?k=%2d%2E",
-    // PSL exception / wildcard / multi-label exact rules
-    "http://foo.www.ck/a",
-    "http://a.b.ck/",
-    "http://x.a.b.ck",
-    "http://sub.city.kawasaki.jp/",
-    "http://a.x.y.kawasaki.jp/p",
-    "http://shop.example.co.ke/",
-    "http://a.b.com.ng",
-    "http://school.district.k12.ca.us/x")
-
-  /** One 32×32 grayscale battery PNG: pixel (x, y) of image `img` has
-    * r=g=b = ((x·7 + y·13 + img·29)·(x + y + img + 1) + x·y) mod 256 —
-    * integer-exact through the PNG round-trip AND through the luma
-    * weights ((v·299+v·587+v·114)/1000 = v), so the oracle's
-    * generate_series replay of the same formula IS the decoded grid. The
-    * battery's smallest |coefficient − median| margin is ~0.24 (PHashSpec
-    * pins ≥ 1e-3), so float summation order can never flip a hash bit. */
-  private def phashBatteryPng(img: Int): Array[Byte] = {
-    val bi = new java.awt.image.BufferedImage(32, 32,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 32; x <- 0 until 32) {
-      val v = ((x * 7 + y * 13 + img * 29) * (x + y + img + 1) + x * y) % 256
-      bi.setRGB(x, y, (v << 16) | (v << 8) | v)
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(bi, "png", bos)
-    bos.toByteArray
-  }
-
-  /** Materialize the media fixture corpus: 8 committed avc1 clips (IDR+3P
-    * each, scripts/gen_h264_fixture.py — together covering the FULL
-    * decoder surface: mixed intra/P16, 16x8/8x16 and P_8x8 partitions, a
-    * 2-picture DPB with mixed ref indices, and explicit weighted
-    * prediction) + 16 WAVs synthesized from the q163 integer PCM
-    * formula — so q167 exercises the DISTRIBUTED binaryFile → demux →
-    * decode path end-to-end. Idempotent. */
-  /** Concurrency-safe fixture write under the SHARED java.io.tmpdir: two
-    * JVMs (Verify + Bench, parallel test runs) may race a writer against
-    * another JVM's binaryFile scan of the same path, so (a) an existing
-    * target with the expected length is left untouched, and (b) a fresh
-    * write goes to a dot-prefixed temp file (hidden from Hadoop's default
-    * path filter, so a concurrent scan never sees a partial file) then
-    * moves into place atomically. */
-  private def writeFixtureAtomic(dir: java.nio.file.Path, name: String,
-      bytes: Array[Byte]): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val target = dir.resolve(name)
-    // byte-compare, not length-compare: a regenerated fixture with
-    // different content but identical size must not reuse a stale copy
-    // from the shared tmpdir across versions
-    if (Files.exists(target) && Files.size(target) == bytes.length &&
-        java.util.Arrays.equals(Files.readAllBytes(target), bytes)) return
-    val tmp = Files.createTempFile(dir, "." + name, ".part")
-    Files.write(tmp, bytes)
-    try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    catch { // another JVM won the race with identical content: keep theirs
-      case _: java.nio.file.FileSystemException => Files.deleteIfExists(tmp)
-    }
-  }
-
-  private def mediaCorpusDir(): String = {
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft-media-corpus")
-    java.nio.file.Files.createDirectories(dir)
-    for (c <- 0 until 8) {
-      val in = getClass.getResourceAsStream(f"/graft/h264/corpus/clip_$c%02d.mp4")
-      val bytes = try in.readAllBytes() finally in.close()
-      writeFixtureAtomic(dir, f"clip_$c%02d.mp4", bytes)
-    }
-    for (id <- 0 until 16) {
-      val samples = Array.tabulate(1024) { n =>
-        (((id + 3).toLong * ((n.toLong * n) % 977) + 17L * n) % 4096 - 2048).toShort
-      }
-      writeFixtureAtomic(dir, f"tone_$id%02d.wav",
-        graft.functions.MultimodalFunctions.AudioCodec.pcm16Wav(samples, 8000))
-    }
-    dir.toString
-  }
-
-  /** Materialize the committed WARC fixture (classpath resources, written
-    * by scripts/gen_warc_fixture.py) into a temp directory so q164/q165
-    * exercise the real binaryFile scan path end-to-end. Idempotent. */
-  private def warcFixtureDir(): String = {
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft-warc-fixture")
-    java.nio.file.Files.createDirectories(dir)
-    Seq("tiny.warc", "tiny.warc.gz").foreach { name =>
-      val in = getClass.getResourceAsStream(s"/graft/warc/$name")
-      val bytes = try in.readAllBytes() finally in.close()
-      writeFixtureAtomic(dir, name, bytes)
-    }
-    dir.toString
-  }
-
-  /** The charset-decode WARC battery (scripts/gen_charset_fixture.py) —
-    * its OWN directory so the q198 lifecycle's `*.warc.gz` scan over the
-    * main fixture dir never picks these records up. Idempotent. */
-  private def charsetWarcDir(): String = {
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft-warc-charset")
-    java.nio.file.Files.createDirectories(dir)
-    val in = getClass.getResourceAsStream("/graft/warc/charset.warc.gz")
-    val bytes = try in.readAllBytes() finally in.close()
-    writeFixtureAtomic(dir, "charset.warc.gz", bytes)
-    dir.toString
-  }
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.build).toMap
 
   /** DuckDB-runnable oracle SQL per query; column names/aliases match the
     * Spark side exactly (the driver sorts columns by name before hashing).
     * Doubles are rounded identically on both sides. */
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity),2) AS sum_qty,
-        |  round(sum(l_extendedprice),2) AS sum_base,
-        |  round(sum(l_extendedprice*(1-l_discount)),2) AS sum_disc,
-        |  round(avg(l_quantity),2) AS avg_qty,
-        |  count(*) AS n
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_conj_filter" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag
-        |FROM lineitem
-        |WHERE l_returnflag IN ('R') AND l_quantity >= 30
-        |  AND l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1996-12-31'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q03_top_revenue" ->
-      """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS o_date,
-        |  round(sum(l_extendedprice*(1-l_discount)),2) AS revenue
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY o_orderkey, CAST(o_orderdate AS DATE)
-        |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-    "q04_exists_semi" ->
-      """SELECT o_orderpriority, count(*) AS n FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_quantity > 45)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q05_count_by_status" ->
-      "SELECT o_orderstatus, count(*) AS n FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus",
-    "q06_count_by_day_type" ->
-      """SELECT CAST(ts AS DATE) AS day, event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin,
-    "q07_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "q08_latest_per_user" ->
-      """SELECT user_id, event_id, event_type FROM events
-        |QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
-        |ORDER BY user_id""".stripMargin,
-    "q09_latest_failed_count" ->
-      """SELECT count(*) AS n_failed FROM (
-        |  SELECT user_id, event_type FROM events
-        |  QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1)
-        |WHERE event_type = 'error'""".stripMargin,
-    "q10_distinct_join" ->
-      """SELECT DISTINCT n_name FROM supplier
-        |JOIN nation ON s_nationkey = n_nationkey ORDER BY n_name""".stripMargin,
-    "q11_priority_order" ->
-      """SELECT n_nationkey, n_name, r_name FROM nation
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name LIKE 'A%' ORDER BY n_nationkey""".stripMargin,
-    "q12_pagination" ->
-      """SELECT o_orderkey, o_orderstatus, round(o_totalprice,2) AS total
-        |FROM orders ORDER BY o_orderkey LIMIT 10 OFFSET 20""".stripMargin,
-    "q13_interval_overlap" ->
-      """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS o_date FROM orders
-        |WHERE o_orderdate <= TIMESTAMP '1997-07-15'
-        |  AND o_orderdate + INTERVAL 30 DAY >= TIMESTAMP '1997-06-01'
-        |ORDER BY o_orderkey""".stripMargin,
-    "q14_bbox_filter" ->
-      """SELECT p_partkey, p_size, round(p_retailprice,2) AS price FROM part
-        |WHERE NOT (p_size + 3 < 10 OR p_size > 20
-        |        OR p_retailprice + 100 < 1000 OR p_retailprice > 1500)
-        |ORDER BY p_partkey""".stripMargin,
-    "q15_union_distinct" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |UNION SELECT s_nationkey FROM supplier ORDER BY nationkey""".stripMargin,
-    "q16_except" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |EXCEPT SELECT s_nationkey FROM supplier ORDER BY nationkey""".stripMargin,
-    "q17_count_distinct" ->
-      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts, count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q18_max_per_group" ->
-      """SELECT l_orderkey, CAST(max(l_shipdate) AS DATE) AS last_ship, count(*) AS n_lines
-        |FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin,
-    "q19_scalar_count" ->
-      "SELECT count(*) AS n FROM lineitem WHERE l_discount > 0.05",
-    "q20_top_customers" ->
-      """SELECT c_custkey, c_name, round(sum(o_totalprice),2) AS total
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey, c_name ORDER BY total DESC, c_custkey LIMIT 10""".stripMargin,
-    "q21_band_expr" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  round(10000.0 * ((l_extendedprice - l_quantity*100) /
-        |                   (l_extendedprice + l_quantity*100)), 2) AS ndvi
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q22_emb_norm" ->
-      """SELECT vec_id,
-        |  round(sqrt(list_aggregate(list_transform(CAST(embedding AS DOUBLE[]),
-        |        x -> x*x), 'sum')), 4) AS l2
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "q23_token_stats" ->
-      """SELECT doc_id,
-        |  len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens,
-        |  length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS n_punct
-        |FROM documents WHERE n_chars > 0 ORDER BY doc_id""".stripMargin,
-    "q24_exact_dup_groups" ->
-      """SELECT md5(text) AS digest, count(*) AS n_dups, min(doc_id) AS canonical_id
-        |FROM documents GROUP BY md5(text) ORDER BY digest""".stripMargin,
-    "q25_dedup_summary" ->
-      "SELECT count(*) AS n_docs, count(DISTINCT md5(text)) AS n_distinct FROM documents",
-    "q26_minhash" ->
-      """WITH sh AS (
-        |  SELECT doc_id, list_transform(
-        |    generate_series(1, greatest(len(regexp_split_to_array(trim(text),'\s+')) - 2, 0)),
-        |    i -> regexp_split_to_array(trim(text),'\s+')[i] || ' ' ||
-        |         regexp_split_to_array(trim(text),'\s+')[i+1] || ' ' ||
-        |         regexp_split_to_array(trim(text),'\s+')[i+2]) AS shingles
-        |  FROM documents)
-        |SELECT doc_id,
-        |  list_aggregate(list_transform(shingles, s -> md5('s0' || s)), 'min') AS mh0,
-        |  list_aggregate(list_transform(shingles, s -> md5('s1' || s)), 'min') AS mh1
-        |FROM sh ORDER BY doc_id""".stripMargin,
-    "q27_lsh_buckets" ->
-      """WITH sh AS (
-        |  SELECT doc_id, list_transform(
-        |    generate_series(1, greatest(len(regexp_split_to_array(trim(text),'\s+')) - 2, 0)),
-        |    i -> regexp_split_to_array(trim(text),'\s+')[i] || ' ' ||
-        |         regexp_split_to_array(trim(text),'\s+')[i+1] || ' ' ||
-        |         regexp_split_to_array(trim(text),'\s+')[i+2]) AS shingles
-        |  FROM documents),
-        |keys AS (
-        |  SELECT doc_id,
-        |    list_aggregate(list_transform(shingles, s -> md5('s0' || s)), 'min') || '|' ||
-        |    list_aggregate(list_transform(shingles, s -> md5('s1' || s)), 'min') AS band_key
-        |  FROM sh)
-        |SELECT band_key, count(*) AS n FROM keys GROUP BY band_key
-        |HAVING count(*) > 1 ORDER BY band_key""".stripMargin,
-    "q28_ann_topk" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS e FROM embeddings WHERE vec_id = 0)
-        |SELECT vec_id,
-        |  round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), (SELECT e FROM q)), 4) AS score
-        |FROM embeddings
-        |ORDER BY list_cosine_similarity(CAST(embedding AS DOUBLE[]), (SELECT e FROM q)) DESC, vec_id
-        |LIMIT 10""".stripMargin,
-    "q29_lang_guess" ->
-      """WITH t AS (SELECT doc_id,
-        |  list_transform(regexp_split_to_array(trim(text), '\s+'), x -> lower(x)) AS toks
-        |  FROM documents),
-        |s AS (SELECT doc_id,
-        |  len(list_filter(toks, x -> x IN ('the','a','of'))) AS s_en,
-        |  len(list_filter(toks, x -> x IN ('key','value','row'))) AS s_es,
-        |  len(list_filter(toks, x -> x IN ('join','merge','group'))) AS s_de
-        |  FROM t)
-        |SELECT doc_id, CASE WHEN s_en >= s_es AND s_en >= s_de THEN 'en'
-        |                    WHEN s_es >= s_de THEN 'es' ELSE 'de' END AS guess
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "q30_json_extract" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q31_monthly_counts" ->
-      """SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month, count(*) AS n
-        |FROM orders GROUP BY 1 ORDER BY month""".stripMargin,
-    "q32_string_parse" ->
-      """SELECT p_partkey, regexp_split_to_array(p_type, ' ')[1] AS type_head,
-        |  regexp_replace(p_brand, '#', '_', 'g') AS brand
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q33_running_sum" ->
-      """SELECT user_id, event_id,
-        |  round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |        ROWS UNBOUNDED PRECEDING), 2) AS run
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-    "q34_quality_score" ->
-      """WITH b AS (SELECT doc_id, text,
-        |  len(regexp_split_to_array(trim(text), '\s+')) AS n_tok,
-        |  length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS n_punct,
-        |  length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')) AS n_upper,
-        |  length(text) - length(regexp_replace(text, '[A-Za-z]', '', 'g')) AS n_letter
-        |  FROM documents WHERE n_chars > 0),
-        |sc AS (SELECT doc_id,
-        |  least(n_tok / 100.0, 1.0) AS len_score,
-        |  CAST(n_punct AS DOUBLE) / greatest(length(text), 1) AS punct_ratio,
-        |  CASE WHEN n_letter = 0 THEN 0.0 ELSE CAST(n_upper AS DOUBLE)/n_letter END AS upper_ratio
-        |  FROM b)
-        |SELECT doc_id, round(
-        |  len_score*0.4 +
-        |  (CASE WHEN punct_ratio > 0.2 THEN 0.0 ELSE 1.0 - punct_ratio*5.0*0.5 END)*0.3 +
-        |  (1.0 - upper_ratio*0.5)*0.3, 4) AS quality
-        |FROM sc ORDER BY doc_id""".stripMargin,
-    "q37_bandmath_tiles" ->
-      """WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS b08,
-        |  list_reverse(CAST(embedding AS DOUBLE[])) AS b04 FROM embeddings)
-        |SELECT vec_id, round(list_aggregate(list_transform(
-        |  generate_series(1, len(b08)),
-        |  i -> CAST(greatest(least(b08[i]*2.0 + b04[i], 10000.0), -10000.0) AS FLOAT)),
-        |  'sum'), 4) AS checksum
-        |FROM t ORDER BY vec_id""".stripMargin,
-    "q38_resample_tiles" ->
-      """SELECT vec_id, round(list_aggregate(list_transform(
-        |  generate_series(0, 15),
-        |  i -> embedding[((i // 4) * 2) * 8 + (i % 4) * 2 + 1]),
-        |  'sum'), 4) AS checksum
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "q85_bilinear_tiles" ->
-      """SELECT vec_id, round(list_aggregate(list_transform(
-        |  generate_series(0, 15),
-        |  i -> CAST((CAST(embedding[(i // 4 * 2) * 8 + (i % 4) * 2 + 1] AS DOUBLE)
-        |           + CAST(embedding[(i // 4 * 2) * 8 + (i % 4) * 2 + 2] AS DOUBLE)
-        |           + CAST(embedding[(i // 4 * 2 + 1) * 8 + (i % 4) * 2 + 1] AS DOUBLE)
-        |           + CAST(embedding[(i // 4 * 2 + 1) * 8 + (i % 4) * 2 + 2] AS DOUBLE))
-        |           / 4.0 AS FLOAT)),
-        |  'sum'), 4) AS checksum
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "q39_quicklook_scale" ->
-      """SELECT vec_id, round(list_aggregate(list_transform(
-        |  CAST(embedding AS DOUBLE[]),
-        |  x -> CAST(least(x/10000.0*255.0, 255.0) AS FLOAT)),
-        |  'sum'), 4) AS checksum
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "q47_dedup_near_dropped" ->
-      """WITH toks AS (SELECT doc_id, text,
-        |    regexp_split_to_array(trim(text), '\s+') AS tk FROM documents),
-        |sh AS (SELECT doc_id, list_transform(
-        |    generate_series(1, greatest(len(tk) - 2, 0)),
-        |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) AS shingles FROM toks),
-        |keys AS (SELECT doc_id, shingles,
-        |    list_aggregate(list_transform(shingles, s -> md5('s0' || s)), 'min') || '|' ||
-        |    list_aggregate(list_transform(shingles, s -> md5('s1' || s)), 'min') AS band_key
-        |  FROM sh),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM keys a JOIN keys b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(list_distinct(a.shingles), list_distinct(b.shingles))) AS DOUBLE)
-        |    / (len(list_distinct(a.shingles)) + len(list_distinct(b.shingles))
-        |       - len(list_intersect(list_distinct(a.shingles), list_distinct(b.shingles)))) >= 0.8),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |          UNION ALL SELECT id_b, id_a FROM pairs),
-        |labels AS (
-        |  WITH RECURSIVE reach(id, label) AS (
-        |    SELECT doc_id, doc_id FROM documents
-        |    UNION
-        |    SELECT e.src, r.label FROM reach r JOIN edges e ON e.dst = r.id
-        |    WHERE r.label < e.src)
-        |  SELECT id, min(label) AS label FROM reach GROUP BY id)
-        |SELECT id AS doc_id FROM labels WHERE label < id ORDER BY doc_id""".stripMargin,
-    "q48_sessionization" ->
-      """WITH g AS (SELECT user_id, event_id, value, ts,
-        |  CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 600000000 THEN 1 ELSE 0 END AS new_s
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT user_id, event_id, value,
-        |  CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                   ROWS UNBOUNDED PRECEDING) AS INTEGER) AS session_id FROM g)
-        |SELECT user_id, session_id, count(*) AS n_events, round(sum(value), 2) AS sum_value
-        |FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
-    "q49_small_qty_revenue" ->
-      """SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
-        |FROM lineitem l
-        |JOIN (SELECT l_partkey AS p_key, avg(l_quantity) * 0.5 AS half_avg
-        |      FROM lineitem GROUP BY l_partkey) a ON l.l_partkey = a.p_key
-        |WHERE l.l_quantity < a.half_avg""".stripMargin,
-    "q50_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey, sum(l_extendedprice * (1 - l_discount)) AS total_rev
-        |  FROM lineitem
-        |  WHERE l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1996-03-31'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, round(total_rev, 2) AS total_rev
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_rev = (SELECT max(total_rev) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q40_plan_activities" ->
-      """SELECT t.activity_type, (SELECT count(DISTINCT s_name) FROM supplier) AS n
-        |FROM (VALUES ('download'), ('correction'), ('publish')) AS t(activity_type)
-        |ORDER BY t.activity_type""".stripMargin,
-    "q41_reconcile_periods" ->
-      """WITH p AS (SELECT unnest(generate_series(TIMESTAMP '1997-01-01',
-        |    TIMESTAMP '1997-12-01', INTERVAL 1 MONTH)) AS period_start)
-        |SELECT CAST(period_start AS DATE) AS month, count(*) AS n
-        |FROM p JOIN orders
-        |  ON o_orderdate <= period_start + INTERVAL 1 MONTH - INTERVAL 1 SECOND
-        | AND o_orderdate + INTERVAL 30 DAY >= period_start
-        |GROUP BY 1 ORDER BY month""".stripMargin,
-    "q42_media_meta" ->
-      """SELECT doc_id,
-        |  CASE WHEN substr(upper(hex(encode(text))), 1, 4) = 'FFD8' THEN 'jpeg'
-        |       WHEN substr(upper(hex(encode(text))), 1, 4) = '8950' THEN 'png'
-        |       WHEN substr(upper(hex(encode(text))), 1, 4) = '5249' THEN 'wav'
-        |       ELSE 'raw' END AS format,
-        |  octet_length(encode(text)) % 640 + 1 AS width,
-        |  octet_length(encode(text)) % 480 + 1 AS height,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS duration_ms
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q43_neardup_pairs" ->
-      """WITH toks AS (SELECT doc_id, text,
-        |    regexp_split_to_array(trim(text), '\s+') AS tk FROM documents),
-        |sh AS (SELECT doc_id, text, list_transform(
-        |    generate_series(1, greatest(len(tk) - 2, 0)),
-        |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) AS shingles FROM toks),
-        |keys AS (SELECT doc_id, text, shingles,
-        |    list_aggregate(list_transform(shingles, s -> md5('s0' || s)), 'min') || '|' ||
-        |    list_aggregate(list_transform(shingles, s -> md5('s1' || s)), 'min') AS band_key
-        |  FROM sh)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  round(CAST(len(list_intersect(list_distinct(a.shingles), list_distinct(b.shingles))) AS DOUBLE)
-        |    / (len(list_distinct(a.shingles)) + len(list_distinct(b.shingles))
-        |       - len(list_intersect(list_distinct(a.shingles), list_distinct(b.shingles)))), 4) AS jaccard
-        |FROM keys a JOIN keys b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q44_ivf_cells" ->
-      """WITH d AS (SELECT
-        |  list_aggregate(list_transform(CAST(embedding AS DOUBLE[]), x -> (x-0.5)*(x-0.5)), 'sum') AS d0,
-        |  list_aggregate(list_transform(CAST(embedding AS DOUBLE[]), x -> (x+0.5)*(x+0.5)), 'sum') AS d1
-        |  FROM embeddings)
-        |SELECT CASE WHEN d0 <= d1 THEN 0 ELSE 1 END AS cell, count(*) AS n
-        |FROM d GROUP BY 1 ORDER BY cell""".stripMargin,
-    "q45_text_ratios" ->
-      """WITH t AS (SELECT doc_id,
-        |  regexp_split_to_array(trim(text), '\s+') AS tk FROM documents WHERE n_chars > 0)
-        |SELECT doc_id,
-        |  round(CAST(len(list_filter(tk, x -> lower(x) IN ('the','a','of','and'))) AS DOUBLE)
-        |        / len(tk), 4) AS stop_ratio,
-        |  round(CAST(list_aggregate(list_transform(tk, x -> length(x)), 'sum') AS DOUBLE)
-        |        / len(tk), 4) AS mean_tok_len
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "q46_json_buckets" ->
-      """SELECT CAST(floor(CAST(json_extract_string(props, '$.k') AS INTEGER) / 10) AS INTEGER) AS k_bucket,
-        |  count(*) AS n, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1 ORDER BY k_bucket""".stripMargin,
-    "q51_simhash_md5" ->
-      """WITH t AS (SELECT doc_id,
-        |  CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE
-        |    list_transform(regexp_split_to_array(trim(text), '\s+'), x -> md5(x)) END AS hs
-        |  FROM documents)
-        |SELECT doc_id, CAST(list_aggregate(list_transform(generate_series(0, 15), i ->
-        |  CASE WHEN 2 * len(list_filter(hs, h ->
-        |      (((strpos('0123456789abcdef', substr(h, i // 4 + 1, 1)) - 1) >> (i % 4)) & 1) = 1)) > len(hs)
-        |    THEN CAST(1 AS BIGINT) << i ELSE CAST(0 AS BIGINT) END), 'sum') AS BIGINT) AS simhash
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "q52_fingerprint_md5" ->
-      """WITH t AS (SELECT doc_id,
-        |  CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE
-        |    regexp_split_to_array(trim(text), '\s+') END AS tk
-        |  FROM documents)
-        |SELECT doc_id, CAST(list_reduce(
-        |  list_prepend(CAST(1003 AS BIGINT), list_transform(tk, t ->
-        |    CAST(list_aggregate(list_transform(generate_series(1, 6), j ->
-        |      CAST(strpos('0123456789abcdef', substr(md5(t), j, 1)) - 1 AS BIGINT) << (4 * (6 - j))),
-        |      'sum') AS BIGINT))),
-        |  (a, b) -> (a * 1000003 + b) % 1000000007) AS BIGINT) AS fp
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "q53_emb_neighbors" ->
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |                               CAST(b.embedding AS DOUBLE[])), 4) AS cos
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |                             CAST(b.embedding AS DOUBLE[])) >= 0.45
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q66_repetition" ->
-      """WITH t AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(text), '\s+') AS tk FROM documents WHERE n_chars > 0),
-        |g AS (SELECT doc_id, greatest(len(tk) - 2, 0) AS total,
-        |    len(list_distinct(list_transform(
-        |      generate_series(1, greatest(len(tk) - 2, 0)),
-        |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))) AS dist
-        |  FROM t)
-        |SELECT doc_id, CASE WHEN total = 0 THEN 0.0
-        |  ELSE round(1.0 - CAST(dist AS DOUBLE) / total, 4) END AS rep_ratio
-        |FROM g ORDER BY doc_id""".stripMargin,
-    "q65_status_pivot" ->
-      """SELECT o_orderpriority,
-        |  count(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_f,
-        |  count(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS n_o,
-        |  count(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS n_p,
-        |  round(sum(CASE WHEN o_orderstatus = 'F' THEN o_totalprice ELSE 0.0 END), 2) AS f_total
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q64_top2_per_nation" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey, sum(l_extendedprice * (1 - l_discount)) AS r
-        |  FROM lineitem GROUP BY l_suppkey)
-        |SELECT s_nationkey,
-        |  dense_rank() OVER (PARTITION BY s_nationkey ORDER BY r DESC, s_suppkey) AS rnk,
-        |  s_suppkey, round(r, 2) AS rev
-        |FROM supplier JOIN rev ON s_suppkey = l_suppkey
-        |QUALIFY rnk <= 2
-        |ORDER BY s_nationkey, rnk, s_suppkey""".stripMargin,
-    "q63_len_quantiles" ->
-      """SELECT round(quantile_cont(n_chars, 0.5), 2) AS p50,
-        |  round(quantile_cont(n_chars, 0.9), 2) AS p90,
-        |  round(quantile_cont(n_chars, 0.99), 2) AS p99
-        |FROM documents""".stripMargin,
-    "q62_hash_split" ->
-      """WITH b AS (SELECT CASE WHEN
-        |    CAST(list_aggregate(list_transform(generate_series(1, 6), j ->
-        |       CAST(strpos('0123456789abcdef', substr(md5(text), j, 1)) - 1 AS BIGINT)
-        |         << (4 * (6 - j))), 'sum') AS BIGINT) % 100 < 10
-        |  THEN 'holdout' ELSE 'train' END AS split FROM documents)
-        |SELECT split, count(*) AS n FROM b GROUP BY split ORDER BY split""".stripMargin,
-    "q61_tfidf" ->
-      """WITH toks AS (SELECT doc_id,
-        |    unnest(list_transform(regexp_split_to_array(trim(text), '\s+'),
-        |           x -> lower(x))) AS term
-        |  FROM documents WHERE trim(text) <> ''),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |dfreq AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
-        |n AS (SELECT count(*) AS nd FROM documents)
-        |SELECT doc_id, term, tf,
-        |  round(tf * (ln((nd + 1.0) / (df + 1.0)) + 1.0), 4) AS tfidf
-        |FROM tf JOIN dfreq USING (term), n
-        |ORDER BY doc_id, term""".stripMargin,
-    "q59_norm_dedup" ->
-      """SELECT count(*) AS n_docs, count(DISTINCT md5(text)) AS n_exact,
-        |  count(DISTINCT md5(trim(regexp_replace(
-        |    regexp_replace(lower(trim(text)), '[^a-z0-9\s]', ' ', 'g'),
-        |    '\s+', ' ', 'g')))) AS n_norm
-        |FROM documents""".stripMargin,
-    "q60_top_ngrams" ->
-      """WITH toks AS (SELECT regexp_split_to_array(trim(text), '\s+') AS tk
-        |  FROM documents WHERE trim(text) <> ''),
-        |ng AS (SELECT unnest(list_distinct(list_transform(
-        |    generate_series(1, greatest(len(tk) - 2, 0)),
-        |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))) AS ngram FROM toks)
-        |SELECT ngram, count(*) AS n FROM ng
-        |GROUP BY ngram ORDER BY n DESC, ngram LIMIT 20""".stripMargin,
-    "q57_intersect" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |INTERSECT SELECT s_nationkey FROM supplier ORDER BY nationkey""".stripMargin,
-    "q58_subword_count" ->
-      """SELECT doc_id,
-        |  len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\s]')) AS n_subwords
-        |FROM documents WHERE n_chars > 0 ORDER BY doc_id""".stripMargin,
-    "q56_keyset_page" ->
-      """SELECT o_orderkey, o_orderstatus, round(o_totalprice,2) AS total
-        |FROM orders WHERE o_orderkey > 30 ORDER BY o_orderkey LIMIT 10""".stripMargin,
-    "q55_frame_sample" ->
-      """SELECT doc_id, unnest(generate_series(0,
-        |    CAST(octet_length(encode(text)) AS BIGINT) - 1, 256)[1:32]) AS frame_offset
-        |FROM documents WHERE n_chars > 0
-        |ORDER BY doc_id, frame_offset""".stripMargin,
-    "q67_asof_join" ->
-      """WITH r AS (SELECT user_id, ts, max(event_id) AS err_event_id
-        |           FROM events WHERE event_type = 'error' GROUP BY 1, 2)
-        |SELECT l.event_id, l.user_id, coalesce(r.err_event_id, -1) AS err_event_id
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') l
-        |ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.event_id""".stripMargin,
-    "q84_asof_forward" ->
-      """WITH r AS (SELECT user_id, ts, max(event_id) AS next_err
-        |           FROM events WHERE event_type = 'error' GROUP BY 1, 2)
-        |SELECT l.event_id, l.user_id, coalesce(r.next_err, -1) AS next_err
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') l
-        |ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts <= r.ts
-        |ORDER BY l.event_id""".stripMargin,
-    "q68_range_join" ->
-      """SELECT CAST(date_trunc('month', l.o_orderdate) AS DATE) AS month,
-        |  count(*) AS n_pairs
-        |FROM (SELECT * FROM orders WHERE o_orderpriority = '5-LOW') l
-        |JOIN (SELECT * FROM orders WHERE o_orderpriority = '1-URGENT') u
-        |  ON l.o_orderdate BETWEEN u.o_orderdate AND u.o_orderdate + INTERVAL 2 DAY
-        |GROUP BY 1 ORDER BY month""".stripMargin,
-    "q69_rollup" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-        |  round(sum(o_totalprice), 2) AS total
-        |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "q94_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-        |  round(sum(o_totalprice), 2) AS total
-        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "q96_geotiff_roundtrip" ->
-      """SELECT vec_id,
-        |  round(list_aggregate(CAST(embedding AS DOUBLE[]), 'sum'), 4) AS checksum
-        |FROM embeddings WHERE vec_id < 64 ORDER BY vec_id""".stripMargin,
-    "q105_cog_window" ->
-      // window (x0=3, y0=2, w=4, h=5) of the row-major 8x8 scene: rows
-      // 2..6, cols 3..6 — the indexed list_filter keeps source order, so
-      // the double sum folds in the same element order as the Spark side
-      """SELECT vec_id,
-        |  round(list_aggregate(list_filter(CAST(embedding AS DOUBLE[]),
-        |    (x, i) -> ((i - 1) // 8) BETWEEN 2 AND 6
-        |           AND ((i - 1) % 8) BETWEEN 3 AND 6), 'sum'), 4) AS win_sum
-        |FROM embeddings WHERE vec_id < 64 ORDER BY vec_id""".stripMargin,
-    // same oracle as q105 on purpose: the ranged IO path must produce the
-    // byte-identical answer to the materialize-then-decode path
-    "q106_cog_ranged" ->
-      """SELECT vec_id,
-        |  round(list_aggregate(list_filter(CAST(embedding AS DOUBLE[]),
-        |    (x, i) -> ((i - 1) // 8) BETWEEN 2 AND 6
-        |           AND ((i - 1) % 8) BETWEEN 3 AND 6), 'sum'), 4) AS win_sum
-        |FROM embeddings WHERE vec_id < 64 ORDER BY vec_id""".stripMargin,
-    "q96_i16_roundtrip" ->
-      """SELECT vec_id,
-        |  CAST(list_aggregate(list_transform(CAST(embedding AS DOUBLE[]),
-        |    x -> trunc(least(greatest(x * 1024, -32768.0), 32767.0))),
-        |    'sum') AS BIGINT) AS checksum
-        |FROM embeddings WHERE vec_id < 64 ORDER BY vec_id""".stripMargin,
-    "q97_semantic_dedup" ->
-      """WITH pairs AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |  WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |                               CAST(b.embedding AS DOUBLE[])) >= 0.45),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |          UNION ALL SELECT id_b, id_a FROM pairs),
-        |labels AS (
-        |  WITH RECURSIVE reach(id, label) AS (
-        |    SELECT vec_id, vec_id FROM embeddings
-        |    UNION
-        |    SELECT e.src, r.label FROM reach r JOIN edges e ON e.dst = r.id
-        |    WHERE r.label < e.src)
-        |  SELECT id, min(label) AS label FROM reach GROUP BY id)
-        |SELECT id AS vec_id FROM labels WHERE label < id ORDER BY vec_id""".stripMargin,
-    "q98_zorder_skip" ->
-      """SELECT user_id, count(*) AS n_events, round(sum(value), 2) AS sum_value
-        |FROM events
-        |WHERE user_id BETWEEN 40 AND 49
-        |  AND ts BETWEEN TIMESTAMP '2024-01-10 00:00:00'
-        |            AND TIMESTAMP '2024-01-13 00:00:00'
-        |GROUP BY 1 ORDER BY user_id""".stripMargin,
-    // Exactness proof for the hash match below: Misra-Gries with k counters
-    // only ever decrements when a (k+1)-th DISTINCT key arrives while all k
-    // counters are occupied; the events table has d = 5 distinct event_type
-    // values (every SF — asserted in SketchesSpec "q99 exact-regime
-    // precondition") and d ≤ k = 64 per window, so no decrement can fire and
-    // the summary IS the per-window count map. A data change that pushes
-    // d beyond 64 fails that spec before it can silently break this oracle.
-    "q99_heavy_hitters" ->
-      """SELECT date_trunc('hour', ts) AS window_start, event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    // q101's oracle is the fixture's closed-form pixel formula (see
-    // scripts/gen_jp2_fixture.py) evaluated in pure SQL over the 97×61
-    // grid with the same ragged 16×16 tiling — no parquet table involved,
-    // and independent of both JP2 implementations.
-    "q101_jp2_decode" ->
-      """SELECT r // 16 AS window_row, c // 16 AS window_col,
-        |  CAST(sum((r*31 + c*7) % 3000) AS BIGINT) AS sum_v, count(*) AS n
-        |FROM range(61) t(r), range(97) u(c)
-        |GROUP BY 1, 2 ORDER BY window_row, window_col""".stripMargin,
-    // q102's oracle: the battery's hash-pixel formula
-    // v(i) = ((i * 2654435761) >> 13) & 4095 over the 64x96 grid with the
-    // same ragged 16x16 tiling (scripts/gen_jp2_battery.py) — independent
-    // of both JP2 implementations
-    "q102_jp2_kakadu" ->
-      """SELECT r // 16 AS window_row, c // 16 AS window_col,
-        |  CAST(sum(((r*96 + c) * 2654435761 >> 13) & 4095) AS BIGINT) AS sum_v,
-        |  count(*) AS n
-        |FROM range(64) t(r), range(96) u(c)
-        |GROUP BY 1, 2 ORDER BY window_row, window_col""".stripMargin,
-    // q103's oracle: the PVI fixture's per-component hash formula
-    // v(comp, i) = ((i * (2654435761 + comp*97)) >> 13) & 255 over the
-    // 64x96 RGB grid with the same ragged 16x16 tiling
-    // (scripts/gen_jp2_battery.py MULTI_CASES) — independent of both JP2
-    // implementations and of the RCT round trip
-    "q103_jp2_rgb" ->
-      """SELECT comp, r // 16 AS window_row, c // 16 AS window_col,
-        |  CAST(sum(((r*96 + c) * (2654435761 + comp*97) >> 13) & 255) AS BIGINT) AS sum_v,
-        |  count(*) AS n
-        |FROM range(3) s(comp), range(64) t(r), range(96) u(c)
-        |GROUP BY 1, 2, 3 ORDER BY comp, window_row, window_col""".stripMargin,
-    // q104's oracle: the lossy 9/7+ICT decode pinned against the
-    // INDEPENDENT Python reference decoder (scripts/jp2codec.py) — its
-    // per-(component, 16x16-window) pixel sums over the pvi97 fixture,
-    // computed at fixture-generation time and baked in as literals.
-    // 72 rows = 3 components x 4x6 windows over the 64x96 image.
-    "q104_jp2_irreversible" ->
-      """SELECT CAST(comp AS BIGINT) AS comp,
-        |  CAST(window_row AS BIGINT) AS window_row,
-        |  CAST(window_col AS BIGINT) AS window_col,
-        |  CAST(sum_v AS BIGINT) AS sum_v, CAST(n AS BIGINT) AS n
-        |FROM (VALUES
-        |(0,0,0,32790,256),(0,0,1,32491,256),(0,0,2,32453,256),(0,0,3,32668,256),(0,0,4,32631,256),(0,0,5,32590,256),
-        |(0,1,0,32581,256),(0,1,1,32797,256),(0,1,2,32756,256),(0,1,3,32461,256),(0,1,4,32422,256),(0,1,5,32639,256),
-        |(0,2,0,32372,256),(0,2,1,32846,256),(0,2,2,32548,256),(0,2,3,32766,256),(0,2,4,32981,256),(0,2,5,32431,256),
-        |(0,3,0,32675,256),(0,3,1,32637,256),(0,3,2,32597,256),(0,3,3,32559,256),(0,3,4,33029,256),(0,3,5,32734,256),
-        |(1,0,0,32433,256),(1,0,1,32442,256),(1,0,2,32451,256),(1,0,3,32716,256),(1,0,4,32726,256),(1,0,5,32735,256),
-        |(1,1,0,32530,256),(1,1,1,32539,256),(1,1,2,33058,256),(1,1,3,32812,256),(1,1,4,32566,256),(1,1,5,32317,256),
-        |(1,2,0,32626,256),(1,2,1,32890,256),(1,2,2,32898,256),(1,2,3,32653,256),(1,2,4,32405,256),(1,2,5,32926,256),
-        |(1,3,0,32721,256),(1,3,1,32987,256),(1,3,2,32228,256),(1,3,3,32235,256),(1,3,4,32501,256),(1,3,5,32767,256),
-        |(2,0,0,32336,256),(2,0,1,32909,256),(2,0,2,32706,256),(2,0,3,32506,256),(2,0,4,32307,256),(2,0,5,32105,256),
-        |(2,1,0,32480,256),(2,1,1,32282,256),(2,1,2,32851,256),(2,1,3,33165,256),(2,1,4,32962,256),(2,1,5,32762,256),
-        |(2,2,0,32617,256),(2,2,1,32429,256),(2,2,2,32230,256),(2,2,3,32538,256),(2,2,4,32851,256),(2,2,5,32653,256),
-        |(2,3,0,33018,256),(2,3,1,32827,256),(2,3,2,32627,256),(2,3,3,32429,256),(2,3,4,32486,256),(2,3,5,32794,256)
-        |) v(comp, window_row, window_col, sum_v, n)
-        |ORDER BY comp, window_row, window_col""".stripMargin,
-    // q108's oracle: the PLT fixture's hash-pixel formula
-    // v(i) = ((i * 2654435761) >> 13) & 4095 over the 96x64 grid
-    // (scripts/gen_jp2_battery.py), summed over the (8,16) 20x12 window —
-    // independent of both JP2 implementations AND of the ranged IO path
-    "q108_jp2_ranged" ->
-      """SELECT 'S2PLT' AS scene_id, CAST(12 AS BIGINT) AS height,
-        |  CAST(20 AS BIGINT) AS width,
-        |  CAST(sum((((16 + r) * 64 + 8 + c) * 2654435761 >> 13) & 4095) AS BIGINT) AS sum_px,
-        |  CAST(240 AS BIGINT) AS n
-        |FROM range(12) a(r), range(20) b(c)""".stripMargin,
-    // q109's oracle: the same seeded permutation (md5('s42' ∥ doc_id)) as a
-    // plain global window — DuckDB can afford the single-partition cumsum
-    // the Spark side deliberately avoids; agreement proves the bucketed
-    // two-phase prefix sum computes exactly the global running total
-    "q109_shards" ->
-      """WITH t AS (SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tok,
-        |    md5('s42' || CAST(doc_id AS VARCHAR)) AS h
-        |  FROM documents),
-        |b AS (SELECT doc_id, n_tok,
-        |    CAST(floor(coalesce(sum(n_tok) OVER (ORDER BY h, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 8192) AS BIGINT) AS shard
-        |  FROM t)
-        |SELECT shard, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens
-        |FROM b GROUP BY 1 ORDER BY shard""".stripMargin,
-    // q111's oracle: the q43 band-key formula, corpus = even ids probed by
-    // the odd-id batch — independent of the persisted index layout
-    "q111_lsh_incremental" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(text), '\s+') AS tk FROM documents),
-        |sh AS (SELECT doc_id, list_transform(
-        |    generate_series(1, greatest(len(tk) - 2, 0)),
-        |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) AS shingles FROM toks),
-        |keys AS (SELECT doc_id, shingles,
-        |    list_aggregate(list_transform(shingles, s -> md5('s0' || s)), 'min') || '|' ||
-        |    list_aggregate(list_transform(shingles, s -> md5('s1' || s)), 'min') AS band_key
-        |  FROM sh)
-        |SELECT b.doc_id AS id_new, a.doc_id AS id_index,
-        |  round(CAST(len(list_intersect(list_distinct(a.shingles), list_distinct(b.shingles))) AS DOUBLE)
-        |    / (len(list_distinct(a.shingles)) + len(list_distinct(b.shingles))
-        |       - len(list_intersect(list_distinct(a.shingles), list_distinct(b.shingles)))), 4) AS jaccard
-        |FROM keys a JOIN keys b ON a.band_key = b.band_key
-        |WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
-        |ORDER BY id_new, id_index""".stripMargin,
-    "q125_fuzzy_join" ->
-      """WITH p AS (SELECT p_partkey, p_name FROM part WHERE p_partkey % 5 = 0)
-        |SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
-        |  levenshtein(a.p_name, b.p_name) AS dist
-        |FROM p a JOIN p b ON a.p_partkey < b.p_partkey
-        |WHERE levenshtein(a.p_name, b.p_name) <= 1
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q126_unpivot" ->
-      """WITH m AS (
-        |  SELECT 'l_quantity' AS measure, l_quantity AS value FROM lineitem
-        |  UNION ALL SELECT 'l_extendedprice', l_extendedprice FROM lineitem
-        |  UNION ALL SELECT 'l_discount', l_discount FROM lineitem)
-        |SELECT measure, count(*) AS n, round(sum(value), 2) AS total,
-        |  round(avg(value), 4) AS mean
-        |FROM m GROUP BY measure ORDER BY measure""".stripMargin,
-    "q123_rrf_hybrid" ->
-      """WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS e FROM embeddings WHERE vec_id = 0),
-        |dr0 AS (SELECT vec_id AS id, row_number() OVER (ORDER BY
-        |    list_cosine_similarity(CAST(embedding AS DOUBLE[]), (SELECT e FROM qv)) DESC,
-        |    vec_id) AS r
-        |  FROM embeddings),
-        |dr AS (SELECT id, r FROM dr0 WHERE r <= 50),
-        |t AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-        |  FROM documents WHERE trim(text) <> ''),
-        |st AS (SELECT count(*) AS n_docs, avg(len(tk)) AS avgdl FROM t),
-        |q(term) AS (VALUES ('spark'), ('vector')),
-        |dfq AS (SELECT term, count(*) AS df FROM t, q
-        |  WHERE list_contains(tk, term) GROUP BY term),
-        |tf AS (SELECT doc_id, len(tk) AS dl, term,
-        |    len(list_filter(tk, x -> x = term)) AS tf
-        |  FROM t, q WHERE list_contains(tk, term)),
-        |sc AS (SELECT tf.doc_id,
-        |    sum(ln(1 + (st.n_docs - dfq.df + 0.5) / (dfq.df + 0.5))
-        |        * (tf.tf * 2.2)
-        |        / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * tf.dl / st.avgdl))) AS score
-        |  FROM tf JOIN dfq USING (term) CROSS JOIN st GROUP BY tf.doc_id),
-        |lr0 AS (SELECT doc_id AS id, row_number() OVER (ORDER BY score DESC, doc_id) AS r
-        |  FROM sc),
-        |lr AS (SELECT id, r FROM lr0 WHERE r <= 50),
-        |f AS (SELECT coalesce(dr.id, lr.id) AS id,
-        |    coalesce(CAST(1 AS DOUBLE) / (60 + dr.r), 0)
-        |      + coalesce(CAST(1 AS DOUBLE) / (60 + lr.r), 0) AS rrf
-        |  FROM dr FULL OUTER JOIN lr ON dr.id = lr.id)
-        |SELECT id, round(rrf, 4) AS rrf FROM f
-        |ORDER BY rrf DESC, id LIMIT 10""".stripMargin,
-    "q124_dq_report" ->
-      """SELECT 'discount_in_range' AS "check",
-        |  count(CASE WHEN l_discount < 0 OR l_discount > 0.06 THEN 1 END) AS n_violations
-        |FROM lineitem
-        |UNION ALL SELECT 'lineitem_fk_orders', count(*) FROM lineitem
-        |  WHERE l_orderkey IS NOT NULL
-        |    AND NOT EXISTS (SELECT 1 FROM orders WHERE o_orderkey = l_orderkey)
-        |UNION ALL SELECT 'orders_custkey_notnull',
-        |  count(CASE WHEN o_custkey IS NULL THEN 1 END) FROM orders
-        |UNION ALL SELECT 'orders_fk_customer', count(*) FROM orders
-        |  WHERE o_custkey IS NOT NULL
-        |    AND NOT EXISTS (SELECT 1 FROM customer WHERE c_custkey = o_custkey)
-        |UNION ALL SELECT 'orders_pk_unique',
-        |  count(*) - count(DISTINCT o_orderkey) FROM orders
-        |UNION ALL SELECT 'status_accepted',
-        |  count(CASE WHEN o_orderstatus IS NOT NULL
-        |             AND o_orderstatus NOT IN ('F', 'O') THEN 1 END) FROM orders
-        |ORDER BY "check"""".stripMargin,
-    "q120_transitions" ->
-      """WITH s AS (SELECT event_type,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next
-        |  FROM events)
-        |SELECT event_type, next, count(*) AS n,
-        |  round(count(*) * 1.0 / sum(count(*)) OVER (PARTITION BY event_type), 4) AS p
-        |FROM s WHERE next IS NOT NULL
-        |GROUP BY event_type, next ORDER BY event_type, next""".stripMargin,
-    "q121_scd2" ->
-      """WITH o AS (SELECT user_id, ts, event_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |  FROM events),
-        |c AS (SELECT user_id, ts, event_id, event_type FROM o
-        |  WHERE prev IS NULL OR event_type <> prev),
-        |d AS (SELECT event_type AS state,
-        |    lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to
-        |  FROM c)
-        |SELECT state, count(*) AS n_versions,
-        |  count(CASE WHEN valid_to IS NULL THEN 1 END) AS n_current
-        |FROM d GROUP BY state ORDER BY state""".stripMargin,
-    "q122_time_travel" ->
-      """WITH o AS (SELECT user_id, ts, event_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |  FROM events),
-        |c AS (SELECT user_id, ts, event_id, event_type FROM o
-        |  WHERE prev IS NULL OR event_type <> prev),
-        |d AS (SELECT user_id, event_type AS state, ts AS valid_from,
-        |    lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to
-        |  FROM c)
-        |SELECT state, count(*) AS n_users FROM d
-        |WHERE valid_from <= TIMESTAMP '2024-01-15 00:00:00'
-        |  AND (valid_to IS NULL OR valid_to > TIMESTAMP '2024-01-15 00:00:00')
-        |GROUP BY state ORDER BY state""".stripMargin,
-    "q118_bm25" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-        |  FROM documents WHERE trim(text) <> ''),
-        |st AS (SELECT count(*) AS n_docs, avg(len(tk)) AS avgdl FROM t),
-        |q(term) AS (VALUES ('spark'), ('vector')),
-        |dfq AS (SELECT term, count(*) AS df FROM t, q
-        |  WHERE list_contains(tk, term) GROUP BY term),
-        |tf AS (SELECT doc_id, len(tk) AS dl, term,
-        |    len(list_filter(tk, x -> x = term)) AS tf
-        |  FROM t, q WHERE list_contains(tk, term)),
-        |sc AS (SELECT tf.doc_id,
-        |    sum(ln(1 + (st.n_docs - dfq.df + 0.5) / (dfq.df + 0.5))
-        |        * (tf.tf * 2.2)
-        |        / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * tf.dl / st.avgdl))) AS score
-        |  FROM tf JOIN dfq USING (term) CROSS JOIN st GROUP BY tf.doc_id)
-        |SELECT doc_id, round(score, 4) AS score FROM sc
-        |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-    "q119_inverted_index" ->
-      """WITH t AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-        |  FROM documents WHERE trim(text) <> '')
-        |SELECT doc_id FROM t
-        |WHERE list_contains(tk, 'spark') AND list_contains(tk, 'hash')
-        |  AND list_contains(tk, 'merge')
-        |ORDER BY doc_id""".stripMargin,
-    "q116_funnel" ->
-      """WITH s0 AS (SELECT user_id, min(ts) AS t FROM events
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |s1 AS (SELECT e.user_id, min(e.ts) AS t FROM events e
-        |  JOIN s0 ON e.user_id = s0.user_id AND e.ts > s0.t
-        |  WHERE e.event_type = 'click' GROUP BY e.user_id),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t FROM events e
-        |  JOIN s1 ON e.user_id = s1.user_id AND e.ts > s1.t
-        |  WHERE e.event_type = 'purchase' GROUP BY e.user_id)
-        |SELECT 0 AS stage_idx, 'view' AS stage, (SELECT count(*) FROM s0) AS n_users
-        |UNION ALL SELECT 1, 'click', (SELECT count(*) FROM s1)
-        |UNION ALL SELECT 2, 'purchase', (SELECT count(*) FROM s2)
-        |ORDER BY stage_idx""".stripMargin,
-    "q117_retention" ->
-      """WITH c AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
-        |  FROM events GROUP BY user_id),
-        |a AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events)
-        |SELECT c.cohort_day, datediff('day', c.cohort_day, a.day) AS day_offset,
-        |  count(*) AS n_users
-        |FROM a JOIN c USING (user_id)
-        |WHERE datediff('day', c.cohort_day, a.day) IN (0, 1, 7, 14)
-        |GROUP BY 1, 2 ORDER BY cohort_day, day_offset""".stripMargin,
-    "q115_jaccard_join" ->
-      """WITH t AS (SELECT doc_id,
-        |    list_distinct(regexp_split_to_array(trim(lower(text)), '\s+')) AS tk
-        |  FROM documents WHERE doc_id % 7 = 0 AND trim(text) <> ''),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    len(list_intersect(a.tk, b.tk)) * 1.0
-        |      / (len(a.tk) + len(b.tk) - len(list_intersect(a.tk, b.tk))) AS j
-        |  FROM t a JOIN t b ON a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, round(j, 4) AS jaccard FROM p WHERE j >= 0.9
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q114_incr_agg" ->
-      """SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n,
-        |  round(sum(value), 2) AS sum_v, min(value) AS min_v, max(value) AS max_v,
-        |  round(sum(value) / count(*), 4) AS avg_v
-        |FROM events GROUP BY event_type, day
-        |ORDER BY event_type, day""".stripMargin,
-    "q112_nb_classify" ->
-      """WITH hb AS (SELECT doc_id, lang, text,
-        |    CAST(list_aggregate(list_transform(generate_series(1, 6), j ->
-        |      CAST(strpos('0123456789abcdef', substr(md5(text), j, 1)) - 1 AS BIGINT)
-        |        << (4 * (6 - j))), 'sum') AS BIGINT) % 100 AS hb
-        |  FROM documents WHERE n_chars > 0),
-        |tr AS (SELECT lang, text FROM hb WHERE hb >= 10),
-        |te AS (SELECT doc_id, lang, text FROM hb WHERE hb < 10),
-        |ttok AS (SELECT lang AS label,
-        |    unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
-        |  FROM tr WHERE trim(text) <> ''),
-        |cnts AS (SELECT label, term, count(*) AS cnt FROM ttok GROUP BY label, term),
-        |cs AS (SELECT p.label,
-        |    ln(p.n_c * 1.0 / (SELECT count(*) FROM tr)) AS log_prior,
-        |    ln((t.t_c + (SELECT count(DISTINCT term) FROM cnts)) * 1.0) AS log_denom
-        |  FROM (SELECT lang AS label, count(*) AS n_c FROM tr GROUP BY lang) p
-        |  JOIN (SELECT label, sum(cnt) AS t_c FROM cnts GROUP BY label) t USING (label)),
-        |nt AS (SELECT doc_id, lang,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tok
-        |  FROM te),
-        |st AS (SELECT doc_id,
-        |    unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
-        |  FROM te WHERE trim(text) <> ''),
-        |m AS (SELECT st.doc_id, c.label, sum(ln(c.cnt + 1.0)) AS s_match
-        |  FROM st JOIN cnts c USING (term) GROUP BY st.doc_id, c.label),
-        |sc AS (SELECT n.doc_id, n.lang, cs.label,
-        |    cs.log_prior + coalesce(m.s_match, 0) - n.n_tok * cs.log_denom AS score
-        |  FROM nt n CROSS JOIN cs
-        |  LEFT JOIN m ON m.doc_id = n.doc_id AND m.label = cs.label),
-        |pr AS (SELECT doc_id, lang, label AS pred_label FROM sc
-        |  QUALIFY row_number() OVER (PARTITION BY doc_id
-        |    ORDER BY score DESC, label ASC) = 1)
-        |SELECT lang, pred_label, count(*) AS n_docs FROM pr
-        |GROUP BY lang, pred_label ORDER BY lang, pred_label""".stripMargin,
-    "q113_perplexity" ->
-      """WITH hb AS (SELECT doc_id, text,
-        |    CAST(list_aggregate(list_transform(generate_series(1, 6), j ->
-        |      CAST(strpos('0123456789abcdef', substr(md5(text), j, 1)) - 1 AS BIGINT)
-        |        << (4 * (6 - j))), 'sum') AS BIGINT) % 100 AS hb
-        |  FROM documents WHERE n_chars > 0),
-        |ttok AS (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
-        |  FROM hb WHERE hb >= 10 AND trim(text) <> ''),
-        |cnts AS (SELECT term, count(*) AS cnt FROM ttok GROUP BY term),
-        |den AS (SELECT log2(((SELECT sum(cnt) FROM cnts)
-        |                     + (SELECT count(*) FROM cnts)) * 1.0) AS log2_denom),
-        |te AS (SELECT doc_id, text FROM hb WHERE hb < 10),
-        |nt AS (SELECT doc_id,
-        |    len(regexp_split_to_array(trim(text), '\s+')) AS n_tok
-        |  FROM te WHERE trim(text) <> ''),
-        |st AS (SELECT doc_id,
-        |    unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
-        |  FROM te WHERE trim(text) <> ''),
-        |m AS (SELECT doc_id, sum(log2(cnt + 1.0)) AS s_match
-        |  FROM st JOIN cnts USING (term) GROUP BY doc_id)
-        |SELECT n.doc_id, n.n_tok,
-        |  round(d.log2_denom - coalesce(m.s_match, 0) / n.n_tok, 4) AS bits
-        |FROM nt n LEFT JOIN m USING (doc_id) CROSS JOIN den d
-        |ORDER BY n.doc_id""".stripMargin,
-    // q110's oracle: same stratum factors; copies = floor(f) + (hb < frac),
-    // hb = the q75-style 24-bit md5 bucket of the doc id; epochs unnested
-    "q110_mixture" ->
-      """WITH t AS (SELECT doc_id, lang,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tok,
-        |    CAST(list_aggregate(list_transform(generate_series(1, 6), j ->
-        |      CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), j, 1)) - 1 AS BIGINT)
-        |        << (4 * (6 - j))), 'sum') AS BIGINT) % 100 AS hb
-        |  FROM documents),
-        |c AS (SELECT doc_id, lang, n_tok,
-        |    CAST(floor(CASE lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 2.3 ELSE 1.0 END) AS INTEGER)
-        |      + CASE WHEN hb < round((CASE lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 2.3 ELSE 1.0 END
-        |          - floor(CASE lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 2.3 ELSE 1.0 END)) * 100)
-        |        THEN 1 ELSE 0 END AS n
-        |  FROM t),
-        |e AS (SELECT lang, n_tok, CAST(u.i AS INTEGER) AS epoch
-        |  FROM c, unnest(generate_series(0, n - 1)) AS u(i) WHERE n > 0)
-        |SELECT lang, epoch, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens
-        |FROM e GROUP BY 1, 2 ORDER BY lang, epoch""".stripMargin,
-    // q107's oracle: the MJPEG fixture's closed-form block formula
-    // v(f, br, bc) = ((f*53 + br*17 + bc*29) % 32)*8 + 4 summed over each
-    // 48x32 frame's 6x4 constant blocks (scripts/gen_mjpeg_fixture.py) —
-    // exact because the frames are DC-only with a unit quantization table,
-    // so the sums are independent of both JPEG implementations
-    "q107_mjpeg_frames" ->
-      """SELECT f AS frame_index, CAST(f * 100 AS BIGINT) AS time_ms,
-        |  true AS sync, CAST(32 AS BIGINT) AS height, CAST(48 AS BIGINT) AS width,
-        |  CAST(sum(64 * (((f*53 + br*17 + bc*29) % 32) * 8 + 4)) AS BIGINT) AS sum_px
-        |FROM range(6) a(f), range(4) b(br), range(6) c(bc)
-        |GROUP BY f ORDER BY frame_index""".stripMargin,
-    "q100_ivf_index" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS e FROM embeddings WHERE vec_id = 0)
-        |SELECT vec_id,
-        |  round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), (SELECT e FROM q)), 4) AS score
-        |FROM embeddings
-        |ORDER BY list_cosine_similarity(CAST(embedding AS DOUBLE[]), (SELECT e FROM q)) DESC, vec_id
-        |LIMIT 10""".stripMargin,
-    "q70_salted_agg" ->
-      """SELECT l_returnflag AS k, round(sum(l_quantity), 2) AS sum_v, count(*) AS n
-        |FROM lineitem GROUP BY 1 ORDER BY k""".stripMargin,
-    "q71_ntile" ->
-      """SELECT c_custkey, ntile(4) OVER
-        |  (PARTITION BY c_nationkey ORDER BY c_acctbal, c_custkey) AS quartile
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q72_lead_gap" ->
-      """SELECT event_id,
-        |  coalesce(epoch_us(lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))
-        |    - epoch_us(ts), -1) AS gap_us
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q73_chunks" ->
-      """WITH t AS (SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE regexp_split_to_array(trim(text), '\s+') END AS tk
-        |  FROM documents WHERE n_chars > 0)
-        |SELECT doc_id, CAST(i AS INTEGER) AS chunk_idx,
-        |  array_to_string(tk[i*24+1 : least(i*24+32, len(tk))], ' ') AS chunk_text
-        |FROM t, unnest(generate_series(0, (len(tk)-1)//24)) AS u(i)
-        |WHERE len(tk) > 0
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-    "q74_pack_bins" ->
-      """WITH t AS (SELECT source, doc_id,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tok
-        |  FROM documents),
-        |b AS (SELECT source, doc_id, n_tok,
-        |    CAST(floor(coalesce(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 2000) AS BIGINT) AS bin
-        |  FROM t)
-        |SELECT source, bin, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens
-        |FROM b GROUP BY 1, 2 ORDER BY source, bin""".stripMargin,
-    "q75_stratified_sample" ->
-      """WITH h AS (SELECT lang,
-        |    CAST(list_aggregate(list_transform(generate_series(1, 6), j ->
-        |      CAST(strpos('0123456789abcdef', substr(md5(text), j, 1)) - 1 AS BIGINT)
-        |        << (4 * (6 - j))), 'sum') AS BIGINT) % 100 AS hb
-        |  FROM documents)
-        |SELECT lang, count(*) AS n_kept FROM h
-        |WHERE hb < CASE WHEN lang = 'en' THEN 50 WHEN lang = 'de' THEN 100 ELSE 20 END
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-    "q76_kmeans_step" ->
-      """WITH d AS (SELECT embedding,
-        |  list_aggregate(list_transform(CAST(embedding AS DOUBLE[]), x -> (x-0.5)*(x-0.5)), 'sum') AS d0,
-        |  list_aggregate(list_transform(CAST(embedding AS DOUBLE[]), x -> (x+0.5)*(x+0.5)), 'sum') AS d1
-        |  FROM embeddings),
-        |a AS (SELECT CASE WHEN d0 <= d1 THEN 0 ELSE 1 END AS cell, embedding FROM d),
-        |e AS (SELECT cell, unnest(generate_series(1, len(embedding))) - 1 AS pos,
-        |             unnest(CAST(embedding AS DOUBLE[])) AS v FROM a)
-        |SELECT cell, pos, round(avg(v), 4) + 0 AS mean_v
-        |FROM e GROUP BY 1, 2 ORDER BY cell, pos""".stripMargin,
-    "q82_grouping_sets" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |  grouping(o_orderstatus) AS g_status,
-        |  grouping(o_orderpriority) AS g_prio, count(*) AS n
-        |FROM orders GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "q83_top3_array" ->
-      """SELECT o_orderpriority,
-        |  array_to_string(list_transform(
-        |    (list_sort(list(round(o_totalprice, 2)), 'DESC'))[1:3],
-        |    x -> CAST(CAST(x AS DECIMAL(18,2)) AS VARCHAR)), ',') AS top3
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q81_norm_by_lang" ->
-      """SELECT lang,
-        |  round(avg(sqrt(list_aggregate(list_transform(CAST(embedding AS DOUBLE[]),
-        |        x -> x*x), 'sum'))), 4) AS avg_l2,
-        |  count(*) AS n
-        |FROM documents JOIN embeddings ON doc_id = vec_id
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-    "q80_len_outliers" ->
-      """WITH q AS (SELECT quantile_cont(n_chars, 0.25) AS q1,
-        |                 quantile_cont(n_chars, 0.75) AS q3 FROM documents)
-        |SELECT source, count(*) AS n_outliers FROM documents, q
-        |WHERE n_chars < q1 - 0.25 * (q3 - q1) OR n_chars > q3 + 0.25 * (q3 - q1)
-        |GROUP BY source ORDER BY source""".stripMargin,
-    "q78_pii_redact" ->
-      """WITH a AS (SELECT doc_id,
-        |    text || ' contact user' || doc_id || '@example.com from 10.0.'
-        |         || (doc_id % 256) || '.7' AS pii
-        |  FROM documents)
-        |SELECT doc_id, length(pii) AS len_raw,
-        |  length(regexp_replace(regexp_replace(regexp_replace(pii,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-        |    '\b\+?\d[\d -]{7,}\d\b', '<PHONE>', 'g')) AS len_redacted
-        |FROM a ORDER BY doc_id""".stripMargin,
-    "q79_char_entropy" ->
-      """WITH c AS (SELECT doc_id, regexp_split_to_array(text, '') AS ch
-        |  FROM documents WHERE n_chars > 0)
-        |SELECT doc_id, round(-list_aggregate(list_transform(list_distinct(ch),
-        |    u -> (CAST(len(list_filter(ch, x -> x = u)) AS DOUBLE) / len(ch))
-        |         * ln(CAST(len(list_filter(ch, x -> x = u)) AS DOUBLE) / len(ch))),
-        |  'sum'), 4) AS entropy
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q77_stats" ->
-      """SELECT l_returnflag,
-        |  round(corr(l_quantity, l_extendedprice), 4) AS corr_qp,
-        |  round(covar_samp(l_quantity, l_discount), 4) AS cov_qd,
-        |  round(stddev_samp(l_quantity), 4) AS sd_q,
-        |  round(regr_slope(l_extendedprice, l_quantity), 4) AS slope,
-        |  round(regr_intercept(l_extendedprice, l_quantity), 4) AS icept
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q54_ivf_topk" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS e FROM embeddings WHERE vec_id = 1)
-        |SELECT vec_id,
-        |  round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), (SELECT e FROM q)), 4) AS score
-        |FROM embeddings
-        |ORDER BY list_cosine_similarity(CAST(embedding AS DOUBLE[]), (SELECT e FROM q)) DESC, vec_id
-        |LIMIT 10""".stripMargin,
-    "q86_decontaminate" ->
-      """WITH corpus AS (SELECT * FROM documents WHERE doc_id % 97 <> 0),
-        |btk AS (SELECT regexp_split_to_array(trim(text), '\s+') AS tk
-        |  FROM documents WHERE doc_id % 97 = 0 AND trim(text) <> ''),
-        |bg AS (SELECT DISTINCT unnest(list_transform(
-        |    generate_series(1, greatest(len(tk) - 4, 0)),
-        |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4])) AS g
-        |  FROM btk),
-        |ctk AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-        |  FROM corpus WHERE trim(text) <> ''),
-        |cg AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, greatest(len(tk) - 4, 0)),
-        |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4]))) AS g
-        |  FROM ctk),
-        |bad AS (SELECT DISTINCT doc_id FROM cg JOIN bg USING (g))
-        |SELECT source, count(*) AS n_clean FROM corpus
-        |WHERE doc_id NOT IN (SELECT doc_id FROM bad)
-        |GROUP BY source ORDER BY source""".stripMargin,
-    "q87_cap_per_source" ->
-      """SELECT source, doc_id FROM documents
-        |QUALIFY row_number() OVER (PARTITION BY source
-        |  ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) <= 20
-        |ORDER BY source, doc_id""".stripMargin,
-    "q88_boilerplate" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-        |  FROM documents WHERE trim(text) <> ''),
-        |ng AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, greatest(len(tk) - 2, 0)),
-        |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))) AS g FROM toks),
-        |top AS (SELECT g FROM ng GROUP BY g ORDER BY count(*) DESC, g LIMIT 20)
-        |SELECT doc_id, count(*) AS boilerplate_hits FROM ng JOIN top USING (g)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q89_knn_join" ->
-      """WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS e
-        |  FROM embeddings WHERE vec_id < 5),
-        |c AS (SELECT vec_id AS c_id, CAST(embedding AS DOUBLE[]) AS e
-        |  FROM embeddings WHERE vec_id >= 5)
-        |SELECT q_id, c_id, round(list_cosine_similarity(c.e, q.e), 4) AS score
-        |FROM q CROSS JOIN c
-        |QUALIFY row_number() OVER (PARTITION BY q_id
-        |  ORDER BY list_cosine_similarity(c.e, q.e) DESC, c_id) <= 5
-        |ORDER BY q_id, c_id""".stripMargin,
-    "q90_span_dedup" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-        |  FROM documents WHERE trim(text) <> ''),
-        |idx AS (SELECT doc_id, tk, unnest(generate_series(0,
-        |    CAST(ceil(len(tk) / 20.0) AS INT) - 1)) AS chunk_idx FROM toks),
-        |spans AS (SELECT doc_id, chunk_idx,
-        |    array_to_string(tk[chunk_idx*20+1 : chunk_idx*20+20], ' ') AS t FROM idx),
-        |kept AS (SELECT doc_id, chunk_idx, t, row_number() OVER (PARTITION BY t
-        |    ORDER BY doc_id, chunk_idx) AS rn FROM spans)
-        |SELECT doc_id, string_agg(t, ' ' ORDER BY chunk_idx) AS text
-        |FROM kept WHERE rn = 1 GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q91_cross_neardup" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(text), '\s+') AS tk FROM documents),
-        |sh AS (SELECT doc_id, list_transform(
-        |    generate_series(1, greatest(len(tk) - 2, 0)),
-        |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) AS shingles FROM toks),
-        |keys AS (SELECT doc_id, shingles,
-        |    list_aggregate(list_transform(shingles, s -> md5('s0' || s)), 'min') || '|' ||
-        |    list_aggregate(list_transform(shingles, s -> md5('s1' || s)), 'min') AS band_key
-        |  FROM sh)
-        |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  round(CAST(len(list_intersect(list_distinct(a.shingles), list_distinct(b.shingles))) AS DOUBLE)
-        |    / (len(list_distinct(a.shingles)) + len(list_distinct(b.shingles))
-        |       - len(list_intersect(list_distinct(a.shingles), list_distinct(b.shingles)))), 4) AS jaccard
-        |FROM keys a JOIN keys b ON a.band_key = b.band_key
-        |WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q93_minhash_est" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(text), '\s+') AS tk FROM documents),
-        |sh AS (SELECT doc_id, list_transform(
-        |    generate_series(1, greatest(len(tk) - 2, 0)),
-        |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) AS shingles FROM toks),
-        |keys AS (SELECT doc_id, shingles, list_transform(generate_series(0, 7), j ->
-        |    list_aggregate(list_transform(shingles, s -> md5('s' || CAST(j AS VARCHAR) || s)), 'min')) AS sig
-        |  FROM sh),
-        |k2 AS (SELECT doc_id, shingles, sig, sig[1] || '|' || sig[2] AS band_key FROM keys)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  round(CAST(len(list_filter(generate_series(1, 8), j -> a.sig[j] = b.sig[j])) AS DOUBLE) / 8, 4) AS est,
-        |  round(CAST(len(list_intersect(list_distinct(a.shingles), list_distinct(b.shingles))) AS DOUBLE)
-        |    / (len(list_distinct(a.shingles)) + len(list_distinct(b.shingles))
-        |       - len(list_intersect(list_distinct(a.shingles), list_distinct(b.shingles)))), 4) AS jaccard
-        |FROM k2 a JOIN k2 b ON a.band_key = b.band_key
-        |WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q95_sig_neardup" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(text), '\s+') AS tk FROM documents),
-        |sh AS (SELECT doc_id, list_transform(
-        |    generate_series(1, greatest(len(tk) - 2, 0)),
-        |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) AS shingles FROM toks),
-        |keys AS (SELECT doc_id, list_transform(generate_series(0, 7), j ->
-        |    list_aggregate(list_transform(shingles, s -> md5('s' || CAST(j AS VARCHAR) || s)), 'min')) AS sig
-        |  FROM sh),
-        |k2 AS (SELECT doc_id, sig, unnest([
-        |    '0:' || sig[1] || '|' || sig[2], '1:' || sig[3] || '|' || sig[4],
-        |    '2:' || sig[5] || '|' || sig[6], '3:' || sig[7] || '|' || sig[8]]) AS band_key
-        |  FROM keys),
-        |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(len(list_filter(generate_series(1, 8), j -> a.sig[j] = b.sig[j])) AS DOUBLE) / 8 AS e
-        |  FROM k2 a JOIN k2 b ON a.band_key = b.band_key AND a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, round(e, 4) AS est FROM pairs
-        |WHERE e >= 0.5 ORDER BY id_a, id_b""".stripMargin,
-    "q92_emb_outliers" ->
-      """WITH d AS (SELECT vec_id, least(
-        |    list_aggregate(list_transform(CAST(embedding AS DOUBLE[]), x -> (x-0.5)*(x-0.5)), 'sum'),
-        |    list_aggregate(list_transform(CAST(embedding AS DOUBLE[]), x -> (x+0.5)*(x+0.5)), 'sum')) AS dist
-        |  FROM embeddings)
-        |SELECT vec_id, round(dist, 4) AS dist FROM d
-        |ORDER BY dist DESC, vec_id LIMIT 20""".stripMargin,
-    "q127_weighted_sample" ->
-      """WITH h AS (SELECT doc_id, source, n_chars,
-        |    (CAST(list_aggregate(list_transform(generate_series(1, 6), j ->
-        |       CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), j, 1)) - 1 AS BIGINT)
-        |         << (4 * (6 - j))), 'sum') AS BIGINT) + 1) / 16777216.0 AS u
-        |  FROM documents WHERE n_chars > 0),
-        |top AS (SELECT doc_id, source, n_chars FROM h
-        |  ORDER BY ln(u) / n_chars DESC, doc_id LIMIT 100)
-        |SELECT doc_id, source, n_chars FROM top ORDER BY doc_id""".stripMargin,
-    "q128_quantile_sketch" ->
-      """SELECT source,
-        |  CAST(quantile_disc(n_chars, 0.25) AS DOUBLE) AS p25,
-        |  CAST(quantile_disc(n_chars, 0.50) AS DOUBLE) AS p50,
-        |  CAST(quantile_disc(n_chars, 0.75) AS DOUBLE) AS p75
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "q129_drift_psi" ->
-      """WITH refh AS (SELECT least(CAST(floor(n_chars / 100) AS BIGINT), 8) AS bucket,
-        |    count(*) AS n FROM documents GROUP BY 1),
-        |refs AS (SELECT bucket, CAST(n AS DOUBLE) / sum(n) OVER () AS p FROM refh),
-        |curh AS (SELECT least(CAST(floor(n_chars / 100) AS BIGINT), 8) AS bucket,
-        |    count(*) AS n FROM documents WHERE n_chars >= 250 GROUP BY 1),
-        |curs AS (SELECT bucket, CAST(n AS DOUBLE) / sum(n) OVER () AS q FROM curh)
-        |SELECT COALESCE(refs.bucket, curs.bucket) AS bucket,
-        |  round(COALESCE(p, 0), 6) AS p, round(COALESCE(q, 0), 6) AS q,
-        |  round((COALESCE(q, 0) - COALESCE(p, 0)) *
-        |        ln((COALESCE(q, 0) + 1e-6) / (COALESCE(p, 0) + 1e-6)), 6) AS psi_term
-        |FROM refs FULL OUTER JOIN curs ON refs.bucket = curs.bucket
-        |ORDER BY bucket""".stripMargin,
-    "q130_containment" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-        |  FROM documents WHERE trim(text) <> ''),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(
-        |    generate_series(1, greatest(len(tk) - 2, 0)),
-        |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s FROM t),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s) AS c
-        |  FROM sh a JOIN sh b ON a.doc_id <> b.doc_id
-        |  WHERE len(a.s) > 0 AND len(b.s) > 0)
-        |SELECT id_a, id_b, round(c, 4) AS containment FROM p
-        |WHERE c >= 0.8 ORDER BY id_a, id_b""".stripMargin,
-    "q131_mmr_rerank" ->
-      """WITH RECURSIVE
-        |q AS (SELECT CAST(embedding AS DOUBLE[]) AS e FROM embeddings WHERE vec_id = 0),
-        |cand AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-        |    list_cosine_similarity(CAST(embedding AS DOUBLE[]), (SELECT e FROM q)) AS rel
-        |  FROM embeddings ORDER BY rel DESC, vec_id LIMIT 50),
-        |sel AS (
-        |  (SELECT 1 AS step, [vec_id] AS ids FROM cand ORDER BY rel DESC, vec_id LIMIT 1)
-        |  UNION ALL
-        |  (SELECT s.step + 1,
-        |     list_append(s.ids, (
-        |       SELECT c.vec_id FROM cand c
-        |       WHERE NOT list_contains(s.ids, c.vec_id)
-        |       ORDER BY 0.7 * c.rel - 0.3 * (
-        |           SELECT max(list_cosine_similarity(c.emb, p.emb))
-        |           FROM cand p WHERE list_contains(s.ids, p.vec_id)) DESC, c.vec_id
-        |       LIMIT 1))
-        |   FROM sel s WHERE s.step < 10))
-        |SELECT unnest(ids) AS vec_id,
-        |       unnest(generate_series(1, len(ids))) AS rank
-        |FROM sel WHERE step = 10""".stripMargin,
-    "q132_repeated_spans" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-        |  FROM documents WHERE trim(text) <> ''),
-        |w AS (SELECT doc_id,
-        |    unnest(generate_series(0, len(tk) - 8)) AS i,
-        |    unnest(list_transform(generate_series(1, len(tk) - 8 + 1),
-        |           j -> md5(array_to_string(tk[j:j+7], ' ')))) AS g
-        |  FROM t WHERE len(tk) >= 8),
-        |c AS (SELECT *, count(*) OVER (PARTITION BY g) AS cnt FROM w),
-        |m AS (SELECT doc_id, i FROM c WHERE cnt >= 2),
-        |isl AS (SELECT doc_id, i,
-        |    CASE WHEN i - lag(i) OVER (PARTITION BY doc_id ORDER BY i) > 8
-        |      THEN 1 ELSE 0 END AS brk FROM m),
-        |i2 AS (SELECT doc_id, i,
-        |    sum(brk) OVER (PARTITION BY doc_id ORDER BY i) AS island FROM isl)
-        |SELECT doc_id, min(i) AS span_start, max(i) + 8 AS span_end,
-        |       count(*) AS n_windows
-        |FROM i2 GROUP BY doc_id, island
-        |ORDER BY doc_id, span_start""".stripMargin,
-    "q133_chi2" ->
-      """WITH cells AS (SELECT lang AS va, source AS vb, count(*) AS n
-        |  FROM documents GROUP BY 1, 2),
-        |rm AS (SELECT va, sum(n) AS row_n FROM cells GROUP BY 1),
-        |cm AS (SELECT vb, sum(n) AS col_n FROM cells GROUP BY 1),
-        |grid AS (SELECT rm.va, cm.vb, row_n, col_n, COALESCE(cells.n, 0) AS nij
-        |  FROM rm CROSS JOIN cm
-        |  LEFT JOIN cells ON cells.va = rm.va AND cells.vb = cm.vb),
-        |g2 AS (SELECT *, sum(nij) OVER () AS tot FROM grid),
-        |g3 AS (SELECT *, CAST(row_n AS DOUBLE) * col_n / tot AS e FROM g2)
-        |SELECT CAST(max(tot) AS BIGINT) AS n,
-        |  count(DISTINCT va) AS n_rows, count(DISTINCT vb) AS n_cols,
-        |  (count(DISTINCT va) - 1) * (count(DISTINCT vb) - 1) AS dof,
-        |  round(sum(pow(nij - e, 2) / e), 6) AS chi2
-        |FROM g3""".stripMargin,
-    "q134_event_anomaly" ->
-      """WITH c AS (SELECT event_type, date_trunc('hour', ts) AS bucket_start,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |s AS (SELECT *, avg(n) OVER (PARTITION BY event_type) AS mu,
-        |    stddev_samp(n) OVER (PARTITION BY event_type) AS sigma FROM c)
-        |SELECT event_type, bucket_start, n, round((n - mu) / sigma, 4) AS z
-        |FROM s
-        |WHERE sigma IS NOT NULL AND sigma > 0
-        |  AND abs((n - mu) / sigma) >= 2.0
-        |ORDER BY event_type, bucket_start""".stripMargin,
-    "q135_collocations" ->
-      """WITH tk AS (SELECT list_transform(regexp_split_to_array(trim(text), '\s+'),
-        |    x -> lower(x)) AS t
-        |  FROM documents WHERE trim(text) <> ''),
-        |uc AS (SELECT w, count(*) AS ca FROM (SELECT unnest(t) AS w FROM tk) GROUP BY 1),
-        |ut AS (SELECT sum(ca) AS u_total FROM uc),
-        |bi AS (SELECT unnest(t[1:len(t)-1]) AS wa, unnest(t[2:len(t)]) AS wb
-        |  FROM tk WHERE len(t) >= 2),
-        |bc AS (SELECT wa, wb, count(*) AS cab FROM bi GROUP BY 1, 2),
-        |bt AS (SELECT sum(cab) AS b_total FROM bc),
-        |res AS (SELECT bc.wa, bc.wb, cab,
-        |    ln((CAST(cab AS DOUBLE) / (SELECT b_total FROM bt)) /
-        |       ((CAST(ua.ca AS DOUBLE) / (SELECT u_total FROM ut)) *
-        |        (CAST(ub.ca AS DOUBLE) / (SELECT u_total FROM ut)))) AS pmi
-        |  FROM bc JOIN uc ua ON ua.w = bc.wa JOIN uc ub ON ub.w = bc.wb
-        |  WHERE cab >= 5)
-        |SELECT wa, wb, cab, round(pmi, 4) AS pmi FROM res
-        |ORDER BY pmi DESC, wa, wb LIMIT 20""".stripMargin,
-    "q136_corr" ->
-      """SELECT l_returnflag,
-        |  round(corr(l_quantity, l_extendedprice), 6) AS r,
-        |  round(covar_samp(l_quantity, l_extendedprice), 2) AS cov,
-        |  count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q137_trend" ->
-      """WITH hourly AS (SELECT event_type,
-        |    epoch(date_trunc('hour', ts)) / 3600 AS h, count(*) AS n
-        |  FROM events GROUP BY 1, 2)
-        |SELECT event_type,
-        |  round(regr_slope(n, h), 6) AS slope,
-        |  round(regr_r2(n, h), 6) AS r2,
-        |  count(*) AS n_buckets
-        |FROM hourly GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q138_cut_spans" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-        |  FROM documents WHERE trim(text) <> ''),
-        |w AS (SELECT doc_id,
-        |    unnest(generate_series(0, len(tk) - 8)) AS i,
-        |    unnest(list_transform(generate_series(1, len(tk) - 8 + 1),
-        |           j -> md5(array_to_string(tk[j:j+7], ' ')))) AS g
-        |  FROM t WHERE len(tk) >= 8),
-        |c AS (SELECT g, count(*) AS cnt, min(doc_id * 1000000 + i) AS first_occ
-        |  FROM w GROUP BY g),
-        |dp AS (SELECT DISTINCT doc_id, p FROM (
-        |    SELECT w.doc_id, unnest(generate_series(w.i, w.i + 7)) AS p
-        |    FROM w JOIN c USING (g)
-        |    WHERE cnt >= 2 AND w.doc_id * 1000000 + w.i <> first_occ)),
-        |toks AS (SELECT doc_id, unnest(generate_series(0, len(tk) - 1)) AS p,
-        |    unnest(tk) AS wd FROM t),
-        |kept AS (SELECT toks.* FROM toks LEFT JOIN dp
-        |    ON toks.doc_id = dp.doc_id AND toks.p = dp.p WHERE dp.doc_id IS NULL),
-        |ka AS (SELECT doc_id, count(*) AS n_kept,
-        |    md5(string_agg(wd, ' ' ORDER BY p)) AS clean_md5 FROM kept GROUP BY doc_id),
-        |tc AS (SELECT doc_id, count(*) AS n_tokens FROM toks GROUP BY doc_id)
-        |SELECT tc.doc_id, n_tokens, n_tokens - COALESCE(n_kept, 0) AS n_dropped,
-        |  COALESCE(clean_md5, md5('')) AS clean_md5
-        |FROM tc LEFT JOIN ka ON tc.doc_id = ka.doc_id
-        |ORDER BY tc.doc_id""".stripMargin,
-    "q139_weighted_quota" ->
-      """WITH h AS (SELECT source, doc_id, n_chars,
-        |    (CAST(list_aggregate(list_transform(generate_series(1, 6), j ->
-        |       CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), j, 1)) - 1 AS BIGINT)
-        |         << (4 * (6 - j))), 'sum') AS BIGINT) + 1) / 16777216.0 AS u
-        |  FROM documents WHERE n_chars > 0)
-        |SELECT source, doc_id, n_chars FROM h
-        |QUALIFY row_number() OVER (PARTITION BY source
-        |  ORDER BY ln(u) / n_chars DESC, doc_id) <= 10
-        |ORDER BY source, doc_id""".stripMargin,
-    "q140_quantile_transform" ->
-      """WITH b AS (SELECT quantile_disc(n_chars,
-        |    [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS qs
-        |  FROM documents),
-        |a AS (SELECT doc_id, n_chars,
-        |    len(list_filter((SELECT qs FROM b), q -> q <= n_chars)) AS decile
-        |  FROM documents)
-        |SELECT decile, count(*) AS n, min(n_chars) AS mn, max(n_chars) AS mx
-        |FROM a GROUP BY decile ORDER BY decile""".stripMargin,
-    "q141_incremental_cut" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-        |  FROM documents WHERE trim(text) <> ''),
-        |w AS (SELECT doc_id,
-        |    unnest(generate_series(0, len(tk) - 8)) AS i,
-        |    unnest(list_transform(generate_series(1, len(tk) - 8 + 1),
-        |           j -> md5(array_to_string(tk[j:j+7], ' ')))) AS g
-        |  FROM t WHERE len(tk) >= 8),
-        |idx AS (SELECT g, count(*) AS ccnt FROM w WHERE doc_id % 5 <> 0 GROUP BY g),
-        |bw AS (SELECT * FROM w WHERE doc_id % 5 = 0),
-        |bc AS (SELECT g, count(*) AS bcnt, min(doc_id * 1000000 + i) AS first_occ
-        |  FROM bw GROUP BY g),
-        |dp AS (SELECT DISTINCT doc_id, p FROM (
-        |    SELECT bw.doc_id, unnest(generate_series(bw.i, bw.i + 7)) AS p
-        |    FROM bw JOIN bc USING (g) LEFT JOIN idx USING (g)
-        |    WHERE COALESCE(ccnt, 0) >= 1
-        |       OR (bcnt >= 2 AND bw.doc_id * 1000000 + bw.i <> first_occ))),
-        |toks AS (SELECT doc_id, unnest(generate_series(0, len(tk) - 1)) AS p,
-        |    unnest(tk) AS wd FROM t WHERE doc_id % 5 = 0),
-        |kept AS (SELECT toks.* FROM toks LEFT JOIN dp
-        |    ON toks.doc_id = dp.doc_id AND toks.p = dp.p WHERE dp.doc_id IS NULL),
-        |ka AS (SELECT doc_id, count(*) AS n_kept,
-        |    md5(string_agg(wd, ' ' ORDER BY p)) AS clean_md5 FROM kept GROUP BY doc_id),
-        |tc AS (SELECT doc_id, count(*) AS n_tokens FROM toks GROUP BY doc_id)
-        |SELECT tc.doc_id, n_tokens, n_tokens - COALESCE(n_kept, 0) AS n_dropped,
-        |  COALESCE(clean_md5, md5('')) AS clean_md5
-        |FROM tc LEFT JOIN ka ON tc.doc_id = ka.doc_id
-        |ORDER BY tc.doc_id""".stripMargin,
-    "q142_shard_centroids" ->
-      """WITH dims AS (SELECT unnest(generate_series(1, 64)) AS i),
-        |e AS (SELECT vec_id % 4 AS shard, i - 1 AS dim,
-        |    CAST(embedding[i] AS DOUBLE) AS v
-        |  FROM embeddings CROSS JOIN dims),
-        |cent AS (SELECT shard, dim, avg(v) AS c FROM e GROUP BY 1, 2),
-        |gcent AS (SELECT dim, avg(v) AS gc FROM e GROUP BY 1)
-        |SELECT shard,
-        |  round(sum(c * gc) / (sqrt(sum(c * c)) * sqrt(sum(gc * gc))), 4)
-        |    AS cos_to_global,
-        |  round(sqrt(sum(c * c)), 4) AS norm,
-        |  count(*) AS n_dims
-        |FROM cent JOIN gcent USING (dim)
-        |GROUP BY shard ORDER BY shard""".stripMargin,
-    "q143_funnel_latency" ->
-      """WITH f AS (SELECT user_id,
-        |    min(CASE WHEN event_type = 'view' THEN ts END) AS fv,
-        |    min(CASE WHEN event_type = 'purchase' THEN ts END) AS fp
-        |  FROM events GROUP BY user_id)
-        |SELECT CAST(fv AS DATE) AS cohort_day, count(*) AS n_users,
-        |  round(avg((epoch_us(fp) - epoch_us(fv)) / 1000000), 2) AS avg_s,
-        |  max((epoch_us(fp) - epoch_us(fv)) / 1000000) AS max_s
-        |FROM f WHERE fv IS NOT NULL AND fp IS NOT NULL AND fp >= fv
-        |GROUP BY cohort_day ORDER BY cohort_day""".stripMargin,
-    "q144_oov_rate" ->
-      """WITH tk AS (SELECT source,
-        |    unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
-        |  FROM documents WHERE trim(text) <> ''),
-        |vocab AS (SELECT w, 1 AS iv FROM (
-        |    SELECT w, count(*) AS c FROM tk GROUP BY w
-        |    ORDER BY c DESC, w LIMIT 30))
-        |SELECT source, count(*) AS n_tokens,
-        |  round(1.0 - CAST(sum(COALESCE(iv, 0)) AS DOUBLE) / count(*), 6) AS oov_rate
-        |FROM tk LEFT JOIN vocab USING (w)
-        |GROUP BY source ORDER BY source""".stripMargin,
-    "q145_ewma_anomaly" ->
-      """WITH RECURSIVE hourly AS (SELECT event_type,
-        |    date_trunc('hour', ts) AS bucket, CAST(count(*) AS DOUBLE) AS x
-        |  FROM events GROUP BY 1, 2),
-        |ord AS (SELECT *, row_number() OVER (PARTITION BY event_type
-        |    ORDER BY bucket) AS t FROM hourly),
-        |rec AS (
-        |  SELECT event_type, t, x AS e, CAST(0 AS BIGINT) AS k
-        |  FROM ord WHERE t = 1
-        |  UNION ALL
-        |  SELECT o.event_type, o.t,
-        |    CAST(0.3 AS DOUBLE) * o.x + CAST(0.7 AS DOUBLE) * r.e,
-        |    r.k + CASE WHEN o.x > CAST(2.0 AS DOUBLE) * r.e THEN 1 ELSE 0 END
-        |  FROM rec r JOIN ord o
-        |    ON o.event_type = r.event_type AND o.t = r.t + 1)
-        |SELECT event_type, t AS n_buckets, round(e, 4) AS ewma, k AS n_spikes
-        |FROM rec
-        |QUALIFY row_number() OVER (PARTITION BY event_type ORDER BY t DESC) = 1
-        |ORDER BY event_type""".stripMargin,
-    "q146_sync_plan" ->
-      """WITH src AS (SELECT 'docs/' || doc_id || '.txt' AS path,
-        |    CAST(n_chars AS BIGINT) AS src_size FROM documents),
-        |dst AS (
-        |  SELECT 'docs/' || doc_id || '.txt' AS path,
-        |    CAST(CASE WHEN doc_id % 7 = 0 THEN n_chars + 1 ELSE n_chars END
-        |      AS BIGINT) AS dst_size
-        |  FROM documents WHERE doc_id % 3 <> 0
-        |  UNION ALL
-        |  SELECT 'stale/' || doc_id, CAST(n_chars AS BIGINT)
-        |  FROM documents WHERE doc_id % 11 = 0),
-        |p AS (SELECT COALESCE(src.path, dst.path) AS path, src_size, dst_size,
-        |    CASE WHEN src_size IS NULL THEN 'REMOVE'
-        |         WHEN dst_size IS NULL THEN 'COPY'
-        |         WHEN src_size <> dst_size THEN 'COPY'
-        |         ELSE 'SKIP' END AS action
-        |  FROM src FULL OUTER JOIN dst ON src.path = dst.path)
-        |SELECT action, count(*) AS n_files,
-        |  CAST(sum(COALESCE(src_size, 0)) AS BIGINT) AS src_bytes
-        |FROM p GROUP BY action ORDER BY action""".stripMargin,
-    "q147_dup_attribution" ->
-      """WITH g AS (SELECT doc_id, source, md5(text) AS h FROM documents),
-        |c AS (SELECT h, min(doc_id) AS first_id, count(*) AS cnt
-        |  FROM g GROUP BY h)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN cnt >= 2 AND doc_id <> first_id THEN 1 ELSE 0 END) AS BIGINT) AS n_dup,
-        |  round(CAST(sum(CASE WHEN cnt >= 2 AND doc_id <> first_id THEN 1 ELSE 0 END)
-        |    AS DOUBLE) / count(*), 6) AS dup_rate
-        |FROM g JOIN c USING (h)
-        |GROUP BY source ORDER BY source""".stripMargin,
-    "q148_fuzzy_registry" ->
-      """WITH p AS (SELECT p_partkey, p_name || ' ' || p_partkey AS reg_name
-        |  FROM part WHERE p_partkey % 5 = 0)
-        |SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
-        |  levenshtein(a.reg_name, b.reg_name) AS dist
-        |FROM p a JOIN p b ON a.p_partkey < b.p_partkey
-        |WHERE levenshtein(a.reg_name, b.reg_name) <= 1
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q149_seq_pack" ->
-      """WITH t AS (SELECT doc_id,
-        |    len(regexp_split_to_array(trim(text), '\s+')) AS n_tok
-        |  FROM documents WHERE trim(text) <> ''),
-        |o AS (SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tok,
-        |    CAST(COALESCE(sum(n_tok) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |      AS "offset"
-        |  FROM t)
-        |SELECT doc_id, n_tok, "offset",
-        |  "offset" // 512 AS first_seq,
-        |  ("offset" + n_tok - 1) // 512 AS last_seq,
-        |  ("offset" + n_tok - 1) // 512 - "offset" // 512 + 1 AS n_seqs
-        |FROM o ORDER BY doc_id""".stripMargin,
-    "q150_keep_best" ->
-      """WITH k AS (SELECT * FROM documents
-        |  QUALIFY row_number() OVER (PARTITION BY md5(text)
-        |    ORDER BY n_chars DESC, doc_id DESC) = 1)
-        |SELECT source, count(*) AS n_kept,
-        |  CAST(sum(n_chars) AS BIGINT) AS kept_chars
-        |FROM k GROUP BY source ORDER BY source""".stripMargin,
-    "q151_robust_anomaly" ->
-      """WITH c AS (SELECT event_type, date_trunc('hour', ts) AS bucket_start,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |m AS (SELECT event_type, quantile_disc(CAST(n AS DOUBLE), 0.5) AS med
-        |  FROM c GROUP BY 1),
-        |c2 AS (SELECT c.*, med FROM c JOIN m USING (event_type)),
-        |md AS (SELECT event_type, quantile_disc(abs(n - med), 0.5) AS mad
-        |  FROM c2 GROUP BY 1)
-        |SELECT event_type, bucket_start, n, med, mad,
-        |  round((n - med) / (1.4826 * mad), 4) AS rz
-        |FROM c2 JOIN md USING (event_type)
-        |WHERE mad > 0 AND abs((n - med) / (1.4826 * mad)) >= 3.5
-        |ORDER BY event_type, bucket_start""".stripMargin,
-    "q152_curation_pipeline" ->
-      """WITH pool AS (SELECT * FROM documents
-        |  WHERE doc_id % 97 <> 0 AND n_chars >= 150),
-        |dedup AS (SELECT * FROM pool
-        |  QUALIFY row_number() OVER (PARTITION BY md5(text)
-        |    ORDER BY n_chars DESC, doc_id DESC) = 1),
-        |btk AS (SELECT regexp_split_to_array(trim(text), '\s+') AS tk
-        |  FROM documents WHERE doc_id % 97 = 0 AND trim(text) <> ''),
-        |bg AS (SELECT DISTINCT unnest(list_transform(
-        |    generate_series(1, greatest(len(tk) - 4, 0)),
-        |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4])) AS g
-        |  FROM btk),
-        |ctk AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-        |  FROM dedup WHERE trim(text) <> ''),
-        |cg AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, greatest(len(tk) - 4, 0)),
-        |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4]))) AS g
-        |  FROM ctk),
-        |bad AS (SELECT DISTINCT doc_id FROM cg JOIN bg USING (g)),
-        |clean AS (SELECT * FROM dedup
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM bad)),
-        |capped AS (SELECT * FROM clean
-        |  QUALIFY row_number() OVER (PARTITION BY source
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) <= 15)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS total_chars
-        |FROM capped GROUP BY source ORDER BY source""".stripMargin,
-    "q153_session_funnel" ->
-      """WITH g AS (SELECT user_id, event_id, event_type, ts,
-        |  CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 600000000
-        |    THEN 1 ELSE 0 END AS new_s
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT user_id, event_type, ts,
-        |  CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                   ROWS UNBOUNDED PRECEDING) AS INTEGER) AS session_id
-        |  FROM g),
-        |p AS (SELECT user_id, session_id, count(*) AS n_events,
-        |    min(CASE WHEN event_type = 'view' THEN ts END) AS fv,
-        |    max(CASE WHEN event_type = 'purchase' THEN ts END) AS lp
-        |  FROM s GROUP BY 1, 2),
-        |f AS (SELECT *, CASE WHEN fv IS NOT NULL AND lp IS NOT NULL
-        |    AND lp >= fv THEN 1 ELSE 0 END AS conv FROM p)
-        |SELECT least(n_events, 5) AS size_bucket, count(*) AS n_sessions,
-        |  CAST(sum(conv) AS BIGINT) AS n_converted,
-        |  round(CAST(sum(conv) AS DOUBLE) / count(*), 6) AS conv_rate
-        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q159_ngram_overlap" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-        |  FROM documents WHERE len(regexp_split_to_array(trim(text), '\s+')) >= 2
-        |    AND trim(text) <> ''),
-        |g AS (SELECT doc_id,
-        |    list_transform(generate_series(1, len(tk)), i -> tk[i]) AS g1,
-        |    list_transform(generate_series(1, len(tk) - 1),
-        |      i -> tk[i] || ' ' || tk[i+1]) AS g2
-        |  FROM t),
-        |p AS (SELECT a.doc_id, a.g1 AS c1g, b.g1 AS r1g, a.g2 AS c2g, b.g2 AS r2g
-        |  FROM g a JOIN g b ON b.doc_id = a.doc_id + 1
-        |  WHERE a.doc_id % 13 = 0),
-        |m AS (SELECT doc_id,
-        |    CAST(list_aggregate(list_transform(list_distinct(c1g), x ->
-        |      least(len(list_filter(c1g, y -> y = x)),
-        |            len(list_filter(r1g, y -> y = x)))), 'sum') AS BIGINT) AS m1,
-        |    CAST(len(c1g) AS BIGINT) AS c1, CAST(len(r1g) AS BIGINT) AS r1,
-        |    CAST(list_aggregate(list_transform(list_distinct(c2g), x ->
-        |      least(len(list_filter(c2g, y -> y = x)),
-        |            len(list_filter(r2g, y -> y = x)))), 'sum') AS BIGINT) AS m2,
-        |    CAST(len(c2g) AS BIGINT) AS c2,
-        |    CAST(len(r2g) AS BIGINT) AS r2
-        |  FROM p)
-        |SELECT doc_id, m1, c1, r1, m2, c2,
-        |  round(m1 * 1.0 / c1, 6) AS bleu1_p,
-        |  round(m2 * 1.0 / r2, 6) AS rouge2_r
-        |FROM m ORDER BY doc_id""".stripMargin,
-    // q160's oracle replays the LCS dynamic program in DuckDB with a
-    // recursive CTE: one iteration per candidate token, the DP row carried
-    // as a list; the intra-row max is resolved by the prefix-max identity
-    // new[j] = max(old[j], max_{j'<=j}(old[j'-1] + eq(j'))) (valid because
-    // old[] is monotone nondecreasing), so each step is pure list ops
-    "q160_rouge_l" ->
-      """WITH RECURSIVE n AS (
-        |  SELECT doc_id, trim(regexp_replace(text, '\s+', ' ', 'g')) AS nt
-        |  FROM documents),
-        |t AS (
-        |  SELECT doc_id, list_slice(regexp_split_to_array(nt, ' '), 1, 40) AS tk
-        |  FROM n WHERE nt <> ''),
-        |p AS (SELECT a.doc_id, a.tk AS cand, b.tk AS ref
-        |  FROM t a JOIN t b ON b.doc_id = a.doc_id + 1
-        |  WHERE a.doc_id % 7 = 0),
-        |dp AS (
-        |  SELECT doc_id, cand, ref, 0 AS i,
-        |    list_transform(generate_series(0, len(ref)), x -> 0) AS dpr
-        |  FROM p
-        |  UNION ALL
-        |  SELECT doc_id, cand, ref, i + 1,
-        |    list_prepend(0, list_transform(generate_series(1, len(ref)), j ->
-        |      greatest(dpr[j + 1],
-        |        list_max(list_transform(generate_series(1, j), j2 ->
-        |          dpr[j2] + CASE WHEN cand[i + 1] = ref[j2] THEN 1 ELSE 0 END)))))
-        |  FROM dp WHERE i < len(cand))
-        |SELECT doc_id,
-        |  CAST(dpr[len(ref) + 1] AS BIGINT) AS lcs,
-        |  CAST(len(cand) AS BIGINT) AS cand_n,
-        |  CAST(len(ref) AS BIGINT) AS ref_n,
-        |  round(dpr[len(ref) + 1] * 1.0 / len(cand), 6) AS rouge_l_p,
-        |  round(dpr[len(ref) + 1] * 1.0 / len(ref), 6) AS rouge_l_r
-        |FROM dp WHERE i = len(cand) ORDER BY doc_id""".stripMargin,
-    "q161_chrf" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_replace(substr(text, 1, 160), '\s+', '', 'g') AS s
-        |  FROM documents),
-        |f AS (SELECT doc_id, s FROM t WHERE len(s) >= 6),
-        |g AS (SELECT doc_id,
-        |    list_transform(generate_series(1, len(s) - 1), i -> substr(s, i, 2)) AS g2,
-        |    list_transform(generate_series(1, len(s) - 5), i -> substr(s, i, 6)) AS g6
-        |  FROM f),
-        |p AS (SELECT a.doc_id, a.g2 AS c2g, b.g2 AS r2g, a.g6 AS c6g, b.g6 AS r6g
-        |  FROM g a JOIN g b ON b.doc_id = a.doc_id + 1
-        |  WHERE a.doc_id % 11 = 0),
-        |m AS (SELECT doc_id,
-        |    CAST(list_aggregate(list_transform(list_distinct(c2g), x ->
-        |      least(len(list_filter(c2g, y -> y = x)),
-        |            len(list_filter(r2g, y -> y = x)))), 'sum') AS BIGINT) AS m2,
-        |    CAST(len(c2g) AS BIGINT) AS c2, CAST(len(r2g) AS BIGINT) AS r2,
-        |    CAST(list_aggregate(list_transform(list_distinct(c6g), x ->
-        |      least(len(list_filter(c6g, y -> y = x)),
-        |            len(list_filter(r6g, y -> y = x)))), 'sum') AS BIGINT) AS m6,
-        |    CAST(len(c6g) AS BIGINT) AS c6,
-        |    len(r6g) AS r6n
-        |  FROM p)
-        |SELECT doc_id, m2, c2, r2, m6, c6,
-        |  round(m2 * 1.0 / c2, 6) AS chrp2,
-        |  round(m6 * 1.0 / r6n, 6) AS chrr6
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "q162_chat_assembly" ->
-      """WITH g AS (SELECT user_id, event_id, ts, event_type, props,
-        |  CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 600000000 THEN 1 ELSE 0 END AS new_s
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS INTEGER) AS session_id FROM g),
-        |t AS (SELECT *,
-        |  (CASE WHEN event_type IN ('view','click') THEN 'user' ELSE 'assistant' END)
-        |    || ': ' || event_type || ' ' || coalesce(props, '') AS line FROM s),
-        |w2 AS (SELECT *, len(regexp_split_to_array(trim(line), '\s+')) AS tok FROM t),
-        |r AS (SELECT *, sum(tok) OVER (PARTITION BY user_id, session_id ORDER BY ts, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS run FROM w2)
-        |SELECT user_id, session_id,
-        |  count(*) AS n_turns,
-        |  CAST(sum(CASE WHEN run <= 24 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |  CAST(coalesce(sum(CASE WHEN run <= 24 THEN tok END), 0) AS BIGINT) AS tokens_kept,
-        |  coalesce(string_agg(CASE WHEN run <= 24 THEN line END, chr(10) ORDER BY ts, event_id), '') AS transcript
-        |FROM r GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
-    // q163: the oracle recomputes every Walsh-Hadamard coefficient from
-    // the documented PCM formula via bit_count parity - integer-exact, no
-    // container round-trip, so it independently checks the WAV decode
-    "q163_audio_spectral" ->
-      """WITH ids AS (SELECT unnest(generate_series(0, 7)) AS id),
-        |s AS (SELECT id, list_transform(generate_series(0, 1023), n ->
-        |    ((id + 3) * ((n*n) % 977) + 17 * n) % 4096 - 2048) AS x FROM ids),
-        |fs AS (SELECT unnest(generate_series(0, 15)) AS f),
-        |fr AS (SELECT id, f, list_slice(x, f*64 + 1, f*64 + 64) AS w FROM s CROSS JOIN fs),
-        |c AS (SELECT id, f, w,
-        |    list_transform(generate_series(0, 63), k ->
-        |      abs(list_aggregate(list_transform(generate_series(0, 63), n ->
-        |        w[n+1] * (CASE WHEN bit_count(CAST(n AS BIGINT) & k) % 2 = 0 THEN 1 ELSE -1 END)), 'sum'))) AS mag
-        |  FROM fr)
-        |SELECT CAST(id AS BIGINT) AS media_id, CAST(f AS BIGINT) AS frame,
-        |  CAST(len(list_filter(generate_series(2, 64), i -> (w[i] >= 0) <> (w[i-1] >= 0))) AS BIGINT) AS zcr,
-        |  CAST(list_aggregate(list_transform(w, v -> v*v), 'sum') AS BIGINT) AS energy,
-        |  CAST(list_aggregate(list_slice(mag, 1, 16), 'sum') AS BIGINT) AS b0,
-        |  CAST(list_aggregate(list_slice(mag, 17, 32), 'sum') AS BIGINT) AS b1,
-        |  CAST(list_aggregate(list_slice(mag, 33, 48), 'sum') AS BIGINT) AS b2,
-        |  CAST(list_aggregate(list_slice(mag, 49, 64), 'sum') AS BIGINT) AS b3
-        |FROM c ORDER BY media_id, frame""".stripMargin,
-    // q158's oracle is the INDEPENDENT python encoder's reconstruction,
-    // pinned as literals (generated by scripts/gen_h264_fixture.py from
-    // the committed .yuv): any decode drift in the Scala H.264 path
-    // breaks a luma sum
-    "q158_h264_frames" ->
-      """SELECT * FROM (VALUES
-        |  (CAST(0 AS BIGINT), TRUE, CAST(32 AS BIGINT), CAST(48 AS BIGINT), CAST(162751 AS BIGINT)),
-        |  (CAST(1 AS BIGINT), TRUE, CAST(32 AS BIGINT), CAST(48 AS BIGINT), CAST(158932 AS BIGINT)),
-        |  (CAST(2 AS BIGINT), TRUE, CAST(32 AS BIGINT), CAST(48 AS BIGINT), CAST(169669 AS BIGINT)))
-        |  AS t(frame_index, sync, height, width, sum_y)
-        |ORDER BY frame_index""".stripMargin,
-    // q166: same literal-luma-sum pinning for the P-frame chain — the
-    // values are the python encoder's reconstruction sums printed by
-    // scripts/gen_h264_fixture.py; only frame 0 (the IDR) is sync
-    "q166_h264_pframes" ->
-      """SELECT * FROM (VALUES
-        |  (CAST(0 AS BIGINT), TRUE, CAST(32 AS BIGINT), CAST(48 AS BIGINT), CAST(167604 AS BIGINT)),
-        |  (CAST(1 AS BIGINT), FALSE, CAST(32 AS BIGINT), CAST(48 AS BIGINT), CAST(155622 AS BIGINT)),
-        |  (CAST(2 AS BIGINT), FALSE, CAST(32 AS BIGINT), CAST(48 AS BIGINT), CAST(157617 AS BIGINT)),
-        |  (CAST(3 AS BIGINT), FALSE, CAST(32 AS BIGINT), CAST(48 AS BIGINT), CAST(159439 AS BIGINT)))
-        |  AS t(frame_index, sync, height, width, sum_y)
-        |ORDER BY frame_index""".stripMargin,
-    // q167: the video half pins the 8 corpus clips' per-frame luma sums
-    // (python encoder reconstruction, scripts/gen_h264_fixture.py); the
-    // audio half recomputes every frame energy from the PCM formula
-    "q167_media_corpus" ->
-      """WITH v(media_id, seq, metric) AS (VALUES
-        |  (CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(165554 AS BIGINT)),
-        |  (CAST(0 AS BIGINT), CAST(1 AS BIGINT), CAST(153469 AS BIGINT)),
-        |  (CAST(0 AS BIGINT), CAST(2 AS BIGINT), CAST(158110 AS BIGINT)),
-        |  (CAST(0 AS BIGINT), CAST(3 AS BIGINT), CAST(159075 AS BIGINT)),
-        |  (CAST(1 AS BIGINT), CAST(0 AS BIGINT), CAST(165867 AS BIGINT)),
-        |  (CAST(1 AS BIGINT), CAST(1 AS BIGINT), CAST(155640 AS BIGINT)),
-        |  (CAST(1 AS BIGINT), CAST(2 AS BIGINT), CAST(160638 AS BIGINT)),
-        |  (CAST(1 AS BIGINT), CAST(3 AS BIGINT), CAST(160114 AS BIGINT)),
-        |  (CAST(2 AS BIGINT), CAST(0 AS BIGINT), CAST(171387 AS BIGINT)),
-        |  (CAST(2 AS BIGINT), CAST(1 AS BIGINT), CAST(159694 AS BIGINT)),
-        |  (CAST(2 AS BIGINT), CAST(2 AS BIGINT), CAST(159767 AS BIGINT)),
-        |  (CAST(2 AS BIGINT), CAST(3 AS BIGINT), CAST(159172 AS BIGINT)),
-        |  (CAST(3 AS BIGINT), CAST(0 AS BIGINT), CAST(165128 AS BIGINT)),
-        |  (CAST(3 AS BIGINT), CAST(1 AS BIGINT), CAST(182786 AS BIGINT)),
-        |  (CAST(3 AS BIGINT), CAST(2 AS BIGINT), CAST(178876 AS BIGINT)),
-        |  (CAST(3 AS BIGINT), CAST(3 AS BIGINT), CAST(162032 AS BIGINT)),
-        |  (CAST(4 AS BIGINT), CAST(0 AS BIGINT), CAST(163906 AS BIGINT)),
-        |  (CAST(4 AS BIGINT), CAST(1 AS BIGINT), CAST(154218 AS BIGINT)),
-        |  (CAST(4 AS BIGINT), CAST(2 AS BIGINT), CAST(159125 AS BIGINT)),
-        |  (CAST(4 AS BIGINT), CAST(3 AS BIGINT), CAST(161488 AS BIGINT)),
-        |  (CAST(5 AS BIGINT), CAST(0 AS BIGINT), CAST(164470 AS BIGINT)),
-        |  (CAST(5 AS BIGINT), CAST(1 AS BIGINT), CAST(156899 AS BIGINT)),
-        |  (CAST(5 AS BIGINT), CAST(2 AS BIGINT), CAST(161094 AS BIGINT)),
-        |  (CAST(5 AS BIGINT), CAST(3 AS BIGINT), CAST(155993 AS BIGINT)),
-        |  (CAST(6 AS BIGINT), CAST(0 AS BIGINT), CAST(165147 AS BIGINT)),
-        |  (CAST(6 AS BIGINT), CAST(1 AS BIGINT), CAST(158635 AS BIGINT)),
-        |  (CAST(6 AS BIGINT), CAST(2 AS BIGINT), CAST(163661 AS BIGINT)),
-        |  (CAST(6 AS BIGINT), CAST(3 AS BIGINT), CAST(155154 AS BIGINT)),
-        |  (CAST(7 AS BIGINT), CAST(0 AS BIGINT), CAST(169037 AS BIGINT)),
-        |  (CAST(7 AS BIGINT), CAST(1 AS BIGINT), CAST(145030 AS BIGINT)),
-        |  (CAST(7 AS BIGINT), CAST(2 AS BIGINT), CAST(163822 AS BIGINT)),
-        |  (CAST(7 AS BIGINT), CAST(3 AS BIGINT), CAST(153802 AS BIGINT))),
-        |ids AS (SELECT unnest(generate_series(0, 15)) AS id),
-        |pcm AS (SELECT id, list_transform(generate_series(0, 1023), n ->
-        |    ((id + 3) * ((n*n) % 977) + 17 * n) % 4096 - 2048) AS x FROM ids),
-        |fs AS (SELECT unnest(generate_series(0, 15)) AS f),
-        |a AS (SELECT id AS media_id, f AS seq,
-        |    list_aggregate(list_transform(
-        |      list_slice(x, f*64 + 1, f*64 + 64), v -> v*v), 'sum') AS metric
-        |  FROM pcm CROSS JOIN fs)
-        |SELECT 'video' AS kind, media_id, seq, metric FROM v
-        |UNION ALL
-        |SELECT 'audio' AS kind, CAST(media_id AS BIGINT),
-        |  CAST(seq AS BIGINT), CAST(metric AS BIGINT) FROM a
-        |ORDER BY kind, media_id, seq""".stripMargin,
-    "q154_jaccard_topk" ->
-      """WITH t AS (SELECT doc_id,
-        |    list_distinct(regexp_split_to_array(trim(lower(text)), '\s+')) AS tk
-        |  FROM documents WHERE doc_id % 7 = 0 AND trim(text) <> ''),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    len(list_intersect(a.tk, b.tk)) * 1.0
-        |      / (len(a.tk) + len(b.tk) - len(list_intersect(a.tk, b.tk))) AS j
-        |  FROM t a JOIN t b ON a.doc_id < b.doc_id),
-        |f AS (SELECT id_a, id_b, j FROM p WHERE j >= 0.8
-        |  QUALIFY row_number() OVER (PARTITION BY id_a ORDER BY j DESC, id_b) <= 2)
-        |SELECT id_a, id_b, round(j, 4) AS jaccard FROM f
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q155_containment_topk" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-        |  FROM documents WHERE trim(text) <> ''),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(
-        |    generate_series(1, greatest(len(tk) - 2, 0)),
-        |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s FROM t),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s) AS c
-        |  FROM sh a JOIN sh b ON a.doc_id <> b.doc_id
-        |  WHERE len(a.s) > 0 AND len(b.s) > 0),
-        |f AS (SELECT id_a, id_b, c FROM p WHERE c >= 0.8
-        |  QUALIFY row_number() OVER (PARTITION BY id_a ORDER BY c DESC, id_b) <= 1)
-        |SELECT id_a, id_b, round(c, 4) AS containment FROM f
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q157_fuzzy_topk" ->
-      """WITH p AS (SELECT p_partkey, p_name FROM part WHERE p_partkey % 5 = 0),
-        |pr AS (SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
-        |    levenshtein(a.p_name, b.p_name) AS dist
-        |  FROM p a JOIN p b ON a.p_partkey < b.p_partkey
-        |  WHERE levenshtein(a.p_name, b.p_name) <= 1),
-        |f AS (SELECT id_a, id_b, dist FROM pr
-        |  QUALIFY row_number() OVER (PARTITION BY id_a ORDER BY dist, id_b) <= 3)
-        |SELECT id_a, id_b, dist FROM f ORDER BY id_a, id_b""".stripMargin,
-    "q156_fuzzy_summary" ->
-      """WITH p AS (SELECT p_partkey, p_name FROM part WHERE p_partkey % 5 = 0),
-        |pr AS (SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
-        |    levenshtein(a.p_name, b.p_name) AS dist
-        |  FROM p a JOIN p b ON a.p_partkey < b.p_partkey
-        |  WHERE levenshtein(a.p_name, b.p_name) <= 1),
-        |e AS (SELECT id_a AS id, dist FROM pr
-        |      UNION ALL SELECT id_b AS id, dist FROM pr)
-        |SELECT id, count(*) AS n_partners, min(dist) AS best_dist
-        |FROM e GROUP BY id ORDER BY id""".stripMargin,
-    // q164/q165: oracle rows are literals computed by the INDEPENDENT
-    // python extraction replay in scripts/gen_warc_fixture.py — the
-    // fixture bytes and every expected digest share no code with the Scala
-    // WARC parser / HTML extractor under test, so a drift anywhere in
-    // record framing, gzip-member handling, HTTP header split, tag strip,
-    // entity decode, or the density rule breaks a literal.
-    "q164_warc_extract" ->
-      """WITH r(record_index, warc_type, target_uri, http_status,
-        |       payload_len, payload_md5, text_md5, text_chars) AS (VALUES
-        |  (CAST(0 AS BIGINT), 'warcinfo', '', CAST(-1 AS BIGINT), CAST(59 AS BIGINT), 'bf750d1cf4c3cf46a63dd4777ad49d2b', 'bf750d1cf4c3cf46a63dd4777ad49d2b', CAST(59 AS BIGINT)),
-        |  (CAST(1 AS BIGINT), 'request', 'http://fixture.example/page-a', CAST(-1 AS BIGINT), CAST(0 AS BIGINT), 'd41d8cd98f00b204e9800998ecf8427e', 'd41d8cd98f00b204e9800998ecf8427e', CAST(0 AS BIGINT)),
-        |  (CAST(2 AS BIGINT), 'response', 'http://fixture.example/page-a', CAST(200 AS BIGINT), CAST(823 AS BIGINT), 'c7e01f18582742effbf4590997e99c84', 'bc0618804c87b63f9bdde1555c16a220', CAST(334 AS BIGINT)),
-        |  (CAST(3 AS BIGINT), 'response', 'http://fixture.example/page-b', CAST(200 AS BIGINT), CAST(409 AS BIGINT), '530ec03dc04da42280882d4529c8d077', 'e84749f0ddb580a6a1bf8b67c53a2500', CAST(216 AS BIGINT)),
-        |  (CAST(4 AS BIGINT), 'response', 'http://fixture.example/robots.txt', CAST(200 AS BIGINT), CAST(47 AS BIGINT), '504cc27d124aa4267375563c721fd87f', '504cc27d124aa4267375563c721fd87f', CAST(47 AS BIGINT)),
-        |  (CAST(5 AS BIGINT), 'response', 'http://fixture.example/missing', CAST(404 AS BIGINT), CAST(45 AS BIGINT), '4070cda956e04b568baab9ae986c643d', '606f595e097047571ca4510cd647285a', CAST(12 AS BIGINT)),
-        |  (CAST(6 AS BIGINT), 'response', 'http://fixture.example/page-c', CAST(200 AS BIGINT), CAST(172 AS BIGINT), '8a954749de82c04aa98cca9659407319', '705afa8578a7f38de6e9b05a12b35f18', CAST(116 AS BIGINT)),
-        |  (CAST(7 AS BIGINT), 'response', 'http://fixture.example/chunked', CAST(200 AS BIGINT), CAST(409 AS BIGINT), '530ec03dc04da42280882d4529c8d077', 'e84749f0ddb580a6a1bf8b67c53a2500', CAST(216 AS BIGINT)),
-        |  (CAST(8 AS BIGINT), 'response', 'http://fixture.example/gzipped', CAST(200 AS BIGINT), CAST(823 AS BIGINT), 'c7e01f18582742effbf4590997e99c84', 'bc0618804c87b63f9bdde1555c16a220', CAST(334 AS BIGINT)),
-        |  (CAST(9 AS BIGINT), 'response', 'http://fixture.example/both', CAST(200 AS BIGINT), CAST(172 AS BIGINT), '8a954749de82c04aa98cca9659407319', '705afa8578a7f38de6e9b05a12b35f18', CAST(116 AS BIGINT)),
-        |  (CAST(10 AS BIGINT), 'response', 'http://MIRROR.example:80/page-a-variant/', CAST(200 AS BIGINT), CAST(832 AS BIGINT), '49a1bd27d44ea8f71fde4423d5958641', '3e938e24b1e6f57ae38244ac310715d6', CAST(343 AS BIGINT)),
-        |  (CAST(11 AS BIGINT), 'response', 'http://mirror.example/page-d?b=2&a=1#sec', CAST(200 AS BIGINT), CAST(266 AS BIGINT), 'd0ae7fd5a4ee147c86766ab1c7e92c5f', '326379951776523ac926ae9c3ea1f35a', CAST(182 AS BIGINT)),
-        |  (CAST(12 AS BIGINT), 'response', 'http://fixture.example/img-a.png', CAST(200 AS BIGINT), CAST(1057 AS BIGINT), '95884e74971bbaf1063cb9941b0d0e5e', 'd41d8cd98f00b204e9800998ecf8427e', CAST(0 AS BIGINT)),
-        |  (CAST(13 AS BIGINT), 'response', 'http://MIRROR.example:80/img-a-copy.png', CAST(200 AS BIGINT), CAST(1124 AS BIGINT), 'eb78cc0638bce88fccc6c8b35b496576', 'd41d8cd98f00b204e9800998ecf8427e', CAST(0 AS BIGINT)),
-        |  (CAST(14 AS BIGINT), 'response', 'http://fixture.example/img-b.png', CAST(200 AS BIGINT), CAST(1106 AS BIGINT), '93bebab32bd65e07e5fb7603594ee844', 'd41d8cd98f00b204e9800998ecf8427e', CAST(0 AS BIGINT)),
-        |  (CAST(15 AS BIGINT), 'response', 'http://fixture.example/tone-a.wav', CAST(200 AS BIGINT), CAST(2092 AS BIGINT), '2787ee01bfb29c0d230b8cdc625130b7', 'd41d8cd98f00b204e9800998ecf8427e', CAST(0 AS BIGINT)),
-        |  (CAST(16 AS BIGINT), 'response', 'http://mirror.example/tone-a-gain.wav', CAST(200 AS BIGINT), CAST(2092 AS BIGINT), '6f54b6ce2d76f2c5de7278bf28864cd5', 'd41d8cd98f00b204e9800998ecf8427e', CAST(0 AS BIGINT)),
-        |  (CAST(17 AS BIGINT), 'response', 'http://fixture.example/clip-a.mp4', CAST(200 AS BIGINT), CAST(4159 AS BIGINT), '6cba773aae2826c6b5acf5b2e30c0d3d', 'd41d8cd98f00b204e9800998ecf8427e', CAST(0 AS BIGINT)),
-        |  (CAST(18 AS BIGINT), 'response', 'http://MIRROR.example:80/clip-a-copy.mp4', CAST(200 AS BIGINT), CAST(4159 AS BIGINT), '6cba773aae2826c6b5acf5b2e30c0d3d', 'd41d8cd98f00b204e9800998ecf8427e', CAST(0 AS BIGINT)),
-        |  (CAST(19 AS BIGINT), 'response', 'http://fixture.example/clip-b.mp4', CAST(200 AS BIGINT), CAST(4176 AS BIGINT), 'd74b0da80ab80601edddd419f680eb85', 'd41d8cd98f00b204e9800998ecf8427e', CAST(0 AS BIGINT))),
-        |k(kind) AS (VALUES ('gz'), ('plain'))
-        |SELECT kind, record_index, warc_type, target_uri, http_status,
-        |  payload_len, payload_md5, text_md5, text_chars
-        |FROM k CROSS JOIN r ORDER BY kind, record_index""".stripMargin,
-    "q165_html_main_text" ->
-      """WITH v(target_uri, n_blocks, main_md5, main_chars, full_chars) AS (VALUES
-        |  ('http://fixture.example/page-a', CAST(3 AS BIGINT), '7082a12b4c92208d0bef0ef955a0d96e', CAST(275 AS BIGINT), CAST(334 AS BIGINT)),
-        |  ('http://fixture.example/page-b', CAST(2 AS BIGINT), '4f6e839a4693ac150824786770f70aa6', CAST(202 AS BIGINT), CAST(216 AS BIGINT)),
-        |  ('http://fixture.example/page-c', CAST(2 AS BIGINT), '5c3d0254c0cbbf65083a65234e700c41', CAST(90 AS BIGINT), CAST(116 AS BIGINT)),
-        |  ('http://fixture.example/chunked', CAST(2 AS BIGINT), '4f6e839a4693ac150824786770f70aa6', CAST(202 AS BIGINT), CAST(216 AS BIGINT)),
-        |  ('http://fixture.example/gzipped', CAST(3 AS BIGINT), '7082a12b4c92208d0bef0ef955a0d96e', CAST(275 AS BIGINT), CAST(334 AS BIGINT)),
-        |  ('http://fixture.example/both', CAST(2 AS BIGINT), '5c3d0254c0cbbf65083a65234e700c41', CAST(90 AS BIGINT), CAST(116 AS BIGINT)),
-        |  ('http://MIRROR.example:80/page-a-variant/', CAST(3 AS BIGINT), 'bb81b9e00b56488fd33c9b43cb5c5039', CAST(275 AS BIGINT), CAST(343 AS BIGINT)),
-        |  ('http://mirror.example/page-d?b=2&a=1#sec', CAST(1 AS BIGINT), '259e0d152fec0fa47a6b3ff5bb342a2f', CAST(176 AS BIGINT), CAST(182 AS BIGINT)))
-        |SELECT target_uri, n_blocks, main_md5, main_chars, full_chars
-        |FROM v ORDER BY target_uri""".stripMargin,
-    // q168: the composition's results replayed by the python generator
-    // end-to-end (extraction + gate + dedup + counts share no code with
-    // the Scala pipeline under test)
-    "q168_crawl_pipeline" ->
-      """WITH v(keeper_uri, n_copies, main_tokens, main_chars) AS (VALUES
-        |  ('http://MIRROR.example:80/page-a-variant/', CAST(1 AS BIGINT), CAST(40 AS BIGINT), CAST(275 AS BIGINT)),
-        |  ('http://fixture.example/both', CAST(2 AS BIGINT), CAST(15 AS BIGINT), CAST(90 AS BIGINT)),
-        |  ('http://fixture.example/chunked', CAST(2 AS BIGINT), CAST(33 AS BIGINT), CAST(202 AS BIGINT)),
-        |  ('http://fixture.example/gzipped', CAST(2 AS BIGINT), CAST(40 AS BIGINT), CAST(275 AS BIGINT)),
-        |  ('http://mirror.example/page-d?b=2&a=1#sec', CAST(1 AS BIGINT), CAST(27 AS BIGINT), CAST(176 AS BIGINT)))
-        |SELECT keeper_uri, n_copies, main_tokens, main_chars
-        |FROM v ORDER BY keeper_uri""".stripMargin,
-    // q170: the crawl→shards composition replayed end-to-end by the
-    // python generator (extraction, canonicalization, exact dedup,
-    // minhash LSH + jaccard + union-find near-dedup, per-domain cap,
-    // md5-bucketed token-budget sharding — no code shared with Scala)
-    "q170_crawl_shards" ->
-      """WITH v(keeper_uri, regdom, n_copies, tokens, shard) AS (VALUES
-        |  ('http://fixture.example/page-a', 'fixture.example', CAST(2 AS BIGINT), CAST(40 AS BIGINT), CAST(0 AS BIGINT)),
-        |  ('http://fixture.example/page-c', 'fixture.example', CAST(2 AS BIGINT), CAST(15 AS BIGINT), CAST(1 AS BIGINT)),
-        |  ('http://mirror.example/page-d?a=1&b=2', 'mirror.example', CAST(1 AS BIGINT), CAST(27 AS BIGINT), CAST(1 AS BIGINT)))
-        |SELECT keeper_uri, regdom, n_copies, tokens, shard
-        |FROM v ORDER BY keeper_uri""".stripMargin,
-    // full pHash replay from pixel literals: the same integer pixel
-    // formula the battery PNGs were rendered from, the same 8×8 DCT
-    // block (plain cosine sums), the 63-AC median (odd count — DuckDB's
-    // median is the exact middle element), the same bit layout. DuckDB
-    // computes its own cos()/sums, so decode+DCT+hash verify end-to-end.
-    "q169_phash" ->
-      """WITH px AS (
-        |  SELECT img, x, y,
-        |    ((x*7 + y*13 + img*29) * (x + y + img + 1) + x*y) % 256 AS v
-        |  FROM generate_series(0,11) t0(img),
-        |       generate_series(0,31) t1(x), generate_series(0,31) t2(y)
-        |), dct AS (
-        |  SELECT img, u, vv,
-        |    SUM(v * cos((2*x+1)*u*pi()/64) * cos((2*y+1)*vv*pi()/64)) AS c
-        |  FROM px, generate_series(0,7) tu(u), generate_series(0,7) tv(vv)
-        |  GROUP BY img, u, vv
-        |), med AS (
-        |  SELECT img, median(c) AS m FROM dct
-        |  WHERE NOT (u = 0 AND vv = 0) GROUP BY img
-        |), bits AS (
-        |  SELECT d.img, u*8 + vv AS k,
-        |    CASE WHEN d.c > med.m THEN 1 ELSE 0 END AS b
-        |  FROM dct d JOIN med ON d.img = med.img
-        |)
-        |SELECT img AS img_id,
-        |  CAST(SUM(CASE WHEN b = 0 THEN 0
-        |                WHEN k = 63 THEN -9223372036854775808
-        |                ELSE (CAST(1 AS BIGINT) << k) END) AS BIGINT) AS phash
-        |FROM bits GROUP BY img ORDER BY img_id""".stripMargin,
-    // full replay of the URL grammar with DuckDB's own string/list ops
-    // (regexp, string_split, list_filter, list_sort, unhex/decode) over
-    // the battery literals — same contract, independent implementation:
-    // IPv6-aware authority split, RFC 3986 percent-escape normalization,
-    // and the PSL algorithm (exceptions > wildcards/exacts > default)
-    "q171_url_canon" -> {
-      val U = graft.functions.UrlFunctions
-      val vals = urlBattery.map(u => s"  ('$u')").mkString(",\n")
-      def set(xs: Seq[String]) = xs.map(x => s"'$x'").mkString(",")
-      // percent normalization of an expression: pieces after each '%' —
-      // unreserved byte (hex-pair regex) decodes, valid hex upcases,
-      // malformed passes through verbatim
-      // coalesce: DuckDB's array_to_string of an EMPTY list is NULL
-      def pct(e: String): String =
-        s"""(string_split($e, '%')[1] || coalesce(array_to_string(
-           |    list_transform(string_split($e, '%')[2:], p -> CASE
-           |      WHEN NOT regexp_matches(upper(p[1:2]), '^[0-9A-F]{2}$$') THEN '%' || p
-           |      WHEN regexp_matches(upper(p[1:2]), '^(3[0-9]|4[1-9A-F]|5[0-9A]|6[1-9A-F]|7[0-9A]|2[DE]|5F|7E)$$')
-           |        THEN decode(unhex(upper(p[1:2]))) || p[3:]
-           |      ELSE '%' || upper(p[1:2]) || p[3:] END), ''), ''))""".stripMargin
-      s"""WITH urls(url) AS (VALUES
-         |$vals),
-         |s1 AS (SELECT url, regexp_extract(trim(url), '^([^#]*)', 1) AS nofrag FROM urls),
-         |s2 AS (SELECT url, nofrag,
-         |  lower(regexp_extract(nofrag, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-         |  regexp_replace(nofrag, '^[A-Za-z][A-Za-z0-9+.-]*://', '') AS rest FROM s1),
-         |s3 AS (SELECT *, lower(regexp_replace(regexp_extract(rest, '^([^/?]*)', 1), '^[^@]*@', '')) AS authority,
-         |  regexp_replace(rest, '^[^/?]*', '') AS pathquery FROM s2),
-         |s4 AS (SELECT *, ${pct("regexp_extract(pathquery, '^([^?]*)', 1)")} AS path,
-         |  CASE WHEN contains(pathquery, '?') THEN ${pct("regexp_replace(pathquery, '^[^?]*\\?', '')")} ELSE '' END AS query FROM s3),
-         |s5 AS (SELECT *,
-         |  CASE WHEN authority[1:1] = '[' THEN regexp_extract(authority, '^(\\[[^\\]]*\\])', 1)
-         |       ELSE regexp_extract(authority, '^([^:]*)', 1) END AS host,
-         |  CASE WHEN authority[1:1] = '[' THEN regexp_extract(authority, '^\\[[^\\]]*\\]:([0-9]+)$$', 1)
-         |       WHEN contains(authority, ':') THEN regexp_extract(authority, ':([0-9]*)$$', 1)
-         |       ELSE '' END AS port FROM s4),
-         |s6 AS (SELECT *, string_split(host, '.') AS labels,
-         |  host || CASE WHEN port <> '' AND NOT ((scheme='http' AND port='80') OR (scheme='https' AND port='443'))
-         |    THEN ':' || port ELSE '' END AS canon_auth,
-         |  CASE WHEN regexp_replace(path, '/+$$', '') = '' THEN '/'
-         |       ELSE regexp_replace(path, '/+$$', '') END AS canon_path,
-         |  list_filter(string_split(query, '&'), p -> p <> '') AS params FROM s5),
-         |s7 AS (SELECT *, CASE WHEN len(params) > 0 THEN '?' || array_to_string(list_sort(params), '&') ELSE '' END AS canon_query,
-         |  len(labels) AS n,
-         |  labels[-1] AS l1,
-         |  labels[-2] || '.' || labels[-1] AS l2,
-         |  labels[-3] || '.' || labels[-2] || '.' || labels[-1] AS l3,
-         |  labels[-4] || '.' || labels[-3] || '.' || labels[-2] || '.' || labels[-1] AS l4 FROM s6)
-         |SELECT url,
-         |  CASE WHEN scheme = '' THEN regexp_extract(trim(url), '^([^#]*)', 1)
-         |       ELSE scheme || '://' || canon_auth || canon_path || canon_query END AS canon,
-         |  host,
-         |  CASE WHEN regexp_matches(host, '^[0-9]+\\.[0-9]+\\.[0-9]+\\.[0-9]+$$') OR host[1:1] = '[' OR n <= 1 THEN host
-         |       WHEN n >= 3 AND l3 IN (${set(U.Exceptions3)}) THEN l3
-         |       WHEN n >= 2 AND l2 IN (${set(U.Exceptions2)}) THEN l2
-         |       WHEN n >= 2 AND l2 IN (${set(U.WildcardBases2)}) THEN CASE WHEN n >= 4 THEN l4 ELSE host END
-         |       WHEN n >= 3 AND l3 IN (${set(U.ThreeLevelSuffixes)}) THEN CASE WHEN n >= 4 THEN l4 ELSE host END
-         |       WHEN l1 IN (${set(U.WildcardBases1)}) THEN CASE WHEN n >= 3 THEN l3 ELSE host END
-         |       WHEN n >= 2 AND l2 IN (${set(U.TwoLevelSuffixes)}) THEN CASE WHEN n >= 3 THEN l3 ELSE host END
-         |       ELSE l2 END AS regdom
-         |FROM s7 ORDER BY url""".stripMargin
-    },
-    // full audio-fingerprint replay: PCM formula → Walsh–Hadamard band
-    // energies (integer, the q163 sign convention) → time/frequency
-    // double-difference sign bits → BIGINT, all in DuckDB
-    "q172_audio_phash" ->
-      """WITH ids AS (SELECT unnest(generate_series(0, 15)) AS id),
-        |s AS (SELECT id, list_transform(generate_series(0, 1023), n ->
-        |    ((id + 3) * ((n*n) % 977) + 17 * n) % 4096 - 2048) AS x FROM ids),
-        |e AS (SELECT id, t, b,
-        |    list_aggregate(list_transform(generate_series(0, 2), j ->
-        |      (list_aggregate(list_transform(generate_series(0, 63), n ->
-        |         x[t*64 + n + 1] * (CASE WHEN bit_count(CAST(n AS BIGINT) & (b*3 + j + 1)) % 2 = 0 THEN 1 ELSE -1 END)), 'sum')) ** 2), 'sum') AS en
-        |  FROM s, generate_series(0, 4) tt(t), generate_series(0, 16) bb(b)),
-        |d AS (SELECT a.id, a.t, a.b, (a.en - c.en) - (p.en - q.en) AS diff
-        |  FROM e a JOIN e c ON c.id = a.id AND c.t = a.t AND c.b = a.b + 1
-        |           JOIN e p ON p.id = a.id AND p.t = a.t - 1 AND p.b = a.b
-        |           JOIN e q ON q.id = a.id AND q.t = a.t - 1 AND q.b = a.b + 1
-        |  WHERE a.t >= 1 AND a.b <= 15)
-        |SELECT id AS media_id,
-        |  CAST(SUM(CASE WHEN diff <= 0 THEN 0
-        |                WHEN (t-1)*16 + b = 63 THEN -9223372036854775808
-        |                ELSE (CAST(1 AS BIGINT) << ((t-1)*16 + b)) END) AS BIGINT) AS afp
-        |FROM d GROUP BY id ORDER BY media_id""".stripMargin,
-    // q173: literals from scripts/gen_h264_fixture.py — the python
-    // encoder's frame-0 reconstructions pooled + DCT'd + sign-hashed by
-    // an independent python replay of the PHash64Expr contract (margins
-    // asserted > 1e-3 at generation)
-    "q173_video_phash" ->
-      """WITH v(media_id, phash) AS (VALUES
-        |  (CAST(0 AS BIGINT), CAST(8636034951607170629 AS BIGINT)),
-        |  (CAST(1 AS BIGINT), CAST(3676657861836354165 AS BIGINT)),
-        |  (CAST(2 AS BIGINT), CAST(-6636563845715892555 AS BIGINT)),
-        |  (CAST(3 AS BIGINT), CAST(3738160048424576709 AS BIGINT)),
-        |  (CAST(4 AS BIGINT), CAST(2853554358855366165 AS BIGINT)),
-        |  (CAST(5 AS BIGINT), CAST(-668106281696418235 AS BIGINT)),
-        |  (CAST(6 AS BIGINT), CAST(4830352879577429605 AS BIGINT)),
-        |  (CAST(7 AS BIGINT), CAST(8303120560622614037 AS BIGINT)))
-        |SELECT media_id, phash FROM v ORDER BY media_id""".stripMargin,
-    // q174: DuckDB replays ALL THREE hash families (image DCT pHash from
-    // pixel formulas incl. the perturbed twin, audio WHT fingerprint from
-    // PCM formulas incl. the gain/noise twins, video keyframe hashes from
-    // the python-reconstruction literals incl. the byte-dup) AND the
-    // hamming pair join itself
-    "q174_crossmodal_neardup" ->
-      (crossmodalSigSql + """
-        |SELECT a.modality AS modality, a.id AS id_a, b.id AS id_b,
-        |  CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS dist
-        |FROM sigs a JOIN sigs b ON a.modality = b.modality AND a.id < b.id
-        |WHERE bit_count(xor(a.sig, b.sig)) <= 4
-        |ORDER BY modality, id_a, id_b""".stripMargin),
-    // q176: the banded-LSH formulation has TOTAL recall at hamming ≤ 4
-    // (pigeonhole over 8 bands), so its oracle IS the brute pair join —
-    // the same replay as q174; any bucketing loss would hash-mismatch
-    "q176_crossmodal_lsh" ->
-      (crossmodalSigSql + """
-        |SELECT a.modality AS modality, a.id AS id_a, b.id AS id_b,
-        |  CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS dist
-        |FROM sigs a JOIN sigs b ON a.modality = b.modality AND a.id < b.id
-        |WHERE bit_count(xor(a.sig, b.sig)) <= 4
-        |ORDER BY modality, id_a, id_b""".stripMargin),
-    // q175: the multimodal crawl composition replayed end-to-end by the
-    // python generator (extraction, canonicalization, minhash banding,
-    // union-find, PNG/WAV encode → perceptual hash, hamming pairing —
-    // no code shared with Scala; scripts/gen_warc_fixture.py q175_rows)
-    "q175_multimodal_crawl" ->
-      """WITH v(modality, keeper_uri, n_members) AS (VALUES
-        |  ('audio', 'http://fixture.example/tone-a.wav', CAST(2 AS BIGINT)),
-        |  ('image', 'http://fixture.example/img-a.png', CAST(2 AS BIGINT)),
-        |  ('image', 'http://fixture.example/img-b.png', CAST(1 AS BIGINT)),
-        |  ('text', 'http://fixture.example/page-a', CAST(3 AS BIGINT)),
-        |  ('text', 'http://fixture.example/page-b', CAST(2 AS BIGINT)),
-        |  ('text', 'http://fixture.example/page-c', CAST(2 AS BIGINT)),
-        |  ('text', 'http://mirror.example/page-d?a=1&b=2', CAST(1 AS BIGINT)),
-        |  ('video', 'http://fixture.example/clip-a.mp4', CAST(2 AS BIGINT)),
-        |  ('video', 'http://fixture.example/clip-b.mp4', CAST(1 AS BIGINT)))
-        |SELECT modality, keeper_uri, n_members
-        |FROM v ORDER BY modality, keeper_uri""".stripMargin,
-    // q178: literals from scripts/gen_h264_fixture.py section 15 — the
-    // python encoder replays every keyframe reconstruction's pHash and
-    // the min-hamming pairing; only the re-cut pair survives ≤ 4
-    "q178_video_recut" ->
-      """WITH v(id_a, id_b, dist) AS (VALUES
-        |  (CAST(8 AS BIGINT), CAST(9 AS BIGINT), CAST(0 AS BIGINT)))
-        |SELECT id_a, id_b, dist FROM v ORDER BY id_a, id_b""".stripMargin,
-    // q179: literals from scripts/gen_h264_fixture.py section 15 — one
-    // row per (clip, keyframe ordinal), every signature the independent
-    // python encoder's reconstruction replay produces
-    "q179_video_keyframe_sigs" ->
-      """WITH v(media_id, k, phash) AS (VALUES
-        |  (CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(8636034951607170629 AS BIGINT)),
-        |  (CAST(1 AS BIGINT), CAST(0 AS BIGINT), CAST(3676657861836354165 AS BIGINT)),
-        |  (CAST(2 AS BIGINT), CAST(0 AS BIGINT), CAST(-6636563845715892555 AS BIGINT)),
-        |  (CAST(3 AS BIGINT), CAST(0 AS BIGINT), CAST(3738160048424576709 AS BIGINT)),
-        |  (CAST(4 AS BIGINT), CAST(0 AS BIGINT), CAST(2853554358855366165 AS BIGINT)),
-        |  (CAST(5 AS BIGINT), CAST(0 AS BIGINT), CAST(-668106281696418235 AS BIGINT)),
-        |  (CAST(6 AS BIGINT), CAST(0 AS BIGINT), CAST(4830352879577429605 AS BIGINT)),
-        |  (CAST(7 AS BIGINT), CAST(0 AS BIGINT), CAST(8303120560622614037 AS BIGINT)),
-        |  (CAST(8 AS BIGINT), CAST(0 AS BIGINT), CAST(-2141083071260690843 AS BIGINT)),
-        |  (CAST(8 AS BIGINT), CAST(1 AS BIGINT), CAST(2463658903366760053 AS BIGINT)),
-        |  (CAST(9 AS BIGINT), CAST(0 AS BIGINT), CAST(2463658903366760053 AS BIGINT)))
-        |SELECT media_id, k, phash FROM v ORDER BY media_id, k""".stripMargin,
-    // q180–q182: the embedding sign sketch, fully RECOMPUTED — the oracle
-    // re-derives the 64×64 hyperplane matrix from the integer mixing
-    // formula (exact BIGINT arithmetic), replays every projection sign,
-    // assembles the 64-bit signature, and for q181/q182 replays the brute
-    // hamming pair join + connected components the banded engine plan
-    // must equal (total recall: bands=12 > maxDistance=11)
-    "q180_emb_sketch" ->
-      (embSketchPlanesSql + """
-        |, emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |proj AS (SELECT emb.vec_id, pl.i, sum(e[j+1] * p) AS s
-        |         FROM emb, pl GROUP BY 1, 2),
-        |sig AS (SELECT vec_id,
-        |  CAST(SUM(CASE WHEN s < 0 THEN 0
-        |                WHEN i = 63 THEN -9223372036854775808
-        |                ELSE CAST(1 AS BIGINT) << i END) AS BIGINT) AS sig
-        |  FROM proj GROUP BY vec_id)
-        |SELECT vec_id, sig FROM sig ORDER BY vec_id""".stripMargin),
-    "q181_emb_sketch_neardup" ->
-      (embSketchSigsSql + """
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS dist
-        |FROM sig a JOIN sig b ON a.vec_id < b.vec_id
-        |WHERE bit_count(xor(a.sig, b.sig)) <= 11
-        |ORDER BY id_a, id_b""".stripMargin),
-    // q185/q186: the winnowing replay — every k-gram hash, window
-    // minimum, and shared-fingerprint count recomputed by DuckDB
-    "q185_winnow_fps" ->
-      (winnowFpsSql + """
-        |SELECT doc_id, unnest(fps) AS fp FROM m ORDER BY doc_id, fp""".stripMargin),
-    "q186_winnow_pairs" ->
-      (winnowFpsSql + """
-        |, f AS (SELECT doc_id, unnest(fps) AS fp FROM m)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
-        |FROM f a JOIN f b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id_a, id_b""".stripMargin),
-    // q184: the multi-probe plan must equal the SAME brute replay as
-    // q181 — wide keys + 1-bit probes lose nothing (pigeonhole)
-    "q184_emb_sketch_multiprobe" ->
-      (embSketchSigsSql + """
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS dist
-        |FROM sig a JOIN sig b ON a.vec_id < b.vec_id
-        |WHERE bit_count(xor(a.sig, b.sig)) <= 11
-        |ORDER BY id_a, id_b""".stripMargin),
-    "q182_emb_sketch_dedup" ->
-      (embSketchSigsSql + """
-        |, pairs AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM sig a JOIN sig b ON a.vec_id < b.vec_id
-        |  WHERE bit_count(xor(a.sig, b.sig)) <= 11),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |          UNION ALL SELECT id_b, id_a FROM pairs),
-        |labels AS (
-        |  WITH RECURSIVE reach(id, label) AS (
-        |    SELECT vec_id, vec_id FROM sig
-        |    UNION
-        |    SELECT e.src, r.label FROM reach r JOIN edges e ON e.dst = r.id
-        |    WHERE r.label < e.src)
-        |  SELECT id, min(label) AS label FROM reach GROUP BY id)
-        |SELECT id AS vec_id FROM labels WHERE label < id ORDER BY vec_id""".stripMargin),
-    // q183: the incremental crawl's contract IS q175's answer — same
-    // VALUES (replayed end-to-end by scripts/gen_warc_fixture.py
-    // q175_rows): init(records ≤ 12) + append(records ≥ 13) must equal
-    // the union-batch run bit-for-bit
-    "q183_incremental_crawl" ->
-      """WITH v(modality, keeper_uri, n_members) AS (VALUES
-        |  ('audio', 'http://fixture.example/tone-a.wav', CAST(2 AS BIGINT)),
-        |  ('image', 'http://fixture.example/img-a.png', CAST(2 AS BIGINT)),
-        |  ('image', 'http://fixture.example/img-b.png', CAST(1 AS BIGINT)),
-        |  ('text', 'http://fixture.example/page-a', CAST(3 AS BIGINT)),
-        |  ('text', 'http://fixture.example/page-b', CAST(2 AS BIGINT)),
-        |  ('text', 'http://fixture.example/page-c', CAST(2 AS BIGINT)),
-        |  ('text', 'http://mirror.example/page-d?a=1&b=2', CAST(1 AS BIGINT)),
-        |  ('video', 'http://fixture.example/clip-a.mp4', CAST(2 AS BIGINT)),
-        |  ('video', 'http://fixture.example/clip-b.mp4', CAST(1 AS BIGINT)))
-        |SELECT modality, keeper_uri, n_members
-        |FROM v ORDER BY modality, keeper_uri""".stripMargin,
-    // q177: probe twins × indexed corpus — the incremental-index answer
-    // must equal the two-sided brute join restricted to (new, indexed)
-    "q177_hamming_index" ->
-      (crossmodalSigSql + """
-        |SELECT a.modality AS modality, b.id AS id_new, a.id AS id_index,
-        |  CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS dist
-        |FROM sigs a JOIN sigs b ON a.modality = b.modality
-        |WHERE ((b.modality = 'image' AND b.id = 12)
-        |    OR (b.modality = 'audio' AND b.id >= 16)
-        |    OR (b.modality = 'video' AND b.id = 8))
-        |  AND ((a.modality = 'image' AND a.id <= 11)
-        |    OR (a.modality = 'audio' AND a.id <= 15)
-        |    OR (a.modality = 'video' AND a.id <= 7))
-        |  AND bit_count(xor(a.sig, b.sig)) <= 4
-        |ORDER BY modality, id_new, id_index""".stripMargin),
-    // q187's oracle replays BOTH unigram LMs, the per-doc importance
-    // weight, the Gumbel priority (md5-uniform, same 24-bit bucket
-    // construction as q75/q110) and the top-50 selection itself
-    "q187_dsir" ->
-      """WITH docs AS (SELECT doc_id, text, lang FROM documents WHERE n_chars > 0),
-        |tcnt AS (SELECT term, count(*) AS cnt FROM (
-        |    SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
-        |    FROM docs WHERE lang = 'de' AND trim(text) <> '') GROUP BY term),
-        |tden AS (SELECT log2(((SELECT sum(cnt) FROM tcnt)
-        |                      + (SELECT count(*) FROM tcnt)) * 1.0) AS den_t),
-        |scnt AS (SELECT term, count(*) AS cnt FROM (
-        |    SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
-        |    FROM docs WHERE trim(text) <> '') GROUP BY term),
-        |sden AS (SELECT log2(((SELECT sum(cnt) FROM scnt)
-        |                      + (SELECT count(*) FROM scnt)) * 1.0) AS den_s),
-        |nt AS (SELECT doc_id, len(regexp_split_to_array(trim(text), '\s+')) AS n_tok
-        |  FROM docs WHERE trim(text) <> ''),
-        |st AS (SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
-        |  FROM docs WHERE trim(text) <> ''),
-        |m AS (SELECT doc_id, sum(coalesce(t.l, 0) - coalesce(s.l, 0)) AS s_diff
-        |  FROM st
-        |  LEFT JOIN (SELECT term, log2(cnt + 1.0) AS l FROM tcnt) t USING (term)
-        |  LEFT JOIN (SELECT term, log2(cnt + 1.0) AS l FROM scnt) s USING (term)
-        |  GROUP BY doc_id),
-        |w AS (SELECT n.doc_id, n.n_tok,
-        |    coalesce(m.s_diff, 0) + n.n_tok * (sd.den_s - td.den_t) AS logw
-        |  FROM nt n LEFT JOIN m USING (doc_id) CROSS JOIN tden td CROSS JOIN sden sd),
-        |pri AS (SELECT doc_id, n_tok, logw,
-        |    logw - log2(-ln((CAST(list_aggregate(list_transform(generate_series(1, 6), j ->
-        |      CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), j, 1)) - 1 AS BIGINT)
-        |        << (4 * (6 - j))), 'sum') AS BIGINT) + 0.5) / 16777216.0)) AS p
-        |  FROM w),
-        |sel AS (SELECT doc_id, n_tok, logw FROM pri ORDER BY p DESC, doc_id ASC LIMIT 50)
-        |SELECT doc_id, n_tok, round(logw, 4) AS logw FROM sel ORDER BY doc_id""".stripMargin,
-    // q188's oracle rebuilds the bigram and unigram dictionaries from the
-    // train split and replays every transition: observed bigrams as
-    // −log2(c₂/c₁), backoffs as −log2 α + the Laplace unigram
-    "q188_backoff_lm" ->
-      """WITH hb AS (SELECT doc_id, text,
-        |    CAST(list_aggregate(list_transform(generate_series(1, 6), j ->
-        |      CAST(strpos('0123456789abcdef', substr(md5(text), j, 1)) - 1 AS BIGINT)
-        |        << (4 * (6 - j))), 'sum') AS BIGINT) % 100 AS hb
-        |  FROM documents WHERE n_chars > 0),
-        |tr AS (SELECT regexp_split_to_array(trim(lower(text)), '\s+') AS ts
-        |  FROM hb WHERE hb >= 10 AND trim(text) <> ''),
-        |ucnt AS (SELECT term, count(*) AS cnt
-        |  FROM (SELECT unnest(ts) AS term FROM tr) GROUP BY term),
-        |den AS (SELECT log2(((SELECT sum(cnt) FROM ucnt)
-        |                     + (SELECT count(*) FROM ucnt)) * 1.0) AS log2_denom),
-        |bcnt AS (SELECT p[1] AS wa, p[2] AS wb, count(*) AS cnt2
-        |  FROM (SELECT unnest(list_zip(ts[1:len(ts)-1], ts[2:len(ts)])) AS p
-        |        FROM tr WHERE len(ts) >= 2)
-        |  GROUP BY 1, 2),
-        |big AS (SELECT wa, wb, log2(cnt2 * 1.0) - log2(u.cnt * 1.0) AS log2_ratio
-        |  FROM bcnt JOIN ucnt u ON u.term = bcnt.wa),
-        |te AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS ts
-        |  FROM hb WHERE hb < 10 AND trim(text) <> ''),
-        |firstb AS (SELECT doc_id,
-        |    d.log2_denom - coalesce(log2(u.cnt + 1.0), 0) AS bits
-        |  FROM (SELECT doc_id, ts[1] AS wb FROM te) f
-        |  LEFT JOIN ucnt u ON u.term = f.wb CROSS JOIN den d),
-        |trans AS (SELECT doc_id, p[1] AS wa, p[2] AS wb
-        |  FROM (SELECT doc_id, unnest(list_zip(ts[1:len(ts)-1], ts[2:len(ts)])) AS p
-        |        FROM te WHERE len(ts) >= 2)),
-        |tb AS (SELECT t.doc_id,
-        |    CASE WHEN b.log2_ratio IS NOT NULL THEN -b.log2_ratio
-        |         ELSE -(ln(0.4) / ln(2.0)) + d.log2_denom
-        |              - coalesce(log2(u.cnt + 1.0), 0) END AS bits
-        |  FROM trans t
-        |  LEFT JOIN big b ON b.wa = t.wa AND b.wb = t.wb
-        |  LEFT JOIN ucnt u ON u.term = t.wb CROSS JOIN den d),
-        |tot AS (SELECT doc_id, sum(bits) AS total
-        |  FROM (SELECT * FROM firstb UNION ALL SELECT * FROM tb) GROUP BY doc_id)
-        |SELECT t.doc_id, len(e.ts) AS n_tok, round(t.total / len(e.ts), 4) AS bits
-        |FROM tot t JOIN te e USING (doc_id) ORDER BY doc_id""".stripMargin,
-    // q189's oracle replays the whole RFC 9309 stack: line explode +
-    // comment strip, directive classification, UA-run group numbering,
-    // specific-shadows-star selection, rule→regex translation ('*'/'$'),
-    // and the longest-match / allow-wins-tie decision per URL
-    "q189_robots" ->
-      (robotsParseSql + """,
-        |cand AS (SELECT u.doc_id, ru.allow, len(ru.rule) AS rl
-        |  FROM urls u JOIN rules ru ON ru.host = u.host AND regexp_matches(u.tgt, ru.pat)),
-        |best AS (SELECT doc_id, allow FROM (
-        |    SELECT doc_id, allow, row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY rl DESC, allow DESC) AS rn FROM cand) WHERE rn = 1)
-        |SELECT u.doc_id, 'http://' || u.host || u.tgt AS url,
-        |  coalesce(b.allow, true) AS allowed
-        |FROM urls u LEFT JOIN best b USING (doc_id) ORDER BY u.doc_id""".stripMargin),
-    // q190: the politeness-complete frontier — q189's allowed URLs,
-    // scheduled per host at the parsed Crawl-delay (min of applying
-    // values; 1 s default), rank order = md5 of the URL
-    "q190_frontier" -> frontierScheduleSql,
-    // q204's oracle IS the operator's definition: dense id = 0-based
-    // rank in id order (densifyIds assigns it distributed; the SQL
-    // window is the single-partition form it replaces)
-    "q204_densify_ids" ->
-      """SELECT ext_id, doc_id,
-        |  row_number() OVER (ORDER BY ext_id) - 1 AS vid
-        |FROM (SELECT doc_id * 7 + (doc_id % 13) * 1000000 AS ext_id, doc_id
-        |      FROM documents)
-        |ORDER BY ext_id""".stripMargin,
-    // q203 ≡ q190 on the RESULT — the from-scratch parse and the
-    // cache-served rules must schedule identically (that IS the cache's
-    // correctness contract); the incremental machinery (zero
-    // re-derivation on unchanged bodies) is asserted in RobotsSpec
-    "q203_robots_cache" -> frontierScheduleSql,
-    // q207 ≡ q203 ≡ q190 on the RESULT — compaction must be invisible
-    // to readers, so the compacted cache replays the identical schedule
-    "q207_compacted_cache" -> frontierScheduleSql,
-    // q208's oracle: literal VALUES from the independent python PSL
-    // replay (scripts/gen_psl_oracle.py) over the SAME vendored
-    // publicsuffix.org snapshot — the generator implements the PSL
-    // algorithm from the spec and asserts the naive last-2-labels
-    // heuristic DIFFERS on 16 of the 28 rows
-    "q208_psl_vendored" ->
-      """SELECT * FROM (VALUES
-        |  ('http://example.com/x', 'example.com'),
-        |  ('http://www.example.com/x', 'example.com'),
-        |  ('http://deep.a.b.example.com/x', 'example.com'),
-        |  ('http://example.co.uk/x', 'example.co.uk'),
-        |  ('http://www.example.co.uk/x', 'example.co.uk'),
-        |  ('http://b.test.ck/x', 'b.test.ck'),
-        |  ('http://a.b.test.ck/x', 'b.test.ck'),
-        |  ('http://www.ck/x', 'www.ck'),
-        |  ('http://www.www.ck/x', 'www.ck'),
-        |  ('http://test.ck/x', 'test.ck'),
-        |  ('http://www.city.kawasaki.jp/x', 'city.kawasaki.jp'),
-        |  ('http://a.b.kawasaki.jp/x', 'a.b.kawasaki.jp'),
-        |  ('http://kawasaki.jp/x', 'kawasaki.jp'),
-        |  ('http://myblog.blogspot.com/x', 'myblog.blogspot.com'),
-        |  ('http://www.myblog.blogspot.com/x', 'myblog.blogspot.com'),
-        |  ('http://bucket.s3.amazonaws.com/x', 'bucket.s3.amazonaws.com'),
-        |  ('http://s3.amazonaws.com/x', 's3.amazonaws.com'),
-        |  ('http://x.y.eu-west-1.compute.amazonaws.com/x', 'y.eu-west-1.compute.amazonaws.com'),
-        |  ('http://host.pvt.k12.ma.us/x', 'host.pvt.k12.ma.us'),
-        |  ('http://sub.host.pvt.k12.ma.us/x', 'host.pvt.k12.ma.us'),
-        |  ('http://b.s3.cn-north-1.amazonaws.com.cn/x', 'b.s3.cn-north-1.amazonaws.com.cn'),
-        |  ('http://c.b.s3.cn-north-1.amazonaws.com.cn/x', 'b.s3.cn-north-1.amazonaws.com.cn'),
-        |  ('http://example.公司.cn/x', 'example.公司.cn'),
-        |  ('http://example.unknowntld/x', 'example.unknowntld'),
-        |  ('http://a.example.unknowntld/x', 'example.unknowntld'),
-        |  ('http://192.168.0.1/x', '192.168.0.1'),
-        |  ('http://localhost/x', 'localhost'),
-        |  ('http://a.schools.nsw.edu.au/x', 'a.schools.nsw.edu.au')
-        |) AS t(url, regdom) ORDER BY url""".stripMargin,
-    "q206_incremental_plan" -> incrementalPlanSql,
-    // q197's oracle replays the WHOLE crawl plan: discovery union,
-    // redirect walk (recursive CTE), robots gate on terminal addresses,
-    // md5-ranked per-host cap, and the Crawl-delay schedule
-    "q197_crawl_plan" ->
-      (robotsParseSql + """,
-        |sm(sm_url, host, body) AS (VALUES
-        |  ('http://h0.example/sitemap.xml', 'h0.example', E'<?xml version="1.0" encoding="UTF-8"?>\n<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">\n<url><loc>http://h0.example/</loc><lastmod>2026-01-05</lastmod><priority>0.9</priority></url>\n<url><loc>http://h0.example/public/page1</loc><priority>0.8</priority></url>\n<url><loc>http://h0.example/private/data</loc></url>\n<url><loc>http://h0.example/private/public/ok</loc><lastmod>2026-02-11</lastmod></url>\n<url><loc>http://h0.example/files/report.pdf</loc><priority>junk</priority></url>\n<url><loc>http://h0.example/search?a=1&amp;b=2</loc><priority>0.4</priority></url>\n<url><lastmod>2026-03-01</lastmod></url>\n</urlset>'),
-        |  ('http://h1.example/sitemap.xml', 'h1.example', E'<urlset>\n<url><loc>http://h1.example/tmp/cache</loc></url>\n<url><loc>http://h1.example/search?q=x1</loc></url>\n<url><loc>http://h1.example/ok/page</loc><priority>1.0</priority></url>\n<url>\n  <loc>\n    http://h1.example/spaced\n  </loc>\n</url>\n</urlset>'),
-        |  ('http://h2.example/orphan.xml', 'h2.example', E'<urlset>\n<url><loc>http://h2.example/only-via-orphan</loc></url>\n</urlset>')),
-        |blocks AS (SELECT host, unnest(regexp_extract_all(body, '(?s)<url>(.*?)</url>', 1)) AS b
-        |  FROM sm WHERE sm_url IN (SELECT sm_url FROM smdir)),
-        |sloc AS (SELECT replace(replace(replace(replace(replace(
-        |      regexp_replace(regexp_extract(b, '(?s)<loc>(.*?)</loc>', 1), '^\s+|\s+$', '', 'g'),
-        |      '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&apos;', ''''), '&amp;', '&') AS url
-        |  FROM blocks),
-        |disc AS (SELECT DISTINCT url FROM (
-        |    SELECT 'http://' || host || tgt AS url FROM urls
-        |    UNION ALL SELECT url FROM sloc WHERE url <> '')),
-        |nn AS (SELECT count(*) AS n FROM documents),
-        |dstu AS (SELECT doc_id,
-        |    'http://h' || CAST(j % 3 AS VARCHAR) || '.example' ||
-        |    CASE j % 8
-        |      WHEN 0 THEN '/' WHEN 1 THEN '/public/page' || CAST(j AS VARCHAR)
-        |      WHEN 2 THEN '/private/data' WHEN 3 THEN '/private/public/ok'
-        |      WHEN 4 THEN '/files/report.pdf' WHEN 5 THEN '/search?q=x' || CAST(j AS VARCHAR)
-        |      WHEN 6 THEN '/tmp/cache' ELSE '/admin' END AS dst
-        |  FROM (SELECT doc_id, (doc_id*7+5) % nn.n AS j
-        |        FROM documents CROSS JOIN nn WHERE doc_id % 10 = 2)),
-        |red AS (SELECT 'http://' || u.host || u.tgt AS src, min(d.dst) AS dst
-        |  FROM urls u JOIN dstu d ON d.doc_id = u.doc_id
-        |  GROUP BY 1),
-        |red2 AS (SELECT src, dst FROM red WHERE src <> dst),
-        |walk(url, cur, nh) AS (
-        |  SELECT url, url, 0 FROM disc
-        |  UNION ALL
-        |  SELECT w.url, r2.dst, w.nh + 1 FROM walk w JOIN red2 r2 ON r2.src = w.cur WHERE w.nh < 8),
-        |lastw AS (SELECT url, max(nh) AS mx FROM walk GROUP BY url),
-        |fin AS (SELECT w.url, w.cur AS furl FROM walk w JOIN lastw l ON l.url = w.url AND w.nh = l.mx),
-        |term AS (SELECT DISTINCT f.furl AS url FROM fin f
-        |  LEFT JOIN red2 ON red2.src = f.furl WHERE red2.src IS NULL),
-        |tu AS (SELECT url, regexp_extract(url, '^http://([^/?]*)', 1) AS host,
-        |    CASE WHEN regexp_replace(url, '^https?://[^/?]*', '') = '' THEN '/'
-        |         ELSE regexp_replace(url, '^https?://[^/?]*', '') END AS tgt
-        |  FROM term),
-        |tc AS (SELECT t.url, ru.allow, len(ru.rule) AS rl
-        |  FROM tu t JOIN rules ru ON ru.host = t.host AND regexp_matches(t.tgt, ru.pat)),
-        |tb AS (SELECT url, allow FROM (
-        |    SELECT url, allow, row_number() OVER (PARTITION BY url
-        |      ORDER BY rl DESC, allow DESC) AS rn FROM tc) WHERE rn = 1),
-        |fetchable AS (SELECT t.url, t.host FROM tu t LEFT JOIN tb USING (url)
-        |  WHERE coalesce(tb.allow, true)),
-        |capped AS (SELECT url, host FROM (
-        |    SELECT url, host, row_number() OVER (PARTITION BY host
-        |      ORDER BY md5(url), url) AS rn FROM fetchable) WHERE rn <= 25),
-        |delays AS (SELECT host, min(CAST(v AS DOUBLE)) AS crawl_delay
-        |  FROM flags2
-        |  WHERE kind = 'delay' AND regexp_matches(v, '^[0-9]+(\.[0-9]+)?$')
-        |    AND (spec_g = 1 OR (star_g = 1 AND spec_h = 0))
-        |  GROUP BY host),
-        |sched AS (SELECT c.url,
-        |    coalesce(d.crawl_delay, 1.0) AS crawl_delay,
-        |    (row_number() OVER (PARTITION BY c.host ORDER BY md5(c.url), c.url) - 1)
-        |      * coalesce(d.crawl_delay, 1.0) AS fetch_at
-        |  FROM capped c LEFT JOIN delays d USING (host))
-        |SELECT url, round(crawl_delay, 2) AS crawl_delay, round(fetch_at, 2) AS fetch_at
-        |FROM sched ORDER BY url""".stripMargin),
-    // q196's oracle replays the NB margin (q112's replay), Platt's
-    // smoothed targets, all six Newton iterations (five sums + the 2×2
-    // solve each, MATERIALIZED so the chain evaluates once, not
-    // exponentially through the scalar subqueries) and the final sigmoid
-    "q196_calibration" -> {
-      val steps = (1 to 6).map { i =>
-        val p = s"t${i - 1}"
-        s"""g$i AS MATERIALIZED (SELECT
-           |    sum((tt - pp) * s) AS g1, sum(tt - pp) AS g2,
-           |    sum(pp * (1 - pp) * s * s) AS h11,
-           |    sum(pp * (1 - pp) * s) AS h12,
-           |    sum(pp * (1 - pp)) AS h22
-           |  FROM (SELECT s,
-           |      CASE WHEN y THEN (SELECT tpos FROM tgt) ELSE (SELECT tneg FROM tgt) END AS tt,
-           |      1.0 / (1.0 + exp((SELECT a FROM $p) * s + (SELECT b FROM $p))) AS pp
-           |    FROM base)),
-           |t$i AS MATERIALIZED (SELECT
-           |    (SELECT a FROM $p) - (h22 * g1 - h12 * g2) / (h11 * h22 - h12 * h12) AS a,
-           |    (SELECT b FROM $p) - (h11 * g2 - h12 * g1) / (h11 * h22 - h12 * h12) AS b
-           |  FROM g$i)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH hb AS (SELECT doc_id, lang, text,
-         |    CAST(list_aggregate(list_transform(generate_series(1, 6), j ->
-         |      CAST(strpos('0123456789abcdef', substr(md5(text), j, 1)) - 1 AS BIGINT)
-         |        << (4 * (6 - j))), 'sum') AS BIGINT) % 100 AS hb
-         |  FROM documents WHERE n_chars > 0),
-         |tr AS (SELECT lang, text FROM hb WHERE hb >= 10),
-         |te AS (SELECT doc_id, lang, text FROM hb WHERE hb < 10),
-         |ttok AS (SELECT lang AS label,
-         |    unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS term
-         |  FROM tr WHERE trim(text) <> ''),
-         |cnts AS (SELECT label, term, count(*) AS cnt FROM ttok GROUP BY label, term),
-         |cs AS (SELECT p.label,
-         |    ln(p.n_c * 1.0 / (SELECT count(*) FROM tr)) AS log_prior,
-         |    ln((t.t_c + (SELECT count(DISTINCT term) FROM cnts)) * 1.0) AS log_denom
-         |  FROM (SELECT lang AS label, count(*) AS n_c FROM tr GROUP BY lang) p
-         |  JOIN (SELECT label, sum(cnt) AS t_c FROM cnts GROUP BY label) t USING (label)),
-         |nt AS (SELECT doc_id, lang,
-         |    CASE WHEN trim(text) = '' THEN 0
-         |         ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tok
-         |  FROM te),
-         |st AS (SELECT doc_id,
-         |    unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS term
-         |  FROM te WHERE trim(text) <> ''),
-         |m AS (SELECT st.doc_id, c.label, sum(ln(c.cnt + 1.0)) AS s_match
-         |  FROM st JOIN cnts c USING (term) GROUP BY st.doc_id, c.label),
-         |sc AS (SELECT n.doc_id, n.lang, cs.label,
-         |    cs.log_prior + coalesce(m.s_match, 0) - n.n_tok * cs.log_denom AS score
-         |  FROM nt n CROSS JOIN cs
-         |  LEFT JOIN m ON m.doc_id = n.doc_id AND m.label = cs.label),
-         |sd AS (SELECT e.doc_id, e.lang, e.score - d.score AS s
-         |  FROM (SELECT doc_id, lang, score FROM sc WHERE label = 'en') e
-         |  JOIN (SELECT doc_id, score FROM sc WHERE label = 'de') d USING (doc_id)),
-         |base AS MATERIALIZED (SELECT doc_id, s, (lang = 'en') AS y FROM sd),
-         |ns AS MATERIALIZED (SELECT sum(CASE WHEN y THEN 1 ELSE 0 END) AS np,
-         |    sum(CASE WHEN y THEN 0 ELSE 1 END) AS nn FROM base),
-         |tgt AS MATERIALIZED (SELECT (np + 1.0) / (np + 2.0) AS tpos,
-         |    1.0 / (nn + 2.0) AS tneg FROM ns),
-         |t0 AS MATERIALIZED (SELECT 0.0 AS a, ln((nn + 1.0) / (np + 1.0)) AS b FROM ns),
-         |$steps
-         |SELECT doc_id, round(s, 4) AS s,
-         |  round(1.0 / (1.0 + exp((SELECT a FROM t6) * s + (SELECT b FROM t6))), 4) AS p
-         |FROM base ORDER BY doc_id""".stripMargin
-    },
-    // q195's oracle walks the redirect chains with a recursive CTE (hop
-    // counter bounds the loops exactly like the operator's budget) and
-    // derives terminal from the final URL's out-edge
-    "q195_redirects" ->
-      """WITH RECURSIVE nn AS (SELECT count(*) AS n FROM documents),
-        |u AS (SELECT doc_id,
-        |    'http://r' || CAST(doc_id % 50 AS VARCHAR) || '.example/p/' || CAST(doc_id AS VARCHAR) AS url
-        |  FROM documents),
-        |red AS (SELECT
-        |    'http://r' || CAST(doc_id % 50 AS VARCHAR) || '.example/p/' || CAST(doc_id AS VARCHAR) AS src,
-        |    'http://r' || CAST(((doc_id*9+4) % nn.n) % 50 AS VARCHAR) || '.example/p/'
-        |      || CAST((doc_id*9+4) % nn.n AS VARCHAR) AS dst
-        |  FROM documents CROSS JOIN nn WHERE doc_id % 3 = 1),
-        |walk(url, cur, n) AS (
-        |  SELECT url, url, 0 FROM u
-        |  UNION ALL
-        |  SELECT w.url, r.dst, w.n + 1 FROM walk w JOIN red r ON r.src = w.cur WHERE w.n < 8),
-        |last AS (SELECT url, max(n) AS mx FROM walk GROUP BY url),
-        |fin AS (SELECT w.url, w.cur AS final_url, w.n AS n_hops
-        |  FROM walk w JOIN last l ON l.url = w.url AND w.n = l.mx)
-        |SELECT u.doc_id, f.url, f.final_url, f.n_hops, (r.src IS NULL) AS terminal
-        |FROM fin f JOIN u ON u.url = f.url LEFT JOIN red r ON r.src = f.final_url
-        |ORDER BY u.doc_id""".stripMargin,
-    // q194's oracle: the independent python replay's rows pinned as
-    // literals (scripts/gen_warc_fixture.py q194_rows — own extraction
-    // regexes, urllib.parse.urljoin resolution, fragments stripped)
-    "q194_link_graph" ->
-      """WITH v(target_uri, href, resolved, anchor) AS (VALUES
-        |  ('http://MIRROR.example:80/page-a-variant/', '/', 'http://MIRROR.example:80/', 'Home'),
-        |  ('http://MIRROR.example:80/page-a-variant/', '/about', 'http://MIRROR.example:80/about', 'About the site'),
-        |  ('http://MIRROR.example:80/page-a-variant/', '/privacy', 'http://MIRROR.example:80/privacy', 'Privacy'),
-        |  ('http://MIRROR.example:80/page-a-variant/', '/terms', 'http://MIRROR.example:80/terms', 'Terms'),
-        |  ('http://fixture.example/chunked', 'a', 'http://fixture.example/a', 'one'),
-        |  ('http://fixture.example/chunked', 'b', 'http://fixture.example/b', 'two'),
-        |  ('http://fixture.example/chunked', 'c', 'http://fixture.example/c', 'three'),
-        |  ('http://fixture.example/gzipped', '/', 'http://fixture.example/', 'Home'),
-        |  ('http://fixture.example/gzipped', '/about', 'http://fixture.example/about', 'About the site'),
-        |  ('http://fixture.example/gzipped', '/privacy', 'http://fixture.example/privacy', 'Privacy'),
-        |  ('http://fixture.example/gzipped', '/terms', 'http://fixture.example/terms', 'Terms'),
-        |  ('http://fixture.example/page-a', '/', 'http://fixture.example/', 'Home'),
-        |  ('http://fixture.example/page-a', '/about', 'http://fixture.example/about', 'About the site'),
-        |  ('http://fixture.example/page-a', '/privacy', 'http://fixture.example/privacy', 'Privacy'),
-        |  ('http://fixture.example/page-a', '/terms', 'http://fixture.example/terms', 'Terms'),
-        |  ('http://fixture.example/page-b', 'a', 'http://fixture.example/a', 'one'),
-        |  ('http://fixture.example/page-b', 'b', 'http://fixture.example/b', 'two'),
-        |  ('http://fixture.example/page-b', 'c', 'http://fixture.example/c', 'three'),
-        |  ('http://mirror.example/page-d?b=2&a=1#sec', '/terms', 'http://mirror.example/terms', 'Terms'))
-        |SELECT target_uri, href, resolved, anchor FROM v
-        |ORDER BY target_uri, href""".stripMargin,
-    // q193's oracle replays the sitemap parse (block explode, per-tag
-    // extraction, entity decode, whitespace-regex trim, priority
-    // defaulting), the robots gate and the Crawl-delay schedule
-    "q193_discovery" ->
-      (robotsParseSql + """,
-        |sm(sm_url, host, body) AS (VALUES
-        |  ('http://h0.example/sitemap.xml', 'h0.example', E'<?xml version="1.0" encoding="UTF-8"?>\n<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">\n<url><loc>http://h0.example/</loc><lastmod>2026-01-05</lastmod><priority>0.9</priority></url>\n<url><loc>http://h0.example/public/page1</loc><priority>0.8</priority></url>\n<url><loc>http://h0.example/private/data</loc></url>\n<url><loc>http://h0.example/private/public/ok</loc><lastmod>2026-02-11</lastmod></url>\n<url><loc>http://h0.example/files/report.pdf</loc><priority>junk</priority></url>\n<url><loc>http://h0.example/search?a=1&amp;b=2</loc><priority>0.4</priority></url>\n<url><lastmod>2026-03-01</lastmod></url>\n</urlset>'),
-        |  ('http://h1.example/sitemap.xml', 'h1.example', E'<urlset>\n<url><loc>http://h1.example/tmp/cache</loc></url>\n<url><loc>http://h1.example/search?q=x1</loc></url>\n<url><loc>http://h1.example/ok/page</loc><priority>1.0</priority></url>\n<url>\n  <loc>\n    http://h1.example/spaced\n  </loc>\n</url>\n</urlset>'),
-        |  ('http://h2.example/orphan.xml', 'h2.example', E'<urlset>\n<url><loc>http://h2.example/only-via-orphan</loc></url>\n</urlset>')),
-        |blocks AS (SELECT host, unnest(regexp_extract_all(body, '(?s)<url>(.*?)</url>', 1)) AS b
-        |  FROM sm WHERE sm_url IN (SELECT sm_url FROM smdir)),
-        |parsed AS (SELECT host,
-        |    replace(replace(replace(replace(replace(
-        |      regexp_replace(regexp_extract(b, '(?s)<loc>(.*?)</loc>', 1), '^\s+|\s+$', '', 'g'),
-        |      '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&apos;', ''''), '&amp;', '&') AS url,
-        |    nullif(regexp_replace(regexp_extract(b, '(?s)<lastmod>(.*?)</lastmod>', 1), '^\s+|\s+$', '', 'g'), '') AS lastmod,
-        |    CASE WHEN regexp_matches(regexp_replace(regexp_extract(b, '(?s)<priority>(.*?)</priority>', 1), '^\s+|\s+$', '', 'g'), '^[0-9]+(\.[0-9]+)?$')
-        |         THEN CAST(regexp_replace(regexp_extract(b, '(?s)<priority>(.*?)</priority>', 1), '^\s+|\s+$', '', 'g') AS DOUBLE)
-        |         ELSE 0.5 END AS priority
-        |  FROM blocks),
-        |smu AS (SELECT host, url, lastmod, priority,
-        |    CASE WHEN regexp_replace(url, '^https?://[^/?]*', '') = '' THEN '/'
-        |         ELSE regexp_replace(url, '^https?://[^/?]*', '') END AS tgt
-        |  FROM parsed WHERE url <> ''),
-        |smc AS (SELECT s.url, ru.allow, len(ru.rule) AS rl
-        |  FROM smu s JOIN rules ru ON ru.host = s.host AND regexp_matches(s.tgt, ru.pat)),
-        |smb AS (SELECT url, allow FROM (
-        |    SELECT url, allow, row_number() OVER (PARTITION BY url
-        |      ORDER BY rl DESC, allow DESC) AS rn FROM smc) WHERE rn = 1),
-        |allowed AS (SELECT s.* FROM smu s LEFT JOIN smb USING (url)
-        |  WHERE coalesce(smb.allow, true)),
-        |delays AS (SELECT host, min(CAST(v AS DOUBLE)) AS crawl_delay
-        |  FROM flags2
-        |  WHERE kind = 'delay' AND regexp_matches(v, '^[0-9]+(\.[0-9]+)?$')
-        |    AND (spec_g = 1 OR (star_g = 1 AND spec_h = 0))
-        |  GROUP BY host),
-        |sched AS (SELECT a.url, a.lastmod, a.priority,
-        |    coalesce(d.crawl_delay, 1.0) AS crawl_delay,
-        |    (row_number() OVER (PARTITION BY a.host ORDER BY md5(a.url), a.url) - 1)
-        |      * coalesce(d.crawl_delay, 1.0) AS fetch_at
-        |  FROM allowed a LEFT JOIN delays d USING (host))
-        |SELECT url, lastmod, round(priority, 2) AS priority,
-        |  round(crawl_delay, 2) AS crawl_delay, round(fetch_at, 2) AS fetch_at
-        |FROM sched ORDER BY url""".stripMargin),
-    // q191's oracle replays the unary expansion (bigram elements with an
-    // occurrence index via a per-gram row_number), all three salted
-    // signature minima, the band-key join and the exact multiset-Jaccard
-    // verification
-    "q191_weighted_neardup" ->
-      """WITH base AS (SELECT doc_id, text FROM documents WHERE n_chars > 0),
-        |aug AS (SELECT doc_id, text FROM base
-        |  UNION ALL
-        |  SELECT doc_id + 200000,
-        |    CASE doc_id WHEN 0 THEN text || ' ' || text || ' ' || text
-        |                WHEN 1 THEN text
-        |                ELSE text || ' zq zq' END
-        |  FROM base WHERE doc_id <= 2),
-        |tk AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-        |  FROM aug WHERE trim(text) <> ''),
-        |bgl AS (SELECT doc_id, list_transform(
-        |    generate_series(1, greatest(len(tk) - 1, 0)),
-        |    i -> tk[i] || ' ' || tk[i+1]) AS bl FROM tk),
-        |pos AS (SELECT doc_id, unnest(bl) AS term, generate_subscripts(bl, 1) AS pos FROM bgl),
-        |el AS (SELECT doc_id,
-        |    term || '#' || CAST(row_number() OVER (PARTITION BY doc_id, term ORDER BY pos) - 1 AS VARCHAR) AS elem
-        |  FROM pos),
-        |sig AS (SELECT doc_id, min(md5('s0' || elem)) || '|' || min(md5('s1' || elem))
-        |    || '|' || min(md5('s2' || elem)) AS band_key
-        |  FROM el GROUP BY doc_id),
-        |els AS (SELECT doc_id, list(elem) AS es FROM el GROUP BY doc_id),
-        |cand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM sig a JOIN sig b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-        |pairs AS (SELECT id_a, id_b,
-        |    round(CAST(len(list_intersect(ea.es, eb.es)) AS DOUBLE)
-        |      / (len(ea.es) + len(eb.es) - len(list_intersect(ea.es, eb.es))), 4) AS jaccard
-        |  FROM cand JOIN els ea ON ea.doc_id = cand.id_a
-        |            JOIN els eb ON eb.doc_id = cand.id_b)
-        |SELECT id_a, id_b, jaccard FROM pairs WHERE jaccard >= 0.6
-        |ORDER BY id_a, id_b""".stripMargin,
-    // q198's oracle: the python generator's independent replay of the
-    // whole lifecycle pinned as literals (gen_warc_fixture.q198_rows —
-    // own robots matcher over the same policy literals, urljoin link
-    // resolution, own canonicalization, minhash/union-find/shard
-    // arithmetic). 27 planned URLs; /privacy on fixture.example and the
-    // $-anchored /terms on mirror.example are provably ABSENT
-    "q198_crawl_lifecycle" ->
-      """WITH v(url, fetch_at, outcome, shard) AS (VALUES
-        |  ('http://fixture.example/', 26.0, 'miss', CAST(NULL AS BIGINT)),
-        |  ('http://fixture.example/a', 28.0, 'miss', NULL),
-        |  ('http://fixture.example/about', 20.0, 'miss', NULL),
-        |  ('http://fixture.example/b', 4.0, 'miss', NULL),
-        |  ('http://fixture.example/both', 10.0, 'dup', NULL),
-        |  ('http://fixture.example/c', 34.0, 'miss', NULL),
-        |  ('http://fixture.example/chunked', 2.0, 'dup', NULL),
-        |  ('http://fixture.example/clip-a.mp4', 18.0, 'skip', NULL),
-        |  ('http://fixture.example/clip-b.mp4', 12.0, 'skip', NULL),
-        |  ('http://fixture.example/gzipped', 24.0, 'dup', NULL),
-        |  ('http://fixture.example/img-a.png', 22.0, 'skip', NULL),
-        |  ('http://fixture.example/img-b.png', 32.0, 'skip', NULL),
-        |  ('http://fixture.example/missing', 6.0, 'error', NULL),
-        |  ('http://fixture.example/page-a', 0.0, 'kept', 2),
-        |  ('http://fixture.example/page-b', 30.0, 'kept', 1),
-        |  ('http://fixture.example/page-c', 8.0, 'kept', 0),
-        |  ('http://fixture.example/robots.txt', 16.0, 'skip', NULL),
-        |  ('http://fixture.example/terms', 14.0, 'miss', NULL),
-        |  ('http://fixture.example/tone-a.wav', 36.0, 'skip', NULL),
-        |  ('http://mirror.example/', 1.0, 'miss', NULL),
-        |  ('http://mirror.example/about', 4.0, 'miss', NULL),
-        |  ('http://mirror.example/clip-a-copy.mp4', 7.0, 'skip', NULL),
-        |  ('http://mirror.example/img-a-copy.png', 6.0, 'skip', NULL),
-        |  ('http://mirror.example/page-a-variant', 5.0, 'near', NULL),
-        |  ('http://mirror.example/page-d?a=1&b=2', 3.0, 'kept', 0),
-        |  ('http://mirror.example/privacy', 0.0, 'miss', NULL),
-        |  ('http://mirror.example/tone-a-gain.wav', 2.0, 'skip', NULL))
-        |SELECT url, fetch_at, outcome, shard FROM v ORDER BY url""".stripMargin,
-    // q200's oracle regenerates the synthetic rule set from the same
-    // arithmetic formulas (generate_series — no 9k-line literal), takes
-    // the curated bundle as VALUES, and replays the PSL precedence
-    // relationally: per-depth suffix candidates, exceptions prevail at
-    // max depth, else max effective suffix length (wildcards = base+1),
-    // else the default rule; IP / single-label / suffix-itself guards
-    "q200_psl_full" -> {
-      val curated = graft.functions.UrlFunctions.BundledPslRules
-        .map(r => s"('$r')").mkString(", ")
-      s"""WITH crules(rule) AS (VALUES $curated),
-         |srules AS (
-         |  SELECT 's' || i || '.t' || (i % 97) AS rule FROM generate_series(0, 7999) t(i)
-         |  UNION ALL SELECT 'u' || i || '.s' || (i % 40) || '.t' || (i % 97) FROM generate_series(0, 799) t(i)
-         |  UNION ALL SELECT '*.w' || i FROM generate_series(0, 399) t(i)
-         |  UNION ALL SELECT '!ok.w' || i FROM generate_series(0, 399) t(i) WHERE i % 5 = 0),
-         |rules AS (SELECT rule FROM crules UNION ALL SELECT rule FROM srules),
-         |parsed AS (SELECT
-         |    CASE WHEN rule LIKE '!%' THEN 'e' WHEN rule LIKE '*.%' THEN 'w' ELSE 'x' END AS kind,
-         |    CASE WHEN rule LIKE '!%' THEN substr(rule, 2)
-         |         WHEN rule LIKE '*.%' THEN substr(rule, 3) ELSE rule END AS sfx
-         |  FROM rules),
-         |r2 AS (SELECT kind, sfx, len(string_split(sfx, '.')) AS k FROM parsed),
-         |hosts AS (SELECT doc_id,
-         |    CASE CAST(doc_id % 12 AS INT)
-         |      WHEN 0 THEN 'a.b.s' || (doc_id % 8000) || '.t' || ((doc_id % 8000) % 97)
-         |      WHEN 1 THEN 'a.b.w' || (doc_id % 400)
-         |      WHEN 2 THEN 'a.ok.w' || (doc_id % 400)
-         |      WHEN 3 THEN 'ex' || doc_id || '.com'
-         |      WHEN 4 THEN 'deep.sub.ex' || doc_id || '.co.uk'
-         |      WHEN 5 THEN 's' || (doc_id % 8000) || '.t' || ((doc_id % 8000) % 97)
-         |      WHEN 6 THEN '192.168.0.1'
-         |      WHEN 7 THEN 'localhost'
-         |      WHEN 8 THEN 'b.city.kawasaki.jp'
-         |      WHEN 9 THEN 'x.y.kawasaki.jp'
-         |      WHEN 10 THEN 'a' || doc_id || '.k12.ca.us'
-         |      ELSE 'u' || (doc_id % 800) || '.s' || ((doc_id % 800) % 40) || '.t' || ((doc_id % 800) % 97)
-         |    END AS host
-         |  FROM documents),
-         |hl AS (SELECT doc_id, host, string_split(host, '.') AS ls,
-         |    len(string_split(host, '.')) AS n,
-         |    (regexp_matches(host, '^[0-9]+\\.[0-9]+\\.[0-9]+\\.[0-9]+$$') OR host LIKE '[%') AS isip
-         |  FROM hosts),
-         |cand AS (SELECT doc_id, k,
-         |    array_to_string(ls[n - k + 1 : n], '.') AS sfx
-         |  FROM hl, generate_series(1, 3) t(k) WHERE k <= n),
-         |m AS (SELECT c.doc_id, r.kind, c.k
-         |  FROM cand c JOIN r2 r ON r.sfx = c.sfx AND r.k = c.k),
-         |excm AS (SELECT doc_id, max(k) AS ke FROM m WHERE kind = 'e' GROUP BY doc_id),
-         |sufm AS (SELECT doc_id, max(CASE WHEN kind = 'w' THEN k + 1 ELSE k END) AS s
-         |  FROM m WHERE kind <> 'e' GROUP BY doc_id),
-         |dec AS (SELECT h.doc_id, h.host,
-         |    CASE WHEN h.isip OR h.n <= 1 THEN h.host
-         |         WHEN e.ke IS NOT NULL THEN array_to_string(h.ls[h.n - e.ke + 1 : h.n], '.')
-         |         WHEN s.s IS NOT NULL THEN
-         |           CASE WHEN h.n >= s.s + 1 THEN array_to_string(h.ls[h.n - s.s : h.n], '.')
-         |                ELSE h.host END
-         |         ELSE array_to_string(h.ls[h.n - 1 : h.n], '.') END AS regdom
-         |  FROM hl h LEFT JOIN excm e USING (doc_id) LEFT JOIN sufm s USING (doc_id))
-         |SELECT doc_id, 'http://' || host || '/p' AS url, regdom
-         |FROM dec ORDER BY doc_id""".stripMargin
-    },
-    // q201's oracle replays the depth-2 discovery from the same body
-    // literals: directive extraction, index parse (child gate: announced
-    // only), child parse (orphan stays out), urlset parse, the robots
-    // rule derived from the body, and the Crawl-delay ladder
-    "q201_sitemap_recursion" ->
-      """WITH r(host, body) AS (VALUES
-        |  ('hx.example', E'User-agent: graftbot\nDisallow: /private/\nCrawl-delay: 3\nSitemap: http://hx.example/sitemap_index.xml')),
-        |lines AS (SELECT host,
-        |    regexp_replace(regexp_replace(unnest(regexp_split_to_array(body, '\r?\n')), '#.*$', ''), '^\s+|\s+$', '', 'g') AS ln
-        |  FROM r),
-        |smdir AS (SELECT DISTINCT regexp_replace(regexp_extract(ln, '^[^:]*:(.*)$', 1), '^\s+|\s+$', '', 'g') AS u
-        |  FROM lines WHERE regexp_matches(ln, '(?i)^sitemap\s*:')),
-        |rules AS (SELECT host, false AS allow, v AS rule,
-        |    '^' || replace(regexp_replace(CASE WHEN v LIKE '%$' THEN v[1:len(v)-1] ELSE v END,
-        |      '([\\.\[\]{}()^$|+?])', '\\\1', 'g'), '*', '.*')
-        |    || CASE WHEN v LIKE '%$' THEN '$' ELSE '' END AS pat
-        |  FROM (SELECT host, regexp_replace(regexp_extract(ln, '^[^:]*:(.*)$', 1), '^\s+|\s+$', '', 'g') AS v
-        |        FROM lines WHERE regexp_matches(ln, '(?i)^disallow\s*:')) WHERE v <> ''),
-        |delays AS (SELECT host, min(CAST(v AS DOUBLE)) AS crawl_delay
-        |  FROM (SELECT host, regexp_replace(regexp_extract(ln, '^[^:]*:(.*)$', 1), '^\s+|\s+$', '', 'g') AS v
-        |        FROM lines WHERE regexp_matches(ln, '(?i)^crawl-delay\s*:'))
-        |  WHERE regexp_matches(v, '^[0-9]+(\.[0-9]+)?$') GROUP BY host),
-        |sm(sm_url, body) AS (VALUES
-        |  ('http://hx.example/sitemap_index.xml', E'<?xml version="1.0"?>\n<sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">\n<sitemap><loc>http://hx.example/sm/a.xml</loc><lastmod>2026-04-01</lastmod></sitemap>\n<sitemap>\n  <loc>\n    http://hx.example/sm/b.xml\n  </loc>\n</sitemap>\n<sitemap><lastmod>2026-04-02</lastmod></sitemap>\n</sitemapindex>'),
-        |  ('http://hx.example/sm/a.xml', E'<urlset>\n<url><loc>http://hx.example/page1</loc><priority>0.7</priority></url>\n<url><loc>http://hx.example/private/secret</loc></url>\n<url><loc>http://hx.example/page2?b=2&amp;a=1</loc></url>\n</urlset>'),
-        |  ('http://hx.example/sm/b.xml', E'<urlset>\n<url><loc>http://hx.example/page3</loc></url>\n</urlset>'),
-        |  ('http://hx.example/sm/c.xml', E'<urlset>\n<url><loc>http://hx.example/only-via-orphan-child</loc></url>\n</urlset>')),
-        |chb AS (SELECT unnest(regexp_extract_all(body, '(?s)<sitemap>(.*?)</sitemap>', 1)) AS b
-        |  FROM sm WHERE sm_url IN (SELECT u FROM smdir)),
-        |children AS (SELECT child FROM (
-        |    SELECT replace(replace(replace(replace(replace(
-        |        regexp_replace(regexp_extract(b, '(?s)<loc>(.*?)</loc>', 1), '^\s+|\s+$', '', 'g'),
-        |        '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&apos;', ''''), '&amp;', '&') AS child
-        |    FROM chb) WHERE child <> ''),
-        |ub AS (SELECT unnest(regexp_extract_all(body, '(?s)<url>(.*?)</url>', 1)) AS b
-        |  FROM sm WHERE sm_url IN (SELECT child FROM children)),
-        |parsed AS (SELECT
-        |    replace(replace(replace(replace(replace(
-        |      regexp_replace(regexp_extract(b, '(?s)<loc>(.*?)</loc>', 1), '^\s+|\s+$', '', 'g'),
-        |      '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&apos;', ''''), '&amp;', '&') AS url,
-        |    CASE WHEN regexp_matches(regexp_replace(regexp_extract(b, '(?s)<priority>(.*?)</priority>', 1), '^\s+|\s+$', '', 'g'), '^[0-9]+(\.[0-9]+)?$')
-        |         THEN CAST(regexp_replace(regexp_extract(b, '(?s)<priority>(.*?)</priority>', 1), '^\s+|\s+$', '', 'g') AS DOUBLE)
-        |         ELSE 0.5 END AS priority
-        |  FROM ub),
-        |pu AS (SELECT url, priority,
-        |    regexp_extract(url, '^http://([^/?]*)', 1) AS host,
-        |    CASE WHEN regexp_replace(url, '^https?://[^/?]*', '') = '' THEN '/'
-        |         ELSE regexp_replace(url, '^https?://[^/?]*', '') END AS tgt
-        |  FROM parsed WHERE url <> ''),
-        |pc AS (SELECT p.url, ru.allow, len(ru.rule) AS rl
-        |  FROM pu p JOIN rules ru ON ru.host = p.host AND regexp_matches(p.tgt, ru.pat)),
-        |pb AS (SELECT url, allow FROM (
-        |    SELECT url, allow, row_number() OVER (PARTITION BY url ORDER BY rl DESC, allow DESC) AS rn FROM pc) WHERE rn = 1),
-        |allowed AS (SELECT p.* FROM pu p LEFT JOIN pb USING (url) WHERE coalesce(pb.allow, true)),
-        |sched AS (SELECT a.url, a.priority,
-        |    coalesce(d.crawl_delay, 1.0) AS crawl_delay,
-        |    (row_number() OVER (PARTITION BY a.host ORDER BY md5(a.url), a.url) - 1) * coalesce(d.crawl_delay, 1.0) AS fetch_at
-        |  FROM allowed a LEFT JOIN delays d USING (host))
-        |SELECT url, round(priority, 2) AS priority, round(crawl_delay, 2) AS crawl_delay, round(fetch_at, 2) AS fetch_at
-        |FROM sched ORDER BY url""".stripMargin,
-    // q202's oracle: literal VALUES from the independent python decode
-    // replay (scripts/gen_charset_fixture.py) — resolved charset name,
-    // main-text md5 and char count per record; the generator asserts
-    // these md5s are UNREACHABLE under a naive UTF-8 decode for every
-    // legacy-charset record, so a hash match proves charset resolution
-    "q202_charset_decode" ->
-      """SELECT * FROM (VALUES
-        |  ('http://charset.example/iso', 'ISO-8859-1', 'cf1c2f526863cd849b38d846890653eb', CAST(174 AS BIGINT)),
-        |  ('http://charset.example/win1252', 'windows-1252', '16ee0637097f1811caf5a0fe64ba58d2', CAST(222 AS BIGINT)),
-        |  ('http://charset.example/meta-utf8', 'UTF-8', '4c69809aab130cc612b782f9c386f017', CAST(124 AS BIGINT)),
-        |  ('http://charset.example/sniff1252', 'windows-1252', 'a04c48948953287154a318d2a3bf8a31', CAST(116 AS BIGINT)),
-        |  ('http://charset.example/plain-utf8', 'UTF-8', '9febace1e10e47d51ebc3ef361dd957b', CAST(137 AS BIGINT)),
-        |  ('http://charset.example/bogus', 'UTF-8', 'f06d540b859c6f37bfb6646cc4f37567', CAST(134 AS BIGINT)),
-        |  ('http://charset.example/gbk', 'GBK', '5bb5b6e420132c10d10c1a3e32eef7bb', CAST(34 AS BIGINT)),
-        |  ('http://charset.example/undeclared1252', 'windows-1252', 'd13be9eeb4e96f617cda4f043c685974', CAST(192 AS BIGINT))
-        |) AS t(url, cs, mt_md5, n_chars) ORDER BY url""".stripMargin,
-    // q199's oracle: the q192 power-iteration replay composed with the
-    // robots parse — per-URL best rank, gate, rank-ordered cap window,
-    // rank-ordered politeness ladder; every ordering crosses engines
-    // through round(rank·1000, 6)
-    "q199_rank_frontier" -> {
-      val rounds = (1 to 8).map { i =>
-        val p = s"r${i - 1}"
-        s"""d$i AS MATERIALIZED (SELECT coalesce(sum(rank), 0) AS dang
-           |  FROM $p LEFT JOIN deg ON $p.id = deg.src WHERE deg.src IS NULL),
-           |r$i AS MATERIALIZED (SELECT v.id,
-           |    (0.15 / nn.n) + 0.85 * (coalesce(c.s, 0) + (SELECT dang FROM d$i) / nn.n) AS rank
-           |  FROM verts v CROSS JOIN nn
-           |  LEFT JOIN (SELECT e.dst AS id, sum($p.rank / deg.deg) AS s
-           |             FROM edges e JOIN $p ON $p.id = e.src
-           |             JOIN deg ON deg.src = e.src
-           |             GROUP BY e.dst) c ON c.id = v.id)""".stripMargin
-      }.mkString(",\n")
-      robotsParseSql + s""",
-        |vmap AS MATERIALIZED (SELECT doc_id,
-        |    row_number() OVER (ORDER BY doc_id) - 1 AS vid FROM documents),
-        |verts AS MATERIALIZED (SELECT doc_id AS id FROM vmap),
-        |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM verts),
-        |ni AS (SELECT count(*) AS n FROM verts),
-        |cand AS (SELECT vid,
-        |    [(vid*31+7) % ni.n, (vid*17+3) % ni.n, (vid*13+11) % ni.n] AS cs,
-        |    CASE WHEN vid % 7 = 0 THEN 0 ELSE CAST(vid % 3 + 1 AS INT) END AS k
-        |  FROM vmap CROSS JOIN ni),
-        |edges AS MATERIALIZED (SELECT sv.doc_id AS src, dv.doc_id AS dst
-        |  FROM (SELECT vid, unnest(cs[1:k]) AS dvid FROM cand WHERE k > 0) e
-        |  JOIN vmap sv ON sv.vid = e.vid
-        |  JOIN vmap dv ON dv.vid = e.dvid
-        |  WHERE sv.doc_id <> dv.doc_id),
-        |deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-        |r0 AS MATERIALIZED (SELECT id, 1.0 / nn.n AS rank FROM verts CROSS JOIN nn),
-        |$rounds,
-        |ranks AS (SELECT id AS doc_id, round(rank * 1000, 6) AS mrank FROM r8),
-        |uc AS (SELECT u.doc_id, u.host, 'http://' || u.host || u.tgt AS url, u.tgt
-        |  FROM urls u),
-        |rc AS (SELECT DISTINCT c.url, ru.allow, len(ru.rule) AS rl
-        |  FROM uc c JOIN rules ru ON ru.host = c.host AND regexp_matches(c.tgt, ru.pat)),
-        |rb AS (SELECT url, allow FROM (
-        |    SELECT url, allow, row_number() OVER (PARTITION BY url
-        |      ORDER BY rl DESC, allow DESC) AS rn FROM rc) WHERE rn = 1),
-        |au AS (SELECT c.host, c.url, max(r.mrank) AS mrank
-        |  FROM uc c JOIN ranks r USING (doc_id)
-        |  LEFT JOIN rb ON rb.url = c.url
-        |  WHERE coalesce(rb.allow, true)
-        |  GROUP BY c.host, c.url),
-        |capped AS (SELECT host, url, mrank FROM (
-        |    SELECT host, url, mrank, row_number() OVER (PARTITION BY host
-        |      ORDER BY mrank DESC, url) AS rn FROM au) WHERE rn <= 10),
-        |delays AS (SELECT host, min(CAST(v AS DOUBLE)) AS crawl_delay
-        |  FROM flags2
-        |  WHERE kind = 'delay' AND regexp_matches(v, '^[0-9]+(\\.[0-9]+)?$$')
-        |    AND (spec_g = 1 OR (star_g = 1 AND spec_h = 0))
-        |  GROUP BY host),
-        |sched AS (SELECT c.url, c.mrank,
-        |    coalesce(d.crawl_delay, 1.0) AS crawl_delay,
-        |    (row_number() OVER (PARTITION BY c.host ORDER BY c.mrank DESC, c.url) - 1)
-        |      * coalesce(d.crawl_delay, 1.0) AS fetch_at
-        |  FROM capped c LEFT JOIN delays d USING (host))
-        |SELECT url, mrank, round(crawl_delay, 2) AS crawl_delay,
-        |  round(fetch_at, 2) AS fetch_at
-        |FROM sched ORDER BY url""".stripMargin
-    },
-    // q192's oracle replays all 8 power iterations unrolled — the same
-    // dangling-mass anti-join, per-edge 1/outdeg contributions and
-    // damping arithmetic, per round
-    "q192_pagerank" -> pagerank8Sql,
-    // q205 proves the warm-start contract — pageRank(init=rank_6, 2) ≡
-    // pageRank(uniform, 8) on an unchanged graph — so its oracle IS the
-    // same 8-round replay, verbatim
-    "q205_warm_pagerank" -> pagerank8Sql
-    // q35_simhash / q36_fingerprint intentionally rows-only: they fold
-    // xxhash64/crc32 (Spark-native hashes, no DuckDB counterpart);
-    // q51/q52 are their md5-based oracle-verified parity witnesses.
-  )
-
-  /** The q192 oracle: all 8 power rounds unrolled over the deterministic
-    * doc_id link graph — shared verbatim by q205 (warm start ≡ chained
-    * rounds). */
-  private lazy val pagerank8Sql: String = {
-      val rounds = (1 to 8).map { i =>
-        val p = s"r${i - 1}"
-        s"""d$i AS MATERIALIZED (SELECT coalesce(sum(rank), 0) AS dang
-           |  FROM $p LEFT JOIN deg ON $p.id = deg.src WHERE deg.src IS NULL),
-           |r$i AS MATERIALIZED (SELECT v.id,
-           |    (0.15 / nn.n) + 0.85 * (coalesce(c.s, 0) + (SELECT dang FROM d$i) / nn.n) AS rank
-           |  FROM verts v CROSS JOIN nn
-           |  LEFT JOIN (SELECT e.dst AS id, sum($p.rank / deg.deg) AS s
-           |             FROM edges e JOIN $p ON $p.id = e.src
-           |             JOIN deg ON deg.src = e.src
-           |             GROUP BY e.dst) c ON c.id = v.id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH vmap AS MATERIALIZED (SELECT doc_id,
-         |    row_number() OVER (ORDER BY doc_id) - 1 AS vid FROM documents),
-         |verts AS MATERIALIZED (SELECT doc_id AS id FROM vmap),
-         |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM verts),
-         |ni AS (SELECT count(*) AS n FROM verts),
-         |cand AS (SELECT vid,
-         |    [(vid*31+7) % ni.n, (vid*17+3) % ni.n, (vid*13+11) % ni.n] AS cs,
-         |    CASE WHEN vid % 7 = 0 THEN 0 ELSE CAST(vid % 3 + 1 AS INT) END AS k
-         |  FROM vmap CROSS JOIN ni),
-         |edges AS MATERIALIZED (SELECT sv.doc_id AS src, dv.doc_id AS dst
-         |  FROM (SELECT vid, unnest(cs[1:k]) AS dvid FROM cand WHERE k > 0) e
-         |  JOIN vmap sv ON sv.vid = e.vid
-         |  JOIN vmap dv ON dv.vid = e.dvid
-         |  WHERE sv.doc_id <> dv.doc_id),
-         |deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-         |r0 AS MATERIALIZED (SELECT id, 1.0 / nn.n AS rank FROM verts CROSS JOIN nn),
-         |$rounds
-         |SELECT id AS doc_id, round(rank * 1000, 6) AS mrank
-         |FROM r8 ORDER BY doc_id""".stripMargin
-  }
-
-  /** Shared DuckDB CTE for the winnowing queries (q185/q186): word
-    * 4-grams → salted md5 hex → sliding 5-windows → distinct minima,
-    * ending in m(doc_id, fps). Short docs (< 4 tokens) drop; docs with
-    * 1..4 hashes take one window over what exists — both matching
-    * [[graft.functions.DedupFunctions.winnowFingerprints]] exactly. */
-  private val winnowFpsSql: String =
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text),'\s+') AS toks
-        |           FROM documents),
-        |g AS (SELECT doc_id, list_transform(generate_series(1, greatest(len(toks)-3, 0)),
-        |    i -> md5('wn|' || toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS h
-        |  FROM t),
-        |m AS (SELECT doc_id, list_distinct(list_transform(
-        |    generate_series(1, greatest(len(h)-4, 1)),
-        |    j -> list_aggregate(h[j:j+4], 'min'))) AS fps
-        |  FROM g WHERE len(h) >= 1)""".stripMargin
-
-  /** Shared DuckDB CTE for the embedding sketch plane (q180–q182): the
-    * 64×64 hyperplane matrix re-derived from
-    * [[graft.functions.SimilarityFunctions.rhpSketchPlanes]]'s integer
-    * mixing formula — Knuth multiply mod 2^32, xor-fold of the high half
-    * (// 65536 ≡ >> 16 on the non-negative intermediate), a 40503
-    * multiply, top 12 bits recentred to [-2048, 2047]. Exact BIGINT
-    * arithmetic end to end, so both engines hold the identical matrix. */
-  private val embSketchPlanesSql: String =
-      """WITH pl AS (
-        |  SELECT CAST(i AS BIGINT) AS i, j,
-        |    CAST(((xor((CAST(i AS BIGINT)*64 + j + 1) * 2654435761 % 4294967296,
-        |               ((CAST(i AS BIGINT)*64 + j + 1) * 2654435761 % 4294967296) // 65536)
-        |           * 40503) % 4294967296) // 1048576 - 2048 AS DOUBLE) AS p
-        |  FROM generate_series(0,63) t0(i), generate_series(0,63) t1(j))""".stripMargin
-
-  /** [[embSketchPlanesSql]] extended through the augmented corpus (the
-    * three list_transform twins of [[embSketchAugmented]]) to
-    * sig(vec_id, sig) — the shared front half of q181/q182. */
-  private val embSketchSigsSql: String =
-      (embSketchPlanesSql + """
-        |, base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |aug AS (
-        |  SELECT vec_id, e FROM base
-        |  UNION ALL SELECT 100000, list_transform(e, x -> x * 2.0) FROM base WHERE vec_id = 0
-        |  UNION ALL SELECT 100001, list_transform(e, x -> x + 0.01) FROM base WHERE vec_id = 1
-        |  UNION ALL SELECT 100002, list_transform(e, x -> -x) FROM base WHERE vec_id = 2),
-        |proj AS (SELECT aug.vec_id, pl.i, sum(e[j+1] * p) AS s
-        |         FROM aug, pl GROUP BY 1, 2),
-        |sig AS (SELECT vec_id,
-        |  CAST(SUM(CASE WHEN s < 0 THEN 0
-        |                WHEN i = 63 THEN -9223372036854775808
-        |                ELSE CAST(1 AS BIGINT) << i END) AS BIGINT) AS sig
-        |  FROM proj GROUP BY vec_id)""".stripMargin)
-
-  /** robots parse + decision + per-host delays over the fixture URL
-    * stream, ending at CTEs `allowed` and `delays` — the shared gate
-    * half of the q190/q203/q206 oracles. */
-  private lazy val frontierGateSql: String =
-    robotsParseSql + """,
-      |cand AS (SELECT u.doc_id, ru.allow, len(ru.rule) AS rl
-      |  FROM urls u JOIN rules ru ON ru.host = u.host AND regexp_matches(u.tgt, ru.pat)),
-      |best AS (SELECT doc_id, allow FROM (
-      |    SELECT doc_id, allow, row_number() OVER (PARTITION BY doc_id
-      |      ORDER BY rl DESC, allow DESC) AS rn FROM cand) WHERE rn = 1),
-      |allowed AS (SELECT DISTINCT u.host, 'http://' || u.host || u.tgt AS url
-      |  FROM urls u LEFT JOIN best b USING (doc_id)
-      |  WHERE coalesce(b.allow, true)),
-      |delays AS (SELECT host, min(CAST(v AS DOUBLE)) AS crawl_delay
-      |  FROM flags2
-      |  WHERE kind = 'delay' AND regexp_matches(v, '^[0-9]+(\.[0-9]+)?$')
-      |    AND (spec_g = 1 OR (star_g = 1 AND spec_h = 0))
-      |  GROUP BY host)""".stripMargin
-
-  /** The q190 frontier-schedule oracle (rules decision + Crawl-delay
-    * ladder over the fixture URL stream) — SHARED verbatim by q203,
-    * whose cache-served rules must produce the identical schedule. */
-  private lazy val frontierScheduleSql: String =
-    frontierGateSql + """,
-      |sched AS (SELECT a.url,
-      |    coalesce(d.crawl_delay, 1.0) AS crawl_delay,
-      |    (row_number() OVER (PARTITION BY a.host ORDER BY md5(a.url), a.url) - 1)
-      |      * coalesce(d.crawl_delay, 1.0) AS fetch_at
-      |  FROM allowed a LEFT JOIN delays d USING (host))
-      |SELECT url, round(crawl_delay, 2) AS crawl_delay,
-      |  round(fetch_at, 2) AS fetch_at
-      |FROM sched ORDER BY url""".stripMargin
-
-  /** q206's oracle: the gate, MINUS the first-3-per-host already-fetched
-    * set (the same md5 ladder order the schedule uses), re-laddered —
-    * the incremental plan replayed from scratch. */
-  private lazy val incrementalPlanSql: String =
-    frontierGateSql + """,
-      |fetched AS (SELECT url FROM (
-      |    SELECT url, row_number() OVER (PARTITION BY host
-      |      ORDER BY md5(url), url) AS rn FROM allowed) WHERE rn <= 3),
-      |rem AS (SELECT a.* FROM allowed a
-      |  LEFT JOIN fetched f USING (url) WHERE f.url IS NULL),
-      |sched AS (SELECT a.url,
-      |    coalesce(d.crawl_delay, 1.0) AS crawl_delay,
-      |    (row_number() OVER (PARTITION BY a.host ORDER BY md5(a.url), a.url) - 1)
-      |      * coalesce(d.crawl_delay, 1.0) AS fetch_at
-      |  FROM rem a LEFT JOIN delays d USING (host))
-      |SELECT url, round(crawl_delay, 2) AS crawl_delay,
-      |  round(fetch_at, 2) AS fetch_at
-      |FROM sched ORDER BY url""".stripMargin
-
-  /** Shared DuckDB CTE chain for the robots plane (q189/q190): the two
-    * fixture bodies (same literals as the Spark side), the RFC 9309 parse
-    * — line explode, comment strip, directive classification, UA-run
-    * group numbering, specific-shadows-star selection — the rule→regex
-    * translation, the group-independent `Sitemap:` directive extraction,
-    * and the deterministic URL stream derived from doc_id. Ends with
-    * CTEs `rules`, `flags2` (for Crawl-delay), `smdir` (announced
-    * sitemap addresses) and `urls`. */
-  private val robotsParseSql: String =
-    """WITH RECURSIVE r(host, body) AS (VALUES
-      |  ('h0.example', E'# politeness for the fixture crawler\nSitemap: http://h0.example/sitemap.xml\nUser-agent: graftbot\nDisallow: /private/\nAllow: /private/public/\nDisallow: /*.pdf$\nDisallow: /admin\nAllow: /admi*\nCrawl-delay: 10\nUser-agent: *\nDisallow: /'),
-      |  ('h1.example', E'User-agent: otherbot\nUser-agent: *\nDisallow: /tmp/\nDisallow: /search?*q=\nAllow:\nDisallow:\nUser-agent: thirdbot\nDisallow: /\nsitemap: http://h1.example/sitemap.xml')),
-      |lines AS (
-      |  SELECT host, generate_subscripts(l, 1) AS i,
-      |         regexp_replace(regexp_replace(unnest(l), '#.*$', ''),
-      |                        '^\s+|\s+$', '', 'g') AS ln
-      |  FROM (SELECT host, regexp_split_to_array(body, '\r?\n') AS l FROM r)),
-      |cls AS (SELECT host, i,
-      |    CASE WHEN regexp_matches(ln, '(?i)^user-agent\s*:') THEN 'ua'
-      |         WHEN regexp_matches(ln, '(?i)^allow\s*:') THEN 'allow'
-      |         WHEN regexp_matches(ln, '(?i)^disallow\s*:') THEN 'disallow'
-      |         WHEN regexp_matches(ln, '(?i)^crawl-delay\s*:') THEN 'delay'
-      |         ELSE 'other' END AS kind,
-      |    regexp_replace(regexp_extract(ln, '^[^:]*:(.*)$', 1),
-      |                   '^\s+|\s+$', '', 'g') AS v
-      |  FROM lines),
-      |lagged AS (SELECT *,
-      |    coalesce(lag(kind) OVER (PARTITION BY host ORDER BY i), '') AS pk FROM cls),
-      |grp AS (SELECT *, sum(CASE WHEN kind = 'ua' AND pk <> 'ua' THEN 1 ELSE 0 END)
-      |    OVER (PARTITION BY host ORDER BY i) AS g FROM lagged),
-      |flags AS (SELECT *,
-      |    max(CASE WHEN kind = 'ua' AND lower(v) = 'graftbot' THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY host, g) AS spec_g,
-      |    max(CASE WHEN kind = 'ua' AND v = '*' THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY host, g) AS star_g
-      |  FROM grp WHERE g > 0),
-      |flags2 AS (SELECT *, max(spec_g) OVER (PARTITION BY host) AS spec_h FROM flags),
-      |rules AS (SELECT host, kind = 'allow' AS allow, v AS rule,
-      |    '^' || replace(regexp_replace(
-      |      CASE WHEN v LIKE '%$' THEN v[1:len(v)-1] ELSE v END,
-      |      '([\\.\[\]{}()^$|+?])', '\\\1', 'g'), '*', '.*')
-      |    || CASE WHEN v LIKE '%$' THEN '$' ELSE '' END AS pat
-      |  FROM flags2
-      |  WHERE kind IN ('allow','disallow') AND v <> ''
-      |    AND (spec_g = 1 OR (star_g = 1 AND spec_h = 0))),
-      |smdir AS (SELECT DISTINCT sm_url FROM (
-      |    SELECT regexp_replace(regexp_extract(ln, '^[^:]*:(.*)$', 1),
-      |                          '^\s+|\s+$', '', 'g') AS sm_url
-      |    FROM lines WHERE regexp_matches(ln, '(?i)^sitemap\s*:'))
-      |  WHERE sm_url <> ''),
-      |urls AS (SELECT doc_id,
-      |    'h' || CAST(doc_id % 3 AS VARCHAR) || '.example' AS host,
-      |    CASE doc_id % 8
-      |      WHEN 0 THEN '/' WHEN 1 THEN '/public/page' || CAST(doc_id AS VARCHAR)
-      |      WHEN 2 THEN '/private/data' WHEN 3 THEN '/private/public/ok'
-      |      WHEN 4 THEN '/files/report.pdf' WHEN 5 THEN '/search?q=x' || CAST(doc_id AS VARCHAR)
-      |      WHEN 6 THEN '/tmp/cache' ELSE '/admin' END AS tgt
-      |  FROM documents)""".stripMargin
-
-  /** Shared DuckDB CTE chain for the cross-modal signature plane
-    * (q174/q176/q177): replays the image DCT pHash from the pixel
-    * formulas (incl. the perturbed twin, id 12), the audio WHT
-    * fingerprint from the PCM formulas (incl. the ×2-gain and +1-noise
-    * twins, ids 16/17), and carries the video keyframe hashes as
-    * literals from the independent python encoder's reconstruction
-    * replay (incl. the byte-dup, id 8) — ending in
-    * sigs(modality, id, sig). */
-  private val crossmodalSigSql: String =
-      """WITH ipx AS (
-        |  SELECT img, x, y,
-        |    CASE WHEN img <= 11 THEN ((x*7 + y*13 + img*29) * (x + y + img + 1) + x*y) % 256
-        |         ELSE ((x*7 + y*13) * (x + y + 1) + x*y) % 256
-        |              + CASE WHEN (x + y) % 5 = 0 THEN 1 ELSE 0 END END AS v
-        |  FROM generate_series(0,12) t0(img),
-        |       generate_series(0,31) t1(x), generate_series(0,31) t2(y)
-        |), idct AS (
-        |  SELECT img, u, vv,
-        |    SUM(v * cos((2*x+1)*u*pi()/64) * cos((2*y+1)*vv*pi()/64)) AS c
-        |  FROM ipx, generate_series(0,7) tu(u), generate_series(0,7) tv(vv)
-        |  GROUP BY img, u, vv
-        |), imed AS (
-        |  SELECT img, median(c) AS m FROM idct WHERE NOT (u = 0 AND vv = 0) GROUP BY img
-        |), ibits AS (
-        |  SELECT d.img, u*8 + vv AS k, CASE WHEN d.c > imed.m THEN 1 ELSE 0 END AS b
-        |  FROM idct d JOIN imed ON d.img = imed.img
-        |), isig AS (
-        |  SELECT 'image' AS modality, img AS id,
-        |    CAST(SUM(CASE WHEN b = 0 THEN 0 WHEN k = 63 THEN -9223372036854775808
-        |                  ELSE (CAST(1 AS BIGINT) << k) END) AS BIGINT) AS sig
-        |  FROM ibits GROUP BY img
-        |), apcm AS (
-        |  SELECT id, CASE
-        |    WHEN id <= 15 THEN list_transform(generate_series(0, 1023), n ->
-        |      ((id + 3) * ((n*n) % 977) + 17 * n) % 4096 - 2048)
-        |    WHEN id = 16 THEN list_transform(generate_series(0, 1023), n ->
-        |      2 * ((3 * ((n*n) % 977) + 17 * n) % 4096 - 2048))
-        |    ELSE list_transform(generate_series(0, 1023), n ->
-        |      (3 * ((n*n) % 977) + 17 * n) % 4096 - 2048
-        |      + CASE WHEN n % 7 = 0 THEN 1 ELSE 0 END) END AS x
-        |  FROM generate_series(0, 17) ti(id)
-        |), aen AS (
-        |  SELECT id, t, b,
-        |    list_aggregate(list_transform(generate_series(0, 2), j ->
-        |      (list_aggregate(list_transform(generate_series(0, 63), n ->
-        |         x[t*64 + n + 1] * (CASE WHEN bit_count(CAST(n AS BIGINT) & (b*3 + j + 1)) % 2 = 0 THEN 1 ELSE -1 END)), 'sum')) ** 2), 'sum') AS en
-        |  FROM apcm, generate_series(0, 4) tt(t), generate_series(0, 16) bb(b)
-        |), adiff AS (
-        |  SELECT a.id, a.t, a.b, (a.en - c.en) - (p.en - q.en) AS diff
-        |  FROM aen a JOIN aen c ON c.id = a.id AND c.t = a.t AND c.b = a.b + 1
-        |             JOIN aen p ON p.id = a.id AND p.t = a.t - 1 AND p.b = a.b
-        |             JOIN aen q ON q.id = a.id AND q.t = a.t - 1 AND q.b = a.b + 1
-        |  WHERE a.t >= 1 AND a.b <= 15
-        |), asig AS (
-        |  SELECT 'audio' AS modality, id,
-        |    CAST(SUM(CASE WHEN diff <= 0 THEN 0 WHEN (t-1)*16 + b = 63 THEN -9223372036854775808
-        |                  ELSE (CAST(1 AS BIGINT) << ((t-1)*16 + b)) END) AS BIGINT) AS sig
-        |  FROM adiff GROUP BY id
-        |), vsig AS (
-        |  SELECT 'video' AS modality, id, sig FROM (VALUES
-        |    (CAST(0 AS BIGINT), CAST(8636034951607170629 AS BIGINT)),
-        |    (CAST(1 AS BIGINT), CAST(3676657861836354165 AS BIGINT)),
-        |    (CAST(2 AS BIGINT), CAST(-6636563845715892555 AS BIGINT)),
-        |    (CAST(3 AS BIGINT), CAST(3738160048424576709 AS BIGINT)),
-        |    (CAST(4 AS BIGINT), CAST(2853554358855366165 AS BIGINT)),
-        |    (CAST(5 AS BIGINT), CAST(-668106281696418235 AS BIGINT)),
-        |    (CAST(6 AS BIGINT), CAST(4830352879577429605 AS BIGINT)),
-        |    (CAST(7 AS BIGINT), CAST(8303120560622614037 AS BIGINT)),
-        |    (CAST(8 AS BIGINT), CAST(8636034951607170629 AS BIGINT))) t(id, sig)
-        |), sigs AS (
-        |  SELECT * FROM isig UNION ALL SELECT * FROM asig UNION ALL SELECT * FROM vsig
-        |)""".stripMargin
+  val oracleSql: Map[String, String] =
+    specs.flatMap(q => q.oracleSql.map(q.name -> _)).toMap
 }

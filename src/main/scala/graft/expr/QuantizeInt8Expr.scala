@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
   * quantizes in a primitive loop, O(d).
   *
   * Semantics are bit-identical to the HOF spec twin
-  * ([[graft.functions.SimilarityFunctions.quantizeInt8Hof]]) on non-empty
+  * (`SimilarityColumnReference.quantizeInt8Hof` in FunctionsSpec) on non-empty
   * arrays: float abs/max, double division, `round` = BigDecimal.valueOf
   * HALF_UP (Spark's `round(double)`), null elements quantize to null.
   * An empty array quantizes to (1.0, []) where the HOF yields a null

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * token hashes, one primitive loop per document.
   *
   * Bit-identical to the HOF specification
-  * ([[graft.functions.DedupFunctions.simhash64Hof]]): token hash =
+  * (`DedupColumnReference.simhash64Hof` in FunctionsSpec): token hash =
   * Spark's `xxhash64(token)` (XXH64 over the UTF-8 bytes, seed 42), votes
   * +1/−1 per bit, bit set when votes > 0.
   */

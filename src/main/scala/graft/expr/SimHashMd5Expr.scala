@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Bit i (0..15) votes on bit (i mod 4) of hex digit (i div 4) of
   * md5(token) — hex digit 2m is the high nibble of digest byte m. Votes
   * are +1/−1 per token; bit set when votes > 0. Bit-identical to the HOF
-  * specification ([[graft.functions.DedupFunctions.simhashMd5Hof]]) and
+  * reference (`DedupColumnReference.simhashMd5Hof` in FunctionsSpec) and
   * the DuckDB strpos/shift formulation.
   */
 case class SimHashMd5Expr(child: Expression) extends UnaryExpression with CodegenFallback {

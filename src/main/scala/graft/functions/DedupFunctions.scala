@@ -88,16 +88,6 @@ object DedupFunctions {
   def minhashSignature(text: Column, n: Int, numHashes: Int): Column =
     graft.expr.NativeFunctions.minhash_signature(text, n, numHashes)
 
-  /** The composable HOF formulation of [[minhashSignature]] — kept as the
-    * executable specification the native expression is tested against. */
-  def minhashSignatureHof(text: Column, n: Int, numHashes: Int): Column = {
-    val sh = shingles(text, n)
-    aggregate(sh,
-      array_repeat(lit(null).cast("string"), numHashes),
-      (acc, s) => zip_with(acc, sequence(lit(0), lit(numHashes - 1)),
-        (a, j) => least(a, md5(concat(lit("s"), j.cast("string"), s)))))
-  }
-
   /** Choose (bands, rowsPerBand) for a target Jaccard threshold under a
     * signature-size budget. A (b, r) scheme fires on a pair with
     * probability 1 − (1 − J^r)^b — an S-curve whose inflection sits near
@@ -147,39 +137,10 @@ object DedupFunctions {
     * fewer than w hashes → one window over what exists. ~m/(w/2)
     * fingerprints per m-token doc in expectation. Native expression
     * ([[graft.expr.WinnowExpr]] — one tokenize, one MessageDigest, ring
-    * minima); [[winnowFingerprintsHof]] is the bit-parity spec twin. */
+    * minima); its bit-parity reference is `WinnowColumnReference` in
+    * WinnowingSpec. */
   def winnowFingerprints(text: Column, k: Int = 4, w: Int = 5): Column =
     graft.expr.NativeFunctions.winnow_fps(text, k, w)
-
-  /** Composable spec twin of [[winnowFingerprints]] (tests only). */
-  def winnowFingerprintsHof(text: Column, k: Int = 4, w: Int = 5): Column = {
-    require(k >= 1 && w >= 1, s"winnow k=$k w=$w out of range")
-    // Every intermediate array is BOUND ONCE as a lambda variable via the
-    // single-element transform(array(x), v => …) pattern. Referencing the
-    // raw sub-expression inside a HOF lambda instead re-evaluates it per
-    // element — with `hashes` under the per-window slice that compounds
-    // to O(windows × grams × k) full regex re-splits per document, which
-    // turned a 5k-doc pass into a ~1 h single-task stage before this
-    // binding (the scan stage is one task on a one-file table).
-    def bind(x: Column)(body: Column => Column): Column =
-      element_at(transform(array(x), body), 1)
-    bind(split(trim(text), "\\s+")) { toks =>
-      // try_element_at: rows shorter than k still EVALUATE this binding
-      // (the masking `when` sits below it) — ANSI element_at would throw
-      // on their out-of-range gram indices; the garbage grams those rows
-      // produce are discarded by the guard
-      bind(transform(sequence(lit(1), greatest(size(toks) - (k - 1), lit(1))),
-        i => md5(concat(lit("wn|"),
-          concat_ws(" ", (0 until k).map(o => try_element_at(toks, i + lit(o))): _*))))) { hashes =>
-        // sequence(1, n) with n < 1 counts DOWN — both sequences are
-        // floored at 1 and the no-gram case is masked by the outer when
-        when(size(toks) >= k, array_distinct(
-          transform(sequence(lit(1), greatest(size(hashes) - (w - 1), lit(1))),
-            j => array_min(slice(hashes, j, lit(w))))))
-          .otherwise(array().cast("array<string>"))
-      }
-    }
-  }
 
   /** Winnowing-based similar-pair detection: explode fingerprints, one
     * fingerprint-keyed equi-join, count shared minima per pair —
@@ -629,20 +590,6 @@ object DedupFunctions {
   def simhash64(text: Column): Column =
     graft.expr.NativeFunctions.simhash64(text)
 
-  /** HOF formulation of [[simhash64]] — executable specification. */
-  def simhash64Hof(text: Column): Column = {
-    val toks = TextFunctions.tokens(text)
-    val hashes = transform(toks, t => xxhash64(t))
-    val bitIdx = sequence(lit(0), lit(63))
-    val votes = aggregate(hashes, array_repeat(lit(0L), 64),
-      (acc, h) => zip_with(acc, bitIdx,
-        (a, i) => a + when(call_function("shiftright", h, i).bitwiseAND(1) === 1, 1L).otherwise(-1L)))
-    aggregate(
-      zip_with(votes, bitIdx,
-        (v, i) => when(v > 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
-      lit(0L), (acc, b) => acc.bitwiseOR(b))
-  }
-
   /** Hamming distance between two 64-bit simhashes. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
@@ -1060,22 +1007,6 @@ object DedupFunctions {
     }
   }
 
-  /** HOF formulation of [[simhashMd5]] — executable specification.
-    * Bit i votes on bit (i%4) of hex digit (i/4) of md5(token). */
-  def simhashMd5Hof(text: Column): Column = {
-    val hs = transform(TextFunctions.tokens(text), t => md5(t))
-    val bitIdx = sequence(lit(0), lit(15))
-    val votes = aggregate(hs, array_repeat(lit(0), 16),
-      (acc, h) => zip_with(acc, bitIdx, (a, i) => {
-        val digit = conv(element_at(split(h, ""), (floor(i / 4) + 1).cast("int")), 16, 10).cast("int")
-        val bit = call_function("shiftright", digit, (i % 4).cast("int")).bitwiseAND(1)
-        a + when(bit === 1, 1).otherwise(-1)
-      }))
-    aggregate(zip_with(votes, bitIdx, (v, i) =>
-        when(v > 0, call_function("shiftleft", lit(1L), i.cast("int"))).otherwise(lit(0L))),
-      lit(0L), (acc, b) => acc.bitwiseOR(b))
-  }
-
   /** Global rarest-first rank bijection over a (term, df) dictionary:
     * rank 1, 2, … assigned in (df, term) lexicographic order — ties are
     * impossible (term is unique) so the rank is deterministic under any
@@ -1353,40 +1284,6 @@ object DedupFunctions {
     SimilarityFunctions.topKPerDoc(
       containmentJoinExact(docs, textCol, idCol, tau, ngram),
       "id_a", "id_b", "containment", k)
-
-  /** Repeated-substring spans: for every document, the maximal token
-    * intervals covered by SLIDING `L`-token windows whose window occurs
-    * more than once in the corpus (in any document, including this one) —
-    * the detection half of exact substring deduplication (Lee et al.,
-    * "Deduplicating Training Data Makes Language Models Better", ACL
-    * 2022, which removes repeated substrings ≥ 50 tokens; the reference
-    * implementation builds a corpus suffix array). [[dedupSpans]] handles
-    * DISJOINT fixed chunks; this finds arbitrarily-aligned repeats —
-    * boilerplate headers, license blocks, quoted passages — and returns
-    * (id, span_start, span_end, n_windows) with span bounds in token
-    * positions, overlapping/adjacent windows merged per document.
-    *
-    * Scale shape: windows materialize scan-side (one row per token
-    * position carrying a 128-bit window digest, never the window text);
-    * corpus-wide window counts are a digest-keyed groupBy (map-side
-    * partial aggregation) re-attached via an equi-join that AQE can
-    * skew-split when one boilerplate digest goes viral — the row volume
-    * is corpus token count, which is the honest cost of exact substring
-    * dedup without a distributed suffix array; Lee et al. pay the same
-    * in suffix-array construction.
-    * The island merge is a second exchange keyed by document. md5 keeps
-    * the digest reproducible for the DuckDB oracle — production would use
-    * xxhash64 (8 B instead of a 32-char hex, same semantics), the same
-    * trade [[minhash]] documents. */
-  /** The composable-HOF formulation of the window digests — kept as the
-    * executable specification [[graft.expr.WindowDigestsExpr]] is tested
-    * against (same pattern as [[minhashSignatureHof]]). */
-  def repeatedSpanDigestsHof(text: Column, L: Int): Column = {
-    val tk = TextFunctions.tokens(text)
-    when(size(tk) < L, array().cast("array<binary>")).otherwise(
-      transform(sequence(lit(0), size(tk) - L),
-        i => unhex(md5(concat_ws(" ", slice(tk, i + 1, lit(L)))))))
-  }
 
   /** The removal half of exact substring dedup (Lee et al. ACL 2022):
     * [[repeatedSpans]] DETECTS repeated regions; this CUTS them, keeping
@@ -1703,6 +1600,30 @@ object DedupFunctions {
     rebuildAfterCut(batch, textCol, idCol, droppedPos)
   }
 
+  /** Repeated-substring spans: for every document, the maximal token
+    * intervals covered by SLIDING `L`-token windows whose window occurs
+    * more than once in the corpus (in any document, including this one) —
+    * the detection half of exact substring deduplication (Lee et al.,
+    * "Deduplicating Training Data Makes Language Models Better", ACL
+    * 2022, which removes repeated substrings ≥ 50 tokens; the reference
+    * implementation builds a corpus suffix array). [[dedupSpans]] handles
+    * DISJOINT fixed chunks; this finds arbitrarily-aligned repeats —
+    * boilerplate headers, license blocks, quoted passages — and returns
+    * (id, span_start, span_end, n_windows) with span bounds in token
+    * positions, overlapping/adjacent windows merged per document.
+    *
+    * Scale shape: windows materialize scan-side (one row per token
+    * position carrying a 128-bit window digest, never the window text);
+    * corpus-wide window counts are a digest-keyed groupBy (map-side
+    * partial aggregation) re-attached via an equi-join that AQE can
+    * skew-split when one boilerplate digest goes viral — the row volume
+    * is corpus token count, which is the honest cost of exact substring
+    * dedup without a distributed suffix array; Lee et al. pay the same
+    * in suffix-array construction.
+    * The island merge is a second exchange keyed by document. md5 keeps
+    * the digest reproducible for the DuckDB oracle — production would use
+    * xxhash64 (8 B instead of a 32-char hex, same semantics), the same
+    * trade [[minhash]] documents. */
   def repeatedSpans(df: DataFrame, textCol: String, idCol: String,
                     L: Int, hotThreshold: Long = 100000L,
                     salts: Int = 16): DataFrame = {
@@ -1710,8 +1631,8 @@ object DedupFunctions {
     // 16-byte binary digests (not hex strings) halve the exchange payload;
     // spans depend only on digest EQUALITY, so any injective encoding of
     // md5 yields identical output. The native expression computes all
-    // windows in one pass per row — bit-identical to the HOF twin
-    // [[repeatedSpanDigestsHof]], which the spec pins
+    // windows in one pass per row — bit-identical to the HOF reference
+    // `DedupColumnReference.repeatedSpanDigestsHof` in FunctionsSpec
     val windows = df
       .select(col(idCol).as("id"),
         posexplode(graft.expr.NativeFunctions.window_digests(col(textCol), L))

@@ -21,11 +21,6 @@ object SimilarityFunctions {
   def dot(a: Column, b: Column): Column =
     graft.expr.NativeFunctions.dot_product(a, b)
 
-  /** HOF formulation of [[dot]] — executable specification for tests. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity in double precision. */
@@ -295,21 +290,10 @@ object SimilarityFunctions {
     * simhash and image/audio/video perceptual hashes. At 10⁹ vectors the
     * near-dup join ships 8 GB of signatures; the 256-byte floats never
     * leave their scan task. Native codegen'd expression
-    * ([[graft.expr.RhpSketch64Expr]]); [[rhpSketch64Hof]] is the
-    * bit-parity spec twin. */
+    * ([[graft.expr.RhpSketch64Expr]]); its bit-parity reference is
+    * `RhpSketchColumnReference` in RhpSketchSpec. */
   def rhpSketch64(emb: Column, dim: Int): Column =
     graft.expr.NativeFunctions.rhp_sketch64(emb, rhpSketchPlanes(dim), dim)
-
-  /** Composable spec twin of [[rhpSketch64]] (interpreted; tests only):
-    * 64 when(dot >= 0) terms over the same plane rows, same double
-    * accumulation order via the native [[dot]]. */
-  def rhpSketch64Hof(emb: Column, dim: Int): Column = {
-    val flat = rhpSketchPlanes(dim)
-    (0 until 64).map { i =>
-      val plane = Array.tabulate(dim)(j => flat(i * dim + j).toDouble)
-      when(dot(emb, lit(plane)) >= 0, lit(1L << i)).otherwise(0L)
-    }.reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** LSH-pruned cosine top-k: score only rows whose bucket matches the
     * query's bucket (recall < 1, cost ≈ 1/2^bits of the scan). */
@@ -529,18 +513,6 @@ object SimilarityFunctions {
   def quantizeInt8(emb: Column): Column =
     graft.expr.NativeFunctions.quantize_int8(emb)
 
-  /** Composable spec twin of [[quantizeInt8]] — the HOF formulation the
-    * native [[graft.expr.QuantizeInt8Expr]] is tested bit-for-bit against.
-    * Not for the hot path: the `scale` subtree is re-evaluated inside the
-    * per-element lambda (O(d²) per row interpreted), which is exactly why
-    * the native expression exists. */
-  def quantizeInt8Hof(emb: Column): Column = {
-    val mx = array_max(transform(emb, v => abs(v.cast("float"))))
-    val scale = when(mx === 0f, 1f).otherwise(mx / 127f)
-    struct(scale.as("scale"),
-      transform(emb, v => round(v.cast("float") / scale).cast("byte")).as("q"))
-  }
-
   /** Inverse of [[quantizeInt8]]: back to array<float>. */
   def dequantizeInt8(qs: Column): Column =
     transform(qs.getField("q"), v => v.cast("float") * qs.getField("scale"))
@@ -577,21 +549,6 @@ object SimilarityFunctions {
     * expression; the corpus-sized pass runs at scan speed. */
   def pqEncode(emb: Column, cb: PqCodebooks): Column =
     graft.expr.NativeFunctions.pq_encode(emb, cb.flat, cb.m, cb.k, cb.subDim)
-
-  /** Composable spec twin of [[pqEncode]] (interpreted; tests only). */
-  def pqEncodeHof(emb: Column, cb: PqCodebooks): Column = {
-    val subs = (0 until cb.m).map { s =>
-      val scored = (0 until cb.k).map { c =>
-        val cent = (0 until cb.subDim).map(j => cb.flat((s * cb.k + c) * cb.subDim + j))
-        val diff = zip_with(slice(emb, s * cb.subDim + 1, cb.subDim),
-          typedLit(cent), (x, y) => x.cast("double") - y)
-        struct(aggregate(diff, lit(0.0), (acc, v) => acc + v * v).as("dist"),
-          lit(c).as("code"))
-      }
-      least(scored: _*).getField("code").cast("byte")
-    }
-    array(subs: _*)
-  }
 
   /** Asymmetric-distance (ADC) score of PQ codes against one query vector:
     * the query precomputes an m × k lookup table of per-subspace partial

@@ -50,18 +50,6 @@ object ScaleOps {
   def quantileBucket(v: Column, cuts: Array[Double]): Column =
     graft.expr.NativeFunctions.search_sorted(v, cuts)
 
-  /** Composable spec twin of [[quantileBucket]] — the interpreted
-    * ArrayAggregate fold the native expression is tested against. NaN
-    * mirrors the native sorts-last rule (SQL `v >= b` is false for NaN, so
-    * the bare fold would send NaN to bucket 0 — the opposite end of
-    * Spark's double ordering). */
-  def quantileBucketHof(v: Column, cuts: Array[Double]): Column = {
-    val sorted = cuts.distinct.sorted
-    when(isnan(v), lit(sorted.length)).otherwise(
-      aggregate(typedLit(sorted.toSeq), lit(0),
-        (acc, b) => acc + when(v >= b, 1).otherwise(0)))
-  }
-
   /** Numeric view of a dimension column for quantile bucketing. ANSI mode
     * (Spark 4 default) forbids timestamp→double casts, so timestamps go
     * through unix_micros explicitly. */

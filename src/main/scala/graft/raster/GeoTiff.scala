@@ -79,6 +79,9 @@ object GeoTiff {
     * 2 GiB — the distributed layout guarantees it). */
   private[raster] sealed trait ByteSrc {
     def order: ByteOrder
+    /** Length of the file in bytes: every count read from it is checked
+      * against this before anything is allocated. */
+    def size: Long
     def get(p: Int): Byte
     def getShort(p: Int): Short
     def getInt(p: Int): Int
@@ -95,6 +98,7 @@ object GeoTiff {
   private final class ArraySrc(bytes: Array[Byte], val order: ByteOrder)
       extends ByteSrc {
     private val bb = ByteBuffer.wrap(bytes).order(order)
+    def size: Long = bytes.length
     def get(p: Int): Byte = bb.get(p)
     def getShort(p: Int): Short = bb.getShort(p)
     def getInt(p: Int): Int = bb.getInt(p)
@@ -118,6 +122,7 @@ object GeoTiff {
                                         blockSize: Int = 64 << 10)
       extends ByteSrc {
     private val blocks = scala.collection.mutable.LongMap.empty[Array[Byte]]
+    def size: Long = fileLen
     var bytesFetched = 0L
     private def blockAt(bi: Long): Array[Byte] = blocks.getOrElseUpdate(bi, {
       val ofs = bi * blockSize
@@ -358,11 +363,19 @@ object GeoTiff {
     (entries.map(e => e.tag -> e).toMap, next)
   }
 
+  /** An entry's `count` values of `size` bytes at `base` lie inside the
+    * file: a count taken from the file must not size an allocation the
+    * file cannot fill. */
+  private def requireInFile(buf: ByteSrc, e: Entry, base: Long, size: Int): Unit =
+    require(e.count >= 0 && base >= 0 && base + e.count.toLong * size <= buf.size,
+      s"TIFF tag ${e.tag}: ${e.count} values at offset $base overrun the ${buf.size}-byte file")
+
   /** Integer values of an entry (SHORT/LONG/BYTE/LONG8), inline or external. */
   private def longs(buf: ByteSrc, e: Entry): Array[Long] = {
     val sz = TypeSize(e.typ)
     val base = if (sz.toLong * e.count <= e.inlineBytes) e.valueOfs
                else offAt(buf, e.valueOfs, e.big)
+    requireInFile(buf, e, base, sz)
     Array.tabulate(e.count) { i =>
       val p = (base + i.toLong * sz).toInt
       e.typ match {
@@ -379,12 +392,14 @@ object GeoTiff {
     require(e.typ == 12, s"expected DOUBLE entry, got type ${e.typ}")
     val base = if (8L * e.count <= e.inlineBytes) e.valueOfs
                else offAt(buf, e.valueOfs, e.big)
+    requireInFile(buf, e, base, 8)
     Array.tabulate(e.count)(i => buf.getDouble((base + 8L * i).toInt))
   }
 
   private def ascii(buf: ByteSrc, e: Entry): String = {
     val base = if (e.count <= e.inlineBytes) e.valueOfs
                else offAt(buf, e.valueOfs, e.big)
+    requireInFile(buf, e, base, 1)
     val b = Array.tabulate(e.count)(i => buf.get((base + i).toInt))
     new String(b.takeWhile(_ != 0), "US-ASCII")
   }
@@ -1034,7 +1049,7 @@ object GeoTiff {
       kept.foreach { p =>
         val valid = if (p.factor == 1) height else height / p.factor
         val remaining = valid - p.bandsFlushed * tileSize
-        assert(remaining >= 0 && remaining <= p.rowsInBand,
+        if (remaining < 0 || remaining > p.rowsInBand) throw new IllegalStateException(
           s"RowEncoder row accounting drift: factor=${p.factor} valid=$valid " +
             s"flushed=${p.bandsFlushed} inBand=${p.rowsInBand}")
         if (remaining > 0) flushBand(p, remaining)
@@ -1219,13 +1234,14 @@ object GeoTiff {
       pageIds.indices.foreach { p =>
         tileOfs(p).indices.foreach { i =>
           val t = spill.read(pageIds(p)(i))
-          assert(written == tileOfs(p)(i),
+          if (written != tileOfs(p)(i)) throw new IllegalStateException(
             s"GeoTIFF layout drift at page $p tile $i: $written != ${tileOfs(p)(i)}")
           emit(t)
           if (t.length % 2 != 0) emit(pad)
         }
       }
-      assert(written == total, s"GeoTIFF layout drift at EOF: $written != $total")
+      if (written != total)
+        throw new IllegalStateException(s"GeoTIFF layout drift at EOF: $written != $total")
       written
     }
   }

@@ -91,32 +91,6 @@ object RasterKernels {
     (ok.reduceOption(_ unionByName _), skipped)
   }
 
-  /** HOF formulation of [[bandMath]] — executable specification the native
-    * [[graft.expr.BandMathExpr]] is tested against. */
-  def bandMathHof(pivoted: DataFrame, expression: String, outBand: String,
-               outNodata: Double, minValue: Double, maxValue: Double): DataFrame = {
-    val ast = BandExpressionCompiler.parse(expression)
-    val refs = BandExpressionCompiler.references(ast).toSeq.sorted
-    require(refs.nonEmpty, "expression references no bands")
-    val first = element_at(col("bands"), refs.head)
-    val out = transform(
-      sequence(lit(0), size(first) - 1),
-      i => {
-        val masked = refs.map { b =>
-          element_at(element_at(col("bands"), b), i + 1) === element_at(col("nodatas"), b).cast("float")
-        }.reduce(_ || _)
-        val value = BandExpressionCompiler.compile(ast,
-          b => element_at(element_at(col("bands"), b), i + 1).cast("double"))
-        when(masked, lit(outNodata))
-          .otherwise(coalesce(BandExpressionCompiler.clamp(value, minValue, maxValue),
-            lit(outNodata))) // NULL (e.g. 0/0 pixel) → nodata, not null
-          .cast("float")
-      })
-    pivoted.select(col("scene_id"), lit(outBand).as("band"),
-      col("window_row"), col("window_col"), col("height"), col("width"),
-      lit(outNodata).as("nodata"), out.as("pixels"))
-  }
-
   /** R2/A10 — nodata propagation into the quality band
     * (collections/utils.py:277–378): positions where ANY spectral band is
     * nodata get `qualityNodata` in the quality band. The per-window union
@@ -139,42 +113,12 @@ object RasterKernels {
       lit(qualityNodata).as("nodata"), native.as("pixels"))
   }
 
-  /** HOF formulation of [[propagateNodata]] — executable specification. */
-  def propagateNodataHof(pivoted: DataFrame, spectralBands: Seq[String],
-                      qualityBand: String, qualityNodata: Double): DataFrame = {
-    val quality = element_at(col("bands"), qualityBand)
-    val out = transform(
-      sequence(lit(0), size(quality) - 1),
-      i => {
-        val anyNodata = spectralBands.map { b =>
-          element_at(element_at(col("bands"), b), i + 1) === element_at(col("nodatas"), b).cast("float")
-        }.reduce(_ || _)
-        when(anyNodata, lit(qualityNodata)).otherwise(element_at(quality, i + 1)).cast("float")
-      })
-    pivoted.select(col("scene_id"), lit(qualityBand).as("band"),
-      col("window_row"), col("window_col"), col("height"), col("width"),
-      lit(qualityNodata).as("nodata"), out.as("pixels"))
-  }
-
   /** R3 — nearest-neighbour resample of a (height×width) tile to
     * (outH×outW) (collections/utils.py:317–348's out_shape read). Pure
     * index arithmetic inside one `transform`. */
   def resampleNearest(pixels: Column, height: Column, width: Column,
                       outH: Int, outW: Int): Column =
     resampleNearestDyn(pixels, height, width, lit(outH), lit(outW))
-
-  /** HOF formulation of [[resampleNearest]] — executable specification. */
-  def resampleNearestHof(pixels: Column, height: Column, width: Column,
-                      outH: Int, outW: Int): Column =
-    transform(
-      sequence(lit(0), lit(outH * outW - 1)),
-      i => {
-        val or = floor(i / outW).cast("long")
-        val oc = i % outW
-        val sr = floor((or * height.cast("long")) / outH).cast("long")
-        val sc = floor((oc * width.cast("long")) / outW).cast("long")
-        element_at(pixels, (sr * width + sc).cast("int") + 1)
-      })
 
   /** Bilinear resample — the quality upgrade over the reference's
     * nearest-only path (collections/utils.py:317–348 always resamples

@@ -53,7 +53,7 @@ class RhpSketchSpec extends SparkSpec {
     val rows = emb(sf0001)
       .select(col("vec_id"),
         Sim.rhpSketch64(col("embedding"), dim).as("nat"),
-        Sim.rhpSketch64Hof(col("embedding"), dim).as("hof"))
+        RhpSketchColumnReference.rhpSketch64Hof(col("embedding"), dim).as("hof"))
       .collect()
     assert(rows.length === 500)
     rows.foreach(r => assert(r.getLong(1) === r.getLong(2), s"vec ${r.getLong(0)}"))
@@ -67,7 +67,7 @@ class RhpSketchSpec extends SparkSpec {
     val asF = fuzz.map { case (i, e) => (i, e.map(_.toFloat)) }.toDF("id", "e")
     val natD = asD.select(col("id"), Sim.rhpSketch64(col("e"), dim).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val hofD = asD.select(col("id"), Sim.rhpSketch64Hof(col("e"), dim).as("s"))
+    val hofD = asD.select(col("id"), RhpSketchColumnReference.rhpSketch64Hof(col("e"), dim).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(natD === hofD)
     fuzz.foreach { case (i, e) => assert(natD(i) === sketchLocal(e), s"fuzz $i") }
@@ -75,7 +75,7 @@ class RhpSketchSpec extends SparkSpec {
     // doubles differ from the double fuzz, so compare the two paths only)
     val natF = asF.select(col("id"), Sim.rhpSketch64(col("e"), dim).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val hofF = asF.select(col("id"), Sim.rhpSketch64Hof(col("e"), dim).as("s"))
+    val hofF = asF.select(col("id"), RhpSketchColumnReference.rhpSketch64Hof(col("e"), dim).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(natF === hofF)
   }
@@ -156,5 +156,24 @@ class RhpSketchSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().filter(_._3 <= 11).toSet
     assert(banded === brute)
     assert(brute.nonEmpty, "sf0.001 should have at least one pair at <= 11")
+  }
+}
+
+/** The executable reference for [[graft.functions.SimilarityFunctions.rhpSketch64]]:
+  * the interpreted Column form that [[RhpSketch64Expr]] replaced. The
+  * parity tests above pin native ≡ reference bit for bit. */
+object RhpSketchColumnReference {
+  import org.apache.spark.sql.Column
+  import graft.functions.SimilarityFunctions.{dot, rhpSketchPlanes}
+
+  /** Composable spec twin of [[rhpSketch64]] (interpreted; tests only):
+    * 64 when(dot >= 0) terms over the same plane rows, same double
+    * accumulation order via the native [[dot]]. */
+  def rhpSketch64Hof(emb: Column, dim: Int): Column = {
+    val flat = rhpSketchPlanes(dim)
+    (0 until 64).map { i =>
+      val plane = Array.tabulate(dim)(j => flat(i * dim + j).toDouble)
+      when(dot(emb, lit(plane)) >= 0, lit(1L << i)).otherwise(0L)
+    }.reduce((a, b) => a.bitwiseOR(b))
   }
 }

@@ -263,7 +263,7 @@ class FunctionsSpec extends SparkSpec {
     // native expression == composable spec, byte for byte
     val both = df.select(
       SimilarityFunctions.pqEncode(col("embedding"), cb).as("n"),
-      SimilarityFunctions.pqEncodeHof(col("embedding"), cb).as("h"))
+      SimilarityColumnReference.pqEncodeHof(col("embedding"), cb).as("h"))
       .collect()
     both.foreach { r =>
       assert(r.getSeq[Byte](0) == r.getSeq[Byte](1), "native and HOF codes must agree")
@@ -335,12 +335,12 @@ class FunctionsSpec extends SparkSpec {
     val native = docs.select(col("doc_id"),
       DedupFunctions.minhashSignature(col("text"), 3, 4).as("sig"))
     val hof = docs.select(col("doc_id"),
-      DedupFunctions.minhashSignatureHof(col("text"), 3, 4).as("sig"))
+      DedupColumnReference.minhashSignatureHof(col("text"), 3, 4).as("sig"))
     assert(native.exceptAll(hof).count() == 0 && hof.exceptAll(native).count() == 0)
     // edge cases: empty text, fewer tokens than n
     val edge = Seq((1L, ""), (2L, "only two"), (3L, "   ")).toDF("doc_id", "text")
     val en = edge.select(DedupFunctions.minhashSignature(col("text"), 3, 2).as("s")).collect()
-    val eh = edge.select(DedupFunctions.minhashSignatureHof(col("text"), 3, 2).as("s")).collect()
+    val eh = edge.select(DedupColumnReference.minhashSignatureHof(col("text"), 3, 2).as("s")).collect()
     assert(en.map(_.toString).toSeq == eh.map(_.toString).toSeq)
   }
 
@@ -389,7 +389,7 @@ class FunctionsSpec extends SparkSpec {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val native = emb.select(SimilarityFunctions.quantizeInt8(col("embedding")).as("qs"))
       .select(col("qs.scale"), col("qs.q")).collect().map(_.toString).toSeq
-    val hof = emb.select(SimilarityFunctions.quantizeInt8Hof(col("embedding")).as("qs"))
+    val hof = emb.select(SimilarityColumnReference.quantizeInt8Hof(col("embedding")).as("qs"))
       .select(col("qs.scale").as("scale"), col("qs.q").as("q")).collect().map(_.toString).toSeq
     assert(native == hof, "quantize_int8 diverged from HOF spec")
   }
@@ -418,13 +418,13 @@ class FunctionsSpec extends SparkSpec {
         s"word_ngrams n=$n diverged from HOF spec")
     }
     val sNative = df.select(DedupFunctions.simhashMd5(col("text"))).collect().map(_.getLong(0)).toSeq
-    val sHof = df.select(DedupFunctions.simhashMd5Hof(col("text"))).collect().map(_.getLong(0)).toSeq
+    val sHof = df.select(DedupColumnReference.simhashMd5Hof(col("text"))).collect().map(_.getLong(0)).toSeq
     assert(sNative == sHof, "simhash_md5_16 diverged from HOF spec")
     val mNative = df.select(DedupFunctions.minhashSignature(col("text"), 2, 2)).collect().map(_.toString).toSeq
-    val mHof = df.select(DedupFunctions.minhashSignatureHof(col("text"), 2, 2)).collect().map(_.toString).toSeq
+    val mHof = df.select(DedupColumnReference.minhashSignatureHof(col("text"), 2, 2)).collect().map(_.toString).toSeq
     assert(mNative == mHof, "minhash_signature diverged from HOF spec")
     val xNative = df.select(DedupFunctions.simhash64(col("text"))).collect().map(_.getLong(0)).toSeq
-    val xHof = df.select(DedupFunctions.simhash64Hof(col("text"))).collect().map(_.getLong(0)).toSeq
+    val xHof = df.select(DedupColumnReference.simhash64Hof(col("text"))).collect().map(_.getLong(0)).toSeq
     assert(xNative == xHof, "simhash64 diverged from HOF spec")
   }
 
@@ -470,11 +470,11 @@ class FunctionsSpec extends SparkSpec {
   test("native simhash_md5_16 matches the HOF specification on real docs") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet").limit(100)
     val native = docs.select(col("doc_id"), DedupFunctions.simhashMd5(col("text")).as("h"))
-    val hof = docs.select(col("doc_id"), DedupFunctions.simhashMd5Hof(col("text")).as("h"))
+    val hof = docs.select(col("doc_id"), DedupColumnReference.simhashMd5Hof(col("text")).as("h"))
     assert(native.exceptAll(hof).count() == 0 && hof.exceptAll(native).count() == 0)
     val edge = Seq((1L, ""), (2L, "   "), (3L, "one")).toDF("doc_id", "text")
     val en = edge.select(DedupFunctions.simhashMd5(col("text"))).collect().map(_.getLong(0)).toSeq
-    val eh = edge.select(DedupFunctions.simhashMd5Hof(col("text"))).collect().map(_.getLong(0)).toSeq
+    val eh = edge.select(DedupColumnReference.simhashMd5Hof(col("text"))).collect().map(_.getLong(0)).toSeq
     assert(en == eh)
     assert(en.take(2) == Seq(0L, 0L), "empty text hashes to 0")
   }
@@ -938,11 +938,11 @@ class FunctionsSpec extends SparkSpec {
   test("native simhash64 matches the HOF specification on real docs") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet").limit(100)
     val nat = docs.select(col("doc_id"), DedupFunctions.simhash64(col("text")).as("h"))
-    val hof = docs.select(col("doc_id"), DedupFunctions.simhash64Hof(col("text")).as("h"))
+    val hof = docs.select(col("doc_id"), DedupColumnReference.simhash64Hof(col("text")).as("h"))
     assert(nat.exceptAll(hof).count() == 0 && hof.exceptAll(nat).count() == 0)
     val edge = Seq((1L, ""), (2L, "  "), (3L, "one")).toDF("doc_id", "text")
     val en = edge.select(DedupFunctions.simhash64(col("text"))).collect().map(_.getLong(0)).toSeq
-    val eh = edge.select(DedupFunctions.simhash64Hof(col("text"))).collect().map(_.getLong(0)).toSeq
+    val eh = edge.select(DedupColumnReference.simhash64Hof(col("text"))).collect().map(_.getLong(0)).toSeq
     assert(en == eh)
   }
 
@@ -951,7 +951,7 @@ class FunctionsSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
     val qd = lit(q.map(_.toDouble).toArray)
     val native = emb.select(col("vec_id"), SimilarityFunctions.dot(col("embedding"), qd).as("d"))
-    val hof = emb.select(col("vec_id"), SimilarityFunctions.dotHof(col("embedding"), qd).as("d"))
+    val hof = emb.select(col("vec_id"), SimilarityColumnReference.dotHof(col("embedding"), qd).as("d"))
     assert(native.exceptAll(hof).count() == 0 && hof.exceptAll(native).count() == 0)
     // double×double inputs too
     val dd = emb.select(SimilarityFunctions.dot(qd, qd).as("d")).head().getDouble(0)
@@ -1211,7 +1211,7 @@ class FunctionsSpec extends SparkSpec {
       val native = docs.select($"doc_id",
         graft.expr.NativeFunctions.window_digests($"text", l).as("w"))
       val hof = docs.select($"doc_id",
-        DedupFunctions.repeatedSpanDigestsHof($"text", l).as("w"))
+        DedupColumnReference.repeatedSpanDigestsHof($"text", l).as("w"))
       val n = native.collect().map(r => r.getLong(0) ->
         r.getSeq[Array[Byte]](1).map(_.toSeq)).toMap
       val h = hof.collect().map(r => r.getLong(0) ->
@@ -1454,5 +1454,106 @@ class FunctionsSpec extends SparkSpec {
     assert(out(0)._2 === 2L, "midnight-spanning pair must share a session")
     assert(out(0)._3 === "user: view a\nuser: click b")
     assert(out(1)._2 === 1L && out(2)._2 === 1L)
+  }
+}
+
+/** The executable reference for the native similarity expressions
+  * ([[graft.expr.DotProductExpr]], [[graft.expr.QuantizeInt8Expr]],
+  * [[graft.expr.PqEncodeExpr]]): the higher-order-function Column forms
+  * they replaced. The tests above pin native ≡ reference. */
+object SimilarityColumnReference {
+  import org.apache.spark.sql.Column
+  import SimilarityFunctions.PqCodebooks
+
+  /** HOF formulation of [[dot]] — executable specification for tests. */
+  def dotHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
+  /** Composable spec twin of [[quantizeInt8]] — the HOF formulation the
+    * native [[graft.expr.QuantizeInt8Expr]] is tested bit-for-bit against.
+    * Not for the hot path: the `scale` subtree is re-evaluated inside the
+    * per-element lambda (O(d²) per row interpreted), which is exactly why
+    * the native expression exists. */
+  def quantizeInt8Hof(emb: Column): Column = {
+    val mx = array_max(transform(emb, v => abs(v.cast("float"))))
+    val scale = when(mx === 0f, 1f).otherwise(mx / 127f)
+    struct(scale.as("scale"),
+      transform(emb, v => round(v.cast("float") / scale).cast("byte")).as("q"))
+  }
+
+  /** Composable spec twin of [[pqEncode]] (interpreted; tests only). */
+  def pqEncodeHof(emb: Column, cb: PqCodebooks): Column = {
+    val subs = (0 until cb.m).map { s =>
+      val scored = (0 until cb.k).map { c =>
+        val cent = (0 until cb.subDim).map(j => cb.flat((s * cb.k + c) * cb.subDim + j))
+        val diff = zip_with(slice(emb, s * cb.subDim + 1, cb.subDim),
+          typedLit(cent), (x, y) => x.cast("double") - y)
+        struct(aggregate(diff, lit(0.0), (acc, v) => acc + v * v).as("dist"),
+          lit(c).as("code"))
+      }
+      least(scored: _*).getField("code").cast("byte")
+    }
+    array(subs: _*)
+  }
+}
+
+/** The executable reference for the native dedup expressions
+  * ([[graft.expr.MinHashSignatureExpr]], [[graft.expr.SimHashExpr]],
+  * [[graft.expr.SimHashMd5Expr]], [[graft.expr.WindowDigestsExpr]]): the
+  * higher-order-function Column forms they replaced. The tests above pin
+  * native ≡ reference. */
+object DedupColumnReference {
+  import org.apache.spark.sql.Column
+  import DedupFunctions.shingles
+
+  /** The composable HOF formulation of [[minhashSignature]] — kept as the
+    * executable specification the native expression is tested against. */
+  def minhashSignatureHof(text: Column, n: Int, numHashes: Int): Column = {
+    val sh = shingles(text, n)
+    aggregate(sh,
+      array_repeat(lit(null).cast("string"), numHashes),
+      (acc, s) => zip_with(acc, sequence(lit(0), lit(numHashes - 1)),
+        (a, j) => least(a, md5(concat(lit("s"), j.cast("string"), s)))))
+  }
+
+  /** HOF formulation of [[simhash64]] — executable specification. */
+  def simhash64Hof(text: Column): Column = {
+    val toks = TextFunctions.tokens(text)
+    val hashes = transform(toks, t => xxhash64(t))
+    val bitIdx = sequence(lit(0), lit(63))
+    val votes = aggregate(hashes, array_repeat(lit(0L), 64),
+      (acc, h) => zip_with(acc, bitIdx,
+        (a, i) => a + when(call_function("shiftright", h, i).bitwiseAND(1) === 1, 1L).otherwise(-1L)))
+    aggregate(
+      zip_with(votes, bitIdx,
+        (v, i) => when(v > 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
+      lit(0L), (acc, b) => acc.bitwiseOR(b))
+  }
+
+  /** HOF formulation of [[simhashMd5]] — executable specification.
+    * Bit i votes on bit (i%4) of hex digit (i/4) of md5(token). */
+  def simhashMd5Hof(text: Column): Column = {
+    val hs = transform(TextFunctions.tokens(text), t => md5(t))
+    val bitIdx = sequence(lit(0), lit(15))
+    val votes = aggregate(hs, array_repeat(lit(0), 16),
+      (acc, h) => zip_with(acc, bitIdx, (a, i) => {
+        val digit = conv(element_at(split(h, ""), (floor(i / 4) + 1).cast("int")), 16, 10).cast("int")
+        val bit = call_function("shiftright", digit, (i % 4).cast("int")).bitwiseAND(1)
+        a + when(bit === 1, 1).otherwise(-1)
+      }))
+    aggregate(zip_with(votes, bitIdx, (v, i) =>
+        when(v > 0, call_function("shiftleft", lit(1L), i.cast("int"))).otherwise(lit(0L))),
+      lit(0L), (acc, b) => acc.bitwiseOR(b))
+  }
+
+  /** The composable-HOF formulation of the window digests — kept as the
+    * executable specification [[graft.expr.WindowDigestsExpr]] is tested
+    * against (same pattern as [[minhashSignatureHof]]). */
+  def repeatedSpanDigestsHof(text: Column, L: Int): Column = {
+    val tk = TextFunctions.tokens(text)
+    when(size(tk) < L, array().cast("array<binary>")).otherwise(
+      transform(sequence(lit(0), size(tk) - L),
+        i => unhex(md5(concat_ws(" ", slice(tk, i + 1, lit(L)))))))
   }
 }

@@ -190,7 +190,7 @@ class UrlFunctionsSpec extends SparkSpec {
     // literal-array algorithm: same parse, same precedence — verified on
     // a host battery that exercises every branch, under (a) the curated
     // bundle and (b) a full-width synthetic slice with depth collisions
-    val synth = graft.SparkEntry.syntheticPslRules
+    val synth = graft.queries.CrawlQueries.syntheticPslRules
     val ruleSets = Seq(
       "bundled" -> UrlFunctions.BundledPslRules,
       "synthetic+bundled" -> (UrlFunctions.BundledPslRules ++ synth),

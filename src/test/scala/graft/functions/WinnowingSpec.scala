@@ -55,7 +55,7 @@ class WinnowingSpec extends SparkSpec {
     for (df <- Seq(base, edge)) {
       val rows = df.select(
         DedupFunctions.winnowFingerprints(col("text"), k, w).as("nat"),
-        DedupFunctions.winnowFingerprintsHof(col("text"), k, w).as("hof"))
+        WinnowColumnReference.winnowFingerprintsHof(col("text"), k, w).as("hof"))
         .collect()
       rows.foreach { r =>
         assert(r.getSeq[String](0) === r.getSeq[String](1))
@@ -119,5 +119,42 @@ class WinnowingSpec extends SparkSpec {
     val plan = pairs.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"), plan)
+  }
+}
+
+/** The executable reference for [[DedupFunctions.winnowFingerprints]]:
+  * the Column form that [[graft.expr.WinnowExpr]] replaced. The parity
+  * test above pins native ≡ reference bit for bit. */
+object WinnowColumnReference {
+  import org.apache.spark.sql.Column
+
+  /** Composable spec twin of [[winnowFingerprints]] (tests only). */
+  def winnowFingerprintsHof(text: Column, k: Int = 4, w: Int = 5): Column = {
+    require(k >= 1 && w >= 1, s"winnow k=$k w=$w out of range")
+    // Every intermediate array is BOUND ONCE as a lambda variable via the
+    // single-element transform(array(x), v => …) pattern. Referencing the
+    // raw sub-expression inside a HOF lambda instead re-evaluates it per
+    // element — with `hashes` under the per-window slice that compounds
+    // to O(windows × grams × k) full regex re-splits per document, which
+    // turned a 5k-doc pass into a ~1 h single-task stage before this
+    // binding (the scan stage is one task on a one-file table).
+    def bind(x: Column)(body: Column => Column): Column =
+      element_at(transform(array(x), body), 1)
+    bind(split(trim(text), "\\s+")) { toks =>
+      // try_element_at: rows shorter than k still EVALUATE this binding
+      // (the masking `when` sits below it) — ANSI element_at would throw
+      // on their out-of-range gram indices; the garbage grams those rows
+      // produce are discarded by the guard
+      bind(transform(sequence(lit(1), greatest(size(toks) - (k - 1), lit(1))),
+        i => md5(concat(lit("wn|"),
+          concat_ws(" ", (0 until k).map(o => try_element_at(toks, i + lit(o))): _*))))) { hashes =>
+        // sequence(1, n) with n < 1 counts DOWN — both sequences are
+        // floored at 1 and the no-gram case is masked by the outer when
+        when(size(toks) >= k, array_distinct(
+          transform(sequence(lit(1), greatest(size(hashes) - (w - 1), lit(1))),
+            j => array_min(slice(hashes, j, lit(w))))))
+          .otherwise(array().cast("array<string>"))
+      }
+    }
   }
 }

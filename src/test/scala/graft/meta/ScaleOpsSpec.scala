@@ -170,7 +170,7 @@ class ScaleOpsSpec extends SparkSpec {
         Array(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)).toSeq
       val df = vs.toDF("v")
       val got = df.select(ScaleOps.quantileBucket(col("v"), cuts).as("b"),
-          ScaleOps.quantileBucketHof(col("v"), cuts).as("bh"))
+          ScaleOpsColumnReference.quantileBucketHof(col("v"), cuts).as("bh"))
         .collect()
       got.foreach(r => assert(r.getInt(0) == r.getInt(1),
         s"trial $trial: native ${r.getInt(0)} != hof ${r.getInt(1)}"))
@@ -263,5 +263,23 @@ class ScaleOpsSpec extends SparkSpec {
       assert(plan.contains("SortMergeJoin"))
       assert(joined.count() == 1000)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+}
+
+/** The executable reference for [[ScaleOps.quantileBucket]]: the
+  * interpreted fold that [[graft.expr.SearchSortedExpr]] replaced. */
+object ScaleOpsColumnReference {
+  import org.apache.spark.sql.Column
+
+  /** Composable spec twin of [[quantileBucket]] — the interpreted
+    * ArrayAggregate fold the native expression is tested against. NaN
+    * mirrors the native sorts-last rule (SQL `v >= b` is false for NaN, so
+    * the bare fold would send NaN to bucket 0 — the opposite end of
+    * Spark's double ordering). */
+  def quantileBucketHof(v: Column, cuts: Array[Double]): Column = {
+    val sorted = cuts.distinct.sorted
+    when(isnan(v), lit(sorted.length)).otherwise(
+      aggregate(typedLit(sorted.toSeq), lit(0),
+        (acc, b) => acc + when(v >= b, 1).otherwise(0)))
   }
 }

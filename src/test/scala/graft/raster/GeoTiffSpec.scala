@@ -647,6 +647,23 @@ class GeoTiffSpec extends SparkSpec {
       s"spp must be included in the allocation cap, got: ${e3.getMessage}")
   }
 
+  test("an entry count past the end of the file fails fast, before any allocation") {
+    // ImageWidth claims 0x7fffffff LONG values in a 50-byte file: the
+    // count is checked against the file's length, never used to size an
+    // array first
+    val tiff = java.nio.ByteBuffer.allocate(8 + 2 + 3 * 12 + 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    tiff.put('I'.toByte).put('I'.toByte).putShort(2, 42).putInt(4, 8)
+    tiff.putShort(8, 3)
+    def tag(i: Int, tag: Int, typ: Int, count: Int, v: Int): Unit = {
+      val e = 8 + 2 + 12 * i
+      tiff.putShort(e, tag.toShort).putShort(e + 2, typ.toShort).putInt(e + 4, count).putInt(e + 8, v)
+    }
+    tag(0, 256, 4, 0x7fffffff, 8); tag(1, 257, 4, 1, 4); tag(2, 258, 3, 1, 8)
+    val e = intercept[IllegalArgumentException](GeoTiff.decode(tiff.array()))
+    assert(e.getMessage.contains("overrun the 50-byte file"), e.getMessage)
+  }
+
   test("encode(container=bigtiff) writes the BigTIFF container and round-trips through the reader") {
     // ragged 100×75 against 16×16 tiles → 35 tiles on the main page, so the
     // LONG8 tile offset/count arrays take the external path; overviews keep

@@ -74,7 +74,7 @@ class RasterKernelsSpec extends SparkSpec {
       "sqrt(abs(B08 * B04)) - min(B02, B04)")) {
       val nat = RasterKernels.bandMath(piv, e, "OUT", -9999.0, -10000.0, 10000.0)
         .select("scene_id", "pixels")
-      val hof = RasterKernels.bandMathHof(piv, e, "OUT", -9999.0, -10000.0, 10000.0)
+      val hof = RasterColumnReference.bandMathHof(piv, e, "OUT", -9999.0, -10000.0, 10000.0)
         .select("scene_id", "pixels")
       assert(nat.exceptAll(hof).count() == 0 && hof.exceptAll(nat).count() == 0, s"expr $e")
     }
@@ -118,7 +118,7 @@ class RasterKernelsSpec extends SparkSpec {
     val px = out.head().getSeq[Float](out.columns.indexOf("pixels"))
     assert(px == Seq(0f, 255f, 255f, 1f))
     // native == HOF specification
-    val hof = RasterKernels.propagateNodataHof(piv, Seq("B04", "B08"), "Fmask4", 255.0)
+    val hof = RasterColumnReference.propagateNodataHof(piv, Seq("B04", "B08"), "Fmask4", 255.0)
       .head().getSeq[Float](out.columns.indexOf("pixels"))
     assert(px == hof)
   }
@@ -140,7 +140,7 @@ class RasterKernelsSpec extends SparkSpec {
       val df = Seq((px, h, w)).toDF("pixels", "h", "w")
       val nat = df.select(RasterKernels.resampleNearest(col("pixels"), col("h"), col("w"), oh, ow))
         .head().getSeq[Float](0)
-      val hof = df.select(RasterKernels.resampleNearestHof(col("pixels"), col("h"), col("w"), oh, ow))
+      val hof = df.select(RasterColumnReference.resampleNearestHof(col("pixels"), col("h"), col("w"), oh, ow))
         .head().getSeq[Float](0)
       assert(nat == hof, s"case ($h,$w)->($oh,$ow)")
     }
@@ -197,4 +197,70 @@ class RasterKernelsSpec extends SparkSpec {
     val f8 = out.filter(col("factor") === 8).head().getSeq[Float](out.columns.indexOf("pixels"))
     assert(f8 == Seq(0f)) // top-left nearest sample
   }
+}
+
+/** The executable reference for the native raster kernels: the
+  * higher-order-function Column forms of [[RasterKernels.bandMath]],
+  * [[RasterKernels.propagateNodata]] and [[RasterKernels.resampleNearest]]
+  * that [[graft.expr.BandMathExpr]] and the nearest resample replaced.
+  * The tests above pin native ≡ reference. */
+object RasterColumnReference {
+  import org.apache.spark.sql.{Column, DataFrame}
+  import graft.expr.BandExpressionCompiler
+
+  /** HOF formulation of [[bandMath]] — executable specification the native
+    * [[graft.expr.BandMathExpr]] is tested against. */
+  def bandMathHof(pivoted: DataFrame, expression: String, outBand: String,
+               outNodata: Double, minValue: Double, maxValue: Double): DataFrame = {
+    val ast = BandExpressionCompiler.parse(expression)
+    val refs = BandExpressionCompiler.references(ast).toSeq.sorted
+    require(refs.nonEmpty, "expression references no bands")
+    val first = element_at(col("bands"), refs.head)
+    val out = transform(
+      sequence(lit(0), size(first) - 1),
+      i => {
+        val masked = refs.map { b =>
+          element_at(element_at(col("bands"), b), i + 1) === element_at(col("nodatas"), b).cast("float")
+        }.reduce(_ || _)
+        val value = BandExpressionCompiler.compile(ast,
+          b => element_at(element_at(col("bands"), b), i + 1).cast("double"))
+        when(masked, lit(outNodata))
+          .otherwise(coalesce(BandExpressionCompiler.clamp(value, minValue, maxValue),
+            lit(outNodata))) // NULL (e.g. 0/0 pixel) → nodata, not null
+          .cast("float")
+      })
+    pivoted.select(col("scene_id"), lit(outBand).as("band"),
+      col("window_row"), col("window_col"), col("height"), col("width"),
+      lit(outNodata).as("nodata"), out.as("pixels"))
+  }
+
+  /** HOF formulation of [[propagateNodata]] — executable specification. */
+  def propagateNodataHof(pivoted: DataFrame, spectralBands: Seq[String],
+                      qualityBand: String, qualityNodata: Double): DataFrame = {
+    val quality = element_at(col("bands"), qualityBand)
+    val out = transform(
+      sequence(lit(0), size(quality) - 1),
+      i => {
+        val anyNodata = spectralBands.map { b =>
+          element_at(element_at(col("bands"), b), i + 1) === element_at(col("nodatas"), b).cast("float")
+        }.reduce(_ || _)
+        when(anyNodata, lit(qualityNodata)).otherwise(element_at(quality, i + 1)).cast("float")
+      })
+    pivoted.select(col("scene_id"), lit(qualityBand).as("band"),
+      col("window_row"), col("window_col"), col("height"), col("width"),
+      lit(qualityNodata).as("nodata"), out.as("pixels"))
+  }
+
+  /** HOF formulation of [[resampleNearest]] — executable specification. */
+  def resampleNearestHof(pixels: Column, height: Column, width: Column,
+                      outH: Int, outW: Int): Column =
+    transform(
+      sequence(lit(0), lit(outH * outW - 1)),
+      i => {
+        val or = floor(i / outW).cast("long")
+        val oc = i % outW
+        val sr = floor((or * height.cast("long")) / outH).cast("long")
+        val sc = floor((oc * width.cast("long")) / outW).cast("long")
+        element_at(pixels, (sr * width + sc).cast("int") + 1)
+      })
 }
