@@ -5,8 +5,6 @@ import java.util.regex.Pattern
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -81,19 +79,6 @@ object UrlText {
 
   private def found(p: Pattern, s: String): Boolean = p.matcher(s).find()
 
-  /** SQL `lower`/`upper` under the UTF8_BINARY collation. The ICU flag is
-    * read only for non-ASCII input: both case maps agree on ASCII. */
-  private def caseMap(s: UTF8String, upper: Boolean): UTF8String = {
-    val icu = !s.isFullAscii &&
-      SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
-    val id = CollationFactory.UTF8_BINARY_COLLATION_ID
-    if (upper) CollationSupport.Upper.exec(s, id, icu)
-    else CollationSupport.Lower.exec(s, id, icu)
-  }
-
-  private def lower(s: String): String =
-    caseMap(UTF8String.fromString(s), upper = false).toString
-
   /** (scheme, lowercased authority without userinfo, path, query) of a
     * trimmed, defragmented URL. */
   private final case class Parts(scheme: String, authority: String,
@@ -106,8 +91,8 @@ object UrlText {
     val rest = replace(SchemePrefix, nf, "")
     val pathQuery = replace(AuthorityPrefix, rest, "")
     Parts(
-      lower(extract(SchemeCap, nf)),
-      lower(replace(UserInfo, extract(AuthorityCap, rest), "")),
+      CaseMap.lower(extract(SchemeCap, nf)),
+      CaseMap.lower(replace(UserInfo, extract(AuthorityCap, rest), "")),
       extract(PathCap, pathQuery),
       if (pathQuery.contains("?")) replace(QueryPrefix, pathQuery, "") else "")
   }
@@ -133,7 +118,7 @@ object UrlText {
     var i = 1
     while (i < parts.length) {
       val p = parts(i)
-      val h = caseMap(p.substringSQL(1, 2), upper = true).toString
+      val h = CaseMap.map(p.substringSQL(1, 2), upper = true).toString
       if (!found(HexPair, h)) sb.append('%').append(p.toString)
       else if (found(Unreserved, h)) {
         // `decode(unhex(h))`: h is two hex digits, unless an expanding
@@ -185,7 +170,7 @@ object UrlText {
     if (found(AbsRef, r)) return UTF8String.fromString(r)
     if (base == null) return null
     val b = replace(Fragment, base.toString, "")
-    val bScheme = lower(extract(BaseScheme, b))
+    val bScheme = CaseMap.lower(extract(BaseScheme, b))
     val origin = bScheme + "://" + extract(BaseAuth, b)
     val bPath = extract(PathCap, replace(OriginPrefix, b, ""))
     val merged =

@@ -38,7 +38,7 @@ object ClassifierFunctions {
 
   /** Lowercased whitespace tokens — the shared pre-tokenizer, kept
     * RE2-compatible so the DuckDB oracle tokenizes identically. */
-  private def toks(text: Column): Column = TextFunctions.tokens(lower(text))
+  private def toks(text: Column): Column = TextFunctions.tokens(TextFunctions.lowerCase(text))
 
   /** Fitted multinomial NB model.
     *

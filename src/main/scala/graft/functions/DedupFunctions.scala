@@ -1075,7 +1075,7 @@ object DedupFunctions {
     require(tau > 0 && tau <= 1, s"tau must be in (0, 1], got $tau")
     val sets = docs
       .select(col(idCol).as("id"),
-        array_distinct(TextFunctions.tokens(lower(col(textCol)))).as("tk"))
+        array_distinct(TextFunctions.tokens(TextFunctions.lowerCase(col(textCol)))).as("tk"))
       .filter(size(col("tk")) > 0)
     // (r19 note: materializing `exploded` itself was measured a LOSS —
     // full token-row frames cost more to checkpoint+reread than the

@@ -99,7 +99,7 @@ object RobotsFunctions {
       .withColumn("g", sum(col("startg")).over(wSeq))
       .filter(col("g") > 0) // lines before any User-agent belong to no group
       .withColumn("spec_g", max(when(col("kind") === "ua"
-        && lower(col("v")) === agentLc, 1).otherwise(0)).over(wGroup))
+        && TextFunctions.lowerCase(col("v")) === agentLc, 1).otherwise(0)).over(wGroup))
       .withColumn("star_g", max(when(col("kind") === "ua"
         && col("v") === "*", 1).otherwise(0)).over(wGroup))
       .withColumn("spec_h", max(col("spec_g")).over(wHost))

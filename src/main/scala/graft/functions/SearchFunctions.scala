@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   */
 object SearchFunctions {
 
-  private def toks(text: Column): Column = TextFunctions.tokens(lower(text))
+  private def toks(text: Column): Column = TextFunctions.tokens(TextFunctions.lowerCase(text))
 
   /** BM25 (Lucene-variant idf) scores for a bag-of-words query: one row
     * per document containing ≥1 query term, `(idCol, score)`.

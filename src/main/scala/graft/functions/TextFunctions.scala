@@ -1,7 +1,9 @@
 package graft.functions
 
+import graft.expr.LowerExpr
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Text-analysis operators for large-scale training-data pipelines.
   *
@@ -11,6 +13,9 @@ import org.apache.spark.sql.functions._
   * shuffle), so throughput is IO-bound, which is the optimum.
   */
 object TextFunctions {
+
+  /** SQL `lower`, by [[graft.expr.CaseMap]]; graft lowercases only through it. */
+  def lowerCase(text: Column): Column = ColumnBridge.column(LowerExpr(ColumnBridge.expression(text)))
 
   /** Whitespace tokenization. `split` on \s+ after trim; empty string → 0. */
   def tokens(text: Column): Column =
@@ -171,10 +176,10 @@ object TextFunctions {
     * corpus count) to keep this a pure plan builder. */
   def tfIdf(df: org.apache.spark.sql.DataFrame, textCol: String, idCol: String,
             nDocs: Long): org.apache.spark.sql.DataFrame = {
-    // lower() the document once (codegen) rather than per token through an
+    // lowercase the document once (codegen) rather than per token through an
     // interpreted transform lambda; \s boundaries are case-invariant
     val toks = df.select(col(idCol),
-      explode(tokens(lower(col(textCol)))).as("term"))
+      explode(tokens(lowerCase(col(textCol)))).as("term"))
     val tf = toks.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
     val docFreq = toks.select(col(idCol), col("term")).distinct()
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -209,7 +214,7 @@ object TextFunctions {
     * oracle). */
   def normalizeForDedup(text: Column): Column =
     trim(regexp_replace(
-      regexp_replace(lower(trim(text)), "[^a-z0-9\\s]", " "), "\\s+", " "))
+      regexp_replace(lowerCase(trim(text)), "[^a-z0-9\\s]", " "), "\\s+", " "))
 
   /** Punctuation character count. */
   def punctCount(text: Column): Column =
@@ -225,7 +230,7 @@ object TextFunctions {
   /** Stopword ratio: fraction of tokens that are in the given stopword set. */
   def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
     val toks = tokens(text)
-    val stops = filter(toks, t => lower(t).isin(stopwords: _*))
+    val stops = filter(toks, t => lowerCase(t).isin(stopwords: _*))
     when(size(toks) === 0, 0.0)
       .otherwise(size(stops).cast("double") / size(toks))
   }
@@ -401,7 +406,7 @@ object TextFunctions {
                       minCount: Int, topK: Int): org.apache.spark.sql.DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    val toks = tokens(lower(col(textCol)))
+    val toks = tokens(lowerCase(col(textCol)))
     val uni = df.select(explode(toks).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cw"))
       .withColumn("u_total", sum(col("cw")).over())

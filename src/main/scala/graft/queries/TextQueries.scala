@@ -24,7 +24,7 @@ object TextQueries {
         |FROM documents WHERE n_chars > 0 ORDER BY doc_id""".stripMargin)),
     // ---- text analysis: language-ID heuristic ----------------------------
     QuerySpec("q29_lang_guess", (s, d) => {
-      val toks = transform(T.tokens(col("text")), t => lower(t))
+      val toks = transform(T.tokens(col("text")), t => T.lowerCase(t))
       def score(ws: Seq[String]) = size(filter(toks, t => t.isin(ws: _*)))
       val sEn = score(Seq("the", "a", "of"))
       val sEs = score(Seq("key", "value", "row"))
@@ -588,7 +588,7 @@ object TextQueries {
     QuerySpec("q144_oov_rate", (s, d) => {
       val toks = Tables.documents(s, d)
         .select(col("source"),
-          explode(graft.functions.TextFunctions.tokens(lower(col("text")))).as("w"))
+          explode(graft.functions.TextFunctions.tokens(T.lowerCase(col("text")))).as("w"))
       // deterministic boundary: ties at rank K order by (count desc, term)
       val vocab = toks.groupBy(col("w")).agg(count(lit(1)).as("c"))
         .orderBy(col("c").desc, col("w").asc).limit(30)
